@@ -1464,9 +1464,7 @@ object MlQueries {
       val n = probe.getLong(0)
       val d = probe.getInt(1)
       if (n * d <= KMeans.LocalFitCells) {
-        val rows = e.select(col("id").cast("long").as("__id"), col("features"))
-          .orderBy(col("__id")).collect()
-          .map(r => r.getSeq[Double](1).toArray)
+        val rows = KMeans.collectById(e).map(r => r.getSeq[Double](1).toArray)
         (0 until PqM).toArray.map { m =>
           KMeans.fitLocal(rows.map(_.slice(m * PqDsub, (m + 1) * PqDsub)),
             PqK, PqIters, firstSeedRank = 0)

@@ -1,6 +1,6 @@
 package graft.bfr
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -20,7 +20,11 @@ import graft.operators.SummaryAggregator
   *  - summary construction = partial+final aggregation (SummaryAggregator);
   *  - RS is a Dataset, re-clustered into CS when it exceeds a threshold
   *    (reference M6, code/bfr.py:259-288 — defined but never called; we
-  *    wire it live, fixing the dead-code path);
+  *    wire it live, fixing the dead-code path). Like the reference, the
+  *    re-clustering runs in driver memory — one collect of RS, then fit,
+  *    labels and CS summaries on the driver — while RS rows × d stay
+  *    within `KMeans.LocalFitCells`; a larger RS takes the distributed
+  *    step (k-means fit, label aggregation, broadcast joins);
   *  - CS pairwise merge is a driver-side greedy loop over ≤5K summaries
   *    (code/bfr.py:290-320, with the center-vs-object bug fixed —
   *    code/bfr.py:304 passes SummarizedSet objects where vectors are
@@ -143,10 +147,23 @@ object BFR {
   /** Run BFR over an ordered sequence of chunk DataFrames, each with
     * columns (id: long, features: array<double>). Mirrors
     * `Runner.run` (code/bfr.py:431-468).
+    *
+    * The loop's shuffle width and its AQE pause are decided once, from
+    * chunk 1's row count alone, and held for every later round: a small
+    * first chunk followed by large ones runs the large rounds at the
+    * narrow width with AQE off.
     */
   def run(spark: SparkSession, chunks: Seq[DataFrame], cfg: Config,
           onRound: Int => Unit = _ => (),
-          assignSink: Option[DataFrame => Unit] = None): Result = {
+          assignSink: Option[DataFrame => Unit] = None): Result =
+    runRounds(spark, chunks, cfg, onRound, assignSink, forceDistributedRs = false)
+
+  /** [[run]] with a seam for tests: `forceDistributedRs` re-clusters RS
+    * with the distributed step even where the driver-local one applies.
+    */
+  private[graft] def runRounds(spark: SparkSession, chunks: Seq[DataFrame], cfg: Config,
+                               onRound: Int => Unit, assignSink: Option[DataFrame => Unit],
+                               forceDistributedRs: Boolean): Result = {
     require(chunks.nonEmpty, "BFR needs at least one chunk")
     // streaming-sink mode: every finalized assignment block is handed to
     // the sink the moment it exists and the driver accumulates NOTHING —
@@ -317,25 +334,42 @@ object BFR {
       if (rsCount > cfg.rsClusterThreshold) {
         step(round, "rs-recluster")
         val kCs = math.min(cfg.csKMult * cfg.k, (rsCount / 2).toInt max 1)
-        val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
-        val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
-        val singles = rsAssigned.groupBy(col("label")).count()
-          .filter(col("count") === 1).select("label")
-        val newRs = rsAssigned.join(broadcast(singles), Seq("label"), "left_semi")
-          .select("id", "features")
-        val toCs = rsAssigned.join(broadcast(singles), Seq("label"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
         val base = cs.size
-        val byLabel = summariesByLabel(toCs, "features")
-        val labels = byLabel.keys.toSeq.sorted
-        val labelToCs = labels.zipWithIndex.map { case (l, i) => (l, base + i) }.toMap
-        cs = cs ++ labels.map(byLabel)
-        val mapExpr = map(labelToCs.toSeq.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*)
-        csMembers = csMembers.union(
-          toCs.select(col("id"), element_at(mapExpr, col("label")).cast("int").as("cs_id")))
-        rs = newRs.localCheckpoint(true)
-        rsCount = rs.count()
-        rsAssigned.unpersist(false); toCs.unpersist(false)
+        // RS under KMeans' local-fit budget (KMeans.fit would collect it
+        // for the fit anyway) re-clusters on the driver from ONE collect;
+        // the distributed step below costs ~9 jobs for the same result
+        val localD = ds.headOption.map(_.d)
+          .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
+        localD match {
+          case Some(d) =>
+            val (retained, summaries, members) =
+              reclusterLocal(KMeans.collectById(rs), d, kCs, cfg.kmeansIters)
+            cs = cs ++ summaries
+            csMembers = csMembers.union(spark.createDataFrame(
+              java.util.Arrays.asList(members.map { case (id, i) => Row(id, base + i) }: _*),
+              csMembers.schema))
+            rs = spark.createDataFrame(java.util.Arrays.asList(retained: _*), rs.schema)
+            rsCount = retained.length
+          case None =>
+            val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
+            val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
+            val singles = rsAssigned.groupBy(col("label")).count()
+              .filter(col("count") === 1).select("label")
+            val newRs = rsAssigned.join(broadcast(singles), Seq("label"), "left_semi")
+              .select("id", "features")
+            val toCs = rsAssigned.join(broadcast(singles), Seq("label"), "left_anti")
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            val byLabel = summariesByLabel(toCs, "features")
+            val labels = byLabel.keys.toSeq.sorted
+            val labelToCs = labels.zipWithIndex.map { case (l, i) => (l, base + i) }.toMap
+            cs = cs ++ labels.map(byLabel)
+            val mapExpr = map(labelToCs.toSeq.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*)
+            csMembers = csMembers.union(
+              toCs.select(col("id"), element_at(mapExpr, col("label")).cast("int").as("cs_id")))
+            rs = newRs.localCheckpoint(true)
+            rsCount = rs.count()
+            rsAssigned.unpersist(false); toCs.unpersist(false)
+        }
         // --- CS pairwise merge (M7, code/bfr.py:290-320, bug fixed) ---
         val (mergedCs, remap) = mergeCs(cs)
         if (remap.nonEmpty) {
@@ -406,7 +440,7 @@ object BFR {
           val csMap = map(csToDs.toSeq.flatMap { case (c, d0) => Seq(lit(c), lit(d0)) }: _*)
           assigned = appendAssign(assigned,
             csMembers.select(col("id"), element_at(csMap, col("cs_id")).cast("int").as("cluster")))
-          discardedSoFar += csMembers.count()
+          discardedSoFar += cs.map(_.n).sum // CS merge and remap keep N
           cs = IndexedSeq.empty
           csMembers = emptyAssignments(spark, "cs_id") // merged -> now discard
         }
@@ -416,13 +450,10 @@ object BFR {
       // never the accumulated assignments (an O(rounds^2) rescan at scale)
       step(round, "assigned-checkpoint")
       if (assignSink.isEmpty) assigned = assigned.localCheckpoint(true)
-      // checkpoint+count the CS membership only when CS state exists —
-      // on clean data this skips two jobs per round
-      val csPoints = if (cs.isEmpty && stats.forall(_.nof_point_compression == 0)) 0L
-      else {
-        csMembers = csMembers.localCheckpoint(true)
-        csMembers.count()
-      }
+      // checkpoint the CS membership only while CS state exists; its
+      // point count is the summaries' N (CS merge and remap keep N)
+      if (cs.nonEmpty) csMembers = csMembers.localCheckpoint(true)
+      val csPoints = cs.map(_.n).sum
       stats += RoundStats(round, ds.size, discardedSoFar, cs.size, csPoints,
         if (round == nRounds) retained else rsCount)
       chunk.unpersist(false)
@@ -510,6 +541,43 @@ object BFR {
     val deltas = summariesByLabel(labeled, "features")
     (ds.zipWithIndex.map { case (s, i) => deltas.get(i).map(s.merge).getOrElse(s) },
       deltas.values.map(_.n).sum)
+  }
+
+  /** Driver-local RS -> CS re-clustering of id-sorted `(id, features)`
+    * rows — the distributed step's result without its jobs: the same fit
+    * (KMeans.fitLocal with `KMeans.fit`'s k and first seed), labels from
+    * `Model.labelOf` (bit-identical to `Model.assign`), the same
+    * singleton rule, and CS summaries folded with the SummaryAggregator
+    * monoid. Returns (retained rows, CS summaries in label order,
+    * (id, summary index) per CS member). Every row must hold a d-long
+    * null-free vector; the distributed step fails on such rows too.
+    */
+  private def reclusterLocal(rows: Array[Row], d: Int, k: Int, iters: Int)
+      : (Array[Row], IndexedSeq[ClusterSummary], Array[(Any, Int)]) = {
+    val feats = rows.map { r =>
+      val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+      require(v != null && v.length == d && !v.contains(null),
+        s"BFR: RS point ${r.get(0)} has no $d-long null-free feature vector")
+      v.asInstanceOf[Seq[Double]].toArray
+    }
+    val model = KMeans.fitLocal(feats, math.min(k, feats.length), iters, firstSeedRank = 0)
+    val labels = feats.map(model.labelOf)
+    val sizes = labels.groupMapReduce(identity)(_ => 1)(_ + _)
+    val slot = sizes.collect { case (l, c) if c > 1 => l }.toSeq.sorted.zipWithIndex.toMap
+    val acc = new Array[ClusterSummary](slot.size)
+    val retained = Array.newBuilder[Row]
+    val members = Array.newBuilder[(Any, Int)]
+    var i = 0
+    while (i < rows.length) {
+      slot.get(labels(i)) match {
+        case Some(s) =>
+          acc(s) = if (acc(s) == null) ClusterSummary.ofPoint(feats(i)) else acc(s).add(feats(i))
+          members += ((rows(i).get(0), s))
+        case None => retained += rows(i)
+      }
+      i += 1
+    }
+    (retained.result(), acc.toIndexedSeq, members.result())
   }
 
   /** Greedy CS pairwise merge: any pair with center-to-summary Mahalanobis

@@ -355,6 +355,7 @@ case class NearestMahaExpr(child: Expression,
 
   private val k = centers.length
   private val d = centers.headOption.map(_.length).getOrElse(0)
+  require(centers.nonEmpty, "nearest-summary kernel needs at least one summary")
   require(stds.length == k && stds.forall(_.length == d),
     "centers/stds shape mismatch")
   @transient private lazy val ctrFlat: Array[Double] = centers.flatten

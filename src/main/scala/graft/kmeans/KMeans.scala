@@ -1,6 +1,6 @@
 package graft.kmeans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -56,6 +56,30 @@ object KMeans {
         val dists = distances(features)
         (array_position(dists, array_min(dists)) - 1).cast("int")
       }
+
+    /** Driver-side twin of [[labelFor]] for one full-length, null-free
+      * vector, bit-identical to it: the same in-order squared-distance
+      * accumulation, and the same tie rule as the form `labelFor` picks —
+      * first minimum with NaN sorting last (`array_min`/`array_position`)
+      * up to `ArgMinKernelMinK`, strict `<` from `Double.MaxValue`
+      * (−1 if no distance is below it) in the argmin kernel above it.
+      */
+    private[graft] def labelOf(x: Array[Double]): Int = {
+      val kernel = k > ArgMinKernelMinK
+      var best = if (kernel) -1 else 0
+      var bestD = Double.MaxValue
+      var j = 0
+      while (j < k) {
+        val c = centers(j)
+        var s = 0.0
+        var t = 0
+        while (t < c.length) { val z = x(t) - c(t); s += z * z; t += 1 }
+        val better = if (kernel) s < bestD else j == 0 || java.lang.Double.compare(s, bestD) < 0
+        if (better) { bestD = s; best = j }
+        j += 1
+      }
+      best
+    }
 
     /** Append `label` (and optionally `dist2`, the squared distance to the
       * chosen center) to `df`.
@@ -145,6 +169,18 @@ object KMeans {
     */
   val LocalFitCells: Long = 4L * 1000 * 1000
 
+  /** The `(id: long, features)` rows of `points` on the driver, sorted by
+    * id ascending with null ids first (the order `orderBy(id)` gives) —
+    * one collect job and a driver-side sort instead of a range-partition
+    * sampling job plus the collect. The sort is stable: rows with equal
+    * ids keep their collect order. Only for inputs under
+    * [[LocalFitCells]].
+    */
+  private[graft] def collectById(points: DataFrame, featCol: String = "features",
+                                 idCol: String = "id"): Array[Row] =
+    points.select(col(idCol).cast("long"), col(featCol)).collect()
+      .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+
   /** Fixed-iteration Lloyd. Empty clusters keep their previous center
     * (code/bfr.py:52-57). The local and distributed paths implement the
     * same deterministic algorithm (same seeding rule, same first-min
@@ -171,9 +207,7 @@ object KMeans {
       val kEff = math.min(k.toLong, n).toInt
       val d = probe._2
       if (!forceDistributed && n * d <= LocalFitCells) {
-        val rows = cached
-          .select(col(idCol).cast("long").as("__id"), col(featCol).as("__f"))
-          .orderBy(col("__id")).collect()
+        val rows = collectById(cached, featCol, idCol)
           .map(r => r.getSeq[Double](1).toArray)
         return fitLocal(rows, kEff, iters, firstSeedRank)
       }

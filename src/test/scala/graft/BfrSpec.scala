@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,6 +93,75 @@ class BfrSpec extends AnyFunSuite {
     val res = BFR.run(spark, chunks, BFR.Config(k = 10, rsClusterThreshold = 50))
     assert(res.assignments.count() == 500)
     assert(res.assignments.select("id").distinct().count() == 500)
+  }
+
+  /** Blobs with 10% outliers in 4 chunks at threshold 5: RS re-clusters
+    * into several CS in rounds 1-3 and keeps singletons. One outlier id
+    * (outlier ids start at n = 2000) appears twice, with different
+    * features.
+    */
+  private def rsReclusterFixture(): (Seq[DataFrame], BFR.Config) = {
+    val noisy = TestBlobs.generate(spark, n = 2000, k = 5, d = 4, outliers = 200)
+      .select("id", "features")
+    val withDup = noisy.union(noisy.filter(col("id") === 2000L)
+      .select(col("id"), reverse(col("features")).as("features")))
+    val chunks = (0 until 4).map(i => withDup.filter(pmod(col("id"), lit(4)) === i))
+    (chunks, BFR.Config(k = 5, rsClusterThreshold = 5))
+  }
+
+  /** Runs `body` in its own job group and returns its result with the
+    * number of jobs per description the group started. The listener bus
+    * is drained before the counts are read (`listenerBus` is
+    * private[spark], hence reflection).
+    */
+  private def jobsByDescription[T](body: => T): (T, Map[String, Int]) = {
+    val sc = spark.sparkContext
+    val group = s"bfr-job-pin-${java.util.UUID.randomUUID()}"
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          counts.merge(String.valueOf(e.properties.getProperty("spark.job.description")),
+            1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(10000L))
+      (out, counts.asScala.map { case (k, v) => k -> v.intValue }.toMap)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val RsRecluster = """bfr r(\d+) rs-recluster""".r
+
+  test("driver-local and distributed RS re-clustering agree (stats and assignments)") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val (local, localJobs) = jobsByDescription(
+      BFR.runRounds(spark, chunks, cfg, _ => (), None, forceDistributedRs = false))
+    val (dist, distJobs) = jobsByDescription(
+      BFR.runRounds(spark, chunks, cfg, _ => (), None, forceDistributedRs = true))
+    // the fixture re-clusters RS in at least two rounds on both paths
+    for (jobs <- Seq(localJobs, distJobs))
+      assert(jobs.keys.count(RsRecluster.matches) >= 2, s"RS re-clustered in < 2 rounds: $jobs")
+    assert(local.stats == dist.stats)
+    def pairs(r: BFR.Result) =
+      r.assignments.collect().map(x => (x.getLong(0), x.getInt(1))).toSeq.sorted
+    val a = pairs(local)
+    assert(a.size == 2201, "every row (the duplicated id included) is assigned once")
+    assert(a == pairs(dist))
+  }
+
+  test("driver-local RS re-clustering runs at most one job per round") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    val perRound = jobs.collect { case (RsRecluster(r), n) => r.toInt -> n }
+    assert(perRound.size >= 2, s"RS re-clustered in < 2 rounds: $jobs")
+    perRound.foreach { case (r, n) =>
+      assert(n <= 1, s"round $r: $n rs-recluster jobs, expected at most one")
+    }
   }
 
   test("assignment sink mode: streamed JSONL blocks ≡ accumulated assignments") {

@@ -135,6 +135,36 @@ class VectorFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("Model.labelOf (driver twin) ≡ Model.assign's label at small and large k, ties, Inf and NaN") {
+    val rng = new scala.util.Random(53)
+    val d = 8
+    for (k <- Seq(5, 40)) {
+      val centers = Array.fill(k)(Array.fill(d)(rng.nextDouble() * 2 - 1))
+      centers(k - 1) = centers(0).clone()
+      val pts = (0 until 200).map { i =>
+        val v =
+          if (i < 10) centers(i % k).clone()
+          else if (i == 10) Array.fill(d)(1e200)           // every distance is +Inf
+          else if (i == 11) Array.tabulate(d)(t => if (t == 2) Double.NaN else 0.5)
+          else Array.fill(d)(rng.nextDouble() * 2 - 1)
+        (i.toLong, v)
+      }
+      val model = graft.kmeans.KMeans.Model(centers)
+      val viaSpark = model.assign(pts.map { case (i, v) => (i, v.toSeq) }.toDF("id", "features"),
+        "features").select(col("id"), col("label")).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      pts.foreach { case (i, v) =>
+        assert(model.labelOf(v) == viaSpark(i), s"k=$k id=$i: labelOf=${model.labelOf(v)} assign=${viaSpark(i)}")
+      }
+    }
+  }
+
+  test("fused nearest-maha kernel rejects an empty summary set") {
+    val e = intercept[IllegalArgumentException](graft.functions.NativeVectorFunctions
+      .nearestMahaNative(col("e"), Array.empty[Array[Double]], Array.empty[Array[Double]], 1.0))
+    assert(e.getMessage.contains("at least one summary"))
+  }
+
   test("fused nearest-maha kernel matches the composed literal form exactly") {
     import graft.functions.NativeVectorFunctions._
     val rnd2 = new scala.util.Random(23L)
