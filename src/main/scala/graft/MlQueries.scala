@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.Queries.Q
 import graft.bfr.BFR
 import graft.eval.Nmi
-import graft.functions.NativeVectorFunctions.dotNative
 import graft.functions.TextOps
 import graft.functions.VectorFunctions._
 import graft.kmeans.KMeans
@@ -872,19 +871,18 @@ object MlQueries {
     * Vectors alone in their cell emit no row (both engines).
     */
   /** Cells with the per-vector norm precomputed ONCE map-side, so the
-    * within-cell pairwise pass runs the codegen dot kernel only —
-    * cosine via three interpreted HOF passes per joined row was the
-    * bench hotspot (11 s → ~2 s at sf0.1). sqrt(dot(v,v)) matches the
-    * oracle's sqrt(nq)·sqrt(nc) factor exactly.
+    * within-cell pairwise pass runs one dot kernel per joined row instead
+    * of cosine's three. norm2 = sqrt(dot(v,v)) matches the oracle's
+    * sqrt(nq)·sqrt(nc) factor exactly.
     */
   private def semanticCells(s: SparkSession, dir: String): DataFrame =
     ivfModel(s, dir).assign(emb(s, dir), "features")
       .select(col("id"), col("features"), col("label").as("cell"),
-        sqrt(dotNative(col("features"), col("features"))).as("nrm"))
+        norm2(col("features")).as("nrm"))
 
   private def cellCos: Column =
     when(col("qn") === 0.0 || col("cn") === 0.0, lit(0.0))
-      .otherwise(dotNative(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      .otherwise(dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
 
   val semanticKnn = Q("q_semantic_knn",
     (s, dir) => {
@@ -946,7 +944,7 @@ object MlQueries {
       val l = unit.select(col("id").as("ida"), col("u").as("ua"))
       val r = unit.select(col("id").as("idb"), col("u").as("ub"))
       l.join(r, col("ida") < col("idb"))
-        .withColumn("cos", dotNative(col("ua"), col("ub")))
+        .withColumn("cos", dot(col("ua"), col("ub")))
         .filter(col("cos") > 0.9)
         .select(col("ida"), col("idb"), round(col("cos"), 6).as("cos_sim"))
     },
@@ -996,7 +994,7 @@ object MlQueries {
     * n). At ≤ 512 vectors the pick is 8, the original design point.
     */
   private def lshBits(w: Int): Seq[Column] = (0 until w).map(j =>
-    when(dotNative(col("features"), lit(hyperplane(j))) > 0.0, lit("1")).otherwise(lit("0")))
+    when(dot(col("features"), lit(hyperplane(j))) > 0.0, lit("1")).otherwise(lit("0")))
 
   /** The census-width plane → bit → bucket CTE chain, shared by the
     * bucketing oracle and the composed near-dup oracle — width picked by
@@ -1070,7 +1068,7 @@ object MlQueries {
       val r = bucketed.select(col("id").as("idb"), col("bucket"),
         col("features").as("fb"), col("nrm").as("nb"))
       l.join(r, Seq("bucket")).filter(col("ida") < col("idb"))
-        .withColumn("cos", dotNative(col("fa"), col("fb")) / (col("na") * col("nb")))
+        .withColumn("cos", dot(col("fa"), col("fb")) / (col("na") * col("nb")))
         .filter(col("cos") > 0.35)
         .select(col("ida"), col("idb"), round(col("cos"), 6).as("cos_sim"))
     },
@@ -1130,7 +1128,7 @@ object MlQueries {
       emb(s, dir).count())
 
   private def bandedBits(b: Int, w: Int): Column = concat((b * w until (b + 1) * w).map(j =>
-    when(dotNative(col("features"), lit(hyperplane(j))) > 0.0, lit("1")).otherwise(lit("0"))): _*)
+    when(dot(col("features"), lit(hyperplane(j))) > 0.0, lit("1")).otherwise(lit("0"))): _*)
 
   /** Banded candidates → exact-cosine verify (> 0.35): (ida, idb, cos) —
     * shared by the pair query and the grouping query. Memoized per
@@ -1170,7 +1168,7 @@ object MlQueries {
     // (doc_a, doc_b) shuffle and the build-side corpus ever hit disk.
     cand.join(l.hint("shuffle_hash"), Seq("doc_a"))
       .join(r.hint("shuffle_hash"), Seq("doc_b"))
-      .withColumn("cos", dotNative(col("fa"), col("fb")) / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("fa"), col("fb")) / (col("na") * col("nb")))
       .filter(col("cos") > 0.35)
       .select(col("doc_a").as("ida"), col("doc_b").as("idb"), col("cos"))
   }
@@ -1500,7 +1498,7 @@ object MlQueries {
     // encode: per subspace, argmin over the 4 codeword sqdists
     def codeCol(feat: Column, m: Int): Column = {
       val dists = array(models(m).centers.toIndexedSeq.map(cw =>
-        graft.functions.NativeVectorFunctions.sqDistNative(sub(feat, m), lit(cw))): _*)
+        sqDist(sub(feat, m), lit(cw))): _*)
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }
     val codes = e.select(col("id").as("cid") +:
@@ -1510,7 +1508,7 @@ object MlQueries {
     // ADC: per subspace, look the code up in the query's distance table
     val adist = (0 until PqM).map { m =>
       val lut = array(models(m).centers.toIndexedSeq.map(cw =>
-        graft.functions.NativeVectorFunctions.sqDistNative(sub(col("qe"), m), lit(cw))): _*)
+        sqDist(sub(col("qe"), m), lit(cw))): _*)
       element_at(lut, col(s"code$m") + 1)
     }.reduce(_ + _)
     val w = Window.partitionBy(col("qid")).orderBy(col("adist"), col("cid"))
@@ -1576,15 +1574,13 @@ object MlQueries {
   val annPqRecall = Q("q_ann_pq_recall",
     (s, dir) => {
       val e = emb(s, dir)
-      val sqd = (a: Column, b: Column) =>
-        graft.functions.NativeVectorFunctions.sqDistNative(a, b)
       val q = e.filter(col("id") < 5)
         .select(col("id").as("qid"), col("features").as("qe"))
       val cand = e.select(col("id").as("cid"), col("features").as("ce"))
       val wd = Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))
       val bf = cand.crossJoin(broadcast(q))
         .filter(col("cid") =!= col("qid"))
-        .withColumn("d2", sqd(col("ce"), col("qe")))
+        .withColumn("d2", sqDist(col("ce"), col("qe")))
         .withColumn("rn", row_number().over(wd))
         .filter(col("rn") <= 3)
         .select(col("qid"), col("cid"))
@@ -1595,7 +1591,7 @@ object MlQueries {
         .select(col("qid"), col("cid"))
         .join(cand, Seq("cid"))
         .join(broadcast(q), Seq("qid"))
-        .withColumn("d2", sqd(col("ce"), col("qe")))
+        .withColumn("d2", sqDist(col("ce"), col("qe")))
         .withColumn("rrn", row_number().over(
           Window.partitionBy(col("qid")).orderBy(col("d2"), col("cid"))))
         .filter(col("rrn") <= 3)
@@ -1677,15 +1673,13 @@ object MlQueries {
           map(pairs.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*),
           col("label"))
       }
-      val sqd = graft.functions.NativeVectorFunctions.dotNative _
       val e = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), _.cast("double")).as("f"))
         .withColumn("cent", centOf)
-      val nc = sqrt(sqd(col("cent"), col("cent")))
       val cos = e.select(col("vec_id"), col("label"),
-        round(sqd(col("f"), col("cent"))
-          / (sqrt(sqd(col("f"), col("f"))) * nc), 6).as("cos_centroid"))
+        round(dot(col("f"), col("cent"))
+          / (norm2(col("f")) * norm2(col("cent"))), 6).as("cos_centroid"))
       val w = Window.partitionBy(col("label"))
         .orderBy(col("cos_centroid"), col("vec_id"))
       cos.withColumn("rk", row_number().over(w).cast("long"))
@@ -1752,8 +1746,7 @@ object MlQueries {
       // asymmetric approximate dot: dequantize to bucket centers
       val recon = transform(col("codes"), (c, i) =>
         loAt(i) + (c + lit(0.5)) * (hiAt(i) - loAt(i)) / lit(256))
-      val adot = aggregate(zip_with(col("qe"), col("recon"), _ * _),
-        lit(0.0), _ + _)
+      val adot = dot(col("qe"), col("recon"))
       val wA = Window.partitionBy(col("qid")).orderBy(col("adot").desc, col("cid"))
       val short = codes.crossJoin(broadcast(q))
         .filter(col("cid") =!= col("qid"))

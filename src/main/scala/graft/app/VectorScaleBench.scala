@@ -3,7 +3,8 @@ package graft.app
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.NativeVectorFunctions.{argMinSqDistNative, dotNative}
+import graft.functions.NativeVectorFunctions.argMinSqDistNative
+import graft.functions.VectorFunctions.dot
 import graft.kmeans.KMeans
 
 /** Vector-tier scale probe (round-9 verdict item 3): the shipped IVF
@@ -144,7 +145,7 @@ object VectorScaleBench {
     val qDf = qRows.toSeq.toDF("qid", "qe")
     val scored = cells.crossJoin(broadcast(qDf))
       .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"), dotNative(col("ce"), col("qe")).as("dot"),
+      .select(col("qid"), col("cid"), dot(col("ce"), col("qe")).as("dot"),
         spark_partition_id().as("p"))
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"), col("p")).orderBy(col("dot").desc, col("cid"))
@@ -169,7 +170,7 @@ object VectorScaleBench {
       val nCand = cand.count()
       val ivf10 = cand
         .select(col("qid"), col("cid"),
-          dotNative(col("ce"), col("qe")).as("dot"))
+          dot(col("ce"), col("qe")).as("dot"))
         .withColumn("rn", row_number().over(wGlobal)).filter(col("rn") <= 10)
         .select(col("qid"), col("cid"))
       val hits = bf10.join(ivf10, Seq("qid", "cid")).count()

@@ -129,14 +129,10 @@ object BFR {
     * avoids `orderBy(id).limit(sampleN)` — a TakeOrdered of 20% of the
     * chunk through one merge, the init-stage scale killer at 100 TB.
     * Ids are unique, so `id <= kth` is exactly the size-sampleN prefix.
-    */
-  private[graft] def initSample(chunk: DataFrame, sampleN: Int): DataFrame =
-    initSampleWithThreshold(chunk, sampleN)._1
-
-  /** Sample plus the kth-smallest-id threshold that defines it, so the
-    * caller can take the complement as the map-side filter `id > kth`
-    * instead of a chunk-scale anti-join (ids are unique: the two filters
-    * partition the chunk exactly).
+    *
+    * Returns the sample plus that threshold, so the caller can take the
+    * complement as the map-side filter `id > kth` instead of a
+    * chunk-scale anti-join (the two filters partition the chunk exactly).
     */
   private[graft] def initSampleWithThreshold(
       chunk: DataFrame, sampleN: Int): (DataFrame, Long) = {
@@ -174,7 +170,7 @@ object BFR {
     def appendAssign(a: DataFrame, delta: DataFrame): DataFrame =
       assignSink match {
         case Some(sink) => sink(delta); a
-        case None       => unionAssign(a, delta)
+        case None       => a.union(delta)
       }
 
     var ds = IndexedSeq.empty[ClusterSummary]            // discard sets
@@ -499,18 +495,11 @@ object BFR {
       tagged.filter(!col("__keep")).select("id", "features"))
   }
 
-  /** J2/M5: nearest DS summary under α√d; returns (assigned(id,cluster),
-    * leftover(id,features)).
-    */
-  def assignToDs(points: DataFrame, ds: IndexedSeq[ClusterSummary], alpha: Double): (DataFrame, DataFrame) = {
-    val (a, r) = assignToDsWithFeatures(points, ds, alpha)
-    (a.select("id", "cluster"), r)
-  }
-
-  /** assignToDs keeping the features on the assigned side — callers that
-    * fold the matches into summaries (A4) read them directly instead of
-    * re-joining the chunk on id (which would shuffle both sides once per
-    * round).
+  /** J2/M5: nearest DS summary under α√d; returns
+    * (assigned(id, cluster, features), leftover(id, features)). The
+    * assigned side keeps its features so callers that fold the matches
+    * into summaries (A4) read them directly instead of re-joining the
+    * chunk on id (which would shuffle both sides once per round).
     */
   def assignToDsWithFeatures(points: DataFrame, ds: IndexedSeq[ClusterSummary],
                              alpha: Double): (DataFrame, DataFrame) = {
@@ -619,8 +608,6 @@ object BFR {
     val remap = (0 until cs.size).map(i => i -> newIdx(roots(i))).filter(p => p._1 != p._2).toMap
     (out, remap)
   }
-
-  private def unionAssign(a: DataFrame, b: DataFrame): DataFrame = a.union(b)
 
   private def emptyAssignments(spark: SparkSession, valueCol: String): DataFrame = {
     import org.apache.spark.sql.types._

@@ -2,25 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Whole-stage-codegen'd kernels for the hot vector paths. The HOF
-  * compositions in [[VectorFunctions]] are correct and general, but each
-  * evaluation materializes intermediate arrays (`zip_with` output) —
-  * at O(n²) pair volume (near-dup, ANN) that allocation dominates. These
-  * expressions emit a primitive loop over the two ArrayData buffers with
-  * zero allocation per row.
+/** Whole-stage-codegen'd kernels for the vector paths, exposed as
+  * `VectorFunctions.{dot, sqDist, mahalanobis}` (and composed there into
+  * euclidean / norm2 / cosine). Each emits a primitive loop over the
+  * ArrayData buffers with zero allocation per row — at O(n²) pair volume
+  * (near-dup, ANN) a `zip_with` fold's intermediate arrays dominated.
   *
-  * NULL semantics mirror the HOF folds exactly (so the optimizer rewrite
-  * in graft.plans is a pure substitution): unequal array lengths or a
-  * null element yield NULL, just as `zip_with` null-padding propagates
-  * through `aggregate`.
+  * Inputs must be array<double> (checked at analysis: the loops read
+  * elements with `getDouble`). NULL semantics: unequal array lengths or
+  * a null element yield NULL.
   */
-abstract class BinaryDoubleArrayFold extends BinaryExpression {
+abstract class BinaryDoubleArrayFold extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq.fill(2)(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
@@ -88,14 +87,13 @@ case class SqDistExpr(left: Expression, right: Expression)
 }
 
 /** Diagonal-σ Mahalanobis distance (zero-σ dims skipped,
-  * code/bfr.py:119-126) as one codegen'd ternary kernel — the BFR
-  * assignment hot path evaluates K of these per input row. Array
-  * lengths are expected to agree (the engine always pairs a point with
-  * same-d center/std literals); mismatches yield NULL like the binary
-  * kernels.
+  * code/bfr.py:119-126) as one codegen'd ternary kernel; BFR's k-way
+  * assignment ([[NearestMahaExpr]]) repeats its per-dimension ops.
+  * Length mismatches yield NULL like the binary kernels.
   */
 case class MahalanobisExpr(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq.fill(3)(ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
   override def nullable: Boolean = true
@@ -449,16 +447,6 @@ case class NearestMahaExpr(child: Expression,
 object NativeVectorFunctions {
   private def toCol(e: Expression): Column = ColumnBridge.column(e)
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  /** Codegen'd Σ a_i·b_i over two array<double> columns. */
-  def dotNative(a: Column, b: Column): Column = toCol(DotProductExpr(expr(a), expr(b)))
-
-  /** Codegen'd squared Euclidean distance over two array<double> columns. */
-  def sqDistNative(a: Column, b: Column): Column = toCol(SqDistExpr(expr(a), expr(b)))
-
-  /** Codegen'd diagonal-σ Mahalanobis distance (zero-σ dims skipped). */
-  def mahalanobisNative(p: Column, c: Column, sd: Column): Column =
-    toCol(MahalanobisExpr(expr(p), expr(c), expr(sd)))
 
   /** Codegen'd argmin cell against a literal center matrix — the
     * large-k quantizer assignment kernel (one loop, O(1) generated code

@@ -1,30 +1,32 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** Column-level dense-vector math over `ArrayType(DoubleType)` columns,
-  * built from Spark's codegen'd higher-order functions (`zip_with`,
-  * `aggregate`, `transform`) — no UDFs in the hot path.
+/** Column-level dense-vector math over `ArrayType(DoubleType)` columns.
+  * `dot`, `sqDist` and `mahalanobis` are the whole-stage-codegen kernels
+  * of [[NativeVectorExpressions]] (one primitive loop per row, no
+  * intermediate arrays, no UDFs); `euclidean`, `norm2` and `cosine` are
+  * composed from them. Unequal lengths or a NULL element give NULL.
   *
   * Reference semantics: `Utils.euclidean_distance` (code/bfr.py:109-117)
   * and `Utils.mahalanobis_distance` (code/bfr.py:119-126).
   */
 object VectorFunctions {
-
-  /** Element-wise sum fold: Σ f(a_i, b_i). */
-  private def zipSum(a: Column, b: Column)(f: (Column, Column) => Column): Column =
-    aggregate(zip_with(a, b, f), lit(0.0), (acc, x) => acc + x)
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
   /** Squared Euclidean distance Σ (a_i − b_i)². */
   def sqDist(a: Column, b: Column): Column =
-    zipSum(a, b)((x, y) => (x - y) * (x - y))
+    ColumnBridge.column(SqDistExpr(expr(a), expr(b)))
 
   /** Euclidean distance (code/bfr.py:109-117). */
   def euclidean(a: Column, b: Column): Column = sqrt(sqDist(a, b))
 
   /** Dot product Σ a_i·b_i. */
-  def dot(a: Column, b: Column): Column = zipSum(a, b)(_ * _)
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(DotProductExpr(expr(a), expr(b)))
 
   /** L2 norm. */
   def norm2(a: Column): Column = sqrt(dot(a, a))
@@ -40,21 +42,11 @@ object VectorFunctions {
     * `c` and per-dim std `s`; zero-σ dimensions contribute 0
     * (code/bfr.py:119-126 skips them).
     */
-  def mahalanobis(p: Column, c: Column, s: Column): Column = {
-    val diff = zip_with(p, c, (x, y) => x - y)
-    val scaled = zip_with(diff, s, (d, sd) =>
-      when(sd === 0.0, lit(0.0)).otherwise((d / sd) * (d / sd)))
-    sqrt(aggregate(scaled, lit(0.0), (acc, x) => acc + x))
-  }
+  def mahalanobis(p: Column, c: Column, s: Column): Column =
+    ColumnBridge.column(MahalanobisExpr(expr(p), expr(c), expr(s)))
 
-  /** Cast an array<float> column (parquet `list<float>`) to array<double>
-    * so the double-typed HOF math above applies exactly.
+  /** Cast an array<float> column (parquet `list<float>`) to array<double>,
+    * the only element type the kernels above accept.
     */
   def toDoubleArray(a: Column): Column = transform(a, _.cast("double"))
-
-  /** Element-wise vector add (code/bfr.py:42-44). */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, _ + _)
-
-  /** Scale a vector by a scalar column. */
-  def vecScale(a: Column, k: Column): Column = transform(a, _ * k)
 }

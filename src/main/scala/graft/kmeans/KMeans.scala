@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.ClusterSummary
-import graft.functions.NativeVectorFunctions.sqDistNative
+import graft.functions.VectorFunctions.sqDist
 import graft.operators.SummaryAggregator
 
 /** Distributed, deterministic K-Means: farthest-first (maximin) seeding +
@@ -37,7 +36,7 @@ object KMeans {
       * whole-stage codegen).
       */
     def distances(features: Column): Column =
-      array(centers.toIndexedSeq.map(c => sqDistNative(features, lit(c))): _*)
+      array(centers.toIndexedSeq.map(c => sqDist(features, lit(c))): _*)
 
     /** Above this k, assignment switches from k separate codegen kernels
       * (ideal at BFR/k-means scale — each stays inside whole-stage
@@ -147,7 +146,7 @@ object KMeans {
         .limit(firstSeedRank + 1).collect().last
         .getSeq[Double](0).toArray
       val seeds = scala.collection.mutable.ArrayBuffer[Array[Double]](first)
-      var minExpr: Column = sqDistNative(col("__f"), lit(first))
+      var minExpr: Column = sqDist(col("__f"), lit(first))
       var i = 1
       while (i < k) {
         // argmax of min-distance; ties break to the lowest id for determinism
@@ -155,7 +154,7 @@ object KMeans {
           .orderBy(col("__mind").desc, col("__id"))
           .select("__f").head().getSeq[Double](0).toArray
         seeds += next
-        minExpr = least(minExpr, sqDistNative(col("__f"), lit(next)))
+        minExpr = least(minExpr, sqDist(col("__f"), lit(next)))
         i += 1
       }
       seeds.toArray
@@ -312,15 +311,4 @@ object KMeans {
     }
     Model(centers)
   }
-
-  /** Cluster and return per-cluster sufficient statistics keyed by label. */
-  def summaries(points: DataFrame, model: Model, featCol: String = "features"): Map[Int, ClusterSummary] =
-    model.assign(points, featCol)
-      .groupBy(col("label"))
-      .agg(SummaryAggregator.summarize(col(featCol)).as("s"))
-      .collect()
-      .map { row =>
-        val s = row.getStruct(1)
-        row.getInt(0) -> ClusterSummary(s.getLong(0), s.getSeq[Double](1).toArray, s.getSeq[Double](2).toArray)
-      }.toMap
 }

@@ -1,33 +1,15 @@
 package graft.kmeans
 
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.clustering.{KMeans => MllibKM, KMeansModel => MllibKMModel}
 import org.apache.spark.mllib.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** MLlib-backed k-means (SURVEY.md §7: "MLlib-backed + exact mode") — the
-  * distributed k-means|| initializer + Lloyd from `org.apache.spark.ml`,
-  * adapted to the engine's Model so downstream assignment/inertia/BFR
-  * code is path-agnostic. Use this for very large inputs where k-means||
-  * beats sequential maximin seeding; use [[KMeans.fit]] where the
-  * reference's exact seeding semantics (and bit-reproducibility) matter.
+/** MLlib-backed k-means (SURVEY.md §7: "MLlib-backed + exact mode"):
+  * MLlib's distributed Lloyd adapted to the engine's Model, so
+  * downstream assignment/inertia code is path-agnostic.
   */
 object MLlibKMeans {
-
-  def fit(points: DataFrame, k: Int, iters: Int = 5, seed: Long = 42L,
-          featCol: String = "features"): KMeans.Model = {
-    val withVec = points.withColumn("__vec", array_to_vector(col(featCol)))
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k)
-      .setMaxIter(iters)
-      .setSeed(seed)
-      .setInitMode("k-means||")
-      .setFeaturesCol("__vec")
-      .fit(withVec)
-    KMeans.Model(model.clusterCenters.map(_.toArray))
-  }
-
   /** MLlib Lloyd from PINNED initial centers (the RDD API's
     * `setInitialModel` — the `ml` facade exposes no equivalent): skips
     * the randomized k-means|| init entirely, so the fit is deterministic

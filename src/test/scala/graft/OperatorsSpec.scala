@@ -280,7 +280,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val pts = (0 until 1000).map(i => (i.toLong, Seq(i.toDouble)))
       .toDF("id", "features").repartition(8)
-    val sample = graft.bfr.BFR.initSample(pts, 200)
+    val sample = graft.bfr.BFR.initSampleWithThreshold(pts, 200)._1
     val p = sample.queryExecution.executedPlan.toString
     assert(!p.contains("TakeOrdered") && !p.contains("Sort ["),
       s"init sample must be a filter, not a global sort:\n$p")

@@ -112,6 +112,19 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast of summaries:\n$p")
   }
 
+  test("vector distances plan as codegen kernels, never as zip_with folds") {
+    for ((name, kernel) <- Seq(
+        "q_mahalanobis" -> "mahalanobis_native", "q_l2_norm" -> "dot_native",
+        "q_sse_per_label" -> "sqdist_native", "q_ann_brute_force" -> "dot_native",
+        "q_hybrid_rrf" -> "dot_native")) {
+      val p = plan(name)
+      assert(p.contains(kernel), s"$name: expected $kernel:\n$p")
+      // q_mahalanobis builds its σ vector with a zip_with map; only the
+      // fold shape aggregate(zip_with(...)) is a distance
+      assert(!p.contains("aggregate(zip_with"), s"$name: HOF distance fold in the plan:\n$p")
+    }
+  }
+
   test("q_source_overlap / q_near_dedup_keep: equi-joins only, no cross join") {
     for (name <- Seq("q_source_overlap", "q_near_dedup_keep")) {
       val p = plan(name)

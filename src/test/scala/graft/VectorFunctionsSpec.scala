@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.ClusterSummary
@@ -38,29 +40,76 @@ class VectorFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  /** One array<double> column per name, NULL arrays and elements allowed. */
+  def arrays(names: Seq[String], rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row.fromSeq), 2),
+      StructType(names.map(StructField(_, ArrayType(DoubleType)))))
+
   test("native codegen kernels match the HOF expressions exactly") {
-    import graft.functions.NativeVectorFunctions._
-    val pairs = Seq.fill(100)((vec(), vec()))
-    val df = pairs.toDF("a", "b")
-    val rows = df.select(
-      dotNative(col("a"), col("b")).as("dn"),
-      dot(col("a"), col("b")).as("dh"),
-      sqDistNative(col("a"), col("b")).as("sn"),
-      sqDist(col("a"), col("b")).as("sh")).collect()
-    rows.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1), "dot: native != HOF")
-      assert(r.getDouble(2) == r.getDouble(3), "sqdist: native != HOF")
+    val dims = 0 until dim
+    def rndVec: Seq[Any] = vec().toSeq
+    def rndStd: Seq[Any] = dims.map(i => if (i % 3 == 0) 0.0 else rnd.nextDouble() * 2 + 0.1)
+    def withNull(v: Seq[Any], i: Int): Seq[Any] = v.updated(i, null)
+    // (a, b, c, s): a·b for the binary ops, (a, c, s) for mahalanobis;
+    // every s has zero-σ dims (0, 3), the skip branch
+    val random = Seq.fill(100)(Seq(rndVec, rndVec, rndVec, rndStd))
+    val nullRows = Seq(
+      Seq(withNull(rndVec, 1), rndVec, rndVec, rndStd),   // null element
+      Seq(null, rndVec, rndVec, rndStd),                   // null array
+      Seq(rndVec.take(dim - 1), rndVec, rndVec, rndStd))   // length mismatch
+    val others = Seq(
+      Seq(Seq.fill(dim)(0.0), rndVec, rndVec, rndStd),     // zero norm
+      Seq(rndVec, rndVec, withNull(rndVec, 2), rndStd),    // null center element
+      Seq(rndVec, rndVec, rndVec, withNull(rndStd, 4)))    // null σ element
+    val cases = random ++ nullRows ++ others
+    val df = arrays(Seq("a", "b", "c", "s"), cases)
+    val (a, b, c, sd) = (col("a"), col("b"), col("c"), col("s"))
+    val ops = Seq[(String, Column, Column)](
+      ("dot", dot(a, b), HofVectorOracle.dot(a, b)),
+      ("sqDist", sqDist(a, b), HofVectorOracle.sqDist(a, b)),
+      ("euclidean", euclidean(a, b), HofVectorOracle.euclidean(a, b)),
+      ("norm2", norm2(a), HofVectorOracle.norm2(a)),
+      ("cosine", cosine(a, b), HofVectorOracle.cosine(a, b)),
+      ("mahalanobis", mahalanobis(a, c, sd), HofVectorOracle.mahalanobis(a, c, sd)))
+    val rows = df.select(ops.flatMap { case (n, k, h) => Seq(k.as(n), h.as(s"${n}_hof")) }: _*)
+      .collect()
+    def same(x: Any, y: Any): Boolean = (x, y) match {
+      case (null, null) => true
+      case (p: Double, q: Double) =>
+        java.lang.Double.doubleToRawLongBits(p) == java.lang.Double.doubleToRawLongBits(q)
+      case _ => false
     }
+    rows.zipWithIndex.foreach { case (r, i) =>
+      ops.indices.foreach { o =>
+        assert(same(r.get(2 * o), r.get(2 * o + 1)),
+          s"${ops(o)._1} case $i: kernel=${r.get(2 * o)} hof=${r.get(2 * o + 1)}")
+      }
+    }
+    // norm2 reads `a` alone, so a short `a` still has a norm
+    for ((r, i) <- rows.slice(random.size, random.size + nullRows.size).zipWithIndex;
+         o <- ops.indices if !(i == 2 && ops(o)._1 == "norm2"))
+      assert(r.isNullAt(2 * o), s"${ops(o)._1} null case $i: expected NULL")
+    assert(rows(random.size + nullRows.size).getDouble(8) == 0.0, "zero-norm cosine")
+    assert(rows.takeRight(2).forall(_.isNullAt(10)), "null center/σ element → NULL")
+    // where a NULL coordinate meets a zero-σ dim the HOF form skips the
+    // dim (0.0); the kernel returns NULL for any NULL element
+    val zeroSigmaNull = arrays(Seq("p", "c", "s"), Seq(Seq(Seq(null, 1.0), Seq(0.0, 0.0), Seq(0.0, 1.0))))
+    assert(zeroSigmaNull.select(mahalanobis(col("p"), col("c"), col("s"))).head().isNullAt(0))
+  }
+
+  test("vector kernels reject non-double arrays at analysis") {
+    val f = Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
+    intercept[AnalysisException](f.select(dot(col("a"), col("b"))).collect())
+    intercept[AnalysisException](f.select(mahalanobis(col("a"), col("b"), col("b"))).collect())
   }
 
   test("native mahalanobis matches scalar incl zero-std skip") {
-    import graft.functions.NativeVectorFunctions._
     val pts = Seq.fill(30)(vec())
     val s0 = pts.map(p => { val q = p.clone(); q(3) = -7.0; q })
       .foldLeft(ClusterSummary.zero(dim))((acc, p) => acc.add(p))
     val probes = Seq.fill(20)(vec())
     val rows = probes.toDF("p")
-      .select(mahalanobisNative(col("p"), lit(s0.center), lit(s0.std)).as("m"))
+      .select(mahalanobis(col("p"), lit(s0.center), lit(s0.std)).as("m"))
       .collect()
     probes.zip(rows).foreach { case (p, r) =>
       assert(math.abs(r.getDouble(0) - s0.mahalanobis(p)) < 1e-9)
@@ -112,7 +161,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
       // comparison now that Model itself delegates to the single-loop
       // kernels at large k
       val dists = array(centers.toIndexedSeq.map(c =>
-        graft.functions.NativeVectorFunctions.sqDistNative(col("e"), lit(c))): _*)
+        sqDist(col("e"), lit(c))): _*)
       val rows = df.select(col("id"),
         graft.functions.NativeVectorFunctions.argMinSqDistNative(col("e"), centers).as("a"),
         (array_position(dists, array_min(dists)) - 1).cast("int").as("b"),
@@ -181,7 +230,7 @@ class VectorFunctionsSpec extends AnyFunSuite {
       val pts = (0 until 200).map(i => (i.toLong, Array.fill(dim)(rnd2.nextDouble() * 12 - 6)))
       val df = pts.toDF("id", "e")
       val dists = array(centers.indices.map(j =>
-        mahalanobisNative(col("e"), lit(centers(j)), lit(stds(j)))): _*)
+        mahalanobis(col("e"), lit(centers(j)), lit(stds(j)))): _*)
       val best = array_min(dists)
       val rows = df.select(col("id"),
         nearestMahaNative(col("e"), centers, stds, thr).as("pk"),
@@ -198,5 +247,32 @@ class VectorFunctionsSpec extends AnyFunSuite {
       val bad = Seq((0L, Array(1.0, 2.0))).toDF("id", "e")
       assert(bad.select(nearestMahaNative(col("e"), centers, stds, thr)).head().isNullAt(0))
     }
+  }
+}
+
+/** The interpreted higher-order-function forms (`zip_with` folded by
+  * `aggregate`) that the codegen kernels behind [[graft.functions.VectorFunctions]]
+  * replaced — kept in test scope only, as the kernels' equivalence oracle.
+  */
+object HofVectorOracle {
+  private def zipSum(a: Column, b: Column)(f: (Column, Column) => Column): Column =
+    aggregate(zip_with(a, b, f), lit(0.0), (acc, x) => acc + x)
+
+  def sqDist(a: Column, b: Column): Column = zipSum(a, b)((x, y) => (x - y) * (x - y))
+  def euclidean(a: Column, b: Column): Column = sqrt(sqDist(a, b))
+  def dot(a: Column, b: Column): Column = zipSum(a, b)(_ * _)
+  def norm2(a: Column): Column = sqrt(dot(a, a))
+
+  def cosine(a: Column, b: Column): Column = {
+    val na = norm2(a)
+    val nb = norm2(b)
+    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
+  }
+
+  def mahalanobis(p: Column, c: Column, s: Column): Column = {
+    val diff = zip_with(p, c, (x, y) => x - y)
+    val scaled = zip_with(diff, s, (d, sd) =>
+      when(sd === 0.0, lit(0.0)).otherwise((d / sd) * (d / sd)))
+    sqrt(aggregate(scaled, lit(0.0), (acc, x) => acc + x))
   }
 }
