@@ -24,13 +24,18 @@ import graft.operators.SummaryAggregator
   *    re-clustering runs in driver memory — one collect of RS, then fit,
   *    labels and CS summaries on the driver — while RS rows × d stay
   *    within `KMeans.LocalFitCells`; a larger RS takes the distributed
-  *    step (k-means fit, label aggregation, broadcast joins);
+  *    step (k-means fit, label aggregation, broadcast joins). RS's row
+  *    count rides the absorb aggregation, and within that budget the
+  *    same collect also cuts RS's lineage every round, so a round takes
+  *    RS in one job;
   *  - CS pairwise merge is a driver-side greedy loop over ≤5K summaries
   *    (code/bfr.py:290-320, with the center-vs-object bug fixed —
   *    code/bfr.py:304 passes SummarizedSet objects where vectors are
   *    expected);
-  *  - assignments are accumulated as DataFrames (id, cluster), not a
-  *    driver dict, so the output path scales with the data.
+  *  - assignments are kept as DataFrames (id, cluster), not a driver
+  *    dict, so the output path scales with the data: each round
+  *    checkpoints only its own delta, and the result is the union of the
+  *    per-round checkpoints (no round re-copies earlier rounds' rows).
   *
   * Reference quirks deliberately fixed (SURVEY.md §7.2): the `if label:`
   * truthiness bug that sent points nearest cluster 0 to RS
@@ -89,14 +94,15 @@ object BFR {
     ((shiftright(packed, 1)).cast("int"), packed.bitwiseAND(1) === 1)
   }
 
+  private def summaryOf(s: Row): ClusterSummary =
+    ClusterSummary(s.getLong(0), s.getSeq[Double](1).toArray, s.getSeq[Double](2).toArray)
+
   private[graft] def summariesByLabel(assigned: DataFrame, featCol: String): Map[Int, ClusterSummary] =
     assigned.groupBy(col("label"))
       .agg(SummaryAggregator.summarize(col(featCol)).as("s"))
       .collect()
-      .map { row =>
-        val s = row.getStruct(1)
-        row.getInt(0) -> ClusterSummary(s.getLong(0), s.getSeq[Double](1).toArray, s.getSeq[Double](2).toArray)
-      }.toMap
+      .map(row => row.getInt(0) -> summaryOf(row.getStruct(1)))
+      .toMap
 
   /** Total within-cluster SSE of the discard-set summaries, driver-side
     * from the sufficient statistics alone: Σ_d (SUMSQ_d − SUM_d²/N) per
@@ -163,21 +169,23 @@ object BFR {
     require(chunks.nonEmpty, "BFR needs at least one chunk")
     // streaming-sink mode: every finalized assignment block is handed to
     // the sink the moment it exists and the driver accumulates NOTHING —
-    // in local mode the default union+localCheckpoint path stores the
-    // accumulated blocks in the block manager (the driver JVM's heap!),
-    // which is exactly the state a 100M-point probe must NOT hold.
+    // in local mode the default checkpoint path stores the assignment
+    // blocks in the block manager (the driver JVM's heap!), which is
+    // exactly the state a 100M-point probe must NOT hold.
     // Result.assignments is the empty frame in sink mode.
-    def appendAssign(a: DataFrame, delta: DataFrame): DataFrame =
+    val roundAssigned = scala.collection.mutable.ArrayBuffer[DataFrame]() // this round's blocks
+    val assignedCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]() // one per round
+    def appendAssign(delta: DataFrame): Unit =
       assignSink match {
-        case Some(sink) => sink(delta); a
-        case None       => a.union(delta)
+        case Some(sink) => sink(delta)
+        case None       => roundAssigned += delta
       }
 
     var ds = IndexedSeq.empty[ClusterSummary]            // discard sets
     var cs = IndexedSeq.empty[ClusterSummary]            // compression sets
     var csMembers: DataFrame = emptyAssignments(spark, "cs_id") // (id, cs_id)
     var rs: DataFrame = null                             // retained points
-    var assigned: DataFrame = emptyAssignments(spark, "cluster")
+    var rsCount = 0L                                     // rows of rs
     val stats = scala.collection.mutable.ArrayBuffer[RoundStats]()
     var discardedSoFar = 0L
     // tagged per-round assignment frames, unpersisted once the round's
@@ -204,10 +212,12 @@ object BFR {
       val round = idx + 1
       step(round, "chunk")
       val chunk = chunkRaw.select(col("id").cast("long").as("id"), col("features"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // round 1 reads its chunk four times (count, k-th smallest id,
+      // sample, rest) and caches it; later rounds read it once, through
+      // tagAssign's persisted frame, so a chunk cache would never be read
+      if (round == 1) chunk.persist(StorageLevel.MEMORY_AND_DISK)
       // round 1 needs the count for the init-sample sizing (and sets the
-      // loop width); later rounds skip the job — their first action over
-      // the persisted chunk materializes the cache just the same
+      // loop width); later rounds skip the job
       val chunkN = if (round == 1) chunk.count() else -1L
 
       if (round == 1) {
@@ -257,12 +267,13 @@ object BFR {
           .select("id", "features")
           .persist(StorageLevel.MEMORY_AND_DISK)
         // degenerate guard: if outlier removal left fewer than K points
-        // (tiny samples), keep the whole sample as inliers
-        val (inliers, rsInit, nInliers) =
+        // (tiny samples), keep the whole sample as inliers. RS starts with
+        // one point per singleton label
+        val (inliers, rsInit, nInliers, nRsInit) =
           if (nInliers0 < cfg.k)
             (sample.select("id", "features").persist(StorageLevel.MEMORY_AND_DISK),
-              sample.select("id", "features").limit(0), sampleN.toLong)
-          else (inliers0, rsInit0, nInliers0)
+              sample.select("id", "features").limit(0), sampleN.toLong, 0L)
+          else (inliers0, rsInit0, nInliers0, singletonLabels.length.toLong)
         // re-cluster inliers into K -> DS; the shape is already known
         // (inlier count from the histogram, d from the coarse model), so
         // the fit's probe job is skipped
@@ -281,72 +292,80 @@ object BFR {
         val relabel = present.zipWithIndex.toMap
         ds = present.map(byLabel).toIndexedSeq
         val relabelExpr = map(relabel.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
-        assigned = appendAssign(assigned,
-          fineAssigned.select(col("id"),
-            element_at(relabelExpr, col("label")).cast("int").as("cluster")))
+        appendAssign(fineAssigned.select(col("id"),
+          element_at(relabelExpr, col("label")).cast("int").as("cluster")))
         discardedSoFar += byLabel.values.map(_.n).sum // sample inliers
         rs = rsInit
+        rsCount = nRsInit
         // rest of chunk 1 through the normal DS/RS path (code/bfr.py:429):
         // the exact complement of the `id <= kth` sample, as a map-side
         // filter — not an anti-join, which would shuffle the whole chunk
         val rest = chunk.filter(col("id") > kth)
         val (tg2, a2, r2) = tagAssign(rest, ds, cfg.alphaAssign)
-        if (tg2 != null) roundTags += tg2
-        assigned = appendAssign(assigned, a2.select("id", "cluster"))
+        roundTags += tg2
+        appendAssign(a2.select("id", "cluster"))
         // A4: assigned points fold into their DS summaries (the reference
         // updates per point at code/bfr.py:389; we fold the chunk's delta);
-        // the same aggregation yields the discarded-count delta
+        // the same aggregation yields the discarded and leftover counts
         step(round, "absorb-rest")
-        val (ds2, n2) = absorbCounted(ds,
-          a2.select(col("cluster").as("label"), col("features")))
-        ds = ds2; discardedSoFar += n2
+        val (ds2, n2, left2) = absorbTagged(ds, tg2)
+        ds = ds2; discardedSoFar += n2; rsCount += left2
         rs = rs.union(r2)
         sample.unpersist(false); coarseAssigned.unpersist(false)
         inliers0.unpersist(false); inliers.unpersist(false); fineAssigned.unpersist(false)
       } else {
         // --- per-chunk step (M5, code/bfr.py:382-391) ---
         val (tg, a, r) = tagAssign(chunk, ds, cfg.alphaAssign)
-        if (tg != null) roundTags += tg
-        assigned = appendAssign(assigned, a.select("id", "cluster"))
+        roundTags += tg
+        appendAssign(a.select("id", "cluster"))
         step(round, "absorb")
-        val (dsN, nA) = absorbCounted(ds,
-          a.select(col("cluster").as("label"), col("features")))
-        ds = dsN; discardedSoFar += nA
+        val (dsN, nA, nLeft) = absorbTagged(ds, tg)
+        ds = dsN; discardedSoFar += nA; rsCount += nLeft
         rs = rs.union(r)
       }
 
-      // localCheckpoint truncates the round-over-round lineage — the plan
-      // otherwise compounds each round (embedded center literals included)
-      // until even stringifying it OOMs the driver. LAZY + count(): one
-      // job materializes the checkpoint AND yields the census the
-      // RS-management steps below need (the eager form paid a separate
-      // job, and the RS side of the tagged pass re-ran the distance
-      // kernel before tagAssign cached it)
-      step(round, "rs-checkpoint")
-      rs = rs.localCheckpoint(false)
-      var rsCount = rs.count()
+      // The RS lineage must be cut every round — the plan otherwise
+      // compounds (embedded center literals included) until even
+      // stringifying it OOMs the driver, and it reads the round's tagged
+      // cache. rsCount is already known from the absorb aggregation.
+      // While RS fits KMeans' local-fit budget (KMeans.fit would collect
+      // it for a fit anyway), ONE collect serves both cases: RS becomes a
+      // driver-built frame, and an RS over the threshold re-clusters on
+      // the driver from the same rows. A larger RS is checkpointed
+      // eagerly for the distributed step.
+      val rsSchema = rs.schema
+      def driverFrame(rows: Array[Row]): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), rsSchema)
+      val localD = ds.headOption.map(_.d)
+        .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
+      var rsRows: Array[Row] = null
+      if (localD.isDefined) {
+        step(round, "rs-recluster")
+        rsRows = if (rsCount == 0) Array.empty[Row] else KMeans.collectById(rs)
+        rs = driverFrame(rsRows)
+      } else {
+        step(round, "rs-checkpoint")
+        rs = rs.localCheckpoint(true)
+      }
 
       // --- RS -> CS re-clustering (M6, code/bfr.py:259-288) ---
       if (rsCount > cfg.rsClusterThreshold) {
-        step(round, "rs-recluster")
         val kCs = math.min(cfg.csKMult * cfg.k, (rsCount / 2).toInt max 1)
         val base = cs.size
-        // RS under KMeans' local-fit budget (KMeans.fit would collect it
-        // for the fit anyway) re-clusters on the driver from ONE collect;
-        // the distributed step below costs ~9 jobs for the same result
-        val localD = ds.headOption.map(_.d)
-          .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
+        // the driver-local step is the distributed one's result without
+        // its ~9 jobs
         localD match {
           case Some(d) =>
             val (retained, summaries, members) =
-              reclusterLocal(KMeans.collectById(rs), d, kCs, cfg.kmeansIters)
+              reclusterLocal(rsRows, d, kCs, cfg.kmeansIters)
             cs = cs ++ summaries
             csMembers = csMembers.union(spark.createDataFrame(
               java.util.Arrays.asList(members.map { case (id, i) => Row(id, base + i) }: _*),
               csMembers.schema))
-            rs = spark.createDataFrame(java.util.Arrays.asList(retained: _*), rs.schema)
+            rs = driverFrame(retained)
             rsCount = retained.length
           case None =>
+            step(round, "rs-recluster")
             val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
             val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
             val singles = rsAssigned.groupBy(col("label")).count()
@@ -388,7 +407,7 @@ object BFR {
         val (dsN, nA) = absorbCounted(ds,
           a.select(col("cluster").as("label"), col("features")))
         ds = dsN; discardedSoFar += nA
-        assigned = appendAssign(assigned, a.select("id", "cluster"))
+        appendAssign(a.select("id", "cluster"))
         rs = rs.join(overflow.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
         rsCount = rs.count()
       }
@@ -397,12 +416,12 @@ object BFR {
       if (round < nRounds && rsCount > 0) {
         step(round, "rs-spill")
         val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
-        if (tg != null) roundTags += tg
+        roundTags += tg
         // α=4 spill merges matched points into DS summaries (code/bfr.py:331-333)
         val (dsN, nA) = absorbCounted(ds,
           a.select(col("cluster").as("label"), col("features")))
         ds = dsN; discardedSoFar += nA
-        assigned = appendAssign(assigned, a.select("id", "cluster"))
+        appendAssign(a.select("id", "cluster"))
         rs = r.localCheckpoint(false)
         rsCount = rs.count() // == rsCount - nA; materializes the checkpoint
       }
@@ -412,15 +431,14 @@ object BFR {
       if (round == nRounds) { step(round, "finalize")
         if (rsCount > 0) {
           val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
-          if (tg != null) roundTags += tg
+          roundTags += tg
           val (dsN, aCount) = absorbCounted(ds,
             a.select(col("cluster").as("label"), col("features")))
           ds = dsN
-          assigned = appendAssign(assigned, a.select("id", "cluster"))
+          appendAssign(a.select("id", "cluster"))
           discardedSoFar += aCount
           retained = rsCount - aCount
-          assigned = appendAssign(assigned,
-            r.select(col("id"), lit(-1).cast("int").as("cluster")))
+          appendAssign(r.select(col("id"), lit(-1).cast("int").as("cluster")))
           rs = r
         }
         // force-merge every CS into its nearest DS (α=10^18, code/bfr.py:350)
@@ -434,7 +452,7 @@ object BFR {
             csToDs.filter(_._2 == di).keys.foldLeft(s)((acc, ci) => acc.merge(cs(ci)))
           }
           val csMap = map(csToDs.toSeq.flatMap { case (c, d0) => Seq(lit(c), lit(d0)) }: _*)
-          assigned = appendAssign(assigned,
+          appendAssign(
             csMembers.select(col("id"), element_at(csMap, col("cs_id")).cast("int").as("cluster")))
           discardedSoFar += cs.map(_.n).sum // CS merge and remap keep N
           cs = IndexedSeq.empty
@@ -442,17 +460,23 @@ object BFR {
         }
       }
 
-      // incremental accounting: each round counts only its delta batches,
-      // never the accumulated assignments (an O(rounds^2) rescan at scale)
+      // each round checkpoints only its own assignment delta; a checkpoint
+      // of the running union would re-copy every earlier round (O(rounds^2))
       step(round, "assigned-checkpoint")
-      if (assignSink.isEmpty) assigned = assigned.localCheckpoint(true)
+      if (roundAssigned.nonEmpty) {
+        assignedCheckpoints += roundAssigned.reduce(_ union _).localCheckpoint(true)
+        roundAssigned.clear()
+      }
       // checkpoint the CS membership only while CS state exists; its
-      // point count is the summaries' N (CS merge and remap keep N)
-      if (cs.nonEmpty) csMembers = csMembers.localCheckpoint(true)
+      // point count is the summaries' N (CS merge and remap keep N).
+      // Every round's new members add their partitions to the union, so
+      // it narrows back to the core count first (no shuffle)
+      if (cs.nonEmpty) csMembers = csMembers
+        .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(true)
       val csPoints = cs.map(_.n).sum
       stats += RoundStats(round, ds.size, discardedSoFar, cs.size, csPoints,
         if (round == nRounds) retained else rsCount)
-      chunk.unpersist(false)
+      if (round == 1) chunk.unpersist(false)
       // every checkpoint/sink that reads the round's tagged frames has
       // materialized above; drop the caches before the next chunk
       roundTags.foreach(_.unpersist(false))
@@ -465,27 +489,27 @@ object BFR {
       prevAqe.foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     }
 
-    Result(assigned, stats.toSeq, ds)
+    Result(
+      if (assignedCheckpoints.isEmpty) emptyAssignments(spark, "cluster")
+      else assignedCheckpoints.reduce(_ union _),
+      stats.toSeq, ds)
   }
 
   /** One persisted distance pass per assignment step: tag every point
     * with (cluster, keep) and derive the assigned / leftover sides as
     * filters over the SAME cached frame, so the absorb aggregation, the
-    * RS checkpoint and the assignment delta all read one cache instead
+    * RS collect and the assignment delta all read one cache instead
     * of each re-running the Mahalanobis kernel (previously two full
     * kernel passes per chunk per round). The caller owns the cache:
     * unpersist after the round's checkpoints materialize (roundTags).
-    * Returns (tagged-or-null, assigned(id,cluster,features),
-    * leftover(id,features)).
+    * With no DS every point is leftover. Returns (tagged,
+    * assigned(id,cluster,features), leftover(id,features)).
     */
   private def tagAssign(points: DataFrame, ds: IndexedSeq[ClusterSummary],
                         alpha: Double): (DataFrame, DataFrame, DataFrame) = {
-    if (ds.isEmpty)
-      return (null,
-        emptyAssignments(points.sparkSession, "cluster")
-          .withColumn("features", lit(null).cast("array<double>")),
-        points.select("id", "features"))
-    val (label, keep) = nearestUnder(col("features"), ds, alpha)
+    val (label, keep) =
+      if (ds.isEmpty) (lit(null).cast("int"), lit(false))
+      else nearestUnder(col("features"), ds, alpha)
     val tagged = points
       .select(col("id"), label.cast("int").as("cluster"),
         coalesce(keep, lit(false)).as("__keep"), col("features"))
@@ -530,6 +554,26 @@ object BFR {
     val deltas = summariesByLabel(labeled, "features")
     (ds.zipWithIndex.map { case (s, i) => deltas.get(i).map(s.merge).getOrElse(s) },
       deltas.values.map(_.n).sum)
+  }
+
+  /** [[absorbCounted]] over a [[tagAssign]] frame, plus its leftover
+    * row count, from ONE grouped aggregation: kept rows group by cluster
+    * into the summary fold, and leftover rows form the NULL group with
+    * their vectors masked to NULL, which the fold skips — a NULL or
+    * ragged vector routes to RS and never reaches a summary. Returns
+    * (ds', kept count, leftover count).
+    */
+  private def absorbTagged(ds: IndexedSeq[ClusterSummary], tagged: DataFrame)
+      : (IndexedSeq[ClusterSummary], Long, Long) = {
+    val keep = col("__keep")
+    val (kept, leftover) = tagged.groupBy(when(keep, col("cluster")).as("label"))
+      .agg(SummaryAggregator.summarizeNonNull(when(keep, col("features"))).as("s"),
+        count(lit(1)).as("n"))
+      .collect()
+      .partition(!_.isNullAt(0))
+    val deltas = kept.map(row => row.getInt(0) -> summaryOf(row.getStruct(1))).toMap
+    (ds.zipWithIndex.map { case (s, i) => deltas.get(i).map(s.merge).getOrElse(s) },
+      deltas.values.map(_.n).sum, leftover.map(_.getLong(2)).sum)
   }
 
   /** Driver-local RS -> CS re-clustering of id-sorted `(id, features)`

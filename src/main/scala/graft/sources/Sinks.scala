@@ -21,17 +21,26 @@ object Sinks {
     val rows = assignments
       .select(col(assignments.columns(0)).cast("long").as("id"),
         col(assignments.columns(1)).cast("int").as("cluster"))
-      // duplicate input ids (the reference's own micro-fixture has them,
-      // FIXTURES.md §1) would emit duplicate JSON keys; keep the real
-      // cluster over -1, then max — mirrors the reference dict's
-      // last-write-wins collapse while staying deterministic
-      .groupBy(col("id")).agg(max(col("cluster")).as("cluster"))
-      .orderBy("id").collect()
+      .collect()
+    // duplicate input ids (the reference's own micro-fixture has them,
+    // FIXTURES.md §1) would emit duplicate JSON keys; keep the real
+    // cluster over -1, then max — mirrors the reference dict's
+    // last-write-wins collapse while staying deterministic. The rows end
+    // on the driver anyway, so the dedup and the id sort run here and the
+    // sink stays one job
+    val best = new scala.collection.mutable.LongMap[Int](rows.length)
+    rows.foreach { r =>
+      require(!r.isNullAt(0) && !r.isNullAt(1), s"assignment row with a NULL id or cluster: $r")
+      val id = r.getLong(0)
+      best.update(id, math.max(best.getOrElse(id, Int.MinValue), r.getInt(1)))
+    }
+    val ids = best.keys.toArray
+    java.util.Arrays.sort(ids)
     val sb = new StringBuilder("{")
     var first = true
-    rows.foreach { r =>
+    ids.foreach { id =>
       if (!first) sb.append(", ")
-      sb.append('"').append(r.getLong(0).toString).append("\": ").append(r.getInt(1))
+      sb.append('"').append(id.toString).append("\": ").append(best(id))
       first = false
     }
     sb.append('}')

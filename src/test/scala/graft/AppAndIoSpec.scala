@@ -61,6 +61,56 @@ class AppAndIoSpec extends AnyFunSuite {
       s"kept ${rows.map(_.getLong(0)).toSeq}")
   }
 
+  /** The chunk parse as it stood over `spark.read.text` — the oracle for
+    * the Hadoop-split reader (same projection and filters).
+    */
+  private def textSourceParse(file: String) = {
+    val parts = split(col("value"), ",")
+    spark.read.text(file)
+      .filter(length(trim(col("value"))) > 0)
+      .select(
+        element_at(parts, 1).try_cast("long").as("id"),
+        transform(slice(parts, lit(2), size(parts) - 1), _.try_cast("double")).as("features"))
+      .filter(col("id").isNotNull && size(col("features")) > 0 &&
+        !array_contains(transform(col("features"), _.isNull), true))
+  }
+
+  /** (id, feature bit patterns) sorted by id: bit-exact, and NaN equals itself. */
+  private def idFeatures(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] =
+    df.collect().map(r => (r.getLong(0),
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits).toSeq)).toSeq.sortBy(_._1)
+
+  test("readChunk splits a chunk above the open-cost floor across every core") {
+    // 4 MB is spark.sql.files.openCostInBytes' default: the file source
+    // packs a ~7 MB file into 2 partitions, Hadoop line splits into
+    // defaultParallelism
+    val f = Files.createTempFile("points_big", ".txt")
+    val w = Files.newBufferedWriter(f)
+    try (0 until 200000).foreach(i => w.write(s"$i,${i * 0.5},-${i * 0.25},1.0e-3,${i % 7}.125\n"))
+    finally w.close()
+    assert(Files.size(f) > (5L << 20))
+    val df = PointSource.readChunk(spark, f.toString)
+    assert(df.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(df.count() == 200000L)
+  }
+
+  test("readChunk and readChunkStrict keep exactly the rows of the text-source parse") {
+    val f = Files.createTempFile("points_mixed", ".txt")
+    // blank lines, a non-numeric id, empty feature lists, a non-numeric
+    // feature, ragged lines, CRLF endings and no trailing newline
+    Files.write(f, ("3,1.5,2.5\r\n\n0,-40.0,-73.5\r\nid,1.0,2.0\n  \n7,\n8\n" +
+      "9,abc,1.0\r\n4,1.0\n5,6.0,7.0,8.0\r\n\r\n11,1e3,-0.0\n2,2.0,NaN").getBytes)
+    val strictOracle = {
+      val df = textSourceParse(f.toString)
+      df.filter(size(col("features")) === df.select(size(col("features"))).head().getInt(0))
+    }
+    assert(idFeatures(PointSource.readChunk(spark, f.toString)) ==
+      idFeatures(textSourceParse(f.toString)))
+    val strict = idFeatures(PointSource.readChunkStrict(spark, f.toString))
+    assert(strict == idFeatures(strictOracle))
+    assert(strict.map(_._1) == Seq(0L, 2L, 3L, 11L), s"kept $strict")
+  }
+
   test("listChunks is lexicographic (round order, code/bfr.py:432)") {
     val d = Files.createTempDirectory("chunks")
     Seq("data2.txt", "data0.txt", "data1.txt").foreach(n =>
@@ -140,6 +190,20 @@ class AppAndIoSpec extends AnyFunSuite {
     val back = Sinks.readJsonObjectLabels(spark, f).orderBy("id").collect()
     assert(back.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
       Seq((1L, 0), (2L, 1), (3L, -1)))
+  }
+
+  test("JSON-object sink is byte-identical to the grouped form on duplicate ids") {
+    import spark.implicits._
+    val df = Seq((3L, -1), (3L, 2), (1L, 0), (10L, 5), (2L, -1), (2L, -1), (7L, 4),
+      (7L, 1), (-4L, 3), (1000000000000L, -1), (0L, 2), (0L, -1)).toDF("id", "cluster")
+      .repartition(4)
+    val f = Files.createTempFile("labels_dup", ".json")
+    Sinks.writeAssignmentsJsonObject(df, f.toString)
+    // the sink's former Spark formulation, kept as the oracle
+    val oracle = df.groupBy(col("id")).agg(max(col("cluster")).as("cluster"))
+      .orderBy("id").collect()
+      .map(r => s"\"${r.getLong(0)}\": ${r.getInt(1)}").mkString("{", ", ", "}")
+    assert(new String(Files.readAllBytes(f), StandardCharsets.UTF_8) == oracle)
   }
 
   test("columnar source/sink breadth: ORC round-trips with pushdown") {

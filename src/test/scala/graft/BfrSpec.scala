@@ -164,6 +164,48 @@ class BfrSpec extends AnyFunSuite {
     }
   }
 
+  test("a steady round runs one absorb job, one RS job and at most two checkpoint jobs") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
+    for (r <- 2 to chunks.size) {
+      assert(n(r, "absorb") == 1, s"round $r: $jobs")
+      // RS stays within the driver-local budget: its count rides the
+      // absorb aggregation and one collect replaces the checkpoint
+      assert(n(r, "rs-checkpoint") == 0, s"round $r: $jobs")
+      assert(n(r, "rs-recluster") <= 1, s"round $r: $jobs")
+      assert(n(r, "assigned-checkpoint") <= 2, s"round $r: $jobs")
+    }
+  }
+
+  test("each round's assignment checkpoint holds only that round's rows") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val res = BFR.run(spark, chunks, cfg)
+    val perCheckpoint = res.assignments.queryExecution.analyzed.collectLeaves()
+      .map { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count() }
+    // rows labelled in round r = points newly discarded in r, plus the
+    // final round's retained (-1) points
+    val discard = 0L +: res.stats.map(_.nof_point_discard)
+    val expected = res.stats.indices.map(i => discard(i + 1) - discard(i) +
+      (if (i == res.stats.size - 1) res.stats(i).nof_point_retained else 0L))
+    assert(perCheckpoint == expected, s"checkpoint rows $perCheckpoint, round deltas $expected")
+    assert(perCheckpoint.sum == 2201L)
+  }
+
+  test("NULL and ragged feature vectors route to RS and end as outliers") {
+    import spark.implicits._
+    val odd = Seq((5000L, null: Array[Double]), (5001L, Array(1.0, 2.0, 3.0)))
+      .toDF("id", "features")
+    val points = blobs.select("id", "features")
+    val chunks = (0 until 3).map(i => points.filter(pmod(col("id"), lit(3)) === i))
+      .updated(1, points.filter(pmod(col("id"), lit(3)) === 1).union(odd))
+    val res = BFR.run(spark, chunks, BFR.Config(k = 5))
+    val labels = res.assignments.collect().map(r => r.getLong(0) -> r.getInt(1))
+    assert(labels.length == 2022)
+    assert(labels.toMap.get(5000L).contains(-1) && labels.toMap.get(5001L).contains(-1),
+      labels.filter(_._1 >= 5000L).toSeq)
+  }
+
   test("assignment sink mode: streamed JSONL blocks ≡ accumulated assignments") {
     val nChunks = 4
     val chunks = (0 until nChunks).map(i =>

@@ -7,9 +7,11 @@ Run from the root of a checkout:
 
 Each side is built in its own fresh checkout of its revision, unpacked
 with `git archive` into a new temporary directory (under $TMPDIR, /tmp by
-default) that is removed at the end. Copies of an already-built checkout
-share incremental-compile state with it; fresh checkouts build from
-source exactly as the benchmark does. Pair i runs
+default) that is removed at the end. sbt's boot socket goes to a short
+directory under /tmp (XDG_RUNTIME_DIR), so the checkouts may sit at any
+depth. Copies of an already-built checkout share incremental-compile
+state with it; fresh checkouts build from source exactly as the
+benchmark does. Pair i runs
 
     python3 perfbench/run.py --workload W --seed S+i --seconds R --trace 0
 
@@ -58,12 +60,17 @@ def checkout(rev, path):
         raise RuntimeError("git archive %s failed" % rev)
 
 
-def bench(side_dir, workload, seed, seconds):
+def bench(side_dir, workload, seed, seconds, socket_dir):
     """One perfbench run; returns its metrics and the lines that describe
     its outputs (fingerprints, nmi, failed_frac)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
+    # sbt binds its boot socket (sbt-load.sock) under $XDG_RUNTIME_DIR, or
+    # else under java.io.tmpdir, which run.py points inside the checkout;
+    # unix socket paths are limited to ~107 bytes, so a deep checkout
+    # fails to build ("Cannot fit name") unless the socket goes elsewhere
+    env = dict(os.environ, XDG_RUNTIME_DIR=socket_dir)
+    p = subprocess.run(cmd, cwd=side_dir, env=env, capture_output=True, text=True)
     lines = p.stdout.splitlines()
     js = [l for l in lines if l.startswith("{")]
     if p.returncode != 0 or not js:
@@ -99,9 +106,8 @@ def main():
     e2e, seconds = spec["end_to_end"], spec["run_seconds"]
     parent = git("rev-parse", "--verify", a.parent + "^{commit}")
     change, change_desc = change_rev()
-    # short: sbt binds a unix socket under the checkout, and socket paths
-    # are limited to ~107 bytes
     root = tempfile.mkdtemp(prefix="ab_")
+    socket_dir = tempfile.mkdtemp(prefix="ab_", dir="/tmp")
     sides = {"parent": os.path.join(root, "parent"),
              "change": os.path.join(root, "change")}
     log("parent %s, change %s (%s), checkouts under %s" % (
@@ -115,13 +121,14 @@ def main():
             seed = a.seed + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
-                r = bench(sides[side], a.workload, seed, seconds)
+                r = bench(sides[side], a.workload, seed, seconds, socket_dir)
                 r["seed"] = seed
                 runs[side].append(r)
                 log("pair %d seed %d %-6s %s" % (i + 1, seed, side,
                     json.dumps(r.get("metrics", r.get("error")))))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(socket_dir, ignore_errors=True)
 
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
              if p["ok"] and c["ok"]]
