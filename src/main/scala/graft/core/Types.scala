@@ -4,12 +4,6 @@ package graft.core
   * (see SURVEY.md §1; reference: code/bfr.py:142-188, 209-217).
   */
 
-/** A d-dimensional point. Reference: `(pidx, features)` pairs produced by
-  * `Runner.load_points` (code/bfr.py:209-217). Ids are numeric strings in
-  * the reference; we keep Long internally and render String at the sink.
-  */
-final case class Point(id: Long, features: Array[Double])
-
 /** BFR sufficient statistics for one cluster: the N/SUM/SUMSQ triple.
   * Reference: `class SummarizedSet` (code/bfr.py:142-188). A commutative
   * monoid: `add` folds one point, `merge` folds two summaries.

@@ -1,20 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sources for the reference's chunked point files (SURVEY.md §2.1).
   *
   * S1: directory chunk scan — lexicographic file order defines rounds
   * (code/bfr.py:432-438; HW4.pdf §6.1 penalizes wrong order).
-  * S2: CSV point parse — line split on the first comma into
-  * (id, double vector); d inferred at runtime (code/bfr.py:209-217).
+  * S2: CSV point parse ([[PointSource.parseLine]], batch and stream) — line
+  * split on the first comma into (id, double vector); d inferred at
+  * runtime (code/bfr.py:209-217).
   *
-  * Chunk lines come from Hadoop line splits, not from `spark.read.text`:
-  * the file source packs splits up to the session's
-  * `spark.sql.files.openCostInBytes` floor (4 MB by default), which makes
-  * a single-digit-MB chunk 2 partitions, and BFR's per-round distance
-  * pass would run on 2 cores whatever the cluster size.
+  * Chunk lines come from Hadoop line splits, not `spark.read.text`, whose
+  * 4 MB `spark.sql.files.openCostInBytes` floor packs a single-digit-MB
+  * chunk into 2 partitions: BFR's per-round pass would run on 2 cores.
   */
 object PointSource {
 
@@ -25,31 +26,42 @@ object PointSource {
     fs.filter(_.isFile).map(_.getPath).sorted.toSeq
   }
 
-  /** Parse one chunk file of `id,f0,f1,...` lines into
-    * (id: long, features: array<double>) (S2). Dimensionality is whatever
-    * each line carries — schema dynamic in width only (SURVEY.md §1.5).
-    * Lines are read as Hadoop text splits, asking for
-    * `defaultParallelism` of them (`textFile(file, n)`), so every core
-    * scans a share of the chunk however small it is next to the file
-    * source's open-cost floor; the parse itself is a projection over that
-    * string column and stays inside whole-stage codegen.
+  /** One chunk line `id,f0,f1,...` as (id, features), or None where the
+    * `try_cast` parse it replaced dropped it: blank (Spark's `trim` strips
+    * spaces only), no feature, or a NULL cast. It calls what the casts
+    * call: `String.split(",", -1)`; `toLongExact` ("1.9", "1.", ".5" are
+    * NULL, not truncated); `parseDouble`, then Spark's special literals.
+    */
+  def parseLine(line: String): Option[(Long, Array[Double])] =
+    if (line.forall(_ == ' ')) None
+    else try {
+      val fields = line.split(",", -1)
+      val features = new Array[Double](fields.length - 1)
+      var i = 0
+      while (i < features.length) { features(i) = toDouble(fields(i + 1)); i += 1 }
+      Option.when(features.nonEmpty)((UTF8String.fromString(fields(0)).toLongExact(), features))
+    } catch { case _: NumberFormatException => None }
+
+  private def toDouble(f: String): Double =
+    try java.lang.Double.parseDouble(f) catch {
+      case e: NumberFormatException => Cast.processFloatingPointSpecialLiterals(f, false) match {
+        case d: java.lang.Double => d
+        case _ => throw e
+      }
+    }
+
+  /** Parse one chunk file of `id,f0,f1,...` lines with [[parseLine]] into
+    * (id: bigint NOT NULL, features: array<double>, no NULL element) (S2);
+    * d is whatever each line carries (SURVEY.md §1.5). Lines come from
+    * `textFile(file, defaultParallelism)`, one split per core. The parse
+    * is a plain function because Spark interprets `transform`
+    * (`CodegenFallback`): that parse cost more than BFR's distance pass
+    * and summary fold together.
     */
   def readChunk(spark: SparkSession, file: String): DataFrame = {
-    val parts = split(col("value"), ",")
+    import spark.implicits._
     val sc = spark.sparkContext
-    spark.createDataset(sc.textFile(file, sc.defaultParallelism))(Encoders.STRING)
-      .filter(length(trim(col("value"))) > 0)
-      .select(
-        // try_cast: ANSI mode (Spark 4 default) makes cast THROW on
-        // malformed input; we want nulls so bad lines can be dropped
-        element_at(parts, 1).try_cast("long").as("id"),
-        // slice length must be computed, not Int.MaxValue (start+length
-        // overflows inside slice and yields an empty array)
-        transform(slice(parts, lit(2), size(parts) - 1), _.try_cast("double")).as("features"))
-      // malformed lines (non-numeric id, no feature columns) are dropped
-      // rather than poisoning downstream math with nulls
-      .filter(col("id").isNotNull && size(col("features")) > 0 &&
-        !array_contains(transform(col("features"), _.isNull), true))
+    sc.textFile(file, sc.defaultParallelism).flatMap(parseLine).toDF("id", "features")
   }
 
   /** readChunk + enforce the dimensionality inferred from the first line

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.bfr.BFR
 import graft.core.ClusterSummary
+import graft.sources.PointSource
 
 /** Streaming re-expression of the reference's bounded, ordered,
   * incremental chunk loop (SURVEY.md §2.9): the reference loads one file
@@ -20,20 +21,13 @@ import graft.core.ClusterSummary
   */
 object Streaming {
 
-  /** S1-as-stream: one chunk file per micro-batch, parsed to
-    * (id, features). `d` fixes the schema width (streams cannot infer).
+  /** S1-as-stream: one chunk file per micro-batch, parsed to (id, features)
+    * by the batch reader's own [[PointSource.parseLine]].
     */
   def chunkStream(spark: SparkSession, path: String): DataFrame = {
-    val parts = split(col("value"), ",")
-    spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .select(
-        element_at(parts, 1).try_cast("long").as("id"),
-        transform(slice(parts, lit(2), size(parts) - 1), _.try_cast("double")).as("features"))
-      .filter(col("id").isNotNull && size(col("features")) > 0 &&
-        !array_contains(transform(col("features"), _.isNull), true))
+    import spark.implicits._
+    spark.readStream.option("maxFilesPerTrigger", 1).text(path).as[String]
+      .flatMap(PointSource.parseLine).toDF("id", "features")
   }
 
   /** Incremental BFR over a chunk stream: round 1 initializes DS from the

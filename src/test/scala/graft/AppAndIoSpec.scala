@@ -3,7 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.BfrApp
@@ -11,6 +15,7 @@ import graft.bfr.BFR
 import graft.core.ClusterSummary
 import graft.eval.Nmi
 import graft.sources.{PointSource, Sinks}
+import graft.streaming.Streaming
 
 /** End-to-end test of the argv-compatible driver on a reference-layout
   * chunked CSV dataset, plus source/sink unit checks (SURVEY.md §2.1).
@@ -61,8 +66,9 @@ class AppAndIoSpec extends AnyFunSuite {
       s"kept ${rows.map(_.getLong(0)).toSeq}")
   }
 
-  /** The chunk parse as it stood over `spark.read.text` — the oracle for
-    * the Hadoop-split reader (same projection and filters).
+  /** The chunk parse as it stood over `spark.read.text`, Catalyst
+    * higher-order functions and `try_cast` — the oracle for
+    * [[PointSource.parseLine]] over Hadoop line splits.
     */
   private def textSourceParse(file: String) = {
     val parts = split(col("value"), ",")
@@ -75,10 +81,18 @@ class AppAndIoSpec extends AnyFunSuite {
         !array_contains(transform(col("features"), _.isNull), true))
   }
 
-  /** (id, feature bit patterns) sorted by id: bit-exact, and NaN equals itself. */
+  /** (id, feature bit patterns) sorted by id, then bits: bit-exact, and
+    * NaN equals itself.
+    */
   private def idFeatures(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] =
     df.collect().map(r => (r.getLong(0),
-      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits).toSeq)).toSeq.sortBy(_._1)
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits).toSeq)).toSeq
+      .sortBy(t => (t._1, t._2.mkString(",")))
+
+  private def strictOracle(file: String) = {
+    val df = textSourceParse(file)
+    df.filter(size(col("features")) === df.select(size(col("features"))).head().getInt(0))
+  }
 
   test("readChunk splits a chunk above the open-cost floor across every core") {
     // 4 MB is spark.sql.files.openCostInBytes' default: the file source
@@ -100,15 +114,76 @@ class AppAndIoSpec extends AnyFunSuite {
     // feature, ragged lines, CRLF endings and no trailing newline
     Files.write(f, ("3,1.5,2.5\r\n\n0,-40.0,-73.5\r\nid,1.0,2.0\n  \n7,\n8\n" +
       "9,abc,1.0\r\n4,1.0\n5,6.0,7.0,8.0\r\n\r\n11,1e3,-0.0\n2,2.0,NaN").getBytes)
-    val strictOracle = {
-      val df = textSourceParse(f.toString)
-      df.filter(size(col("features")) === df.select(size(col("features"))).head().getInt(0))
-    }
     assert(idFeatures(PointSource.readChunk(spark, f.toString)) ==
       idFeatures(textSourceParse(f.toString)))
     val strict = idFeatures(PointSource.readChunkStrict(spark, f.toString))
-    assert(strict == idFeatures(strictOracle))
+    assert(strict == idFeatures(strictOracle(f.toString)))
     assert(strict.map(_._1) == Seq(0L, 2L, 3L, 11L), s"kept $strict")
+  }
+
+  test("parseLine keeps exactly the rows and bits of the try_cast parse on fuzzed lines") {
+    // tokens where a hand parse and Spark's casts part ways: truncating
+    // ids ("1.9", "1.", ".5" are NULL under try_cast), Java-only double
+    // syntax (suffixes, hex), special literals, overflow, non-ASCII
+    // digits, whitespace padding
+    val idTok = Gen.oneOf("0", "7", "-3", "+5", "007", "1.9", "1.", ".5", "1e3", "0x10",
+      "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+      " 12 ", "\t4\t", "\u0663", "1L", "abc", "", " ", "-")
+    val featTok = Gen.oneOf("1.5", "-0.0", "0", "2.", ".25", "1e3", "1d", "2.5f", "3D",
+      "0x1p3", "0x1.8p1", "-INF", "inf", "+inf", "Infinity", "-infinity", "NaN", "+NaN",
+      "nan", "1e400", "-1e-400", "4.9E-324", "1.7976931348623157E308", " 3.5 ",
+      "\t2.5\t", "\u0663", "1_000", "--1", "1e", "abc", "", " ")
+    val numeric = Gen.chooseNum(-1000000L, 1000000L).map(_.toString)
+    val feature = Gen.frequency(3 -> Gen.chooseNum(-1e6, 1e6).map(_.toString), 2 -> featTok)
+    val point = for {
+      id <- Gen.frequency(3 -> numeric, 2 -> idTok)
+      d <- Gen.frequency(6 -> Gen.const(3), 1 -> Gen.choose(0, 5))
+      fs <- Gen.listOfN(d, feature)
+      trailingComma <- Gen.frequency(9 -> false, 1 -> true)
+    } yield (id +: fs).mkString(",") + (if (trailingComma) "," else "")
+    val line = Gen.frequency(20 -> point,
+      1 -> Gen.oneOf("", "   ", "\t", " \t ", ",", "7", "7,", " ,1.0"))
+    val eol = Gen.frequency(4 -> "\n", 1 -> "\r\n")
+    val file = Gen.listOfN(4000, Gen.zip(line, eol)).map { ls =>
+      // a valid first row fixes readChunkStrict's d at 3; no final newline
+      ("0,1.0,2.0,3.0\n" +: ls.map { case (l, e) => l + e }).mkString.stripSuffix("\n")
+    }
+    val text = file.pureApply(Gen.Parameters.default, Seed(20261019L))
+    val f = Files.createTempFile("points_fuzz", ".txt")
+    Files.write(f, text.getBytes(StandardCharsets.UTF_8))
+
+    val got = idFeatures(PointSource.readChunk(spark, f.toString))
+    val want = idFeatures(textSourceParse(f.toString))
+    val (kept, oracleKept) = (got.size, want.size)
+    assert(kept == oracleKept, s"kept $kept rows, the try_cast parse $oracleKept")
+    assert(got == want, s"first difference: ${got.zip(want).find(t => t._1 != t._2)}")
+    val strict = idFeatures(PointSource.readChunkStrict(spark, f.toString))
+    assert(strict == idFeatures(strictOracle(f.toString)))
+    // not vacuous: many rows kept and many dropped, ragged rows among the kept
+    val lines = text.split("\r?\n", -1).length
+    assert(want.size > lines / 4 && want.size < lines * 3 / 4, s"${want.size} of $lines kept")
+    assert(strict.size < want.size)
+  }
+
+  test("the chunk parse, batch and streaming, plans no higher-order function") {
+    def hofs(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
+      case e: ArrayTransform => e
+      case e: LambdaFunction => e
+    }))
+    val f = Files.createTempFile("points_plan", ".txt")
+    Files.write(f, "0,1.0,2.0\n1,3.0,4.0\n".getBytes)
+    val batch = PointSource.readChunk(spark, f.toString).queryExecution.optimizedPlan
+    assert(hofs(batch).isEmpty, s"readChunk plans a higher-order function:\n$batch")
+
+    val dir = Files.createTempDirectory("points_stream")
+    Files.write(dir.resolve("data0.txt"), "0,1.0,2.0\n".getBytes)
+    val stream = Streaming.chunkStream(spark, dir.toString)
+    assert(stream.isStreaming)
+    // a streaming frame's own optimizedPlan refuses to plan as a batch
+    // query, so run the session's optimizer on its analyzed plan
+    val streamPlan = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer.execute(stream.queryExecution.analyzed)
+    assert(hofs(streamPlan).isEmpty, s"chunkStream plans a higher-order function:\n$streamPlan")
   }
 
   test("listChunks is lexicographic (round order, code/bfr.py:432)") {

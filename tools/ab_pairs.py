@@ -21,7 +21,11 @@ BENCHMARK.json, each side's median and quartiles, the change/parent
 ratio, how many pairs the change won, and whether its median beats the
 parent's by more than the parent's interquartile range. It also reports
 whether the output fingerprints, NMI and failed_frac agree within every
-pair.
+pair. Every run's exit code and elapsed seconds are logged; a failed
+run also logs the last 5 lines of its stderr (run.py exits 3 when the
+build fails, 4 when the benchmark JVM fails, and 1 on an uncaught
+exception, such as a JVM that outlived its deadline), and the slowest
+run of each side is printed at the end.
 
 The change side is the working tree: HEAD when it is clean, otherwise a
 `git stash create` snapshot of tracked files (stage new files with
@@ -35,6 +39,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 
 def log(msg):
@@ -70,18 +75,20 @@ def bench(side_dir, workload, seed, seconds, socket_dir):
     # unix socket paths are limited to ~107 bytes, so a deep checkout
     # fails to build ("Cannot fit name") unless the socket goes elsewhere
     env = dict(os.environ, XDG_RUNTIME_DIR=socket_dir)
+    t0 = time.monotonic()
     p = subprocess.run(cmd, cwd=side_dir, env=env, capture_output=True, text=True)
+    run = {"exit": p.returncode, "elapsed_s": round(time.monotonic() - t0, 1)}
     lines = p.stdout.splitlines()
     js = [l for l in lines if l.startswith("{")]
     if p.returncode != 0 or not js:
-        return {"ok": False, "error": (p.stderr.strip().splitlines() or ["?"])[-1]}
+        return dict(run, ok=False, stderr_tail=p.stderr.strip().splitlines()[-5:])
     res = json.loads(js[-1])
     outputs = sorted(set(l for l in lines if l.startswith("fingerprint:")))
     outputs += [l.split("(")[0].strip() for l in lines
                 if l.startswith("nmi") or l.startswith("failed_frac")]
-    return {"ok": True, "correct": res["correct"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
-            "outputs": outputs}
+    return dict(run, ok=True, correct=res["correct"],
+                metrics={k: v["value"] for k, v in res["metrics"].items()},
+                outputs=outputs)
 
 
 def quartiles(xs):
@@ -124,8 +131,9 @@ def main():
                 r = bench(sides[side], a.workload, seed, seconds, socket_dir)
                 r["seed"] = seed
                 runs[side].append(r)
-                log("pair %d seed %d %-6s %s" % (i + 1, seed, side,
-                    json.dumps(r.get("metrics", r.get("error")))))
+                log("pair %d seed %d %-6s exit %d in %.1f s %s" % (
+                    i + 1, seed, side, r["exit"], r["elapsed_s"],
+                    json.dumps(r["metrics"] if r["ok"] else r["stderr_tail"])))
     finally:
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(socket_dir, ignore_errors=True)
@@ -135,6 +143,18 @@ def main():
     failed = len(runs["parent"]) - len(pairs)
     print("workload %s: %d pairs (%d with a failed run), parent %s, change %s (%s)" % (
         a.workload, len(pairs), failed, parent[:12], change[:12], change_desc))
+    for side in ("parent", "change"):
+        if not runs[side]:
+            continue
+        slow = max(runs[side], key=lambda r: r["elapsed_s"])
+        print("slowest %s run: seed %d, exit %d, %.1f s" % (
+            side, slow["seed"], slow["exit"], slow["elapsed_s"]))
+        for r in runs[side]:
+            if not r["ok"]:
+                print("  failed %s run: seed %d, exit %d, %.1f s; stderr tail:" % (
+                    side, r["seed"], r["exit"], r["elapsed_s"]))
+                for l in r["stderr_tail"]:
+                    print("    " + l)
     if not pairs:
         sys.exit(1)
     print("%-18s %-28s %-28s %7s %6s %s" % (
