@@ -154,6 +154,95 @@ class BfrSpec extends AnyFunSuite {
     assert(a == pairs(dist))
   }
 
+  /** Order-free fingerprint of (id, cluster) rows: the row count and the
+    * wrapping sum of `xxhash64(id, cluster)`.
+    */
+  private def fingerprint(hashes: Seq[Long]): (Long, Long) = (hashes.size.toLong, hashes.sum)
+  private def hashes(rows: DataFrame): Seq[Long] =
+    rows.select(xxhash64(col("id"), col("cluster"))).collect().map(_.getLong(0)).toSeq
+  private def rounds(rows: (Int, Int, Long, Int, Long, Long)*): Seq[graft.core.RoundStats] =
+    rows.map((graft.core.RoundStats.apply _).tupled)
+
+  /** Pins one run's observable behaviour: the assignment fingerprint,
+    * every round's stats row and the final DS sizes.
+    */
+  private def assertLocked(what: String, fp: (Long, Long), res: BFR.Result,
+                           wantFp: (Long, Long), wantStats: Seq[graft.core.RoundStats],
+                           wantDsN: Seq[Long]): Unit = {
+    assert(fp == wantFp, s"$what: assignment fingerprint")
+    assert(res.stats == wantStats, s"$what: round stats")
+    assert(res.ds.map(_.n) == wantDsN, s"$what: DS sizes")
+  }
+
+  private val reclusterStats = rounds((1, 5, 500L, 4, 39L, 12L), (2, 5, 1000L, 2, 98L, 3L),
+    (3, 5, 1500L, 2, 141L, 10L), (4, 5, 2193L, 0, 0L, 8L))
+  private val reclusterLock = (2201L, 1588383899828018388L)
+  private val reclusterDsN = Seq(400L, 402L, 591L, 400L, 400L)
+
+  test("BFR behaviour lock: RS re-clustering fixture, driver-local and distributed") {
+    val (chunks, cfg) = rsReclusterFixture()
+    for (force <- Seq(false, true)) {
+      val res = BFR.runRounds(spark, chunks, cfg, _ => (), None, forceDistributedRs = force)
+      assertLocked(s"recluster force=$force", fingerprint(hashes(res.assignments)), res,
+        reclusterLock, reclusterStats, reclusterDsN)
+    }
+  }
+
+  /** Blobs (σ = 2 per dimension) plus a halo of 60 points set 13..20
+    * out along one axis from a blob's mean: 6.5σ..10σ, so the α=3 pass
+    * (6σ in d = 4) misses all of them, the α=4 spill (8σ) takes about
+    * four in ten, and the rest stay RS and end as outliers.
+    */
+  private def haloFixture(): (Seq[DataFrame], BFR.Config) = {
+    import spark.implicits._
+    val base = TestBlobs.generate(spark, n = 2000, k = 5, d = 4, outliers = 0)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
+    val means = base.groupBy(_._3).map { case (l, rows) =>
+      l -> rows.map(_._2).transpose.map(c => c.sum / c.length) }
+    val halo = (0 until 60).map { i =>
+      val f = means(i % 5).clone()
+      f(i % 4) += 13.0 + 7.0 * i / 60
+      (2000L + i, f)
+    }
+    val points = (base.map(r => (r._1, r._2)).toSeq ++ halo).toDF("id", "features")
+    ((0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i)), BFR.Config(k = 5))
+  }
+
+  test("BFR behaviour lock: a halo spills into DS at α=4, every round") {
+    val (chunks, cfg) = haloFixture()
+    val (res, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
+    // the fixture reaches the α=4 spill before the last round and an α=4
+    // pass over RS in the last round
+    assert((1 to 3).exists(n(_, "rs-spill") > 0), jobs)
+    assert(n(4, "rs-spill") + n(4, "finalize") > 0, jobs)
+    assertLocked("halo", fingerprint(hashes(res.assignments)), res,
+      (2060L, -5060436612051113077L),
+      rounds((1, 5, 505L, 0, 0L, 10L), (2, 5, 1017L, 0, 0L, 13L),
+        (3, 5, 1529L, 0, 0L, 16L), (4, 5, 2040L, 0, 0L, 20L)),
+      Seq(409L, 408L, 408L, 407L, 408L))
+  }
+
+  test("BFR behaviour lock: RS hard cap") {
+    val points = PointSource.fromEmbeddings(spark, "/root/testdata/sf0.001")
+    val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))
+    val res = BFR.run(spark, chunks,
+      BFR.Config(k = 10, rsClusterThreshold = 1000, rsHardCap = Some(60)))
+    assertLocked("hard cap", fingerprint(hashes(res.assignments)), res,
+      (500L, 7912568680348938295L),
+      rounds((1, 10, 125L, 0, 0L, 0L), (2, 10, 250L, 0, 0L, 0L),
+        (3, 10, 375L, 0, 0L, 0L), (4, 10, 500L, 0, 0L, 0L)),
+      Seq(3L, 2L, 3L, 3L, 3L, 3L, 3L, 2L, 2L, 476L))
+  }
+
+  test("BFR behaviour lock: assignment sink mode") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val sunk = scala.collection.mutable.ArrayBuffer[Long]()
+    val res = BFR.run(spark, chunks, cfg, assignSink = Some(d => sunk ++= hashes(d)))
+    assertLocked("sink", fingerprint(sunk.toSeq), res,
+      reclusterLock, reclusterStats, reclusterDsN)
+  }
+
   test("driver-local RS re-clustering runs at most one job per round") {
     val (chunks, cfg) = rsReclusterFixture()
     val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
