@@ -69,9 +69,9 @@ object TextQueries {
       // hot-bucket guard for the first time — star reduction there kept
       // components intact but dropped 4.8M of 32.7M declared pairs. The
       // salted block-grid keeps per-shuffle-key output ~threshold²
-      // (HotBucketBench), so completeness costs bounded tasks, not a
-      // straggler. Below the threshold the two modes are identical —
-      // sf0.01..sf1 outputs are unchanged.
+      // (SURVEY's hot-bucket probe), so completeness costs bounded
+      // tasks, not a straggler. Below the threshold the two modes are
+      // identical — sf0.01..sf1 outputs are unchanged.
       val cand = TextOps.candidatePairs(
         TextOps.lshBands(sig, "doc_id"), "doc_id", hotComplete = true)
         .localCheckpoint(true)
@@ -508,7 +508,7 @@ object TextQueries {
 
   /** The batched training loop, parameterized so the oracle-gated query
     * (4 rounds × window 16, exactly the published CTE unroll) and the
-    * 256-merge scale probe ([[graft.app.BpeScaleBench]]) run the SAME
+    * 256-merge scale probe recorded in SURVEY run the SAME
     * code. `corpus` needs a `text` column; rounds run until `maxRounds`
     * or `targetMerges` accepted merges, whichever first. Each round is
     * one bounded vocabulary-table aggregate (|vocab| rows, never corpus

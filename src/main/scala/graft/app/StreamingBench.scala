@@ -21,7 +21,7 @@ import graft.streaming.Streaming
   *    the rows inside the horizon, not grow with total ingest.
   *  - streaming BFR: the chunked clustering loop over CSV chunk files,
   *    one micro-batch per chunk, exactly the production restart-safe
-  *    path ([[Streaming.bfrStream]]).
+  *    path ([[Streaming.bfrStream]], then [[Streaming.finishBfrStream]]).
   *
   * Prints ONE JSON line with rows/s, per-batch max/last state rows and
   * state memory. Usage:
@@ -215,6 +215,7 @@ object StreamingBench {
     val (q, state) = Streaming.bfrStream(spark, s"$work/chunks/*",
       s"$work/out", BFR.Config(k = 10), s"$work/ckpt")
     q.awaitTermination()
+    Streaming.finishBfrStream(spark, s"$work/out", s"$work/ckpt")
     val secs = (System.nanoTime() - t0) / 1e9
     val assigned = spark.read.parquet(s"$work/out/batch=*").count()
     BfrStreamResult(n, math.rint(secs * 10) / 10, (n / secs).toLong,

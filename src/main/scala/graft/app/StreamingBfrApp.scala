@@ -7,7 +7,8 @@ import graft.streaming.Streaming
 
 /** Streaming twin of BfrApp: consumes the chunk directory as a Structured
   * Streaming file source (one file per micro-batch, Trigger.AvailableNow)
-  * and appends assignments as parquet. Usage:
+  * and appends assignments as parquet; once the input is drained, the
+  * finish labels the leftover RS and merges CS into DS. Usage:
   *   StreamingBfrApp <input_path> <n_cluster> <out_dir> <checkpoint_dir>
   */
 object StreamingBfrApp {
@@ -28,7 +29,8 @@ object StreamingBfrApp {
       val (q, state) = Streaming.bfrStream(spark, inputPath, outDir,
         BFR.Config(k = kStr.toInt), ckpt)
       q.awaitTermination()
-      println(s"[stream] rounds=${state.rounds} ds=${state.ds.size}")
+      val res = Streaming.finishBfrStream(spark, outDir, ckpt)
+      println(s"[stream] rounds=${state.rounds} ds=${res.ds.size}")
     } finally if (!hadActive) spark.stop()
   }
 }

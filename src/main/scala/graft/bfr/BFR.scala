@@ -2,6 +2,7 @@ package graft.bfr
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{ClusterSummary, RoundStats}
@@ -11,8 +12,11 @@ import graft.operators.SummaryAggregator
 /** Bradley–Fayyad–Reina streaming clustering, re-expressed as Spark
   * dataflow. The reference (code/bfr.py:431-468) holds DS/CS/RS state on
   * the driver and loops one chunk per round; we keep the same round
-  * structure (BFR is inherently order-dependent) but make every per-chunk
-  * step a distributed plan:
+  * structure (BFR is inherently order-dependent) as one [[BFR.step]] over
+  * (state, chunk) plus one [[BFR.finish]]: [[BFR.run]] folds the step over
+  * its chunks, and `Streaming.bfrStream` applies it per micro-batch. The
+  * α=4 RS spill runs in every round, so neither caller must know its last
+  * chunk in advance. Every per-chunk step is a distributed plan:
   *
   *  - assignment = map-side expression against broadcast-small DS/CS
   *    summaries (K..5K rows of (center, std) — folded in as literals);
@@ -146,9 +150,49 @@ object BFR {
     (chunk.filter(col("id") <= threshold), threshold)
   }
 
+  /** The state between two rounds: DS and CS summaries, the CS membership
+    * (id, cs_id), the retained set RS (id, features) and its row count,
+    * the discarded-point counter and one stats row per round. A round
+    * also leaves `blocks`, its assignment deltas (id, cluster) not yet
+    * materialized, and `caches`, the persisted frames they read: the
+    * caller materializes [[assigned]] (a checkpoint, a sink, a parquet
+    * write) and only then calls [[release]].
+    */
+  final case class State(
+      round: Int, ds: IndexedSeq[ClusterSummary], cs: IndexedSeq[ClusterSummary],
+      csMembers: DataFrame, rs: DataFrame, rsCount: Long, discarded: Long,
+      stats: Vector[RoundStats],
+      blocks: Vector[DataFrame] = Vector.empty, caches: Vector[DataFrame] = Vector.empty) {
+
+    /** The round's assignment blocks as one frame. */
+    def assigned: DataFrame = blocks.reduceOption(_ union _)
+      .getOrElse(emptyFrame(csMembers.sparkSession, "cluster"))
+
+    /** Drops the round's caches once [[assigned]] has materialized, and
+      * checkpoints the CS membership while CS state exists. Every round's
+      * new members add their partitions to the union, so it narrows back
+      * to the core count first (no shuffle).
+      */
+    def release(): State = {
+      val members = if (cs.isEmpty) csMembers else csMembers
+        .coalesce(csMembers.sparkSession.sparkContext.defaultParallelism).localCheckpoint(true)
+      caches.foreach(_.unpersist(false))
+      copy(csMembers = members, blocks = Vector.empty, caches = Vector.empty)
+    }
+  }
+
+  object State {
+    def empty(spark: SparkSession): State = State(0, IndexedSeq.empty, IndexedSeq.empty,
+      emptyFrame(spark, "cs_id"), emptyFrame(spark, "features", ArrayType(DoubleType)),
+      0L, 0L, Vector.empty)
+  }
+
   /** Run BFR over an ordered sequence of chunk DataFrames, each with
     * columns (id: long, features: array<double>). Mirrors
-    * `Runner.run` (code/bfr.py:431-468).
+    * `Runner.run` (code/bfr.py:431-468): folds [[step]] over the chunks
+    * and ends with [[finish]]. Each round checkpoints only its own
+    * assignment delta, the last round's together with finish's, and
+    * `onRound` fires once that checkpoint (or `assignSink` call) is done.
     *
     * The loop's shuffle width and its AQE pause are decided once, from
     * chunk 1's row count alone, and held for every later round: a small
@@ -167,30 +211,12 @@ object BFR {
                                onRound: Int => Unit, assignSink: Option[DataFrame => Unit],
                                forceDistributedRs: Boolean): Result = {
     require(chunks.nonEmpty, "BFR needs at least one chunk")
-    // streaming-sink mode: every finalized assignment block is handed to
-    // the sink the moment it exists and the driver accumulates NOTHING —
-    // in local mode the default checkpoint path stores the assignment
-    // blocks in the block manager (the driver JVM's heap!), which is
-    // exactly the state a 100M-point probe must NOT hold.
-    // Result.assignments is the empty frame in sink mode.
-    val roundAssigned = scala.collection.mutable.ArrayBuffer[DataFrame]() // this round's blocks
-    val assignedCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]() // one per round
-    def appendAssign(delta: DataFrame): Unit =
-      assignSink match {
-        case Some(sink) => sink(delta)
-        case None       => roundAssigned += delta
-      }
-
-    var ds = IndexedSeq.empty[ClusterSummary]            // discard sets
-    var cs = IndexedSeq.empty[ClusterSummary]            // compression sets
-    var csMembers: DataFrame = emptyAssignments(spark, "cs_id") // (id, cs_id)
-    var rs: DataFrame = null                             // retained points
-    var rsCount = 0L                                     // rows of rs
-    val stats = scala.collection.mutable.ArrayBuffer[RoundStats]()
-    var discardedSoFar = 0L
-    // tagged per-round assignment frames, unpersisted once the round's
-    // checkpoints have materialized from them (see tagAssign)
-    val roundTags = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // sink mode hands each round's delta to the sink and accumulates
+    // NOTHING: local-mode checkpoints live in the driver heap, exactly the
+    // state a 100M-point probe must NOT hold (Result.assignments is then
+    // empty). Else one checkpoint per round, not of the running union,
+    // which would re-copy every earlier round (O(rounds^2)).
+    val assignedCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
     // Loop shuffle width from the first chunk's census (opt guide §2.2 —
     // fewer, larger partitions): every per-round aggregation/checkpoint
@@ -199,300 +225,300 @@ object BFR {
     // fixed-cost micro-stage storm. Width tracks the data (64k rows per
     // partition, capped at defaultParallelism), restored in the finally.
     val prevShufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    var widthSet = false
     var prevAqe: Option[String] = None
-
-    val nRounds = chunks.size
-    // label every action (opt guide §1.5) so job-level profiles attribute
-    // the loop's cost to its steps
-    def step(round: Int, name: String): Unit =
-      spark.sparkContext.setJobDescription(s"bfr r$round $name")
-    try {
-    for ((chunkRaw, idx) <- chunks.zipWithIndex) {
-      val round = idx + 1
-      step(round, "chunk")
-      val chunk = chunkRaw.select(col("id").cast("long").as("id"), col("features"))
-      // round 1 reads its chunk four times (count, k-th smallest id,
-      // sample, rest) and caches it; later rounds read it once, through
-      // tagAssign's persisted frame, so a chunk cache would never be read
-      if (round == 1) chunk.persist(StorageLevel.MEMORY_AND_DISK)
-      // round 1 needs the count for the init-sample sizing (and sets the
-      // loop width); later rounds skip the job
-      val chunkN = if (round == 1) chunk.count() else -1L
-
-      if (round == 1) {
-        val width = math.max(1L, math.min(
-          spark.sparkContext.defaultParallelism.toLong, chunkN / 65536 + 1)).toInt
-        spark.conf.set("spark.sql.shuffle.partitions", width)
-        widthSet = true
-        // On a bounded chunk the loop's shuffles are single-digit-task
-        // stages; AQE's per-shuffle re-planning then splits every action
-        // into 2-3 driver-latency-priced jobs for zero benefit (the loop
-        // has no skewed or size-misestimated join — label aggregations
-        // and explicit broadcasts only). Data-adaptive: corpus-scale
-        // chunks keep the session's AQE.
-        if (chunkN <= (1L << 20)) {
-          prevAqe = Some(spark.conf.get("spark.sql.adaptive.enabled"))
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-        }
+    def sizeLoop(chunkN: Long): Unit = {
+      val width = math.max(1L, math.min(
+        spark.sparkContext.defaultParallelism.toLong, chunkN / 65536 + 1)).toInt
+      spark.conf.set("spark.sql.shuffle.partitions", width)
+      // On a bounded chunk the loop's shuffles are single-digit-task
+      // stages; AQE's per-shuffle re-planning then splits every action
+      // into 2-3 driver-latency-priced jobs for zero benefit (the loop
+      // has no skewed or size-misestimated join — label aggregations
+      // and explicit broadcasts only). Data-adaptive: corpus-scale
+      // chunks keep the session's AQE.
+      if (chunkN <= (1L << 20)) {
+        prevAqe = Some(spark.conf.get("spark.sql.adaptive.enabled"))
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
       }
-
-      if (round == 1) {
-        step(round, "init")
-        // --- init (M4, code/bfr.py:393-429) ---
-        val n = chunkN
-        val sampleN = math.ceil(cfg.initSampleFraction * n).toInt
-        val (sample0, kth) = initSampleWithThreshold(chunk, sampleN)
-        val sample = sample0.persist(StorageLevel.MEMORY_AND_DISK)
-        // cluster sample into 3K; singleton labels -> RS (A7 + P3)
-        val coarse = KMeans.fit(sample, math.min(cfg.seedKMult * cfg.k, sampleN),
-          cfg.kmeansIters, firstSeedRank = cfg.seedRank)
-        val coarseAssigned = coarse.assign(sample, "features")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // ONE label-histogram collect replaces the previous singleton
-        // subquery + two broadcast joins + a separate inlier count: the
-        // histogram is ≤ 3K rows by construction (labels of a 3K-means),
-        // so the singleton-label list rides back as a map-side isin()
-        // literal and the inlier count is its complement sum — same row
-        // sets, three fewer jobs in the init stage
-        val labelHist = coarseAssigned.groupBy(col("label")).count().collect()
-        val singletonLabels = labelHist.filter(_.getLong(1) == 1L).map(_.getInt(0))
-        val nInliers0 = labelHist.filter(_.getLong(1) > 1L).map(_.getLong(1)).sum
-        val isSingleton: Column =
-          if (singletonLabels.isEmpty) lit(false)
-          else col("label").isin(singletonLabels.toIndexedSeq: _*)
-        val rsInit0 = coarseAssigned.filter(isSingleton)
-          .select("id", "features")
-        val inliers0 = coarseAssigned.filter(!isSingleton)
-          .select("id", "features")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // degenerate guard: if outlier removal left fewer than K points
-        // (tiny samples), keep the whole sample as inliers. RS starts with
-        // one point per singleton label
-        val (inliers, rsInit, nInliers, nRsInit) =
-          if (nInliers0 < cfg.k)
-            (sample.select("id", "features").persist(StorageLevel.MEMORY_AND_DISK),
-              sample.select("id", "features").limit(0), sampleN.toLong, 0L)
-          else (inliers0, rsInit0, nInliers0, singletonLabels.length.toLong)
-        // re-cluster inliers into K -> DS; the shape is already known
-        // (inlier count from the histogram, d from the coarse model), so
-        // the fit's probe job is skipped
-        val fine = KMeans.fit(inliers, cfg.k, cfg.kmeansIters,
-          firstSeedRank = cfg.seedRank,
-          knownShape = Some((nInliers, coarse.d)))
-        val fineAssigned = fine.assign(inliers, "features")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val byLabel = summariesByLabel(fineAssigned, "features")
-        // drop empty clusters instead of padding with zero summaries: a
-        // zero summary has NaN center and all-zero std, which makes its
-        // Mahalanobis distance 0.0 to EVERY point — a phantom cluster
-        // that would absorb the rest of the stream. Cluster ids are the
-        // (compacted) ds indices.
-        val present = (0 until cfg.k).filter(byLabel.contains)
-        val relabel = present.zipWithIndex.toMap
-        ds = present.map(byLabel).toIndexedSeq
-        val relabelExpr = map(relabel.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
-        appendAssign(fineAssigned.select(col("id"),
-          element_at(relabelExpr, col("label")).cast("int").as("cluster")))
-        discardedSoFar += byLabel.values.map(_.n).sum // sample inliers
-        rs = rsInit
-        rsCount = nRsInit
-        // rest of chunk 1 through the normal DS/RS path (code/bfr.py:429):
-        // the exact complement of the `id <= kth` sample, as a map-side
-        // filter — not an anti-join, which would shuffle the whole chunk
-        val rest = chunk.filter(col("id") > kth)
-        val (tg2, a2, r2) = tagAssign(rest, ds, cfg.alphaAssign)
-        roundTags += tg2
-        appendAssign(a2.select("id", "cluster"))
-        // A4: assigned points fold into their DS summaries (the reference
-        // updates per point at code/bfr.py:389; we fold the chunk's delta);
-        // the same aggregation yields the discarded and leftover counts
-        step(round, "absorb-rest")
-        val (ds2, n2, left2) = absorbTagged(ds, tg2)
-        ds = ds2; discardedSoFar += n2; rsCount += left2
-        rs = rs.union(r2)
-        sample.unpersist(false); coarseAssigned.unpersist(false)
-        inliers0.unpersist(false); inliers.unpersist(false); fineAssigned.unpersist(false)
-      } else {
-        // --- per-chunk step (M5, code/bfr.py:382-391) ---
-        val (tg, a, r) = tagAssign(chunk, ds, cfg.alphaAssign)
-        roundTags += tg
-        appendAssign(a.select("id", "cluster"))
-        step(round, "absorb")
-        val (dsN, nA, nLeft) = absorbTagged(ds, tg)
-        ds = dsN; discardedSoFar += nA; rsCount += nLeft
-        rs = rs.union(r)
-      }
-
-      // The RS lineage must be cut every round — the plan otherwise
-      // compounds (embedded center literals included) until even
-      // stringifying it OOMs the driver, and it reads the round's tagged
-      // cache. rsCount is already known from the absorb aggregation.
-      // While RS fits KMeans' local-fit budget (KMeans.fit would collect
-      // it for a fit anyway), ONE collect serves both cases: RS becomes a
-      // driver-built frame, and an RS over the threshold re-clusters on
-      // the driver from the same rows. A larger RS is checkpointed
-      // eagerly for the distributed step.
-      val rsSchema = rs.schema
-      def driverFrame(rows: Array[Row]): DataFrame =
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), rsSchema)
-      val localD = ds.headOption.map(_.d)
-        .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
-      var rsRows: Array[Row] = null
-      if (localD.isDefined) {
-        step(round, "rs-recluster")
-        rsRows = if (rsCount == 0) Array.empty[Row] else KMeans.collectById(rs)
-        rs = driverFrame(rsRows)
-      } else {
-        step(round, "rs-checkpoint")
-        rs = rs.localCheckpoint(true)
-      }
-
-      // --- RS -> CS re-clustering (M6, code/bfr.py:259-288) ---
-      if (rsCount > cfg.rsClusterThreshold) {
-        val kCs = math.min(cfg.csKMult * cfg.k, (rsCount / 2).toInt max 1)
-        val base = cs.size
-        // the driver-local step is the distributed one's result without
-        // its ~9 jobs
-        localD match {
-          case Some(d) =>
-            val (retained, summaries, members) =
-              reclusterLocal(rsRows, d, kCs, cfg.kmeansIters)
-            cs = cs ++ summaries
-            csMembers = csMembers.union(spark.createDataFrame(
-              java.util.Arrays.asList(members.map { case (id, i) => Row(id, base + i) }: _*),
-              csMembers.schema))
-            rs = driverFrame(retained)
-            rsCount = retained.length
-          case None =>
-            step(round, "rs-recluster")
-            val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
-            val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
-            val singles = rsAssigned.groupBy(col("label")).count()
-              .filter(col("count") === 1).select("label")
-            val newRs = rsAssigned.join(broadcast(singles), Seq("label"), "left_semi")
-              .select("id", "features")
-            val toCs = rsAssigned.join(broadcast(singles), Seq("label"), "left_anti")
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val byLabel = summariesByLabel(toCs, "features")
-            val labels = byLabel.keys.toSeq.sorted
-            val labelToCs = labels.zipWithIndex.map { case (l, i) => (l, base + i) }.toMap
-            cs = cs ++ labels.map(byLabel)
-            val mapExpr = map(labelToCs.toSeq.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*)
-            csMembers = csMembers.union(
-              toCs.select(col("id"), element_at(mapExpr, col("label")).cast("int").as("cs_id")))
-            rs = newRs.localCheckpoint(true)
-            rsCount = rs.count()
-            rsAssigned.unpersist(false); toCs.unpersist(false)
-        }
-        // --- CS pairwise merge (M7, code/bfr.py:290-320, bug fixed) ---
-        val (mergedCs, remap) = mergeCs(cs)
-        if (remap.nonEmpty) {
-          cs = mergedCs
-          val remapExpr = map(remap.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
-          csMembers = csMembers.select(col("id"),
-            coalesce(element_at(remapExpr, col("cs_id")), col("cs_id")).cast("int").as("cs_id"))
-        }
-      }
-
-      // --- RS hard cap (engine extension): force-spill overflow to DS ---
-      for (cap <- cfg.rsHardCap if rsCount > cap && ds.nonEmpty) {
-        // smallest-id prefix via threshold selection — same shape as the
-        // init sample; the overflow can be a large fraction of RS, so no
-        // TakeOrdered funnel here either
-        val overflow = rs.filter(col("id") <=
-            graft.operators.Selection.kthSmallestLong(rs, "id", rsCount - cap))
-          .localCheckpoint(true)
-        val (a, _) = assignToDsWithFeatures(overflow, ds, Double.MaxValue)
-        val (dsN, nA) = absorbCounted(ds,
-          a.select(col("cluster").as("label"), col("features")))
-        ds = dsN; discardedSoFar += nA
-        appendAssign(a.select("id", "cluster"))
-        rs = rs.join(overflow.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
-        rsCount = rs.count()
-      }
-
-      // --- mid-stream RS -> DS spill (M8, code/bfr.py:322-334), not last round ---
-      if (round < nRounds && rsCount > 0) {
-        step(round, "rs-spill")
-        val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
-        roundTags += tg
-        // α=4 spill merges matched points into DS summaries (code/bfr.py:331-333)
-        val (dsN, nA) = absorbCounted(ds,
-          a.select(col("cluster").as("label"), col("features")))
-        ds = dsN; discardedSoFar += nA
-        appendAssign(a.select("id", "cluster"))
-        rs = r.localCheckpoint(false)
-        rsCount = rs.count() // == rsCount - nA; materializes the checkpoint
-      }
-
-      // --- finalize on the last round (M9, code/bfr.py:336-355) ---
-      var retained = 0L
-      if (round == nRounds) { step(round, "finalize")
-        if (rsCount > 0) {
-          val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
-          roundTags += tg
-          val (dsN, aCount) = absorbCounted(ds,
-            a.select(col("cluster").as("label"), col("features")))
-          ds = dsN
-          appendAssign(a.select("id", "cluster"))
-          discardedSoFar += aCount
-          retained = rsCount - aCount
-          appendAssign(r.select(col("id"), lit(-1).cast("int").as("cluster")))
-          rs = r
-        }
-        // force-merge every CS into its nearest DS (α=10^18, code/bfr.py:350)
-        if (cs.nonEmpty) {
-          val csToDs = cs.zipWithIndex.map { case (c, i) =>
-            val dists = ds.map(s => s.mahalanobis(c.center))
-            val best = dists.zipWithIndex.minBy(_._1)._2
-            i -> best
-          }.toMap
-          ds = ds.zipWithIndex.map { case (s, di) =>
-            csToDs.filter(_._2 == di).keys.foldLeft(s)((acc, ci) => acc.merge(cs(ci)))
-          }
-          val csMap = map(csToDs.toSeq.flatMap { case (c, d0) => Seq(lit(c), lit(d0)) }: _*)
-          appendAssign(
-            csMembers.select(col("id"), element_at(csMap, col("cs_id")).cast("int").as("cluster")))
-          discardedSoFar += cs.map(_.n).sum // CS merge and remap keep N
-          cs = IndexedSeq.empty
-          csMembers = emptyAssignments(spark, "cs_id") // merged -> now discard
-        }
-      }
-
-      // each round checkpoints only its own assignment delta; a checkpoint
-      // of the running union would re-copy every earlier round (O(rounds^2))
-      step(round, "assigned-checkpoint")
-      if (roundAssigned.nonEmpty) {
-        assignedCheckpoints += roundAssigned.reduce(_ union _).localCheckpoint(true)
-        roundAssigned.clear()
-      }
-      // checkpoint the CS membership only while CS state exists; its
-      // point count is the summaries' N (CS merge and remap keep N).
-      // Every round's new members add their partitions to the union, so
-      // it narrows back to the core count first (no shuffle)
-      if (cs.nonEmpty) csMembers = csMembers
-        .coalesce(spark.sparkContext.defaultParallelism).localCheckpoint(true)
-      val csPoints = cs.map(_.n).sum
-      stats += RoundStats(round, ds.size, discardedSoFar, cs.size, csPoints,
-        if (round == nRounds) retained else rsCount)
-      if (round == 1) chunk.unpersist(false)
-      // every checkpoint/sink that reads the round's tagged frames has
-      // materialized above; drop the caches before the next chunk
-      roundTags.foreach(_.unpersist(false))
-      roundTags.clear()
-      onRound(round) // instrumentation hook (scale probes time/heap here)
     }
+
+    var st = State.empty(spark)
+    try {
+      for ((chunk, idx) <- chunks.zipWithIndex) {
+        st = step(spark, st, chunk, cfg, forceDistributedRs, sizeLoop)
+        if (idx == chunks.size - 1) st = finish(spark, st)
+        describe(spark, st.round, "assigned-checkpoint")
+        assignSink match {
+          case Some(sink) => sink(st.assigned)
+          case None       => assignedCheckpoints += st.assigned.localCheckpoint(true)
+        }
+        st = st.release()
+        onRound(st.round) // instrumentation hook (scale probes time/heap here)
+      }
     } finally {
-      if (widthSet)
-        spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
+      spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
       prevAqe.foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     }
 
-    Result(
-      if (assignedCheckpoints.isEmpty) emptyAssignments(spark, "cluster")
-      else assignedCheckpoints.reduce(_ union _),
-      stats.toSeq, ds)
+    Result(assignedCheckpoints.reduceOption(_ union _)
+      .getOrElse(emptyFrame(spark, "cluster")), st.stats, st.ds)
+  }
+
+  // label every action (opt guide §1.5) so job-level profiles attribute
+  // the loop's cost to its steps
+  private def describe(spark: SparkSession, round: Int, name: String): Unit =
+    spark.sparkContext.setJobDescription(s"bfr r$round $name")
+
+  /** One BFR round over a chunk with columns (id, features): round 1
+    * initializes DS (M4), later rounds assign at α=3 and absorb (M5/A4);
+    * then RS is collected or checkpointed, re-clustered into CS over the
+    * threshold (M6), CS merges (M7), the hard cap applies, and RS spills
+    * into DS at α=4 (M8). The spill runs in every round, the last one
+    * included, so a stream need not know its last batch: [[finish]] only
+    * labels what is left. `sizeLoop` gets chunk 1's row count before the
+    * init stage runs. Returns the next state with the round's blocks and
+    * caches pending (see [[State]]).
+    */
+  def step(spark: SparkSession, st: State, chunkRaw: DataFrame, cfg: Config,
+           forceDistributedRs: Boolean = false, sizeLoop: Long => Unit = _ => ()): State = {
+    val round = st.round + 1
+    var ds = st.ds                                       // discard sets
+    var cs = st.cs                                       // compression sets
+    var csMembers = st.csMembers                         // (id, cs_id)
+    var rs = st.rs                                       // retained points
+    var rsCount = st.rsCount                             // rows of rs
+    var discardedSoFar = st.discarded
+    var blocks = st.blocks
+    // tagged per-round assignment frames (see tagAssign) and round 1's
+    // chunk, unpersisted by the caller once the blocks materialized
+    var caches = st.caches
+
+    describe(spark, round, "chunk")
+    val chunk = chunkRaw.select(col("id").cast("long").as("id"), col("features"))
+    if (round == 1) {
+      // round 1 reads its chunk four times (count, k-th smallest id,
+      // sample, rest) and caches it; later rounds read it once, through
+      // tagAssign's persisted frame, so a chunk cache would never be read
+      chunk.persist(StorageLevel.MEMORY_AND_DISK); caches :+= chunk
+      // the count sizes the init sample (and the caller's loop width)
+      val n = chunk.count()
+      sizeLoop(n)
+      describe(spark, round, "init")
+      // --- init (M4, code/bfr.py:393-429) ---
+      val sampleN = math.ceil(cfg.initSampleFraction * n).toInt
+      val (sample0, kth) = initSampleWithThreshold(chunk, sampleN)
+      val sample = sample0.persist(StorageLevel.MEMORY_AND_DISK)
+      // cluster sample into 3K; singleton labels -> RS (A7 + P3)
+      val coarse = KMeans.fit(sample, math.min(cfg.seedKMult * cfg.k, sampleN),
+        cfg.kmeansIters, firstSeedRank = cfg.seedRank)
+      val coarseAssigned = coarse.assign(sample, "features")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // ONE label-histogram collect replaces the previous singleton
+      // subquery + two broadcast joins + a separate inlier count: the
+      // histogram is ≤ 3K rows by construction (labels of a 3K-means),
+      // so the singleton-label list rides back as a map-side isin()
+      // literal and the inlier count is its complement sum — same row
+      // sets, three fewer jobs in the init stage
+      val labelHist = coarseAssigned.groupBy(col("label")).count().collect()
+      val singletonLabels = labelHist.filter(_.getLong(1) == 1L).map(_.getInt(0))
+      val nInliers0 = labelHist.filter(_.getLong(1) > 1L).map(_.getLong(1)).sum
+      val isSingleton: Column =
+        if (singletonLabels.isEmpty) lit(false)
+        else col("label").isin(singletonLabels.toIndexedSeq: _*)
+      val rsInit0 = coarseAssigned.filter(isSingleton)
+        .select("id", "features")
+      val inliers0 = coarseAssigned.filter(!isSingleton)
+        .select("id", "features")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // degenerate guard: if outlier removal left fewer than K points
+      // (tiny samples), keep the whole sample as inliers. RS starts with
+      // one point per singleton label
+      val (inliers, rsInit, nInliers, nRsInit) =
+        if (nInliers0 < cfg.k)
+          (sample.select("id", "features").persist(StorageLevel.MEMORY_AND_DISK),
+            sample.select("id", "features").limit(0), sampleN.toLong, 0L)
+        else (inliers0, rsInit0, nInliers0, singletonLabels.length.toLong)
+      // re-cluster inliers into K -> DS; the shape is already known
+      // (inlier count from the histogram, d from the coarse model), so
+      // the fit's probe job is skipped
+      val fine = KMeans.fit(inliers, cfg.k, cfg.kmeansIters,
+        firstSeedRank = cfg.seedRank,
+        knownShape = Some((nInliers, coarse.d)))
+      val fineAssigned = fine.assign(inliers, "features")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val byLabel = summariesByLabel(fineAssigned, "features")
+      // drop empty clusters instead of padding with zero summaries: a
+      // zero summary has NaN center and all-zero std, which makes its
+      // Mahalanobis distance 0.0 to EVERY point — a phantom cluster
+      // that would absorb the rest of the stream. Cluster ids are the
+      // (compacted) ds indices.
+      val present = (0 until cfg.k).filter(byLabel.contains)
+      val relabel = present.zipWithIndex.toMap
+      ds = present.map(byLabel).toIndexedSeq
+      val relabelExpr = map(relabel.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
+      blocks :+= fineAssigned.select(col("id"),
+        element_at(relabelExpr, col("label")).cast("int").as("cluster"))
+      discardedSoFar += byLabel.values.map(_.n).sum // sample inliers
+      rs = rsInit
+      rsCount = nRsInit
+      // rest of chunk 1 through the normal DS/RS path (code/bfr.py:429):
+      // the exact complement of the `id <= kth` sample, as a map-side
+      // filter — not an anti-join, which would shuffle the whole chunk
+      val rest = chunk.filter(col("id") > kth)
+      val (tg2, a2, r2) = tagAssign(rest, ds, cfg.alphaAssign)
+      caches :+= tg2
+      blocks :+= a2.select("id", "cluster")
+      // A4: assigned points fold into their DS summaries (the reference
+      // updates per point at code/bfr.py:389; we fold the chunk's delta);
+      // the same aggregation yields the discarded and leftover counts
+      describe(spark, round, "absorb-rest")
+      val (ds2, n2, left2) = absorbTagged(ds, tg2)
+      ds = ds2; discardedSoFar += n2; rsCount += left2
+      rs = rs.union(r2)
+      sample.unpersist(false); coarseAssigned.unpersist(false)
+      inliers0.unpersist(false); inliers.unpersist(false); fineAssigned.unpersist(false)
+    } else {
+      // --- per-chunk step (M5, code/bfr.py:382-391) ---
+      val (tg, a, r) = tagAssign(chunk, ds, cfg.alphaAssign)
+      caches :+= tg
+      blocks :+= a.select("id", "cluster")
+      describe(spark, round, "absorb")
+      val (dsN, nA, nLeft) = absorbTagged(ds, tg)
+      ds = dsN; discardedSoFar += nA; rsCount += nLeft
+      rs = rs.union(r)
+    }
+
+    // The RS lineage must be cut every round — the plan otherwise
+    // compounds (embedded center literals included) until even
+    // stringifying it OOMs the driver, and it reads the round's tagged
+    // cache. rsCount is already known from the absorb aggregation.
+    // While RS fits KMeans' local-fit budget (KMeans.fit would collect
+    // it for a fit anyway), ONE collect serves both cases: RS becomes a
+    // driver-built frame, and an RS over the threshold re-clusters on
+    // the driver from the same rows. A larger RS is checkpointed
+    // eagerly for the distributed step.
+    val rsSchema = rs.schema
+    def driverFrame(rows: Array[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), rsSchema)
+    val localD = ds.headOption.map(_.d)
+      .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
+    var rsRows: Array[Row] = null
+    if (localD.isDefined) {
+      describe(spark, round, "rs-recluster")
+      rsRows = if (rsCount == 0) Array.empty[Row] else KMeans.collectById(rs)
+      rs = driverFrame(rsRows)
+    } else {
+      describe(spark, round, "rs-checkpoint")
+      rs = rs.localCheckpoint(true)
+    }
+
+    // --- RS -> CS re-clustering (M6, code/bfr.py:259-288) ---
+    if (rsCount > cfg.rsClusterThreshold) {
+      val kCs = math.min(cfg.csKMult * cfg.k, (rsCount / 2).toInt max 1)
+      val base = cs.size
+      // the driver-local step is the distributed one's result without
+      // its ~9 jobs
+      localD match {
+        case Some(d) =>
+          val (retained, summaries, members) =
+            reclusterLocal(rsRows, d, kCs, cfg.kmeansIters)
+          cs = cs ++ summaries
+          csMembers = csMembers.union(spark.createDataFrame(
+            java.util.Arrays.asList(members.map { case (id, i) => Row(id, base + i) }: _*),
+            csMembers.schema))
+          rs = driverFrame(retained)
+          rsCount = retained.length
+        case None =>
+          describe(spark, round, "rs-recluster")
+          val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
+          val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
+          val singles = rsAssigned.groupBy(col("label")).count()
+            .filter(col("count") === 1).select("label")
+          val newRs = rsAssigned.join(broadcast(singles), Seq("label"), "left_semi")
+            .select("id", "features")
+          val toCs = rsAssigned.join(broadcast(singles), Seq("label"), "left_anti")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val byLabel = summariesByLabel(toCs, "features")
+          val labels = byLabel.keys.toSeq.sorted
+          val labelToCs = labels.zipWithIndex.map { case (l, i) => (l, base + i) }.toMap
+          cs = cs ++ labels.map(byLabel)
+          val mapExpr = map(labelToCs.toSeq.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*)
+          csMembers = csMembers.union(
+            toCs.select(col("id"), element_at(mapExpr, col("label")).cast("int").as("cs_id")))
+          rs = newRs.localCheckpoint(true)
+          rsCount = rs.count()
+          rsAssigned.unpersist(false); toCs.unpersist(false)
+      }
+      // --- CS pairwise merge (M7, code/bfr.py:290-320, bug fixed) ---
+      val (mergedCs, remap) = mergeCs(cs)
+      if (remap.nonEmpty) {
+        cs = mergedCs
+        val remapExpr = map(remap.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
+        csMembers = csMembers.select(col("id"),
+          coalesce(element_at(remapExpr, col("cs_id")), col("cs_id")).cast("int").as("cs_id"))
+      }
+    }
+
+    // --- RS hard cap (engine extension): force-spill overflow to DS ---
+    for (cap <- cfg.rsHardCap if rsCount > cap && ds.nonEmpty) {
+      // smallest-id prefix via threshold selection — same shape as the
+      // init sample; the overflow can be a large fraction of RS, so no
+      // TakeOrdered funnel here either
+      val overflow = rs.filter(col("id") <=
+          graft.operators.Selection.kthSmallestLong(rs, "id", rsCount - cap))
+        .localCheckpoint(true)
+      val (tg, a, _) = tagAssign(overflow, ds, Double.MaxValue)
+      caches :+= tg
+      val (dsN, nA, _) = absorbTagged(ds, tg)
+      ds = dsN; discardedSoFar += nA
+      blocks :+= a.select("id", "cluster")
+      rs = rs.join(overflow.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
+      rsCount = rs.count()
+    }
+
+    // --- RS -> DS spill at α=4 (M8, code/bfr.py:322-334), every round ---
+    if (rsCount > 0) {
+      describe(spark, round, "rs-spill")
+      val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
+      caches :+= tg
+      // one aggregation merges the matches into DS (code/bfr.py:331-333)
+      // and counts what stays in RS
+      val (dsN, nA, nLeft) = absorbTagged(ds, tg)
+      ds = dsN; discardedSoFar += nA; rsCount = nLeft
+      blocks :+= a.select("id", "cluster")
+      rs = r
+    }
+
+    State(round, ds, cs, csMembers, rs, rsCount, discardedSoFar, st.stats :+
+      RoundStats(round, ds.size, discardedSoFar, cs.size, cs.map(_.n).sum, rsCount), blocks, caches)
+  }
+
+  /** The end of the chunk sequence (M9, code/bfr.py:336-355): the RS left
+    * after the last round's spill is labelled −1, every CS merges into
+    * its nearest DS, and the last stats row is rewritten to count them.
+    * Its blocks join the last round's pending ones.
+    */
+  def finish(spark: SparkSession, st: State): State = {
+    describe(spark, st.round, "finalize")
+    var ds = st.ds
+    var blocks = st.blocks
+    if (st.rsCount > 0) blocks :+= st.rs.select(col("id"), lit(-1).cast("int").as("cluster"))
+    // force-merge every CS into its nearest DS (α=10^18, code/bfr.py:350)
+    val cs = st.cs
+    if (cs.nonEmpty) {
+      val csToDs = cs.indices
+        .map(i => i -> ds.indices.minBy(ds(_).mahalanobis(cs(i).center))).toMap
+      ds = ds.zipWithIndex.map { case (s, di) =>
+        csToDs.filter(_._2 == di).keys.foldLeft(s)((acc, ci) => acc.merge(cs(ci)))
+      }
+      val csMap = map(csToDs.toSeq.flatMap { case (c, d0) => Seq(lit(c), lit(d0)) }: _*)
+      blocks :+= st.csMembers.select(col("id"),
+        element_at(csMap, col("cs_id")).cast("int").as("cluster"))
+    }
+    val discarded = st.discarded + cs.map(_.n).sum // CS merge and remap keep N
+    st.copy(ds = ds, cs = IndexedSeq.empty, csMembers = emptyFrame(spark, "cs_id"),
+      discarded = discarded, blocks = blocks,
+      stats = st.stats.init :+ RoundStats(st.round, ds.size, discarded, 0, 0L, st.rsCount))
   }
 
   /** One persisted distance pass per assignment step: tag every point
@@ -501,7 +527,7 @@ object BFR {
     * RS collect and the assignment delta all read one cache instead
     * of each re-running the Mahalanobis kernel (previously two full
     * kernel passes per chunk per round). The caller owns the cache:
-    * unpersist after the round's checkpoints materialize (roundTags).
+    * unpersist after the round's blocks materialize (State.caches).
     * With no DS every point is leftover. Returns (tagged,
     * assigned(id,cluster,features), leftover(id,features)).
     */
@@ -519,49 +545,12 @@ object BFR {
       tagged.filter(!col("__keep")).select("id", "features"))
   }
 
-  /** J2/M5: nearest DS summary under α√d; returns
-    * (assigned(id, cluster, features), leftover(id, features)). The
-    * assigned side keeps its features so callers that fold the matches
-    * into summaries (A4) read them directly instead of re-joining the
-    * chunk on id (which would shuffle both sides once per round).
-    */
-  def assignToDsWithFeatures(points: DataFrame, ds: IndexedSeq[ClusterSummary],
-                             alpha: Double): (DataFrame, DataFrame) = {
-    if (ds.isEmpty)
-      return (emptyAssignments(points.sparkSession, "cluster")
-        .withColumn("features", lit(null).cast("array<double>")),
-        points.select("id", "features"))
-    val (label, keep) = nearestUnder(col("features"), ds, alpha)
-    // NULL keep (e.g. a dimension-mismatched vector -> NULL distance)
-    // must route to RS, not silently satisfy neither filter
-    val tagged = points.withColumn("__label", label)
-      .withColumn("__keep", coalesce(keep, lit(false)))
-    val a = tagged.filter(col("__keep"))
-      .select(col("id"), col("__label").cast("int").as("cluster"), col("features"))
-    val r = tagged.filter(!col("__keep")).select("id", "features")
-    (a, r)
-  }
-
-  /** Fold newly matched points into their DS summaries (A4). */
-  private[graft] def absorb(ds: IndexedSeq[ClusterSummary], labeled: DataFrame): IndexedSeq[ClusterSummary] =
-    absorbCounted(ds, labeled)._1
-
-  /** absorb + the number of points folded in, read off the same
-    * aggregation (Σ delta.n) — callers needing the count save one job.
-    */
-  private[graft] def absorbCounted(ds: IndexedSeq[ClusterSummary],
-                                   labeled: DataFrame): (IndexedSeq[ClusterSummary], Long) = {
-    val deltas = summariesByLabel(labeled, "features")
-    (ds.zipWithIndex.map { case (s, i) => deltas.get(i).map(s.merge).getOrElse(s) },
-      deltas.values.map(_.n).sum)
-  }
-
-  /** [[absorbCounted]] over a [[tagAssign]] frame, plus its leftover
-    * row count, from ONE grouped aggregation: kept rows group by cluster
-    * into the summary fold, and leftover rows form the NULL group with
-    * their vectors masked to NULL, which the fold skips — a NULL or
-    * ragged vector routes to RS and never reaches a summary. Returns
-    * (ds', kept count, leftover count).
+  /** Fold a [[tagAssign]] frame's kept rows into their DS summaries
+    * (A4) and count both sides, from ONE grouped aggregation: kept rows
+    * group by cluster into the summary fold, and leftover rows form the
+    * NULL group with their vectors masked to NULL, which the fold skips —
+    * a NULL or ragged vector routes to RS and never reaches a summary.
+    * Returns (ds', kept count, leftover count).
     */
   private def absorbTagged(ds: IndexedSeq[ClusterSummary], tagged: DataFrame)
       : (IndexedSeq[ClusterSummary], Long, Long) = {
@@ -653,10 +642,9 @@ object BFR {
     (out, remap)
   }
 
-  private def emptyAssignments(spark: SparkSession, valueCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", LongType), StructField(valueCol, IntegerType))))
-  }
+  private def emptyFrame(spark: SparkSession, valueCol: String,
+                               valueType: DataType = IntegerType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("id", LongType), StructField(valueCol, valueType))))
 
 }

@@ -85,5 +85,5 @@ object PointSource {
   def fromEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("features"))
+        col("embedding").cast("array<double>").as("features"))
 }

@@ -1,11 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.bfr.BFR
-import graft.core.ClusterSummary
+import graft.core.{ClusterSummary, RoundStats}
 import graft.sources.PointSource
 
 /** Streaming re-expression of the reference's bounded, ordered,
@@ -16,8 +17,10 @@ import graft.sources.PointSource
   *
   * Caveat documented in SURVEY §2.1-S1: the file source orders batches by
   * modification time, not name; for strict lexicographic-round parity use
-  * the batch driver (BfrApp). Everything else — threshold assignment
-  * against broadcast DS state, monoid summary updates — is identical code.
+  * the batch driver (BfrApp). Everything else is identical code: each
+  * micro-batch runs [[BFR.step]], the round batch BFR folds over its
+  * chunks, and [[Streaming.finishBfrStream]] runs batch BFR's
+  * [[BFR.finish]] once the stream ends.
   */
 object Streaming {
 
@@ -30,70 +33,79 @@ object Streaming {
       .flatMap(PointSource.parseLine).toDF("id", "features")
   }
 
-  /** Incremental BFR over a chunk stream: round 1 initializes DS from the
-    * first micro-batch, later rounds run the α-threshold assignment and
-    * fold matched points into DS via the summary monoid (M5/A4).
-    * Assignments land in `outDir/batch=<id>` as parquet.
+  /** Incremental BFR over a chunk stream: each micro-batch is one
+    * [[BFR.step]], the same round [[BFR.run]] folds over a chunk list (RS,
+    * CS and the α=4 spill included), run at the session's shuffle width.
+    * Each batch's assignments land in `outDir/batch=<id>` as parquet. Once
+    * the query has terminated, [[finishBfrStream]] labels the leftover RS
+    * and merges CS into DS, as batch BFR does after its last chunk.
     *
     * Restart / exactly-once posture: the source offsets live in the
-    * Structured Streaming checkpoint; the BFR sufficient statistics are
-    * snapshotted to `<checkpoint>/graft-bfr-state/state-<batchId>` after
-    * every batch. On restart (or on re-delivery of a batch that failed
-    * after a partial write) the in-memory state re-syncs to the snapshot
-    * committed strictly BEFORE the delivered batch, and the batch's
-    * output directory is overwritten — so a replayed batch recomputes
-    * the identical rows instead of double-absorbing into DS or appending
-    * duplicates. Net: the assignment rows of an interrupted-and-restarted
-    * run are exactly those of an uninterrupted run.
+    * Structured Streaming checkpoint; the whole BFR state is snapshotted
+    * to `<checkpoint>/graft-bfr-state/state-<batchId>` after every batch
+    * (see [[saveSnapshot]]). On restart (or on re-delivery of a batch that
+    * failed after a partial write) the in-memory state re-syncs to the
+    * snapshot committed strictly BEFORE the delivered batch, and the
+    * batch's output directory is overwritten — so a replayed batch
+    * recomputes the identical rows instead of double-absorbing into DS or
+    * appending duplicates. Net: the assignment rows of an
+    * interrupted-and-restarted run are exactly those of an uninterrupted
+    * run.
     */
-  final class BfrStreamState(cfg: BFR.Config) extends Serializable {
-    @volatile var ds: IndexedSeq[ClusterSummary] = IndexedSeq.empty
-    @volatile var rounds: Int = 0
-    /** Last batchId processed by THIS JVM (-1 = none): a gap between it
-      * and the next delivered batchId means restart or replay.
+  final class BfrStreamState extends Serializable {
+    /** State after the last batch THIS JVM processed (null = none). */
+    @volatile var bfr: BFR.State = _
+    /** That batch's id: a gap to the next delivered batchId means restart
+      * or replay.
       */
     @volatile var lastBatch: Long = -1L
+    def rounds: Int = Option(bfr).fold(0)(_.round)
+    def ds: IndexedSeq[ClusterSummary] = Option(bfr).fold(IndexedSeq.empty[ClusterSummary])(_.ds)
   }
 
   private def stateDir(checkpoint: String) = s"$checkpoint/graft-bfr-state"
 
-  /** Serialized snapshot = rounds + the N/SUM/SUMSQ triples; written via
-    * the checkpoint's Hadoop FileSystem (atomic-create semantics there),
-    * so the same code path works on HDFS/object stores in cluster mode.
+  /** RS and the CS membership as parquet, then a `summary` file (round,
+    * counters, DS/CS summaries, stats) written LAST via the checkpoint's
+    * Hadoop FileSystem, so the same code path works on HDFS/object stores
+    * in cluster mode. A snapshot without its summary is torn and never
+    * loaded (the `_SUCCESS` rule of [[latestCanonSnapshot]]).
     */
   private def saveSnapshot(spark: SparkSession, checkpoint: String,
-                           batchId: Long, ds: IndexedSeq[ClusterSummary],
-                           rounds: Int): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir(checkpoint))
+                           batchId: Long, st: BFR.State): Unit = {
+    val dir = new Path(s"${stateDir(checkpoint)}/state-$batchId")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, s"state-$batchId"), true)
-    val oos = new java.io.ObjectOutputStream(out)
-    try { oos.writeInt(rounds); oos.writeObject(ds) } finally oos.close()
+    fs.delete(dir, true)
+    st.rs.write.parquet(s"$dir/rs")
+    st.csMembers.write.parquet(s"$dir/cs_members")
+    val oos = new java.io.ObjectOutputStream(fs.create(new Path(dir, "summary"), true))
+    try oos.writeObject((st.round, st.ds, st.cs, st.rsCount, st.discarded, st.stats))
+    finally oos.close()
   }
 
-  /** Latest snapshot with id < batchId, if any. */
+  /** Latest complete snapshot with id < batchId, if any. */
   private def loadSnapshotBelow(spark: SparkSession, checkpoint: String,
-                                batchId: Long): Option[(Int, IndexedSeq[ClusterSummary])] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir(checkpoint))
+                                batchId: Long): Option[BFR.State] = {
+    val dir = new Path(stateDir(checkpoint))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return None
-    val ids = fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).collect {
-        case n if n.startsWith("state-") => n.stripPrefix("state-").toLong
-      }.filter(_ < batchId)
-    if (ids.isEmpty) None
-    else {
-      val ois = new java.io.ObjectInputStream(
-        fs.open(new org.apache.hadoop.fs.Path(dir, s"state-${ids.max}")))
-      try Some((ois.readInt(), ois.readObject().asInstanceOf[IndexedSeq[ClusterSummary]]))
-      finally ois.close()
-    }
+    fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("state-") => n.stripPrefix("state-").toLong }
+      .filter(id => id < batchId && fs.exists(new Path(dir, s"state-$id/summary")))
+      .maxOption.map { id =>
+        val snap = s"$dir/state-$id"
+        val ois = new java.io.ObjectInputStream(fs.open(new Path(snap, "summary")))
+        val (round, ds, cs, rsCount, discarded, stats) = try ois.readObject()
+          .asInstanceOf[(Int, IndexedSeq[ClusterSummary], IndexedSeq[ClusterSummary],
+            Long, Long, Vector[RoundStats])] finally ois.close()
+        BFR.State(round, ds, cs, spark.read.parquet(s"$snap/cs_members"),
+          spark.read.parquet(s"$snap/rs"), rsCount, discarded, stats)
+      }
   }
 
   def bfrStream(spark: SparkSession, inputPath: String, outDir: String,
                 cfg: BFR.Config, checkpoint: String): (StreamingQuery, BfrStreamState) = {
-    val state = new BfrStreamState(cfg)
+    val state = new BfrStreamState
     val q = chunkStream(spark, inputPath)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -101,42 +113,36 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val sess = batch.sparkSession
-        if (state.lastBatch != batchId - 1) {
+        if (state.bfr == null || state.lastBatch != batchId - 1) {
           // restart or replay: re-sync to the state committed before this
           // batch (never the batch's own snapshot — that would skip or
           // double-count the delivered chunk)
-          loadSnapshotBelow(sess, checkpoint, batchId) match {
-            case Some((rounds, ds)) => state.ds = ds; state.rounds = rounds
-            case None => state.ds = IndexedSeq.empty; state.rounds = 0
-          }
+          state.bfr = loadSnapshotBelow(sess, checkpoint, batchId)
+            .getOrElse(BFR.State.empty(sess))
         }
-        val chunk = batch.toDF()
-        val batchOut = s"$outDir/batch=$batchId"
-        if (state.ds.isEmpty) {
-          // round 1: reuse the batch init path on this single chunk
-          val res = BFR.run(chunk.sparkSession, Seq(chunk),
-            cfg.copy(rsClusterThreshold = Int.MaxValue))
-          state.ds = res.ds
-          res.assignments.write.mode("overwrite").parquet(batchOut)
-        } else {
-          val (a, r) = BFR.assignToDsWithFeatures(chunk, state.ds, cfg.alphaAssign)
-          // fold matched points into DS summaries (A4) via the shared
-          // batch helper — no batch/streaming drift; features ride along
-          // on the assigned side, no re-join of the chunk
-          state.ds = BFR.absorb(state.ds,
-            a.select(col("cluster").as("label"), col("features")))
-          // unmatched -> outliers in streaming mode (RS spill is the batch
-          // driver's job; here we emit -1 like the reference's finalize)
-          a.select("id", "cluster")
-            .union(r.select(col("id"), lit(-1).cast("int").as("cluster")))
-            .write.mode("overwrite").parquet(batchOut)
-        }
-        state.rounds += 1
-        saveSnapshot(sess, checkpoint, batchId, state.ds, state.rounds)
+        val st = BFR.step(sess, state.bfr, batch.toDF(), cfg)
+        st.assigned.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        saveSnapshot(sess, checkpoint, batchId, st)
+        state.bfr = st.release()
         state.lastBatch = batchId
       }
       .start()
     (q, state)
+  }
+
+  /** Ends a [[bfrStream]] run after its query terminated: loads the
+    * latest committed state (so a fresh process can call it), runs
+    * [[BFR.finish]] and writes its block — leftover RS as −1, CS members
+    * under their merged DS — to `outDir/batch=final` with overwrite, so it
+    * can be re-run. Returns every batch's assignments with the final
+    * stats and DS.
+    */
+  def finishBfrStream(spark: SparkSession, outDir: String, checkpoint: String): BFR.Result = {
+    val st = loadSnapshotBelow(spark, checkpoint, Long.MaxValue).getOrElse(
+      throw new IllegalStateException(s"no committed BFR stream state under $checkpoint"))
+    val done = BFR.finish(spark, st)
+    done.assigned.write.mode("overwrite").parquet(s"$outDir/batch=final")
+    BFR.Result(spark.read.parquet(outDir).select("id", "cluster"), done.stats, done.ds)
   }
 
   /** Watermarked tumbling-window aggregation over the events stream —

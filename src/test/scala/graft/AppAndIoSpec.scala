@@ -26,8 +26,8 @@ class AppAndIoSpec extends AnyFunSuite {
   /** Write a chunked dataset in the reference's layout: data0.txt..dataN.txt
     * of `id,f0,...` lines (FIXTURES.md §1).
     */
-  def writeChunkedDataset(dir: String, nChunks: Int): Map[Long, Int] = {
-    val base = TestBlobs.generate(spark, n = 1200, k = 4, d = 3, outliers = 12)
+  def writeChunkedDataset(dir: String, nChunks: Int, outliers: Int = 12): Map[Long, Int] = {
+    val base = TestBlobs.generate(spark, n = 1200, k = 4, d = 3, outliers = outliers)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2)))
     Files.createDirectories(Paths.get(dir))
     (0 until nChunks).foreach { c =>
@@ -165,7 +165,7 @@ class AppAndIoSpec extends AnyFunSuite {
     assert(strict.size < want.size)
   }
 
-  test("the chunk parse, batch and streaming, plans no higher-order function") {
+  test("the point sources, chunk parse and embeddings, plan no higher-order function") {
     def hofs(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
       case e: ArrayTransform => e
       case e: LambdaFunction => e
@@ -174,6 +174,8 @@ class AppAndIoSpec extends AnyFunSuite {
     Files.write(f, "0,1.0,2.0\n1,3.0,4.0\n".getBytes)
     val batch = PointSource.readChunk(spark, f.toString).queryExecution.optimizedPlan
     assert(hofs(batch).isEmpty, s"readChunk plans a higher-order function:\n$batch")
+    val emb = PointSource.fromEmbeddings(spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
+    assert(hofs(emb).isEmpty, s"fromEmbeddings plans a higher-order function:\n$emb")
 
     val dir = Files.createTempDirectory("points_stream")
     Files.write(dir.resolve("data0.txt"), "0,1.0,2.0\n".getBytes)

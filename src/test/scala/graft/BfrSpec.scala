@@ -223,6 +223,16 @@ class BfrSpec extends AnyFunSuite {
       Seq(409L, 408L, 408L, 407L, 408L))
   }
 
+  test("BFR behaviour lock: a halo over the RS hard cap") {
+    val (chunks, cfg) = haloFixture()
+    val res = BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(4)))
+    assertLocked("halo cap", fingerprint(hashes(res.assignments)), res,
+      (2060L, 6474297523353583196L),
+      rounds((1, 5, 515L, 0, 0L, 0L), (2, 5, 1030L, 0, 0L, 0L),
+        (3, 5, 1543L, 0, 0L, 2L), (4, 5, 2056L, 0, 0L, 4L)),
+      Seq(410L, 412L, 411L, 412L, 411L))
+  }
+
   test("BFR behaviour lock: RS hard cap") {
     val points = PointSource.fromEmbeddings(spark, "/root/testdata/sf0.001")
     val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))

@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.bfr.BFR
 import graft.eval.Nmi
+import graft.sources.PointSource
 import graft.streaming.Streaming
 
 class StreamingSpec extends AnyFunSuite {
@@ -24,6 +26,7 @@ class StreamingSpec extends AnyFunSuite {
     val (q, state) = Streaming.bfrStream(spark, dir, outDir,
       BFR.Config(k = 4), ckpt)
     q.awaitTermination(300000)
+    Streaming.finishBfrStream(spark, outDir, ckpt)
     assert(state.rounds == 3, s"expected 3 micro-batches, got ${state.rounds}")
     assert(state.ds.size == 4)
     val assigned = spark.read.parquet(outDir)
@@ -32,16 +35,53 @@ class StreamingSpec extends AnyFunSuite {
     assert(nmi > 0.8, s"streaming BFR NMI $nmi below pass bar")
   }
 
-  test("bfrStream restart mid-stream is exactly-once vs an uninterrupted run") {
-    import spark.implicits._
-    import java.nio.file.{Files => JFiles, Paths}
-    val dir = Files.createTempDirectory("stream_eo_ds").toString
-    val truth = new AppAndIoSpec().writeChunkedDataset(dir, nChunks = 3)
+  /** Writes the chunked blob dataset with 10% outliers into a fresh
+    * directory, with modification times pinned in name order so the file
+    * source's (modTime, path) order is the batch driver's round order
+    * and the same in every run, however long copies take.
+    */
+  private def noisyChunks(prefix: String, nChunks: Int): (String, Map[Long, Int], Array[java.io.File]) = {
+    val dir = Files.createTempDirectory(prefix).toString
+    val truth = new AppAndIoSpec().writeChunkedDataset(dir, nChunks, outliers = 120)
     val files = new java.io.File(dir).listFiles().filter(_.isFile).sortBy(_.getName)
-    // pin mod times so the file source's (modTime, path) order is the
-    // same in both runs regardless of copy latency
     files.zipWithIndex.foreach { case (f, i) => f.setLastModified(1000000000000L + i * 60000L) }
-    val cfg = BFR.Config(k = 4)
+    (dir, truth, files)
+  }
+  // RS re-clusters into CS at this threshold, and singletons stay RS
+  private val noisyCfg = BFR.Config(k = 4, rsClusterThreshold = 5)
+
+  private def pairs(df: DataFrame): Seq[(Long, Int)] =
+    df.select("id", "cluster").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+
+  test("bfrStream plus finish labels a chunk directory exactly as batch BFR.run") {
+    val (dir, truth, _) = noisyChunks("stream_eq_ds", nChunks = 4)
+    val outDir = Files.createTempDirectory("stream_eq_out").toString + "/assign"
+    val ckpt = Files.createTempDirectory("stream_eq_ckpt").toString
+    val (q, state) = Streaming.bfrStream(spark, dir, outDir, noisyCfg, ckpt)
+    q.awaitTermination(300000)
+    assert(state.rounds == 4)
+    val streamed = Streaming.finishBfrStream(spark, outDir, ckpt)
+    val batch = BFR.run(spark, PointSource.readDataset(spark, dir), noisyCfg)
+
+    val (s, b) = (pairs(streamed.assignments), pairs(batch.assignments))
+    assert(s.size == truth.size && s == b, "streamed (id, cluster) rows differ from BFR.run's")
+    // the fixture exercises every part of the round and the finish
+    assert(b.count(_._2 == -1) > 0, "no point ends as an outlier")
+    assert(batch.stats.exists(_.nof_cluster_compression > 0), s"no CS formed: ${batch.stats}")
+    assert(streamed.stats == batch.stats)
+    assert(streamed.ds.map(_.n) == batch.ds.map(_.n))
+    // the loop widths differ, so the sums may add in another order
+    def close(x: Array[Double], y: Array[Double]) = x.zip(y).forall { case (u, v) =>
+      math.abs(u - v) <= 1e-9 * math.max(1.0, math.max(math.abs(u), math.abs(v))) }
+    streamed.ds.zip(batch.ds).foreach { case (x, y) =>
+      assert(close(x.sum, y.sum) && close(x.sumsq, y.sumsq), s"DS sums differ: $x vs $y")
+    }
+  }
+
+  test("bfrStream restart mid-stream is exactly-once vs an uninterrupted run") {
+    import java.nio.file.{Files => JFiles, Paths}
+    val (dir, truth, files) = noisyChunks("stream_eo_ds", nChunks = 3)
+    val cfg = noisyCfg
 
     // reference: one uninterrupted run over all 3 chunks
     val outA = Files.createTempDirectory("stream_eo_outA").toString + "/assign"
@@ -49,6 +89,7 @@ class StreamingSpec extends AnyFunSuite {
     val (qa, sa) = Streaming.bfrStream(spark, dir, outA, cfg, ckptA)
     qa.awaitTermination(300000)
     assert(sa.rounds == 3)
+    Streaming.finishBfrStream(spark, outA, ckptA)
 
     // interrupted run: 2 chunks, stop, add the 3rd, restart on the SAME
     // checkpoint with a FRESH in-memory state (= process restart)
@@ -63,11 +104,15 @@ class StreamingSpec extends AnyFunSuite {
     val (q1, s1) = Streaming.bfrStream(spark, stage, outB, cfg, ckptB)
     q1.awaitTermination(300000)
     assert(s1.rounds == 2, s"first segment rounds ${s1.rounds}")
+    // the restart must carry the whole state, not DS alone
+    assert(s1.bfr.cs.nonEmpty && s1.bfr.rsCount > 0,
+      s"CS ${s1.bfr.cs.size} / RS ${s1.bfr.rsCount} after batch 2")
     files.drop(2).foreach(copyIn)
     val (q2, s2) = Streaming.bfrStream(spark, stage, outB, cfg, ckptB)
     q2.awaitTermination(300000)
     // DS state resumed from the snapshot: rounds continue, not restart
     assert(s2.rounds == 3, s"restart did not resume state: rounds ${s2.rounds}")
+    Streaming.finishBfrStream(spark, outB, ckptB)
 
     // exactly-once: the restarted run's (id, cluster) rows are EXACTLY
     // the uninterrupted run's — nothing lost, nothing duplicated, and
@@ -80,6 +125,31 @@ class StreamingSpec extends AnyFunSuite {
     // final sufficient statistics match too (same points absorbed once)
     assert(s2.ds.map(_.n).sorted == sa.ds.map(_.n).sorted,
       s"DS sizes ${s2.ds.map(_.n)} vs ${sa.ds.map(_.n)}")
+  }
+
+  test("bfrStream skips a torn state snapshot on restart and at the finish") {
+    val (dir, _, _) = noisyChunks("stream_torn_ds", nChunks = 3)
+    val out = Files.createTempDirectory("stream_torn_out").toString + "/assign"
+    val ckpt = Files.createTempDirectory("stream_torn_ckpt").toString
+    val (q, _) = Streaming.bfrStream(spark, dir, out, noisyCfg, ckpt)
+    q.awaitTermination(300000)
+    val whole = Streaming.finishBfrStream(spark, out, ckpt)
+    val wholePairs = pairs(whole.assignments) // read before the rewrites below
+    // a crash while batch 2 snapshots: its parquet parts exist, its
+    // summary does not, and the query never committed the batch
+    val snap = new java.io.File(s"$ckpt/graft-bfr-state/state-2")
+    assert(new java.io.File(snap, "rs").isDirectory)
+    assert(new java.io.File(snap, "summary").delete())
+    Seq("2", ".2.crc").foreach(f => assert(new java.io.File(s"$ckpt/commits/$f").delete()))
+    // the finish falls back to batch 1's state...
+    assert(Streaming.finishBfrStream(spark, out, ckpt).stats.size == 2)
+    // ...and a restart replays batch 2 from it, to the same result
+    val (q2, s2) = Streaming.bfrStream(spark, dir, out, noisyCfg, ckpt)
+    q2.awaitTermination(300000)
+    assert(s2.rounds == 3)
+    val again = Streaming.finishBfrStream(spark, out, ckpt)
+    assert(pairs(again.assignments) == wholePairs)
+    assert(again.stats == whole.stats)
   }
 
   test("windowed event counts with watermark (memory sink)") {
