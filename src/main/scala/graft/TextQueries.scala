@@ -507,10 +507,10 @@ object TextQueries {
       bpeTrainBatched(docs(s, dir), BatchRounds, BatchW)._1)
 
   /** The batched training loop, parameterized so the oracle-gated query
-    * (4 rounds × window 16, exactly the published CTE unroll) and the
-    * 256-merge scale probe recorded in SURVEY run the SAME
-    * code. `corpus` needs a `text` column; rounds run until `maxRounds`
-    * or `targetMerges` accepted merges, whichever first. Each round is
+    * (4 rounds × window 16, exactly the published CTE unroll) and a
+    * larger merge target run the SAME code. `corpus` needs a `text`
+    * column; rounds run until `maxRounds` or `targetMerges` accepted
+    * merges, whichever first. Each round is
     * one bounded vocabulary-table aggregate (|vocab| rows, never corpus
     * rows) + one driver round-trip of ≤ `window` candidates — the
     * wall-clock is O(rounds), not O(merges), which is the whole point.

@@ -165,7 +165,7 @@ class AppAndIoSpec extends AnyFunSuite {
     assert(strict.size < want.size)
   }
 
-  test("the point sources, chunk parse and embeddings, plan no higher-order function") {
+  test("the chunk parse, batch and streaming, plans no higher-order function") {
     def hofs(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
       case e: ArrayTransform => e
       case e: LambdaFunction => e
