@@ -224,11 +224,21 @@ object Bench {
     val out = new java.io.PrintWriter("bench_full.json")
     try out.println(fullLine) finally out.close()
 
+    // final stdout line: slowest-first, trimmed to the tail budget
+    val bySlowest = results.sortBy(-_._2)
+    var keep = bySlowest.length
+    while (keep > 1 && line(bySlowest.take(keep), bySlowest.length - keep).length > TailBudget)
+      keep -= 1
+    println(line(bySlowest.take(keep), bySlowest.length - keep))
+    spark.stop()
+
     // per-core-count artifact (round-15 reporting, additive): the 8-core
     // scaling run used to CLOBBER the 32-core bench_full.json; and the
     // per-query breakdown (jobs / GC ms / max stage wall ms) makes a
     // stalled query attributable after the fact. bench_full.json keeps
-    // its exact historical format; consumers of this file opt in.
+    // its exact historical format; consumers of this file opt in. Written
+    // after spark.stop(), which drains the async listener bus, so the
+    // last query's events are all counted.
     val detailJson = results.map { case (k, _) =>
       val c = detail.getOrDefault(k, new Array[Long](3))
       s""""$k":{"jobs":${c(0)},"gc_ms":${c(1)},"max_stage_ms":${c(2)}}"""
@@ -237,13 +247,5 @@ object Bench {
     try outCpu.println(
       s"""{"cpus":$cpus,"bench":$fullLine,"detail":$detailJson}""")
     finally outCpu.close()
-
-    // final stdout line: slowest-first, trimmed to the tail budget
-    val bySlowest = results.sortBy(-_._2)
-    var keep = bySlowest.length
-    while (keep > 1 && line(bySlowest.take(keep), bySlowest.length - keep).length > TailBudget)
-      keep -= 1
-    println(line(bySlowest.take(keep), bySlowest.length - keep))
-    spark.stop()
   }
 }

@@ -5,7 +5,8 @@ package graft
   * rsClusterThreshold=500): the whole chunked stateful loop is UNROLLED
   * into materialized CTEs —
   *
-  *   init:   20% prefix sample → guarded coarse k-means (k=min(3K, n),
+  *   init:   20% prefix sample (the engine caps it at 62,500 rows of
+  *           64 cells, far above any chunk here) → guarded coarse k-means (k=min(3K, n),
   *           seeds beyond the point count guarded out) → singleton
   *           outliers → RS, inliers (whole sample if < K survive) →
   *           fine k-means (K) → compacted DS summaries;

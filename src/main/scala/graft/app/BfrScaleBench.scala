@@ -18,8 +18,9 @@ import graft.functions.VectorFunctions.toDoubleArray
   *    accounting hold (a compounding plan shows up as monotone growth);
   *  - driver heap stays ~flat — driver state is K summaries + round
   *    counters, never point data;
-  *  - the init stage (histogram-selection sample + distributed k-means)
-  *    completes on a chunk far above the local-fit cutoff.
+  *  - the init stage completes on a chunk far above the local-fit
+  *    cutoff: the histogram-selection sample is capped at
+  *    `KMeans.LocalFitCells` cells and clustered in driver memory.
   *
   * Usage: runMain graft.app.BfrScaleBench [embParquet] [copies] [nChunks] [k]
   * (defaults: sf0.1 embeddings × 5000 = 10M points, 10 chunks, k=10)

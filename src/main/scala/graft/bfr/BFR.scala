@@ -16,8 +16,12 @@ import graft.operators.SummaryAggregator
   * (state, chunk) plus one [[BFR.finish]]: [[BFR.run]] folds the step over
   * its chunks, and `Streaming.bfrStream` applies it per micro-batch. The
   * α=4 RS spill runs in every round, so neither caller must know its last
-  * chunk in advance. Every per-chunk step is a distributed plan:
+  * chunk in advance. Every per-chunk step but the init is a distributed
+  * plan:
   *
+  *  - the init (round 1, M4) runs in driver memory like the reference's
+  *    (code/bfr.py:393-429): one collect of a sample capped at
+  *    `KMeans.LocalFitCells` cells, then fits, labels and DS summaries;
   *  - assignment = map-side expression against broadcast-small DS/CS
   *    summaries (K..5K rows of (center, std) — folded in as literals);
   *    the point side never shuffles (SURVEY.md §4.1);
@@ -51,10 +55,6 @@ object BFR {
       k: Int,
       alphaAssign: Double = 3.0,   // code/bfr.py:382 (α=3 default)
       alphaRs: Double = 4.0,       // code/bfr.py:326,339 (α=4)
-      kmeansIters: Int = 5,        // code/bfr.py:87-90
-      initSampleFraction: Double = 0.2, // code/bfr.py:396-398
-      seedKMult: Int = 3,          // init clusters = 3K (code/bfr.py:400)
-      csKMult: Int = 5,            // RS re-cluster into 5K (code/bfr.py:264)
       rsClusterThreshold: Int = 500, // re-cluster RS when it exceeds this
       /** Deterministic analog of the reference's random k-means start
         * (code/bfr.py:21 `random.randint`): the init-stage fits seed from
@@ -71,6 +71,11 @@ object BFR {
         */
       rsHardCap: Option[Int] = None
   )
+
+  private val KMeansIters = 5          // code/bfr.py:87-90
+  private val InitSampleFraction = 0.2 // code/bfr.py:396-398
+  private val SeedKMult = 3            // init clusters = 3K (code/bfr.py:400)
+  private val CsKMult = 5              // RS re-cluster into 5K (code/bfr.py:264)
 
   final case class Result(
       assignments: DataFrame,       // (id: long, cluster: int), -1 = outlier
@@ -101,13 +106,6 @@ object BFR {
   private def summaryOf(s: Row): ClusterSummary =
     ClusterSummary(s.getLong(0), s.getSeq[Double](1).toArray, s.getSeq[Double](2).toArray)
 
-  private[graft] def summariesByLabel(assigned: DataFrame, featCol: String): Map[Int, ClusterSummary] =
-    assigned.groupBy(col("label"))
-      .agg(SummaryAggregator.summarize(col(featCol)).as("s"))
-      .collect()
-      .map(row => row.getInt(0) -> summaryOf(row.getStruct(1)))
-      .toMap
-
   /** Total within-cluster SSE of the discard-set summaries, driver-side
     * from the sufficient statistics alone: Σ_d (SUMSQ_d − SUM_d²/N) per
     * cluster — no data pass.
@@ -131,23 +129,26 @@ object BFR {
     if (n == 0) Double.MaxValue else totalSse(ds) / n
   }
 
+  /** The init sample's row count for a chunk of `n` points whose longest
+    * vector has `d` cells: the first 20% (code/bfr.py:396-398), capped at
+    * `KMeans.LocalFitCells / d` rows, so that the driver-memory init stays
+    * bounded like BFR's buffer (Bradley, Fayyad & Reina, KDD 1998).
+    */
+  private[graft] def initSampleSize(n: Long, d: Int): Int =
+    math.min(math.ceil(InitSampleFraction * n), (KMeans.LocalFitCells / d).toDouble).toInt
+
   /** The deterministic init sample: the `sampleN` smallest-id points of
     * the chunk (code/bfr.py:396-398 takes the file-order prefix; ids are
-    * the row's position, so the id prefix is the same set). Selecting the
-    * sampleN-th smallest id first (map-side histogram passes,
-    * [[graft.operators.Selection.kthSmallestLong]]) and filtering by it
-    * avoids `orderBy(id).limit(sampleN)` — a TakeOrdered of 20% of the
-    * chunk through one merge, the init-stage scale killer at 100 TB.
-    * Ids are unique, so `id <= kth` is exactly the size-sampleN prefix.
-    *
-    * Returns the sample plus that threshold, so the caller can take the
-    * complement as the map-side filter `id > kth` instead of a
-    * chunk-scale anti-join (the two filters partition the chunk exactly).
+    * the row's position, so the id prefix is the same set), as the filter
+    * `id <= kth` by the sampleN-th smallest id — no TakeOrdered of 20% of
+    * the chunk through one merge. A repeated k-th id adds its copies.
+    * Returns the sample, kth and the sample's row count; the rest of the
+    * chunk is then the map-side filter `id > kth`, not an anti-join.
     */
   private[graft] def initSampleWithThreshold(
-      chunk: DataFrame, sampleN: Int): (DataFrame, Long) = {
-    val threshold = graft.operators.Selection.kthSmallestLong(chunk, "id", sampleN)
-    (chunk.filter(col("id") <= threshold), threshold)
+      chunk: DataFrame, sampleN: Int): (DataFrame, Long, Long) = {
+    val (kth, rows) = graft.operators.Selection.kthSmallestLongWithRank(chunk, "id", sampleN)
+    (chunk.filter(col("id") <= kth), kth, rows)
   }
 
   /** The state between two rounds: DS and CS summaries, the CS membership
@@ -190,7 +191,8 @@ object BFR {
   /** Run BFR over an ordered sequence of chunk DataFrames, each with
     * columns (id: long, features: array<double>). Mirrors
     * `Runner.run` (code/bfr.py:431-468): folds [[step]] over the chunks
-    * and ends with [[finish]]. Each round checkpoints only its own
+    * and ends with [[finish]]. Round 1's init runs in driver memory on a
+    * capped sample (see [[step]]). Each round checkpoints only its own
     * assignment delta, the last round's together with finish's, and
     * `onRound` fires once that checkpoint (or `assignSink` call) is done.
     *
@@ -270,7 +272,8 @@ object BFR {
     spark.sparkContext.setJobDescription(s"bfr r$round $name")
 
   /** One BFR round over a chunk with columns (id, features): round 1
-    * initializes DS (M4), later rounds assign at α=3 and absorb (M5/A4);
+    * initializes DS (M4) in driver memory from one collected sample of
+    * [[initSampleSize]] rows, later rounds assign at α=3 and absorb (M5/A4);
     * then RS is collected or checkpointed, re-clustered into CS over the
     * threshold (M6), CS merges (M7), the hard cap applies, and RS spills
     * into DS at α=4 (M8). The spill runs in every round, the last one
@@ -300,67 +303,25 @@ object BFR {
       // sample, rest) and caches it; later rounds read it once, through
       // tagAssign's persisted frame, so a chunk cache would never be read
       chunk.persist(StorageLevel.MEMORY_AND_DISK); caches :+= chunk
-      // the count sizes the init sample (and the caller's loop width)
-      val n = chunk.count()
+      // one pass sizes the init sample (and the caller's loop width)
+      val shape = chunk.agg(count(lit(1)), max(size(col("features")))).head()
+      val n = shape.getLong(0)
       sizeLoop(n)
       describe(spark, round, "init")
-      // --- init (M4, code/bfr.py:393-429) ---
-      val sampleN = math.ceil(cfg.initSampleFraction * n).toInt
-      val (sample0, kth) = initSampleWithThreshold(chunk, sampleN)
-      val sample = sample0.persist(StorageLevel.MEMORY_AND_DISK)
-      // cluster sample into 3K; singleton labels -> RS (A7 + P3)
-      val coarse = KMeans.fit(sample, math.min(cfg.seedKMult * cfg.k, sampleN),
-        cfg.kmeansIters, firstSeedRank = cfg.seedRank)
-      val coarseAssigned = coarse.assign(sample, "features")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // ONE label-histogram collect replaces the previous singleton
-      // subquery + two broadcast joins + a separate inlier count: the
-      // histogram is ≤ 3K rows by construction (labels of a 3K-means),
-      // so the singleton-label list rides back as a map-side isin()
-      // literal and the inlier count is its complement sum — same row
-      // sets, three fewer jobs in the init stage
-      val labelHist = coarseAssigned.groupBy(col("label")).count().collect()
-      val singletonLabels = labelHist.filter(_.getLong(1) == 1L).map(_.getInt(0))
-      val nInliers0 = labelHist.filter(_.getLong(1) > 1L).map(_.getLong(1)).sum
-      val isSingleton: Column =
-        if (singletonLabels.isEmpty) lit(false)
-        else col("label").isin(singletonLabels.toIndexedSeq: _*)
-      val rsInit0 = coarseAssigned.filter(isSingleton)
-        .select("id", "features")
-      val inliers0 = coarseAssigned.filter(!isSingleton)
-        .select("id", "features")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // degenerate guard: if outlier removal left fewer than K points
-      // (tiny samples), keep the whole sample as inliers. RS starts with
-      // one point per singleton label
-      val (inliers, rsInit, nInliers, nRsInit) =
-        if (nInliers0 < cfg.k)
-          (sample.select("id", "features").persist(StorageLevel.MEMORY_AND_DISK),
-            sample.select("id", "features").limit(0), sampleN.toLong, 0L)
-        else (inliers0, rsInit0, nInliers0, singletonLabels.length.toLong)
-      // re-cluster inliers into K -> DS; the shape is already known
-      // (inlier count from the histogram, d from the coarse model), so
-      // the fit's probe job is skipped
-      val fine = KMeans.fit(inliers, cfg.k, cfg.kmeansIters,
-        firstSeedRank = cfg.seedRank,
-        knownShape = Some((nInliers, coarse.d)))
-      val fineAssigned = fine.assign(inliers, "features")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val byLabel = summariesByLabel(fineAssigned, "features")
-      // drop empty clusters instead of padding with zero summaries: a
-      // zero summary has NaN center and all-zero std, which makes its
-      // Mahalanobis distance 0.0 to EVERY point — a phantom cluster
-      // that would absorb the rest of the stream. Cluster ids are the
-      // (compacted) ds indices.
-      val present = (0 until cfg.k).filter(byLabel.contains)
-      val relabel = present.zipWithIndex.toMap
-      ds = present.map(byLabel).toIndexedSeq
-      val relabelExpr = map(relabel.toSeq.flatMap { case (o, n2) => Seq(lit(o), lit(n2)) }: _*)
-      blocks :+= fineAssigned.select(col("id"),
-        element_at(relabelExpr, col("label")).cast("int").as("cluster"))
-      discardedSoFar += byLabel.values.map(_.n).sum // sample inliers
-      rs = rsInit
-      rsCount = nRsInit
+      // --- init (M4, code/bfr.py:393-429), in driver memory ---
+      require(!shape.isNullAt(1) && shape.getInt(1) > 0, "BFR: chunk 1 has no feature vector")
+      val d = shape.getInt(1)
+      val sampleN = initSampleSize(n, d)
+      val (sample, kth, sampleRows) = initSampleWithThreshold(chunk, sampleN)
+      // the id prefix outgrows sampleN only by copies of id kth
+      require(sampleRows * d <= KMeans.LocalFitCells, s"BFR: id $kth repeats so often in " +
+        s"chunk 1 that its init sample holds $sampleRows rows of $d cells, over the driver budget")
+      val (dsInit, toDs, toRs) = initLocal(KMeans.collectById(sample), d, sampleN, cfg)
+      ds = dsInit
+      blocks :+= localFrame(spark, toDs, emptyFrame(spark, "cluster").schema)
+      discardedSoFar += toDs.length // sample inliers
+      rs = localFrame(spark, toRs, chunk.schema)
+      rsCount = toRs.length
       // rest of chunk 1 through the normal DS/RS path (code/bfr.py:429):
       // the exact complement of the `id <= kth` sample, as a map-side
       // filter — not an anti-join, which would shuffle the whole chunk
@@ -375,8 +336,6 @@ object BFR {
       val (ds2, n2, left2) = absorbTagged(ds, tg2)
       ds = ds2; discardedSoFar += n2; rsCount += left2
       rs = rs.union(r2)
-      sample.unpersist(false); coarseAssigned.unpersist(false)
-      inliers0.unpersist(false); inliers.unpersist(false); fineAssigned.unpersist(false)
     } else {
       // --- per-chunk step (M5, code/bfr.py:382-391) ---
       val (tg, a, r) = tagAssign(chunk, ds, cfg.alphaAssign)
@@ -398,15 +357,13 @@ object BFR {
     // the driver from the same rows. A larger RS is checkpointed
     // eagerly for the distributed step.
     val rsSchema = rs.schema
-    def driverFrame(rows: Array[Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), rsSchema)
     val localD = ds.headOption.map(_.d)
       .filter(d => !forceDistributedRs && rsCount * d <= KMeans.LocalFitCells)
     var rsRows: Array[Row] = null
     if (localD.isDefined) {
       describe(spark, round, "rs-recluster")
       rsRows = if (rsCount == 0) Array.empty[Row] else KMeans.collectById(rs)
-      rs = driverFrame(rsRows)
+      rs = localFrame(spark, rsRows, rsSchema)
     } else {
       describe(spark, round, "rs-checkpoint")
       rs = rs.localCheckpoint(true)
@@ -414,23 +371,21 @@ object BFR {
 
     // --- RS -> CS re-clustering (M6, code/bfr.py:259-288) ---
     if (rsCount > cfg.rsClusterThreshold) {
-      val kCs = math.min(cfg.csKMult * cfg.k, (rsCount / 2).toInt max 1)
+      val kCs = math.min(CsKMult * cfg.k, (rsCount / 2).toInt max 1)
       val base = cs.size
       // the driver-local step is the distributed one's result without
       // its ~9 jobs
       localD match {
         case Some(d) =>
-          val (retained, summaries, members) =
-            reclusterLocal(rsRows, d, kCs, cfg.kmeansIters)
+          val (retained, summaries, members) = reclusterLocal(rsRows, d, kCs)
           cs = cs ++ summaries
-          csMembers = csMembers.union(spark.createDataFrame(
-            java.util.Arrays.asList(members.map { case (id, i) => Row(id, base + i) }: _*),
-            csMembers.schema))
-          rs = driverFrame(retained)
+          csMembers = csMembers.union(localFrame(spark,
+            members.map { case (id, i) => Row(id, base + i) }, csMembers.schema))
+          rs = localFrame(spark, retained, rsSchema)
           rsCount = retained.length
         case None =>
           describe(spark, round, "rs-recluster")
-          val model = KMeans.fit(rs, kCs, cfg.kmeansIters)
+          val model = KMeans.fit(rs, kCs, KMeansIters)
           val rsAssigned = model.assign(rs, "features").persist(StorageLevel.MEMORY_AND_DISK)
           val singles = rsAssigned.groupBy(col("label")).count()
             .filter(col("count") === 1).select("label")
@@ -438,7 +393,9 @@ object BFR {
             .select("id", "features")
           val toCs = rsAssigned.join(broadcast(singles), Seq("label"), "left_anti")
             .persist(StorageLevel.MEMORY_AND_DISK)
-          val byLabel = summariesByLabel(toCs, "features")
+          val byLabel = toCs.groupBy(col("label"))
+            .agg(SummaryAggregator.summarize(col("features")).as("s")).collect()
+            .map(row => row.getInt(0) -> summaryOf(row.getStruct(1))).toMap
           val labels = byLabel.keys.toSeq.sorted
           val labelToCs = labels.zipWithIndex.map { case (l, i) => (l, base + i) }.toMap
           cs = cs ++ labels.map(byLabel)
@@ -461,19 +418,19 @@ object BFR {
 
     // --- RS hard cap (engine extension): force-spill overflow to DS ---
     for (cap <- cfg.rsHardCap if rsCount > cap && ds.nonEmpty) {
+      describe(spark, round, "rs-cap")
       // smallest-id prefix via threshold selection — same shape as the
       // init sample; the overflow can be a large fraction of RS, so no
-      // TakeOrdered funnel here either
-      val overflow = rs.filter(col("id") <=
-          graft.operators.Selection.kthSmallestLong(rs, "id", rsCount - cap))
-        .localCheckpoint(true)
-      val (tg, a, _) = tagAssign(overflow, ds, Double.MaxValue)
+      // TakeOrdered funnel here either. RS's lineage is cut above, so
+      // both filters read it cheaply
+      val kth = graft.operators.Selection.kthSmallestLong(rs, "id", rsCount - cap)
+      val (tg, a, leftover) = tagAssign(rs.filter(col("id") <= kth), ds, Double.MaxValue)
       caches :+= tg
       val (dsN, nA, _) = absorbTagged(ds, tg)
-      ds = dsN; discardedSoFar += nA
+      ds = dsN; discardedSoFar += nA; rsCount -= nA
       blocks :+= a.select("id", "cluster")
-      rs = rs.join(overflow.select("id"), Seq("id"), "left_anti").localCheckpoint(true)
-      rsCount = rs.count()
+      // an overflow point no DS can take (a NULL or ragged vector) stays
+      rs = rs.filter(col("id") > kth).union(leftover)
     }
 
     // --- RS -> DS spill at α=4 (M8, code/bfr.py:322-334), every round ---
@@ -565,41 +522,79 @@ object BFR {
       deltas.values.map(_.n).sum, leftover.map(_.getLong(2)).sum)
   }
 
+  /** The init (M4, code/bfr.py:393-429) on the id-sorted `(id, features)`
+    * rows of chunk 1's init sample: 3K-means, rows of singleton clusters to
+    * RS (A7 + P3) unless fewer than K rows would stay, K-means of the rest
+    * into DS. The fits are `KMeans.fit`'s local path. Clusters the fine fit
+    * leaves empty are dropped, not padded: a zero summary (NaN center,
+    * zero std) lies at Mahalanobis distance 0 from every point. Returns
+    * (DS summaries, (id, DS index) rows, RS rows).
+    */
+  private def initLocal(rows: Array[Row], d: Int, sampleN: Int, cfg: Config)
+      : (IndexedSeq[ClusterSummary], Array[Row], Array[Row]) = {
+    val feats = featuresOf(rows, d, "init sample point")
+    val coarse = labelLocal(feats, math.min(SeedKMult * cfg.k, sampleN), cfg.seedRank)
+    val multi = multiSlots(coarse)
+    val kept = rows.indices.filter(i => multi.contains(coarse(i)))
+    val inliers = if (kept.length < cfg.k) rows.indices else kept
+    val inFeats = inliers.map(feats).toArray
+    val fine = labelLocal(inFeats, cfg.k, cfg.seedRank)
+    val (ds, slot) = foldSlots(inFeats, fine, fine.filter(_ >= 0).distinct.sorted.zipWithIndex.toMap)
+    val dsOf = Array.fill(rows.length)(-1)
+    for (j <- inliers.indices) dsOf(inliers(j)) = slot(j)
+    val (toDs, toRs) = rows.indices.partition(dsOf(_) >= 0)
+    (ds, toDs.map(i => Row(rows(i).get(0), dsOf(i))).toArray, toRs.map(rows).toArray)
+  }
+
   /** Driver-local RS -> CS re-clustering of id-sorted `(id, features)`
     * rows — the distributed step's result without its jobs: the same fit
-    * (KMeans.fitLocal with `KMeans.fit`'s k and first seed), labels from
-    * `Model.labelOf` (bit-identical to `Model.assign`), the same
-    * singleton rule, and CS summaries folded with the SummaryAggregator
-    * monoid. Returns (retained rows, CS summaries in label order,
-    * (id, summary index) per CS member). Every row must hold a d-long
-    * null-free vector; the distributed step fails on such rows too.
+    * (the first seed is the smallest id, as `KMeans.fit`'s default), the
+    * same singleton rule, and CS summaries folded in id order. Returns
+    * (retained rows, CS summaries in label order, (id, summary index) per
+    * CS member).
     */
-  private def reclusterLocal(rows: Array[Row], d: Int, k: Int, iters: Int)
+  private def reclusterLocal(rows: Array[Row], d: Int, k: Int)
       : (Array[Row], IndexedSeq[ClusterSummary], Array[(Any, Int)]) = {
-    val feats = rows.map { r =>
+    val feats = featuresOf(rows, d, "RS point")
+    val labels = labelLocal(feats, k, seedRank = 0)
+    val (cs, slot) = foldSlots(feats, labels, multiSlots(labels))
+    val (members, retained) = rows.indices.partition(slot(_) >= 0)
+    (retained.map(rows).toArray, cs, members.map(i => (rows(i).get(0), slot(i))).toArray)
+  }
+
+  /** Each row's feature vector, which must be d long and null-free. */
+  private def featuresOf(rows: Array[Row], d: Int, what: String): Array[Array[Double]] =
+    rows.map { r =>
       val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
       require(v != null && v.length == d && !v.contains(null),
-        s"BFR: RS point ${r.get(0)} has no $d-long null-free feature vector")
+        s"BFR: $what ${r.get(0)} has no $d-long null-free feature vector")
       v.asInstanceOf[Seq[Double]].toArray
     }
-    val model = KMeans.fitLocal(feats, math.min(k, feats.length), iters, firstSeedRank = 0)
-    val labels = feats.map(model.labelOf)
-    val sizes = labels.groupMapReduce(identity)(_ => 1)(_ + _)
-    val slot = sizes.collect { case (l, c) if c > 1 => l }.toSeq.sorted.zipWithIndex.toMap
+
+  /** k-means of id-sorted vectors on the driver and each one's label:
+    * `KMeans.fitLocal` with `KMeans.fit`'s k and first seed, and labels
+    * from `Model.labelOf`, bit-identical to `Model.assign`.
+    */
+  private def labelLocal(feats: Array[Array[Double]], k: Int, seedRank: Int): Array[Int] = {
+    val model = KMeans.fitLocal(feats, math.min(k, feats.length), KMeansIters, seedRank)
+    feats.map(model.labelOf)
+  }
+
+  /** Ranks of the labels more than one row holds (the singleton rule). */
+  private def multiSlots(labels: Array[Int]): Map[Int, Int] =
+    labels.groupMapReduce(identity)(_ => 1)(_ + _).collect { case (l, c) if c > 1 => l }
+      .toSeq.sorted.zipWithIndex.toMap
+
+  /** Folds each row whose label has a slot into that slot's summary, in
+    * row order. Returns the summaries and each row's slot (−1 for none).
+    */
+  private def foldSlots(feats: Array[Array[Double]], labels: Array[Int], slot: Map[Int, Int])
+      : (IndexedSeq[ClusterSummary], Array[Int]) = {
+    val rowSlot = labels.map(slot.getOrElse(_, -1))
     val acc = new Array[ClusterSummary](slot.size)
-    val retained = Array.newBuilder[Row]
-    val members = Array.newBuilder[(Any, Int)]
-    var i = 0
-    while (i < rows.length) {
-      slot.get(labels(i)) match {
-        case Some(s) =>
-          acc(s) = if (acc(s) == null) ClusterSummary.ofPoint(feats(i)) else acc(s).add(feats(i))
-          members += ((rows(i).get(0), s))
-        case None => retained += rows(i)
-      }
-      i += 1
-    }
-    (retained.result(), acc.toIndexedSeq, members.result())
+    for (i <- feats.indices; s = rowSlot(i); if s >= 0)
+      acc(s) = if (acc(s) == null) ClusterSummary.ofPoint(feats(i)) else acc(s).add(feats(i))
+    (acc.toIndexedSeq, rowSlot)
   }
 
   /** Greedy CS pairwise merge: any pair with center-to-summary Mahalanobis
@@ -641,6 +636,9 @@ object BFR {
     val remap = (0 until cs.size).map(i => i -> newIdx(roots(i))).filter(p => p._1 != p._2).toMap
     (out, remap)
   }
+
+  private def localFrame(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private def emptyFrame(spark: SparkSession, valueCol: String,
                                valueType: DataType = IntegerType): DataFrame =

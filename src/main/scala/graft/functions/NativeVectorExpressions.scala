@@ -406,6 +406,10 @@ case class NearestMahaExpr(child: Expression,
       val dist = ctx.freshName("dist")
       val best = ctx.freshName("best")
       val bestD = ctx.freshName("bestD")
+      // a non-finite threshold (the hard cap's α = ∞) has no Java literal
+      val thr = if (threshold.isInfinite || threshold.isNaN)
+        s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(threshold)}L)"
+      else threshold.toString
       s"""
          |if ($a.numElements() != $d) { ${ev.isNull} = true; }
          |else {
@@ -433,7 +437,7 @@ case class NearestMahaExpr(child: Expression,
          |    }
          |    ${ev.value} =
          |      (((long) $best) << 1) |
-         |      (java.lang.Double.compare($bestD, $threshold) < 0 ? 1L : 0L);
+         |      (java.lang.Double.compare($bestD, $thr) < 0 ? 1L : 0L);
          |  }
          |}
        """.stripMargin

@@ -161,10 +161,12 @@ object KMeans {
     } finally proj.unpersist(false)
   }
 
-  /** Inputs at or below this many cells (rows × dims) run the identical
-    * algorithm driver-local instead of as ~k + iters Spark jobs. BFR's
-    * design bounds the k-means input to a sample (SURVEY.md §4), so in
-    * the pipeline this path usually wins; big inputs stay distributed.
+  /** The driver's budget for point data, in cells (rows × dims). Inputs
+    * at or below it run the identical algorithm driver-local instead of
+    * as ~k + iters Spark jobs; bigger inputs stay distributed. BFR holds
+    * its init sample and, while it fits, its retained set (RS) within it:
+    * the init sample is capped at this many cells, so the init always
+    * runs on the driver (SURVEY.md §4).
     */
   val LocalFitCells: Long = 4L * 1000 * 1000
 
@@ -187,24 +189,17 @@ object KMeans {
     */
   def fit(points: DataFrame, k: Int, iters: Int = 5,
           featCol: String = "features", idCol: String = "id",
-          firstSeedRank: Int = 0, forceDistributed: Boolean = false,
-          knownShape: Option[(Long, Int)] = None): Model = {
+          firstSeedRank: Int = 0, forceDistributed: Boolean = false): Model = {
     val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // one job probes both the row count and the dimensionality — unless
-      // the caller already holds them (BFR's init knows the inlier count
-      // from its label histogram and d from the coarse model), in which
-      // case the probe job is skipped
-      val probe = knownShape.getOrElse {
-        val r = cached.agg(
-          count(lit(1)).as("n"),
-          first(org.apache.spark.sql.functions.size(col(featCol))).as("d")).head()
-        (r.getLong(0), r.getInt(1))
-      }
-      val n = probe._1
+      // one job probes both the row count and the dimensionality
+      val probe = cached.agg(
+        count(lit(1)).as("n"),
+        first(org.apache.spark.sql.functions.size(col(featCol))).as("d")).head()
+      val n = probe.getLong(0)
       require(n > 0, "KMeans.fit on empty input")
       val kEff = math.min(k.toLong, n).toInt
-      val d = probe._2
+      val d = probe.getInt(1)
       if (!forceDistributed && n * d <= LocalFitCells) {
         val rows = collectById(cached, featCol, idCol)
           .map(r => r.getSeq[Double](1).toArray)

@@ -24,17 +24,27 @@ object Selection {
     * `buckets` rows per pass. Input should be cached by the caller when
     * it is re-scanned afterwards.
     */
-  def kthSmallestLong(df: DataFrame, c: String, k: Long, buckets: Int = 1 << 16): Long = {
+  def kthSmallestLong(df: DataFrame, c: String, k: Long, buckets: Int = 1 << 16): Long =
+    kthSmallestLongWithRank(df, c, k, buckets)._1
+
+  /** [[kthSmallestLong]] plus the number of non-null values at or below
+    * it, from the same passes: the values below the final cell are the
+    * ones the walk skipped, and the final cell holds exactly the k-th
+    * value. It exceeds k only by the repeats of that value.
+    */
+  def kthSmallestLongWithRank(df: DataFrame, c: String, k: Long,
+                              buckets: Int = 1 << 16): (Long, Long) = {
     require(k >= 1, s"k must be >= 1, got $k")
     val proj = df.select(col(c).cast("long").as("__v"))
     val mm = proj.agg(min(col("__v")).as("mn"), max(col("__v")).as("mx"),
-      count(lit(1)).as("n")).head()
+      count(col("__v")).as("n")).head()
     require(!mm.isNullAt(0), "kthSmallestLong on empty input")
     var lo = mm.getLong(0)
     var hi = mm.getLong(1)
     val n = mm.getLong(2)
     require(k <= n, s"k=$k exceeds row count $n")
     var kRem = k
+    var atLo = n // with lo == hi every value equals lo
     while (hi > lo) {
       // ceil-width so the whole [lo, hi] range always fits `buckets` cells
       val width = math.max(1L, (hi - lo) / buckets + 1)
@@ -51,6 +61,7 @@ object Selection {
           val newLo = lo + b * width
           hi = math.min(hi, newLo + width - 1)
           lo = newLo
+          atLo = cb
           found = true
         } else {
           kRem -= cb
@@ -59,6 +70,6 @@ object Selection {
       }
       assert(found, s"histogram walk exhausted with kRem=$kRem — non-stationary input?")
     }
-    lo
+    (lo, k - kRem + atLo)
   }
 }

@@ -280,26 +280,6 @@ object Streaming {
                           bloomBits: Array[Long], flagAt: Int = 3): DataFrame =
     graft.functions.TextOps.bloomProbe(docs, col(textCol), bloomBits, flagAt)
 
-  /** Streaming incremental near-dedup — the crawl-merge loop as a
-    * continuous query: each micro-batch of new documents computes its
-    * LSH band rows MAP-SIDE (native signature kernel), folds into the
-    * PERSISTED corpus artifacts (band table + canonical mapping, both
-    * parquet — exactly what the batch [[graft.operators.IncrementalDedup]]
-    * consumes), and rewrites the canonical mapping via connected
-    * components on the star + delta graph only.
-    *
-    * Restart/replay safety: band rows land in `artifacts/bands/batch=<id>`
-    * with per-batch overwrite (idempotent re-delivery), and the canon
-    * mapping is written as BATCH-VERSIONED snapshots
-    * (`artifacts/canon/batch=<id>`) — each merge reads the latest
-    * snapshot that finished committing (parquet `_SUCCESS` marker), so a
-    * write torn by a crash is simply skipped, never read back as an
-    * empty mapping (which would silently drop every earlier group). The
-    * merge itself is a fixpoint: re-merging an already-merged batch
-    * reconstructs the same components (stars already contain the batch's
-    * docs; the delta edges are a subset), so replay leaves the mapping
-    * unchanged.
-    */
   /** Streaming data-expectations gate — the batch validation suite
     * (`q_data_expectations`) as a continuous query: per micro-batch
     * window, every declarative constraint is a conditional aggregate
@@ -362,6 +342,26 @@ object Streaming {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
+  /** Streaming incremental near-dedup — the crawl-merge loop as a
+    * continuous query: each micro-batch of new documents computes its
+    * LSH band rows MAP-SIDE (native signature kernel), folds into the
+    * PERSISTED corpus artifacts (band table + canonical mapping, both
+    * parquet — exactly what the batch [[graft.operators.IncrementalDedup]]
+    * consumes), and rewrites the canonical mapping via connected
+    * components on the star + delta graph only.
+    *
+    * Restart/replay safety: band rows land in `artifacts/bands/batch=<id>`
+    * with per-batch overwrite (idempotent re-delivery), and the canon
+    * mapping is written as BATCH-VERSIONED snapshots
+    * (`artifacts/canon/batch=<id>`) — each merge reads the latest
+    * snapshot that finished committing (parquet `_SUCCESS` marker), so a
+    * write torn by a crash is simply skipped, never read back as an
+    * empty mapping (which would silently drop every earlier group). The
+    * merge itself is a fixpoint: re-merging an already-merged batch
+    * reconstructs the same components (stars already contain the batch's
+    * docs; the delta edges are a subset), so replay leaves the mapping
+    * unchanged.
+    */
   def incrementalDedupStream(spark: SparkSession, docsStream: DataFrame,
                              artifactsDir: String, checkpoint: String)
       : StreamingQuery = {

@@ -74,17 +74,36 @@ class BfrSpec extends AnyFunSuite {
   }
 
   test("rs hard cap bounds retained-set size on adversarial data") {
-    // structureless embeddings: most points miss the DS threshold -> RS
-    // would balloon; the cap must keep it bounded and still label all
-    val points = PointSource.fromEmbeddings(spark, "/root/testdata/sf0.001")
+    // 200 far outliers among 300 blob points: every outlier misses both
+    // DS thresholds, so RS gains ~50 a round and, uncapped, outgrows the
+    // cap; the cap must keep it bounded and still label all
+    val points = TestBlobs.generate(spark, n = 300, k = 5, d = 4, outliers = 200)
+      .select("id", "features")
     val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))
-    val res = BFR.run(spark, chunks,
-      BFR.Config(k = 10, rsClusterThreshold = 1000, rsHardCap = Some(60)))
+    val cfg = BFR.Config(k = 5, rsClusterThreshold = 1000)
+    assert(BFR.run(spark, chunks, cfg).stats.dropRight(1).exists(_.nof_point_retained > 60))
+    val (res, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(60))))
+    assert(jobs.keys.exists(_.endsWith(" rs-cap")), s"the cap never fired: $jobs")
     assert(res.assignments.count() == 500)
     assert(res.assignments.select("id").distinct().count() == 500)
     // every non-final round's retained count obeys the cap
     res.stats.dropRight(1).foreach(s =>
       assert(s.nof_point_retained <= 60, s"cap violated: $s"))
+  }
+
+  test("the RS hard cap keeps overflow points no DS can take, which end as outliers") {
+    import spark.implicits._
+    val nulls = Seq((5000L, null: Array[Double]), (5001L, null: Array[Double]))
+      .toDF("id", "features")
+    val points = blobs.select("id", "features")
+    val chunks = (0 until 3).map(i => points.filter(pmod(col("id"), lit(3)) === i))
+      .updated(1, points.filter(pmod(col("id"), lit(3)) === 1).union(nulls))
+    val res = BFR.run(spark, chunks, BFR.Config(k = 5, rsHardCap = Some(1)))
+    val labels = res.assignments.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val labelled = labels.size
+    assert(labelled == 2022)
+    assert(labels.get(5000L).contains(-1) && labels.get(5001L).contains(-1),
+      labels.filter(_._1 >= 5000L))
   }
 
   test("bfr on structureless embeddings terminates and labels every point") {
@@ -289,6 +308,48 @@ class BfrSpec extends AnyFunSuite {
       (if (i == res.stats.size - 1) res.stats(i).nof_point_retained else 0L))
     assert(perCheckpoint == expected, s"checkpoint rows $perCheckpoint, round deltas $expected")
     assert(perCheckpoint.sum == 2201L)
+  }
+
+  test("round 1's init runs in at most four jobs: the k-th id and one collect") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    assert(jobs.getOrElse("bfr r1 init", 0) <= 4, jobs)
+  }
+
+  test("the init sample is 20% of chunk 1, capped by the driver budget") {
+    assert(BFR.initSampleSize(100000L, 8) == 20000)       // below the budget
+    assert(BFR.initSampleSize(2500000L, 8) == 500000)     // at it: 4M cells
+    assert(BFR.initSampleSize(2600000L, 8) == 500000)     // above it
+    assert(BFR.initSampleSize(352000L, 64) == 62500)      // 0.2·n = 70,400
+    assert(BFR.initSampleSize(7L, 4) == 2)                // ceil(1.4)
+  }
+
+  test("an init sample point without a d-long null-free vector fails naming its id") {
+    import spark.implicits._
+    val bad = Seq((-1L, null: Array[Double])).toDF("id", "features")
+    val points = blobs.select("id", "features")
+    for (first <- Seq(points.filter(pmod(col("id"), lit(3)) === 0).union(bad),
+        points.filter(pmod(col("id"), lit(3)) === 0)
+          .union(Seq((-1L, Array(1.0, 2.0))).toDF("id", "features")))) {
+      val e = intercept[IllegalArgumentException](BFR.run(spark, Seq(first), BFR.Config(k = 5)))
+      assert(e.getMessage.contains("init sample point -1 has no 4-long"), e.getMessage)
+    }
+  }
+
+  test("an id repeated past the driver budget fails the init naming it, before any collect") {
+    // the longest vector has d = 4000 cells, so the budget is 1000 rows;
+    // id 7 holds 1100 of chunk 1's 1200 rows, and the 240-row sample
+    // takes all its copies. The guard counts rows, so only the last row
+    // carries a vector and the fixture stays small
+    val chunk = spark.range(1200)
+      .select(when(col("id") < 1100, 7L).otherwise(col("id")).as("id"),
+        when(col("id") === 1199, array_repeat(lit(1.0), 4000)).as("features"))
+    val (e, jobs) = jobsByDescription(intercept[IllegalArgumentException](
+      BFR.run(spark, Seq(chunk), BFR.Config(k = 5))))
+    assert(e.getMessage.contains("id 7 repeats") && e.getMessage.contains("1100 rows"),
+      e.getMessage)
+    // the k-th id's min/max probe and one histogram pass, and no collect
+    assert(jobs.getOrElse("bfr r1 init", 0) == 2, s"the sample was collected: $jobs")
   }
 
   test("NULL and ragged feature vectors route to RS and end as outliers") {

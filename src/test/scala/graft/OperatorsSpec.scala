@@ -276,6 +276,18 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("kth-smallest selection counts the values at or below the k-th") {
+    import spark.implicits._
+    // repeats at the low end, in the middle and at the top, plus NULLs
+    val ids = Seq.fill(5)(3L) ++ (10L to 400L) ++ Seq.fill(7)(200L) ++ Seq.fill(4)(9000L)
+    val df = (ids.map(Option(_)) ++ Seq(None, None)).toDF("id").repartition(8)
+    for (k <- Seq(1L, 5L, 6L, 195L, 196L, 200L, 398L, 402L, 403L)) {
+      val (kth, rank) = graft.operators.Selection.kthSmallestLongWithRank(df, "id", k, buckets = 64)
+      assert(kth == ids.sorted.apply(k.toInt - 1), s"k=$k")
+      assert(rank == ids.count(_ <= kth), s"k=$k: rank $rank")
+    }
+  }
+
   test("BFR init sample: id-threshold filter — no Sort, no TakeOrdered") {
     import spark.implicits._
     val pts = (0 until 1000).map(i => (i.toLong, Seq(i.toDouble)))
@@ -292,7 +304,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     val pts = (0 until 1000).map(i => (i.toLong, Seq(i.toDouble)))
       .toDF("id", "features").repartition(8)
-    val (sample, kth) = graft.bfr.BFR.initSampleWithThreshold(pts, 200)
+    val (sample, kth, _) = graft.bfr.BFR.initSampleWithThreshold(pts, 200)
     val rest = pts.filter(col("id") > kth)
     val p = rest.queryExecution.executedPlan.toString
     assert(!p.contains("Join") && !p.contains("Exchange hashpartitioning"),

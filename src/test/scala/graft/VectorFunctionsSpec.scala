@@ -214,6 +214,21 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("at least one summary"))
   }
 
+  test("fused nearest-maha kernel compiles with a non-finite threshold") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val row = InternalRow(new GenericArrayData(Array[Any](1.0, 2.0)))
+    for (thr <- Seq(Double.PositiveInfinity, Double.NaN, 3.0)) {
+      val e = graft.functions.NearestMahaExpr(BoundReference(0, ArrayType(DoubleType), true),
+        Array(Array(0.0, 0.0), Array(5.0, 5.0)), Array(Array(1.0, 1.0), Array(1.0, 1.0)), thr)
+      // generate() compiles eagerly and throws on a compile error
+      val compiled = GenerateUnsafeProjection.generate(Seq(e))
+      assert(compiled(row).getLong(0) == e.eval(row), s"threshold $thr")
+    }
+  }
+
   test("fused nearest-maha kernel matches the composed literal form exactly") {
     import graft.functions.NativeVectorFunctions._
     val rnd2 = new scala.util.Random(23L)
