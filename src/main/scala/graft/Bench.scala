@@ -232,13 +232,13 @@ object Bench {
     println(line(bySlowest.take(keep), bySlowest.length - keep))
     spark.stop()
 
-    // per-core-count artifact (round-15 reporting, additive): the 8-core
-    // scaling run used to CLOBBER the 32-core bench_full.json; and the
-    // per-query breakdown (jobs / GC ms / max stage wall ms) makes a
-    // stalled query attributable after the fact. bench_full.json keeps
-    // its exact historical format; consumers of this file opt in. Written
-    // after spark.stop(), which drains the async listener bus, so the
-    // last query's events are all counted.
+    // per-core-count artifact: bench_full.json above is still overwritten
+    // on every run, whatever the core count, so bench_full_c<cpus>.json
+    // is the file to compare across core counts. It adds the per-query
+    // breakdown (jobs / GC ms / max stage wall ms), which makes a stalled
+    // query attributable after the fact; bench_full.json keeps its exact
+    // historical format. Written after spark.stop(), which drains the
+    // async listener bus, so the last query's events are all counted.
     val detailJson = results.map { case (k, _) =>
       val c = detail.getOrDefault(k, new Array[Long](3))
       s""""$k":{"jobs":${c(0)},"gc_ms":${c(1)},"max_stage_ms":${c(2)}}"""

@@ -48,15 +48,7 @@ object BfrApp {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val chunks = PointSource.readDataset(spark, inputPath)
-      // env-tunable knobs (defaults = reference semantics)
-      def envD(k: String, d: Double) = sys.env.get(k).map(_.toDouble).getOrElse(d)
-      def envI(k: String, d: Int) = sys.env.get(k).map(_.toInt).getOrElse(d)
-      val cfg = BFR.Config(
-        k = kStr.toInt,
-        alphaAssign = envD("SPARK_GRAFT_BFR_ALPHA", 3.0),
-        alphaRs = envD("SPARK_GRAFT_BFR_RS_ALPHA", 4.0),
-        rsClusterThreshold = envI("SPARK_GRAFT_BFR_RS_THRESHOLD", 500),
-        rsHardCap = sys.env.get("SPARK_GRAFT_BFR_RS_HARDCAP").map(_.toInt))
+      val cfg = BFR.Config(kStr.toInt)
       val res = (0 until bestOf).map { s =>
         val r = BFR.run(spark, chunks, cfg.copy(seedRank = seed0 + s))
         val sse = BFR.meanSse(r.ds)

@@ -16,8 +16,9 @@ import graft.operators.SummaryAggregator
   * (state, chunk) plus one [[BFR.finish]]: [[BFR.run]] folds the step over
   * its chunks, and `Streaming.bfrStream` applies it per micro-batch. The
   * α=4 RS spill runs in every round, so neither caller must know its last
-  * chunk in advance. Every per-chunk step but the init is a distributed
-  * plan:
+  * chunk in advance. No step sets session conf, so both callers run the
+  * same round under the caller's conf. Every per-chunk step but the init
+  * is a distributed plan:
   *
   *  - the init (round 1, M4) runs in driver memory like the reference's
   *    (code/bfr.py:393-429): one collect of a sample capped at
@@ -25,7 +26,9 @@ import graft.operators.SummaryAggregator
   *  - assignment = map-side expression against broadcast-small DS/CS
   *    summaries (K..5K rows of (center, std) — folded in as literals);
   *    the point side never shuffles (SURVEY.md §4.1);
-  *  - summary construction = partial+final aggregation (SummaryAggregator);
+  *  - the DS absorb is one exchange-free job: each partition folds its
+  *    rows into K partial summaries, which merge on the driver in
+  *    partition order (N, SUM and SUMSQ merge associatively);
   *  - RS is a Dataset, re-clustered into CS when it exceeds a threshold
   *    (reference M6, code/bfr.py:259-288 — defined but never called; we
   *    wire it live, fixing the dead-code path). Like the reference, the
@@ -33,7 +36,7 @@ import graft.operators.SummaryAggregator
   *    labels and CS summaries on the driver — while RS rows × d stay
   *    within `KMeans.LocalFitCells`; a larger RS takes the distributed
   *    step (k-means fit, label aggregation, broadcast joins). RS's row
-  *    count rides the absorb aggregation, and within that budget the
+  *    count rides the absorb fold, and within that budget the
   *    same collect also cuts RS's lineage every round, so a round takes
   *    RS in one job;
   *  - CS pairwise merge is a driver-side greedy loop over ≤5K summaries
@@ -195,11 +198,7 @@ object BFR {
     * capped sample (see [[step]]). Each round checkpoints only its own
     * assignment delta, the last round's together with finish's, and
     * `onRound` fires once that checkpoint (or `assignSink` call) is done.
-    *
-    * The loop's shuffle width and its AQE pause are decided once, from
-    * chunk 1's row count alone, and held for every later round: a small
-    * first chunk followed by large ones runs the large rounds at the
-    * narrow width with AQE off.
+    * The rounds run under the session's conf as the caller set it.
     */
   def run(spark: SparkSession, chunks: Seq[DataFrame], cfg: Config,
           onRound: Int => Unit = _ => (),
@@ -219,47 +218,17 @@ object BFR {
     // empty). Else one checkpoint per round, not of the running union,
     // which would re-copy every earlier round (O(rounds^2)).
     val assignedCheckpoints = scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-    // Loop shuffle width from the first chunk's census (opt guide §2.2 —
-    // fewer, larger partitions): every per-round aggregation/checkpoint
-    // here is over O(chunk) rows, and at the bench scale the session's
-    // 32-partition shuffles turned each of the ~6 actions/round into a
-    // fixed-cost micro-stage storm. Width tracks the data (64k rows per
-    // partition, capped at defaultParallelism), restored in the finally.
-    val prevShufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    var prevAqe: Option[String] = None
-    def sizeLoop(chunkN: Long): Unit = {
-      val width = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong, chunkN / 65536 + 1)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", width)
-      // On a bounded chunk the loop's shuffles are single-digit-task
-      // stages; AQE's per-shuffle re-planning then splits every action
-      // into 2-3 driver-latency-priced jobs for zero benefit (the loop
-      // has no skewed or size-misestimated join — label aggregations
-      // and explicit broadcasts only). Data-adaptive: corpus-scale
-      // chunks keep the session's AQE.
-      if (chunkN <= (1L << 20)) {
-        prevAqe = Some(spark.conf.get("spark.sql.adaptive.enabled"))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-      }
-    }
-
     var st = State.empty(spark)
-    try {
-      for ((chunk, idx) <- chunks.zipWithIndex) {
-        st = step(spark, st, chunk, cfg, forceDistributedRs, sizeLoop)
-        if (idx == chunks.size - 1) st = finish(spark, st)
-        describe(spark, st.round, "assigned-checkpoint")
-        assignSink match {
-          case Some(sink) => sink(st.assigned)
-          case None       => assignedCheckpoints += st.assigned.localCheckpoint(true)
-        }
-        st = st.release()
-        onRound(st.round) // instrumentation hook (scale probes time/heap here)
+    for ((chunk, idx) <- chunks.zipWithIndex) {
+      st = step(spark, st, chunk, cfg, forceDistributedRs)
+      if (idx == chunks.size - 1) st = finish(spark, st)
+      describe(spark, st.round, "assigned-checkpoint")
+      assignSink match {
+        case Some(sink) => sink(st.assigned)
+        case None       => assignedCheckpoints += st.assigned.localCheckpoint(true)
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
-      prevAqe.foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
+      st = st.release()
+      onRound(st.round) // instrumentation hook (scale probes time/heap here)
     }
 
     Result(assignedCheckpoints.reduceOption(_ union _)
@@ -278,12 +247,12 @@ object BFR {
     * threshold (M6), CS merges (M7), the hard cap applies, and RS spills
     * into DS at α=4 (M8). The spill runs in every round, the last one
     * included, so a stream need not know its last batch: [[finish]] only
-    * labels what is left. `sizeLoop` gets chunk 1's row count before the
-    * init stage runs. Returns the next state with the round's blocks and
+    * labels what is left. Every absorb is one exchange-free job (see
+    * [[absorbTagged]]). Returns the next state with the round's blocks and
     * caches pending (see [[State]]).
     */
   def step(spark: SparkSession, st: State, chunkRaw: DataFrame, cfg: Config,
-           forceDistributedRs: Boolean = false, sizeLoop: Long => Unit = _ => ()): State = {
+           forceDistributedRs: Boolean = false): State = {
     val round = st.round + 1
     var ds = st.ds                                       // discard sets
     var cs = st.cs                                       // compression sets
@@ -303,10 +272,9 @@ object BFR {
       // sample, rest) and caches it; later rounds read it once, through
       // tagAssign's persisted frame, so a chunk cache would never be read
       chunk.persist(StorageLevel.MEMORY_AND_DISK); caches :+= chunk
-      // one pass sizes the init sample (and the caller's loop width)
+      // one pass sizes the init sample
       val shape = chunk.agg(count(lit(1)), max(size(col("features")))).head()
       val n = shape.getLong(0)
-      sizeLoop(n)
       describe(spark, round, "init")
       // --- init (M4, code/bfr.py:393-429), in driver memory ---
       require(!shape.isNullAt(1) && shape.getInt(1) > 0, "BFR: chunk 1 has no feature vector")
@@ -331,7 +299,7 @@ object BFR {
       blocks :+= a2.select("id", "cluster")
       // A4: assigned points fold into their DS summaries (the reference
       // updates per point at code/bfr.py:389; we fold the chunk's delta);
-      // the same aggregation yields the discarded and leftover counts
+      // the same fold yields the discarded and leftover counts
       describe(spark, round, "absorb-rest")
       val (ds2, n2, left2) = absorbTagged(ds, tg2)
       ds = ds2; discardedSoFar += n2; rsCount += left2
@@ -350,7 +318,7 @@ object BFR {
     // The RS lineage must be cut every round — the plan otherwise
     // compounds (embedded center literals included) until even
     // stringifying it OOMs the driver, and it reads the round's tagged
-    // cache. rsCount is already known from the absorb aggregation.
+    // cache. rsCount is already known from the absorb fold.
     // While RS fits KMeans' local-fit budget (KMeans.fit would collect
     // it for a fit anyway), ONE collect serves both cases: RS becomes a
     // driver-built frame, and an RS over the threshold re-clusters on
@@ -438,7 +406,7 @@ object BFR {
       describe(spark, round, "rs-spill")
       val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
       caches :+= tg
-      // one aggregation merges the matches into DS (code/bfr.py:331-333)
+      // one fold merges the matches into DS (code/bfr.py:331-333)
       // and counts what stays in RS
       val (dsN, nA, nLeft) = absorbTagged(ds, tg)
       ds = dsN; discardedSoFar += nA; rsCount = nLeft
@@ -480,7 +448,7 @@ object BFR {
 
   /** One persisted distance pass per assignment step: tag every point
     * with (cluster, keep) and derive the assigned / leftover sides as
-    * filters over the SAME cached frame, so the absorb aggregation, the
+    * filters over the SAME cached frame, so the absorb fold, the
     * RS collect and the assignment delta all read one cache instead
     * of each re-running the Mahalanobis kernel (previously two full
     * kernel passes per chunk per round). The caller owns the cache:
@@ -503,23 +471,37 @@ object BFR {
   }
 
   /** Fold a [[tagAssign]] frame's kept rows into their DS summaries
-    * (A4) and count both sides, from ONE grouped aggregation: kept rows
-    * group by cluster into the summary fold, and leftover rows form the
-    * NULL group with their vectors masked to NULL, which the fold skips —
-    * a NULL or ragged vector routes to RS and never reaches a summary.
+    * (A4) and count both sides, in one job with no exchange: each
+    * partition folds its kept rows, in row order, into one partial
+    * summary per DS cluster and counts its leftover rows, whose vectors
+    * are masked to NULL — a NULL or ragged vector routes to RS and never
+    * reaches a summary. One collect brings the partials to the driver,
+    * O(partitions · K · d) doubles, and they merge there in partition
+    * order, so the sums never depend on which task finished first.
     * Returns (ds', kept count, leftover count).
     */
   private def absorbTagged(ds: IndexedSeq[ClusterSummary], tagged: DataFrame)
       : (IndexedSeq[ClusterSummary], Long, Long) = {
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    val (k, d) = (ds.size, ds.headOption.map(_.d).getOrElse(0))
     val keep = col("__keep")
-    val (kept, leftover) = tagged.groupBy(when(keep, col("cluster")).as("label"))
-      .agg(SummaryAggregator.summarizeNonNull(when(keep, col("features"))).as("s"),
-        count(lit(1)).as("n"))
-      .collect()
-      .partition(!_.isNullAt(0))
-    val deltas = kept.map(row => row.getInt(0) -> summaryOf(row.getStruct(1))).toMap
-    (ds.zipWithIndex.map { case (s, i) => deltas.get(i).map(s.merge).getOrElse(s) },
-      deltas.values.map(_.n).sum, leftover.map(_.getLong(2)).sum)
+    val partials = tagged
+      .select(when(keep, col("cluster")).otherwise(-1), when(keep, col("features")))
+      .as[(Int, Array[Double])].mapPartitions { rows =>
+        val n = new Array[Long](k)
+        val (sum, sumsq) = (Array.ofDim[Double](k, d), Array.ofDim[Double](k, d))
+        var left = 0L
+        for ((c, f) <- rows) if (c < 0) left += 1 else {
+          n(c) += 1
+          var i = 0
+          while (i < d) { sum(c)(i) += f(i); sumsq(c)(i) += f(i) * f(i); i += 1 }
+        }
+        Iterator((Array.tabulate(k)(c => ClusterSummary(n(c), sum(c), sumsq(c))), left))
+      }.collect()
+    val deltas = ds.indices.map(c => partials.foldLeft(ClusterSummary.zero(d))(_ merge _._1(c)))
+    (ds.zip(deltas).map { case (s, delta) => s.merge(delta) },
+      deltas.map(_.n).sum, partials.map(_._2).sum)
   }
 
   /** The init (M4, code/bfr.py:393-429) on the id-sorted `(id, features)`

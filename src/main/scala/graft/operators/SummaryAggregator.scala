@@ -31,21 +31,4 @@ object SummaryAggregator extends Aggregator[Array[Double], ClusterSummary, Clust
 
   /** Use as an untyped DataFrame aggregate: `df.groupBy("label").agg(summarize(col("features")))`. */
   def summarize(features: Column): Column = udaf(SummaryAggregator).apply(features)
-
-  /** [[summarize]] that skips NULL vectors instead of failing on them, so
-    * one grouped aggregation can also count rows it must not fold (BFR
-    * masks its leftover rows to NULL).
-    */
-  def summarizeNonNull(features: Column): Column = udaf(SkipNulls).apply(features)
-
-  private object SkipNulls extends Aggregator[Array[Double], ClusterSummary, ClusterSummary] {
-    override def zero: ClusterSummary = SummaryAggregator.zero
-    override def reduce(b: ClusterSummary, a: Array[Double]): ClusterSummary =
-      if (a == null) b else SummaryAggregator.reduce(b, a)
-    override def merge(b1: ClusterSummary, b2: ClusterSummary): ClusterSummary =
-      SummaryAggregator.merge(b1, b2)
-    override def finish(r: ClusterSummary): ClusterSummary = r
-    override def bufferEncoder: Encoder[ClusterSummary] = SummaryAggregator.bufferEncoder
-    override def outputEncoder: Encoder[ClusterSummary] = SummaryAggregator.outputEncoder
-  }
 }

@@ -35,7 +35,7 @@ object Streaming {
 
   /** Incremental BFR over a chunk stream: each micro-batch is one
     * [[BFR.step]], the same round [[BFR.run]] folds over a chunk list (RS,
-    * CS and the α=4 spill included), run at the session's shuffle width.
+    * CS and the α=4 spill included), under the same session conf.
     * Each batch's assignments land in `outDir/batch=<id>` as parquet. Once
     * the query has terminated, [[finishBfrStream]] labels the leftover RS
     * and merges CS into DS, as batch BFR does after its last chunk.

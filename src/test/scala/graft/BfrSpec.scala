@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -129,20 +129,34 @@ class BfrSpec extends AnyFunSuite {
   }
 
   /** Runs `body` in its own job group and returns its result with the
-    * number of jobs per description the group started. The listener bus
-    * is drained before the counts are read (`listenerBus` is
+    * number of jobs per description the group started. */
+  private def jobsByDescription[T](body: => T): (T, Map[String, Int]) = {
+    val (out, jobs, _) = jobsAndStagesByDescription(body)
+    (out, jobs)
+  }
+
+  /** [[jobsByDescription]] plus the number of stages per description the
+    * group ran (skipped stages are not submitted, so not counted). The
+    * listener bus is drained before the counts are read (`listenerBus` is
     * private[spark], hence reflection).
     */
-  private def jobsByDescription[T](body: => T): (T, Map[String, Int]) = {
+  private def jobsAndStagesByDescription[T](body: => T)
+      : (T, Map[String, Int], Map[String, Int]) = {
     val sc = spark.sparkContext
     val group = s"bfr-job-pin-${java.util.UUID.randomUUID()}"
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val jobs, stages = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    def count(into: java.util.concurrent.ConcurrentHashMap[String, Integer],
+              props: java.util.Properties): Unit =
+      if (props != null && props.getProperty("spark.jobGroup.id") == group)
+        into.merge(String.valueOf(props.getProperty("spark.job.description")),
+          1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          counts.merge(String.valueOf(e.properties.getProperty("spark.job.description")),
-            1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
+      override def onJobStart(e: SparkListenerJobStart): Unit = count(jobs, e.properties)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        count(stages, e.properties)
     }
+    def asMap(m: java.util.concurrent.ConcurrentHashMap[String, Integer]) =
+      m.asScala.map { case (k, v) => k -> v.intValue }.toMap
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, group)
@@ -150,7 +164,7 @@ class BfrSpec extends AnyFunSuite {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
         .invoke(bus, java.lang.Long.valueOf(10000L))
-      (out, counts.asScala.map { case (k, v) => k -> v.intValue }.toMap)
+      (out, asMap(jobs), asMap(stages))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -229,12 +243,15 @@ class BfrSpec extends AnyFunSuite {
 
   test("BFR behaviour lock: a halo spills into DS at α=4, every round") {
     val (chunks, cfg) = haloFixture()
-    val (res, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    val (res, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
     def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
     // the fixture reaches the α=4 spill before the last round and an α=4
     // pass over RS in the last round
     assert((1 to 3).exists(n(_, "rs-spill") > 0), jobs)
     assert(n(4, "rs-spill") + n(4, "finalize") > 0, jobs)
+    // each spill is one partition fold: one job of one stage
+    for ((desc, js) <- jobs if desc.endsWith(" rs-spill"))
+      assert(js == 1 && stages.get(desc).contains(1), s"$desc: $jobs / $stages")
     assertLocked("halo", fingerprint(hashes(res.assignments)), res,
       (2060L, -5060436612051113077L),
       rounds((1, 5, 505L, 0, 0L, 10L), (2, 5, 1017L, 0, 0L, 13L),
@@ -244,7 +261,12 @@ class BfrSpec extends AnyFunSuite {
 
   test("BFR behaviour lock: a halo over the RS hard cap") {
     val (chunks, cfg) = haloFixture()
-    val res = BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(4)))
+    val (res, jobs, stages) =
+      jobsAndStagesByDescription(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(4))))
+    // the cap's selection passes and its fold have no exchange
+    assert(jobs.keys.exists(_.endsWith(" rs-cap")), jobs)
+    for ((desc, js) <- jobs if desc.endsWith(" rs-cap"))
+      assert(stages.get(desc).contains(js), s"$desc: $jobs / $stages")
     assertLocked("halo cap", fingerprint(hashes(res.assignments)), res,
       (2060L, 6474297523353583196L),
       rounds((1, 5, 515L, 0, 0L, 0L), (2, 5, 1030L, 0, 0L, 0L),
@@ -284,16 +306,28 @@ class BfrSpec extends AnyFunSuite {
 
   test("a steady round runs one absorb job, one RS job and at most two checkpoint jobs") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    val (_, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
     def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
     for (r <- 2 to chunks.size) {
       assert(n(r, "absorb") == 1, s"round $r: $jobs")
+      // the absorb is a partition fold: no exchange, so one stage
+      assert(stages.getOrElse(s"bfr r$r absorb", 0) == 1, s"round $r: $stages")
       // RS stays within the driver-local budget: its count rides the
-      // absorb aggregation and one collect replaces the checkpoint
+      // absorb fold and one collect replaces the checkpoint
       assert(n(r, "rs-checkpoint") == 0, s"round $r: $jobs")
       assert(n(r, "rs-recluster") <= 1, s"round $r: $jobs")
       assert(n(r, "assigned-checkpoint") <= 2, s"round $r: $jobs")
     }
+  }
+
+  test("BFR leaves the session conf alone: every round sees the caller's width and AQE") {
+    val (chunks, cfg) = rsReclusterFixture()
+    def conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(spark.conf.get)
+    val before = conf
+    val seen = scala.collection.mutable.ArrayBuffer[Seq[String]]()
+    BFR.run(spark, chunks, cfg, onRound = _ => seen += conf)
+    assert(seen.size == chunks.size && seen.forall(_ == before), s"session $before, rounds $seen")
   }
 
   test("each round's assignment checkpoint holds only that round's rows") {

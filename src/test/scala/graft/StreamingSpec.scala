@@ -70,7 +70,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.stats.exists(_.nof_cluster_compression > 0), s"no CS formed: ${batch.stats}")
     assert(streamed.stats == batch.stats)
     assert(streamed.ds.map(_.n) == batch.ds.map(_.n))
-    // the loop widths differ, so the sums may add in another order
+    // each side folds its summaries per input partition and merges them in
+    // partition order, and a micro-batch splits a chunk file into other
+    // partitions than the batch chunk reader, so the sums add in another
+    // order
     def close(x: Array[Double], y: Array[Double]) = x.zip(y).forall { case (u, v) =>
       math.abs(u - v) <= 1e-9 * math.max(1.0, math.max(math.abs(u), math.abs(v))) }
     streamed.ds.zip(batch.ds).foreach { case (x, y) =>
