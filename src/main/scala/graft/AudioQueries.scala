@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.multimodal.WavCodec
+import graft.operators.FingerprintDups
 
 /** Audio tier over REAL sample-level WAV decode — the time-domain twin of
   * ImageQueries: every document plants a spec-valid RIFF/PCM file whose
@@ -172,8 +173,8 @@ object AudioQueries {
       |energies AS (
       |  SELECT doc_id, f, amp, p, 256 * amp * amp AS e FROM frames)""".stripMargin
 
-  private val bandsSql: String =
-    """bits AS (
+  private val bandsSql: String = framesSql + """,
+      |bits AS (
       |  SELECT a.doc_id, a.f // 16 AS band, a.f % 16 AS idx
       |  FROM energies a JOIN energies b
       |    ON a.doc_id = b.doc_id AND b.f = a.f + 1
@@ -213,61 +214,16 @@ object AudioQueries {
   /** Chromaprint-style energy-delta fingerprint, four 16-bit bands. */
   val audioFingerprint = Q("q_audio_fingerprint",
     (s, dir) => audioFeatures(s, dir).select("doc_id", "b0", "b1", "b2", "b3"),
-    Some(s"""WITH $framesSql,
-            |$bandsSql
+    Some(s"""WITH $bandsSql
             |SELECT doc_id, b0, b1, b2, b3 FROM bands""".stripMargin))
 
   /** Banded audio near-dup: equal-16-bit-band candidates → exact hamming
     * ≤ 3 verify (pigeonhole-complete). Never all-pairs.
     */
   val audioNearDup = Q("q_audio_near_dup",
-    (s, dir) => {
-      val f = audioFeatures(s, dir).select("doc_id", "b0", "b1", "b2", "b3")
-      // single melt pass — see TextOps.meltBands
-      val bands = graft.functions.TextOps.meltBands(f, "doc_id",
-        (0 to 3).map(b => col(s"b$b")))
-      // skew-guarded candidate generation in SALTED-COMPLETE mode:
-      // the 16-bit band space saturates combinatorially as the corpus
-      // grows (bucket-mates are then not near-dup families), so hot
-      // buckets keep the COMPLETE pair relation via the block-grid
-      // salted self-join — bounded per-task output, exact at every SF
-      val cand = graft.functions.TextOps.candidatePairs(bands, "doc_id",
-          hotComplete = true)
-        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      val fa = f.select(col("doc_id").as("id_a"), col("b0").as("a0"),
-        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-      val fb = f.select(col("doc_id").as("id_b"), col("b0").as("c0"),
-        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-      cand.join(fa, "id_a").join(fb, "id_b")
-        .select(col("id_a"), col("id_b"),
-          (bit_count(expr("a0 ^ c0")) + bit_count(expr("a1 ^ c1")) +
-            bit_count(expr("a2 ^ c2")) + bit_count(expr("a3 ^ c3")))
-            .cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
-    },
-    Some(s"""WITH $framesSql,
-            |$bandsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-            |-- verify BEFORE deduplicating: the DISTINCT hash table holds only
-            |-- hamming<=3 survivors (~1e7 at 500k docs), never the ~1e9-row
-            |-- raw candidate stream, which stays pipelined (sf10 OOM lesson)
-            |SELECT DISTINCT id_a, id_b,
-            |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |     + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT)
-            |    AS hamming
-            |FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |          JOIN bands b ON cand.id_b = b.doc_id
-            |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3"""
-      .stripMargin))
+    (s, dir) => FingerprintDups.nearDupPairs(
+      audioFeatures(s, dir).select("doc_id", "b0", "b1", "b2", "b3")),
+    Some(OracleBandDups.nearDup(bandsSql)))
 
   /** Audio dedup GROUPS: connected components over the verified banded
     * near-dup pairs — completes the per-modality near-dup → canonical-
@@ -278,44 +234,9 @@ object AudioQueries {
     * exact failure mode the text tier's grouping oracles shed in r11).
     */
   val audioDedupGroups = Q("q_audio_dedup_groups",
-    (s, dir) => graft.operators.ConnectedComponents
-      .canonicalize(audioNearDup.fn(s, dir)
-        .select(col("id_a").as("ida"), col("id_b").as("idb"))),
-    Some(s"""WITH $framesSql,
-            |$bandsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-            |vp AS MATERIALIZED (
-            |  -- verify BEFORE deduplicating (sf10 OOM lesson): only survivors
-            |  -- enter the DISTINCT; the raw candidate stream stays pipelined.
-            |  -- MATERIALIZED because the CC chain references the pair set
-            |  -- twice (symmetrizing UNION) — a plain CTE would re-run the
-            |  -- ~1e9-row candidate pipeline once per reference, concurrently
-            |  SELECT DISTINCT id_a, id_b
-            |  FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |            JOIN bands b ON cand.id_b = b.doc_id
-            |  WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |      + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3),
-            |pairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM vp),
-            |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-            |SELECT doc_id, canonical_id FROM canon""".stripMargin),
-    // Scaled-gate twin: consume the just-verified q_audio_near_dup dump
-    // (survivor pairs) instead of re-deriving the band self-join — the
-    // base oracle passed at sf10 only running SOLO at the 44.7 GiB cap
-    // (r13 retry3); composed over the verified dump it fits the shared
-    // batch with real headroom.
-    scaleOracle = Some(
-      s"""WITH pairs AS (
-         |  SELECT id_a AS doc_a, id_b AS doc_b FROM dump_q_audio_near_dup),
-         |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-         |SELECT doc_id, canonical_id FROM canon""".stripMargin))
+    (s, dir) => FingerprintDups.groups(audioNearDup.fn(s, dir)),
+    Some(OracleBandDups.groups(bandsSql)),
+    scaleOracle = Some(OracleBandDups.groupsOfDump("dump_q_audio_near_dup")))
 
   /** Cross-modal curation capstone: the keep mask a multimodal corpus
     * pipeline applies before packing — a document survives iff it is not
@@ -348,46 +269,9 @@ object AudioQueries {
             col("n_tokens") >= 5, lit(1L)).otherwise(lit(0L)).as("kept"))
     },
     Some(s"""WITH ipairs AS MATERIALIZED (
-            |  SELECT id_b FROM (
-            |    WITH ${ImageQueries.lumaCellsSql},
-            |    melted AS (
-            |      SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |      UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |      UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |      UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |    cand AS (
-            |      -- no pair-level DISTINCT: the final DISTINCT id_b dedups
-            |      -- after the hamming filter, so the raw candidate stream
-            |      -- stays pipelined (sf10 OOM lesson)
-            |      SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |      FROM melted x JOIN melted y
-            |        ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-            |    SELECT DISTINCT cand.id_b
-            |    FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |              JOIN bands b ON cand.id_b = b.doc_id
-            |    WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |        + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3) t),
+            |  ${OracleBandDups.laterMembers(ImageQueries.lumaCellsSql)}),
             |apairs AS MATERIALIZED (
-            |  SELECT id_b FROM (
-            |    WITH $framesSql,
-            |    $bandsSql,
-            |    melted AS (
-            |      SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |      UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |      UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |      UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |    cand AS (
-            |      -- no pair-level DISTINCT: the final DISTINCT id_b dedups
-            |      -- after the hamming filter, so the raw candidate stream
-            |      -- stays pipelined (sf10 OOM lesson)
-            |      SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |      FROM melted x JOIN melted y
-            |        ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-            |    SELECT DISTINCT cand.id_b
-            |    FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |              JOIN bands b ON cand.id_b = b.doc_id
-            |    WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |        + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3) t),
+            |  ${OracleBandDups.laterMembers(bandsSql)}),
             |tok AS (
             |  SELECT doc_id,
             |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)

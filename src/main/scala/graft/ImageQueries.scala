@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.multimodal.{GifCodec, JpegCodec, PixelCodec}
+import graft.operators.FingerprintDups
 
 /** Image near-dup tier over REAL pixel decode — closes the round-9
   * verdict's "pixel ops are the one stub left": every document plants a
@@ -343,54 +344,9 @@ object ImageQueries {
     * hamming 3 shares at least one band verbatim). Never all-pairs.
     */
   val imageNearDup = Q("q_image_near_dup",
-    (s, dir) => {
-      val f = dhashFeatures(s, dir)
-      // single melt pass over the checkpointed features (TextOps
-      // .meltBands) — the 4-branch union scanned them 4× with 4× the
-      // shuffle-writing map tasks
-      val bands = graft.functions.TextOps.meltBands(f, "doc_id",
-        (0 to 3).map(b => col(s"b$b")))
-      // skew-guarded candidate generation in SALTED-COMPLETE mode:
-      // fixed-width dHash bands saturate combinatorially as the corpus
-      // grows (bucket-mates are then not near-dup families), so hot
-      // buckets keep the COMPLETE pair relation via the block-grid
-      // salted self-join — bounded per-task output, exact at every SF
-      val cand = graft.functions.TextOps.candidatePairs(bands, "doc_id",
-          hotComplete = true)
-        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      val fa = f.select(col("doc_id").as("id_a"), col("b0").as("a0"),
-        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-      val fb = f.select(col("doc_id").as("id_b"), col("b0").as("c0"),
-        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-      cand.join(fa, "id_a").join(fb, "id_b")
-        .select(col("id_a"), col("id_b"),
-          (bit_count(expr("a0 ^ c0")) + bit_count(expr("a1 ^ c1")) +
-            bit_count(expr("a2 ^ c2")) + bit_count(expr("a3 ^ c3")))
-            .cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
-    },
-    Some(s"""WITH $lumaCellsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-            |-- verify BEFORE deduplicating: the DISTINCT hash table holds only
-            |-- hamming<=3 survivors (~1e7 at 500k docs), never the ~1e9-row
-            |-- raw candidate stream, which stays pipelined (sf10 OOM lesson)
-            |SELECT DISTINCT id_a, id_b,
-            |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |     + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT)
-            |    AS hamming
-            |FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |          JOIN bands b ON cand.id_b = b.doc_id
-            |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3"""
-      .stripMargin))
+    (s, dir) => FingerprintDups.nearDupPairs(
+      dhashFeatures(s, dir).select("doc_id", "b0", "b1", "b2", "b3")),
+    Some(OracleBandDups.nearDup(lumaCellsSql)))
 
   /** Image dedup GROUPS: connected components over the verified banded
     * near-dup pairs — the visual twin of q_dedup_groups (text) and
@@ -400,42 +356,9 @@ object ImageQueries {
     * recursive-closure form died on DuckDB resources at sf10).
     */
   val imageDedupGroups = Q("q_image_dedup_groups",
-    (s, dir) => graft.operators.ConnectedComponents
-      .canonicalize(imageNearDup.fn(s, dir)
-        .select(col("id_a").as("ida"), col("id_b").as("idb"))),
-    Some(s"""WITH $lumaCellsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-            |vp AS MATERIALIZED (
-            |  -- verify BEFORE deduplicating (sf10 OOM lesson): only survivors
-            |  -- enter the DISTINCT; the raw candidate stream stays pipelined.
-            |  -- MATERIALIZED because the CC chain references the pair set
-            |  -- twice (symmetrizing UNION) — a plain CTE would re-run the
-            |  -- ~1e9-row candidate pipeline once per reference, concurrently
-            |  SELECT DISTINCT id_a, id_b
-            |  FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |            JOIN bands b ON cand.id_b = b.doc_id
-            |  WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |      + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3),
-            |pairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM vp),
-            |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-            |SELECT doc_id, canonical_id FROM canon""".stripMargin),
-    // Scaled-gate twin: consume the just-VERIFIED q_image_near_dup dump
-    // (~1e7 survivor pairs) instead of re-deriving the band self-join —
-    // the base oracle's candidate pipeline OOM'd 44.7 GiB DuckDB
-    // sessions at 500k docs (r13); only the CC contraction remains here.
-    scaleOracle = Some(
-      s"""WITH pairs AS (
-         |  SELECT id_a AS doc_a, id_b AS doc_b FROM dump_q_image_near_dup),
-         |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-         |SELECT doc_id, canonical_id FROM canon""".stripMargin))
+    (s, dir) => FingerprintDups.groups(imageNearDup.fn(s, dir)),
+    Some(OracleBandDups.groups(lumaCellsSql)),
+    scaleOracle = Some(OracleBandDups.groupsOfDump("dump_q_image_near_dup")))
 
   /** dHash fingerprints through the full real GIF-LZW decode chain. The
     * oracle is the same closed-form luma arithmetic as `q_image_dhash` —

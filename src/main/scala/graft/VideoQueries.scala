@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.multimodal.Mp4Codec
+import graft.operators.FingerprintDups
 
 /** Video tier over REAL ISO-BMFF box parsing — third leg of the
   * multimodal triad (image pixels / audio samples / video containers):
@@ -249,8 +250,8 @@ object VideoQueries {
       |    FROM documents,
       |      (SELECT unnest(generate_series(0, 64)) AS f)))""".stripMargin
 
-  private val bandsSql: String =
-    """bits AS (
+  private val bandsSql: String = sigsSql + """,
+      |bits AS (
       |  SELECT a.doc_id, a.f // 16 AS band, a.f % 16 AS idx
       |  FROM sigs a JOIN sigs b
       |    ON a.doc_id = b.doc_id AND b.f = a.f + 1
@@ -267,8 +268,7 @@ object VideoQueries {
   /** Keyframe-content fingerprint through the full real extraction chain. */
   val videoFingerprint = Q("q_video_fingerprint",
     (s, dir) => videoFingerprints(s, dir),
-    Some(s"""WITH $sigsSql,
-            |$bandsSql
+    Some(s"""WITH $bandsSql
             |SELECT doc_id,
             |  CAST(65 + (doc_id // 4) % 4 AS BIGINT) AS n_keyframes,
             |  b0, b1, b2, b3
@@ -280,48 +280,9 @@ object VideoQueries {
     * MinHash/SimHash/image/audio tiers.
     */
   val videoNearDup = Q("q_video_near_dup",
-    (s, dir) => {
-      val f = videoFingerprints(s, dir).select("doc_id", "b0", "b1", "b2", "b3")
-      // single melt pass — see TextOps.meltBands
-      val bands = graft.functions.TextOps.meltBands(f, "doc_id",
-        (0 to 3).map(b => col(s"b$b")))
-      val cand = graft.functions.TextOps.candidatePairs(bands, "doc_id",
-          hotComplete = true)
-        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      val fa = f.select(col("doc_id").as("id_a"), col("b0").as("a0"),
-        col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-      val fb = f.select(col("doc_id").as("id_b"), col("b0").as("c0"),
-        col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-      cand.join(fa, "id_a").join(fb, "id_b")
-        .select(col("id_a"), col("id_b"),
-          (bit_count(expr("a0 ^ c0")) + bit_count(expr("a1 ^ c1")) +
-            bit_count(expr("a2 ^ c2")) + bit_count(expr("a3 ^ c3")))
-            .cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
-    },
-    Some(s"""WITH $sigsSql,
-            |$bandsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-            |-- verify BEFORE deduplicating: the DISTINCT hash table holds only
-            |-- hamming<=3 survivors (~1e7 at 500k docs), never the ~1e9-row
-            |-- raw candidate stream, which stays pipelined (sf10 OOM lesson)
-            |SELECT DISTINCT id_a, id_b,
-            |  CAST(bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |     + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) AS BIGINT)
-            |    AS hamming
-            |FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |          JOIN bands b ON cand.id_b = b.doc_id
-            |WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |    + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3"""
-      .stripMargin))
+    (s, dir) => FingerprintDups.nearDupPairs(
+      videoFingerprints(s, dir).select("doc_id", "b0", "b1", "b2", "b3")),
+    Some(OracleBandDups.nearDup(bandsSql)))
 
   /** Video dedup GROUPS: connected components over the verified banded
     * near-dup pairs — the fourth modality through the shared HASH-to-MIN
@@ -331,42 +292,9 @@ object VideoQueries {
     * resources at sf10).
     */
   val videoDedupGroups = Q("q_video_dedup_groups",
-    (s, dir) => graft.operators.ConnectedComponents
-      .canonicalize(videoNearDup.fn(s, dir)
-        .select(col("id_a").as("ida"), col("id_b").as("idb"))),
-    Some(s"""WITH $sigsSql,
-            |$bandsSql,
-            |melted AS (
-            |  SELECT doc_id, 0 AS band, b0 AS bv FROM bands
-            |  UNION ALL SELECT doc_id, 1, b1 FROM bands
-            |  UNION ALL SELECT doc_id, 2, b2 FROM bands
-            |  UNION ALL SELECT doc_id, 3, b3 FROM bands),
-            |cand AS (
-            |  SELECT x.doc_id AS id_a, y.doc_id AS id_b
-            |  FROM melted x JOIN melted y
-            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
-            |vp AS MATERIALIZED (
-            |  -- verify BEFORE deduplicating (sf10 OOM lesson): only survivors
-            |  -- enter the DISTINCT; the raw candidate stream stays pipelined.
-            |  -- MATERIALIZED because the CC chain references the pair set
-            |  -- twice (symmetrizing UNION) — a plain CTE would re-run the
-            |  -- ~1e9-row candidate pipeline once per reference, concurrently
-            |  SELECT DISTINCT id_a, id_b
-            |  FROM cand JOIN bands a ON cand.id_a = a.doc_id
-            |            JOIN bands b ON cand.id_b = b.doc_id
-            |  WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
-            |      + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3)) <= 3),
-            |pairs AS (SELECT id_a AS doc_a, id_b AS doc_b FROM vp),
-            |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-            |SELECT doc_id, canonical_id FROM canon""".stripMargin),
-    // Scaled-gate twin: consume the just-verified q_video_near_dup dump
-    // (survivor pairs) instead of re-deriving the band self-join inside
-    // DuckDB — same composition as the image/audio groups oracles.
-    scaleOracle = Some(
-      s"""WITH pairs AS (
-         |  SELECT id_a AS doc_a, id_b AS doc_b FROM dump_q_video_near_dup),
-         |${OracleCc.canonFromPairs(OracleCc.TextRounds)}
-         |SELECT doc_id, canonical_id FROM canon""".stripMargin))
+    (s, dir) => FingerprintDups.groups(videoNearDup.fn(s, dir)),
+    Some(OracleBandDups.groups(bandsSql)),
+    scaleOracle = Some(OracleBandDups.groupsOfDump("dump_q_video_near_dup")))
 
   // ---- cross-tier composition: keyframes ARE real PNGs — MP4 box walk
   // → stsz/stsc/stco sample extraction → PNG decode → luma grid → dHash

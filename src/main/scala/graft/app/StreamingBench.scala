@@ -91,14 +91,13 @@ object StreamingBench {
   /** Shared harness for the binary-payload dedup legs: replayed
     * micro-batch files of (id, payload, ts) with event time advancing
     * 5 min per batch (≥3× the 10-min watermark horizon, so eviction
-    * shows), the given streaming suppression applied, state/throughput
-    * collected from query progress.
+    * shows), suppressed by [[Streaming.fingerprintDupStream]] under the
+    * given fingerprint, state/throughput collected from query progress.
     */
   private def runBinaryDedup(spark: SparkSession, sfDir: String,
       copies: Int, files: Int, tag: String,
       mk: (Long, Int) => Array[Byte],
-      streamFn: (org.apache.spark.sql.DataFrame, String, String, String) =>
-        org.apache.spark.sql.DataFrame): NearDupResult = {
+      fingerprint: Array[Byte] => Option[Array[Long]]): NearDupResult = {
     val work = Files.createTempDirectory(tag).toString
     val mkU = udf(mk)
     val ids = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"))
@@ -122,7 +121,7 @@ object StreamingBench {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       (files + 16).toString)
     val t0 = System.nanoTime()
-    val q = streamFn(in, "payload", "ts", "10 minutes")
+    val q = Streaming.fingerprintDupStream(in, "payload", "ts", fingerprint, "10 minutes")
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.AvailableNow())
@@ -145,7 +144,7 @@ object StreamingBench {
 
   /** The multimodal image leg: a mixed-container stream (each replica
     * of a document's planted content rotates PNG → GIF → JPEG) through
-    * [[Streaming.imageNearDupStream]] — so the measured rate is REAL
+    * [[Streaming.fingerprintDupStream]] — so the measured rate is REAL
     * decode (inflate/unfilter, LZW, Huffman+IDCT, now including the
     * color 4:2:0 JPEG path and GIF color maps) + fingerprint +
     * watermark-bounded suppression, images/sec. Content collides across
@@ -160,7 +159,7 @@ object StreamingBench {
         case 1 => graft.ImageQueries.plantedGif(id)
         case _ => graft.ImageQueries.plantedJpeg(id)
       },
-      Streaming.imageNearDupStream(_, _, _, _))
+      graft.multimodal.ImageDecode.fingerprint)
 
   /** The audio leg: each replica rotates through its doc_id/4 group's
     * members (j = 0,1,2 fingerprint-identical → suppressed; j = 3
@@ -172,7 +171,7 @@ object StreamingBench {
                     files: Int): NearDupResult =
     runBinaryDedup(spark, sfDir, copies, files, "audbench",
       (id, c) => graft.AudioQueries.plantedWav(id - id % 4 + c % 4),
-      Streaming.audioNearDupStream(_, _, _, _))
+      graft.multimodal.MediaDecode.audioFingerprint)
 
   /** The video leg: odd replicas are RE-MUXED containers (same keyframe
     * payloads, different box bytes), so suppression must read sample
@@ -186,7 +185,7 @@ object StreamingBench {
       (id, c) =>
         if (c % 2 == 0) graft.VideoQueries.plantedContentMp4(id)
         else graft.VideoQueries.remuxedContentMp4(id, 640, 360),
-      Streaming.videoNearDupStream(_, _, _, _))
+      graft.multimodal.MediaDecode.videoFingerprint)
 
   final case class BfrStreamResult(
       rowsIn: Long, seconds: Double, rowsPerSec: Long, rounds: Int,

@@ -248,8 +248,8 @@ object BFR {
     * into DS at α=4 (M8). The spill runs in every round, the last one
     * included, so a stream need not know its last batch: [[finish]] only
     * labels what is left. Every absorb is one exchange-free job (see
-    * [[absorbTagged]]). Returns the next state with the round's blocks and
-    * caches pending (see [[State]]).
+    * `assignAbsorb` below). Returns the next state with the round's blocks
+    * and caches pending (see [[State]]).
     */
   def step(spark: SparkSession, st: State, chunkRaw: DataFrame, cfg: Config,
            forceDistributedRs: Boolean = false): State = {
@@ -261,24 +261,78 @@ object BFR {
     var rsCount = st.rsCount                             // rows of rs
     var discardedSoFar = st.discarded
     var blocks = st.blocks
-    // tagged per-round assignment frames (see tagAssign) and round 1's
+    // tagged per-round assignment frames (see assignAbsorb) and round 1's
     // chunk, unpersisted by the caller once the blocks materialized
     var caches = st.caches
+    import spark.implicits._
+
+    /** One assignment step under the job description `name`: one
+      * persisted distance pass tags every point with its nearest DS under
+      * `alpha` (cluster, keep), so the absorb fold, the RS collect and the
+      * assignment block all read one cache instead of each re-running the
+      * Mahalanobis kernel; the caller unpersists it once the round's
+      * blocks materialize (State.caches). With no DS every point is
+      * leftover. The kept rows then fold into their DS summaries (A4, the
+      * reference updates per point at code/bfr.py:389) in one job with no
+      * exchange: each partition folds its kept rows, in row order, into
+      * one partial summary per DS cluster and counts its leftover rows,
+      * whose vectors are masked to NULL — a NULL or ragged vector routes to
+      * RS and never reaches a summary. One collect brings the partials to
+      * the driver, O(partitions · K · d) doubles, and they merge there in
+      * partition order, so the sums never depend on which task finished
+      * first. Returns (leftover (id, features), kept count, leftover count).
+      */
+    def assignAbsorb(name: String, points: DataFrame, alpha: Double): (DataFrame, Long, Long) = {
+      describe(spark, round, name)
+      val (label, keep) =
+        if (ds.isEmpty) (lit(null).cast("int"), lit(false))
+        else nearestUnder(col("features"), ds, alpha)
+      val tagged = points
+        .select(col("id"), label.cast("int").as("cluster"),
+          coalesce(keep, lit(false)).as("__keep"), col("features"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      caches :+= tagged
+      blocks :+= tagged.filter(col("__keep")).select("id", "cluster")
+      val (k, d) = (ds.size, ds.headOption.map(_.d).getOrElse(0))
+      val partials = tagged
+        .select(when(col("__keep"), col("cluster")).otherwise(-1),
+          when(col("__keep"), col("features")))
+        .as[(Int, Array[Double])].mapPartitions { rows =>
+          val n = new Array[Long](k)
+          val (sum, sumsq) = (Array.ofDim[Double](k, d), Array.ofDim[Double](k, d))
+          var left = 0L
+          for ((c, f) <- rows) if (c < 0) left += 1 else {
+            n(c) += 1
+            var i = 0
+            while (i < d) { sum(c)(i) += f(i); sumsq(c)(i) += f(i) * f(i); i += 1 }
+          }
+          Iterator((Array.tabulate(k)(c => ClusterSummary(n(c), sum(c), sumsq(c))), left))
+        }.collect()
+      val deltas = ds.indices.map(c => partials.foldLeft(ClusterSummary.zero(d))(_ merge _._1(c)))
+      ds = ds.zip(deltas).map { case (s, delta) => s.merge(delta) }
+      val kept = deltas.map(_.n).sum
+      discardedSoFar += kept
+      (tagged.filter(!col("__keep")).select("id", "features"), kept, partials.map(_._2).sum)
+    }
 
     describe(spark, round, "chunk")
     val chunk = chunkRaw.select(col("id").cast("long").as("id"), col("features"))
     if (round == 1) {
-      // round 1 reads its chunk four times (count, k-th smallest id,
+      // round 1 reads its chunk four times (shape, k-th smallest id,
       // sample, rest) and caches it; later rounds read it once, through
-      // tagAssign's persisted frame, so a chunk cache would never be read
+      // assignAbsorb's persisted frame, so a chunk cache would never be read
       chunk.persist(StorageLevel.MEMORY_AND_DISK); caches :+= chunk
-      // one pass sizes the init sample
-      val shape = chunk.agg(count(lit(1)), max(size(col("features")))).head()
-      val n = shape.getLong(0)
+      // one exchange-free fold sizes the init sample: n counts every row,
+      // d is the longest non-null vector
+      val (n, d) = chunk.select(when(col("features").isNotNull, size(col("features"))))
+        .as[Option[Int]].mapPartitions { sizes =>
+          var (rows, longest) = (0L, 0)
+          for (s <- sizes) { rows += 1; s.foreach(v => longest = math.max(longest, v)) }
+          Iterator((rows, longest))
+        }.collect().foldLeft((0L, 0)) { case ((r, l), (pr, pl)) => (r + pr, math.max(l, pl)) }
       describe(spark, round, "init")
       // --- init (M4, code/bfr.py:393-429), in driver memory ---
-      require(!shape.isNullAt(1) && shape.getInt(1) > 0, "BFR: chunk 1 has no feature vector")
-      val d = shape.getInt(1)
+      require(d > 0, "BFR: chunk 1 has no feature vector")
       val sampleN = initSampleSize(n, d)
       val (sample, kth, sampleRows) = initSampleWithThreshold(chunk, sampleN)
       // the id prefix outgrows sampleN only by copies of id kth
@@ -293,25 +347,13 @@ object BFR {
       // rest of chunk 1 through the normal DS/RS path (code/bfr.py:429):
       // the exact complement of the `id <= kth` sample, as a map-side
       // filter — not an anti-join, which would shuffle the whole chunk
-      val rest = chunk.filter(col("id") > kth)
-      val (tg2, a2, r2) = tagAssign(rest, ds, cfg.alphaAssign)
-      caches :+= tg2
-      blocks :+= a2.select("id", "cluster")
-      // A4: assigned points fold into their DS summaries (the reference
-      // updates per point at code/bfr.py:389; we fold the chunk's delta);
-      // the same fold yields the discarded and leftover counts
-      describe(spark, round, "absorb-rest")
-      val (ds2, n2, left2) = absorbTagged(ds, tg2)
-      ds = ds2; discardedSoFar += n2; rsCount += left2
-      rs = rs.union(r2)
+      val (r, _, nLeft) = assignAbsorb("absorb-rest", chunk.filter(col("id") > kth), cfg.alphaAssign)
+      rsCount += nLeft
+      rs = rs.union(r)
     } else {
       // --- per-chunk step (M5, code/bfr.py:382-391) ---
-      val (tg, a, r) = tagAssign(chunk, ds, cfg.alphaAssign)
-      caches :+= tg
-      blocks :+= a.select("id", "cluster")
-      describe(spark, round, "absorb")
-      val (dsN, nA, nLeft) = absorbTagged(ds, tg)
-      ds = dsN; discardedSoFar += nA; rsCount += nLeft
+      val (r, _, nLeft) = assignAbsorb("absorb", chunk, cfg.alphaAssign)
+      rsCount += nLeft
       rs = rs.union(r)
     }
 
@@ -392,25 +434,18 @@ object BFR {
       // TakeOrdered funnel here either. RS's lineage is cut above, so
       // both filters read it cheaply
       val kth = graft.operators.Selection.kthSmallestLong(rs, "id", rsCount - cap)
-      val (tg, a, leftover) = tagAssign(rs.filter(col("id") <= kth), ds, Double.MaxValue)
-      caches :+= tg
-      val (dsN, nA, _) = absorbTagged(ds, tg)
-      ds = dsN; discardedSoFar += nA; rsCount -= nA
-      blocks :+= a.select("id", "cluster")
+      val (leftover, nA, _) = assignAbsorb("rs-cap", rs.filter(col("id") <= kth), Double.MaxValue)
+      rsCount -= nA
       // an overflow point no DS can take (a NULL or ragged vector) stays
       rs = rs.filter(col("id") > kth).union(leftover)
     }
 
     // --- RS -> DS spill at α=4 (M8, code/bfr.py:322-334), every round ---
     if (rsCount > 0) {
-      describe(spark, round, "rs-spill")
-      val (tg, a, r) = tagAssign(rs, ds, cfg.alphaRs)
-      caches :+= tg
       // one fold merges the matches into DS (code/bfr.py:331-333)
       // and counts what stays in RS
-      val (dsN, nA, nLeft) = absorbTagged(ds, tg)
-      ds = dsN; discardedSoFar += nA; rsCount = nLeft
-      blocks :+= a.select("id", "cluster")
+      val (r, _, nLeft) = assignAbsorb("rs-spill", rs, cfg.alphaRs)
+      rsCount = nLeft
       rs = r
     }
 
@@ -444,64 +479,6 @@ object BFR {
     st.copy(ds = ds, cs = IndexedSeq.empty, csMembers = emptyFrame(spark, "cs_id"),
       discarded = discarded, blocks = blocks,
       stats = st.stats.init :+ RoundStats(st.round, ds.size, discarded, 0, 0L, st.rsCount))
-  }
-
-  /** One persisted distance pass per assignment step: tag every point
-    * with (cluster, keep) and derive the assigned / leftover sides as
-    * filters over the SAME cached frame, so the absorb fold, the
-    * RS collect and the assignment delta all read one cache instead
-    * of each re-running the Mahalanobis kernel (previously two full
-    * kernel passes per chunk per round). The caller owns the cache:
-    * unpersist after the round's blocks materialize (State.caches).
-    * With no DS every point is leftover. Returns (tagged,
-    * assigned(id,cluster,features), leftover(id,features)).
-    */
-  private def tagAssign(points: DataFrame, ds: IndexedSeq[ClusterSummary],
-                        alpha: Double): (DataFrame, DataFrame, DataFrame) = {
-    val (label, keep) =
-      if (ds.isEmpty) (lit(null).cast("int"), lit(false))
-      else nearestUnder(col("features"), ds, alpha)
-    val tagged = points
-      .select(col("id"), label.cast("int").as("cluster"),
-        coalesce(keep, lit(false)).as("__keep"), col("features"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (tagged,
-      tagged.filter(col("__keep")).select(col("id"), col("cluster"), col("features")),
-      tagged.filter(!col("__keep")).select("id", "features"))
-  }
-
-  /** Fold a [[tagAssign]] frame's kept rows into their DS summaries
-    * (A4) and count both sides, in one job with no exchange: each
-    * partition folds its kept rows, in row order, into one partial
-    * summary per DS cluster and counts its leftover rows, whose vectors
-    * are masked to NULL — a NULL or ragged vector routes to RS and never
-    * reaches a summary. One collect brings the partials to the driver,
-    * O(partitions · K · d) doubles, and they merge there in partition
-    * order, so the sums never depend on which task finished first.
-    * Returns (ds', kept count, leftover count).
-    */
-  private def absorbTagged(ds: IndexedSeq[ClusterSummary], tagged: DataFrame)
-      : (IndexedSeq[ClusterSummary], Long, Long) = {
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    val (k, d) = (ds.size, ds.headOption.map(_.d).getOrElse(0))
-    val keep = col("__keep")
-    val partials = tagged
-      .select(when(keep, col("cluster")).otherwise(-1), when(keep, col("features")))
-      .as[(Int, Array[Double])].mapPartitions { rows =>
-        val n = new Array[Long](k)
-        val (sum, sumsq) = (Array.ofDim[Double](k, d), Array.ofDim[Double](k, d))
-        var left = 0L
-        for ((c, f) <- rows) if (c < 0) left += 1 else {
-          n(c) += 1
-          var i = 0
-          while (i < d) { sum(c)(i) += f(i); sumsq(c)(i) += f(i) * f(i); i += 1 }
-        }
-        Iterator((Array.tabulate(k)(c => ClusterSummary(n(c), sum(c), sumsq(c))), left))
-      }.collect()
-    val deltas = ds.indices.map(c => partials.foldLeft(ClusterSummary.zero(d))(_ merge _._1(c)))
-    (ds.zip(deltas).map { case (s, delta) => s.merge(delta) },
-      deltas.map(_.n).sum, partials.map(_._2).sum)
   }
 
   /** The init (M4, code/bfr.py:393-429) on the id-sorted `(id, features)`

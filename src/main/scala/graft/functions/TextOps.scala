@@ -222,6 +222,16 @@ object TextOps {
     */
   val hotBucketThreshold: Int = graft.Census.HotBucketThreshold
 
+  /** Per-(band, bucket) census: member count and the min-id hub — the
+    * SHARED input of every hot-bucket guard (batch candidate generation
+    * here and the incremental crawl-merge in
+    * [[graft.operators.IncrementalDedup]]). One definition, so the
+    * incremental ≡ full-recompute equivalence cannot drift.
+    */
+  def bucketCensus(bands: DataFrame, idCol: String): DataFrame =
+    bands.groupBy(col("band"), col("bucket"))
+      .agg(count(lit(1)).as("__n"), min(col(idCol)).as("__hub"))
+
   /** Docs sharing a band bucket: (doc_a, doc_b), doc_a < doc_b.
     *
     * Skew guard: bucket sizes are counted first (one partial+final agg on
@@ -260,17 +270,13 @@ object TextOps {
     *
     * With no hot bucket both modes are identical to the unguarded join
     * (oracle-checked at every SF).
+    *
+    * Cost at composition time: building the frame runs one Spark job,
+    * the census max over `bands`, before any action on the result. The
+    * returned plan evaluates `bands` again, and on the hot-bucket path a
+    * second time for the census it joins back — callers pass bands over
+    * memoized features.
     */
-  /** Per-(band, bucket) census: member count and the min-id hub — the
-    * SHARED input of every hot-bucket guard (batch candidate generation
-    * here and the incremental crawl-merge in
-    * [[graft.operators.IncrementalDedup]]). One definition, so the
-    * incremental ≡ full-recompute equivalence cannot drift.
-    */
-  def bucketCensus(bands: DataFrame, idCol: String): DataFrame =
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__n"), min(col(idCol)).as("__hub"))
-
   def candidatePairs(bands: DataFrame, idCol: String,
                      hotThreshold: Int = hotBucketThreshold,
                      hotComplete: Boolean = false): DataFrame = {

@@ -188,82 +188,37 @@ object Streaming {
       .drop("__sig", "__sigkey")
   }
 
-  /** Streaming image-duplicate suppression — the multimodal twin of
-    * [[nearDupStream]]: each incoming document's image bytes decode
-    * MAP-SIDE through whichever REAL codec its container needs
-    * ([[graft.multimodal.ImageDecode]] sniffs PNG/GIF/JPEG magic), and
-    * `dropDuplicatesWithinWatermark` on the 4×16-bit dHash fingerprint
-    * keeps only the first document per fingerprint inside the watermark
-    * horizon. Because fingerprints are container-independent (pinned by
-    * `q_cross_codec_dups`), a JPEG re-post of a PNG original is
-    * suppressed with no per-format logic — the live-ingest shape of the
-    * batch `q_image_near_dup` tier, with state bounded by the watermark.
-    * Undecodable payloads (junk, truncation, unknown container) cannot
-    * be fingerprinted and are quarantined out of the stream rather than
-    * spuriously deduplicated against each other.
+  /** Streaming media-duplicate suppression — the multimodal twin of
+    * [[nearDupStream]] and the live-ingest shape of the batch
+    * `q_image_near_dup` / `q_audio_near_dup` / `q_video_near_dup` tiers:
+    * each incoming document's bytes decode MAP-SIDE through a real codec
+    * into a 4×16-bit fingerprint, and `dropDuplicatesWithinWatermark` on
+    * it keeps only the first document per fingerprint inside the
+    * watermark horizon, with state bounded by the watermark. The caller
+    * picks the `fingerprint`:
+    *  - [[graft.multimodal.ImageDecode.fingerprint]] sniffs PNG/GIF/JPEG
+    *    and yields the container-independent dHash (pinned by
+    *    `q_cross_codec_dups`), so a JPEG re-post of a PNG original is
+    *    suppressed with no per-format logic;
+    *  - [[graft.multimodal.MediaDecode.audioFingerprint]] decodes RIFF/PCM
+    *    into the chromaprint-style energy-delta fingerprint;
+    *  - [[graft.multimodal.MediaDecode.videoFingerprint]] reads keyframe
+    *    CONTENT through the stsz/stsc/stco sample tables, so a re-mux
+    *    that keeps the payloads is suppressed.
+    * A payload the function cannot fingerprint (junk, truncation, an
+    * unknown container, a clip too short) is quarantined out of the
+    * stream rather than spuriously deduplicated against the others.
     */
-  def imageNearDupStream(docs: DataFrame, imgCol: String, tsCol: String,
-                         watermark: String = "10 minutes"): DataFrame = {
-    val fp = udf { (bytes: Array[Byte]) =>
-      graft.multimodal.ImageDecode.fingerprint(bytes)
-        .map(_.mkString(":")).orNull
-    }
+  def fingerprintDupStream(docs: DataFrame, bytesCol: String, tsCol: String,
+                           fingerprint: Array[Byte] => Option[Array[Long]],
+                           watermark: String = "10 minutes"): DataFrame = {
+    val fp = udf((bytes: Array[Byte]) => fingerprint(bytes).map(_.mkString(":")).orNull)
     docs
-      .withColumn("__imgfp", fp(col(imgCol)))
-      .filter(col("__imgfp").isNotNull)
+      .withColumn("__fp", fp(col(bytesCol)))
+      .filter(col("__fp").isNotNull)
       .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__imgfp")
-      .drop("__imgfp")
-  }
-
-  /** Streaming audio-duplicate suppression — the WAV twin of
-    * [[imageNearDupStream]]: each incoming document's audio bytes decode
-    * MAP-SIDE through the real RIFF/PCM codec, the chromaprint-style
-    * energy-delta fingerprint ([[graft.multimodal.MediaDecode
-    * .audioFingerprint]]) keys `dropDuplicatesWithinWatermark`, and only
-    * the first document per fingerprint inside the watermark horizon
-    * survives — the live-ingest shape of the batch `q_audio_near_dup`
-    * tier, with state bounded by the watermark. Undecodable or
-    * too-short payloads cannot be fingerprinted and are quarantined out
-    * of the stream rather than spuriously deduplicated against each
-    * other.
-    */
-  def audioNearDupStream(docs: DataFrame, audioCol: String, tsCol: String,
-                         watermark: String = "10 minutes"): DataFrame = {
-    val fp = udf { (bytes: Array[Byte]) =>
-      graft.multimodal.MediaDecode.audioFingerprint(bytes)
-        .map(_.mkString(":")).orNull
-    }
-    docs
-      .withColumn("__audfp", fp(col(audioCol)))
-      .filter(col("__audfp").isNotNull)
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__audfp")
-      .drop("__audfp")
-  }
-
-  /** Streaming video-duplicate suppression — the ISO-BMFF twin: the
-    * incoming container's sync-sample payloads extract MAP-SIDE through
-    * the real stsz/stsc/stco walk, their byte-sum signatures fold into
-    * the sign-of-delta fingerprint ([[graft.multimodal.MediaDecode
-    * .videoFingerprint]]), and the watermark-bounded dedup keeps the
-    * first post per fingerprint — a re-encode that preserves keyframe
-    * content (same payloads in a differently-laid-out box tree) is
-    * suppressed, because the fingerprint reads CONTENT through the
-    * sample tables, not container bytes.
-    */
-  def videoNearDupStream(docs: DataFrame, videoCol: String, tsCol: String,
-                         watermark: String = "10 minutes"): DataFrame = {
-    val fp = udf { (bytes: Array[Byte]) =>
-      graft.multimodal.MediaDecode.videoFingerprint(bytes)
-        .map(_.mkString(":")).orNull
-    }
-    docs
-      .withColumn("__vidfp", fp(col(videoCol)))
-      .filter(col("__vidfp").isNotNull)
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__vidfp")
-      .drop("__vidfp")
+      .dropDuplicatesWithinWatermark("__fp")
+      .drop("__fp")
   }
 
   /** Streaming benchmark decontamination: the Bloom set-bit list built

@@ -350,6 +350,24 @@ class BfrSpec extends AnyFunSuite {
     assert(jobs.getOrElse("bfr r1 init", 0) <= 4, jobs)
   }
 
+  test("round 1's shape pass is one job of one stage") {
+    val (chunks, cfg) = rsReclusterFixture()
+    val (_, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
+    assert(jobs.getOrElse("bfr r1 chunk", 0) == 1, jobs)
+    assert(stages.getOrElse("bfr r1 chunk", 0) == 1, stages)
+  }
+
+  test("a chunk 1 with only NULL or empty vectors fails the init") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("features", ArrayType(DoubleType))))
+    val chunk = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, null), Row(2L, Seq.empty[Double]), Row(3L, null)), schema)
+    val e = intercept[IllegalArgumentException](BFR.run(spark, Seq(chunk), BFR.Config(k = 2)))
+    assert(e.getMessage.contains("chunk 1 has no feature vector"), e.getMessage)
+  }
+
   test("the init sample is 20% of chunk 1, capped by the driver budget") {
     assert(BFR.initSampleSize(100000L, 8) == 20000)       // below the budget
     assert(BFR.initSampleSize(2500000L, 8) == 500000)     // at it: 4M cells

@@ -376,10 +376,11 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q_gif_dhash / q_jpeg_dhash / q_cross_codec_dups: codec tiers never plan a cartesian") {
     // each container's fingerprint pass is partition-local decode (the
     // memoized feature tables are map-side products), and the
-    // cross-codec comparison is an equi-join on doc_id — a shuffle on
-    // the join key is fine, an all-pairs plan never is
+    // cross-codec comparison is an equi-join on doc_id, the image, audio
+    // and video near-dup candidates an equi-join on (band, value) — a
+    // shuffle on the join key is fine, an all-pairs plan never is
     for (n <- Seq("q_gif_dhash", "q_jpeg_dhash", "q_cross_codec_dups",
-        "q_image_near_dup")) {
+        "q_image_near_dup", "q_audio_near_dup", "q_video_near_dup")) {
       val p = plan(n)
       assert(!p.contains("CartesianProduct"), s"$n must not plan a cartesian:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"),

@@ -261,7 +261,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Byte], java.sql.Timestamp)]
     val df = mem.toDF().toDF("doc_id", "img", "ts")
-    val q = Streaming.imageNearDupStream(df, "img", "ts")
+    val q = Streaming.fingerprintDupStream(df, "img", "ts",
+      graft.multimodal.ImageDecode.fingerprint)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("imgdedup").start()
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
@@ -287,7 +288,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Byte], java.sql.Timestamp)]
     val df = mem.toDF().toDF("doc_id", "wav", "ts")
-    val q = Streaming.audioNearDupStream(df, "wav", "ts")
+    val q = Streaming.fingerprintDupStream(df, "wav", "ts",
+      graft.multimodal.MediaDecode.audioFingerprint)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("auddedup").start()
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
@@ -315,7 +317,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Byte], java.sql.Timestamp)]
     val df = mem.toDF().toDF("doc_id", "mp4", "ts")
-    val q = Streaming.videoNearDupStream(df, "mp4", "ts")
+    val q = Streaming.fingerprintDupStream(df, "mp4", "ts",
+      graft.multimodal.MediaDecode.videoFingerprint)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("viddedup").start()
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
