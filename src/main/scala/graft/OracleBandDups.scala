@@ -73,7 +73,7 @@ private[graft] object OracleBandDups {
        |  SELECT id_a AS doc_a, id_b AS doc_b FROM $dump),
        |$canon""".stripMargin
 
-  private def canon: String =
+  private val canon: String =
     s"""${OracleCc.canonFromPairs(OracleCc.TextRounds)}
        |SELECT doc_id, canonical_id FROM canon""".stripMargin
 }
