@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the full query inventory against
@@ -90,6 +92,15 @@ object Bench {
     }
   }
 
+  /** A failed warmer or query is timed and skipped; stderr gets the
+    * exception with its stack and cause chain, because a Spark failure's
+    * outer message rarely names the root cause.
+    */
+  private def reportFailure(what: String, e: Throwable): Unit = {
+    System.err.println(s"[bench] $what failed")
+    e.printStackTrace()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -133,11 +144,7 @@ object Bench {
         .format("noop").mode("overwrite").save()
     }
 
-    // Shared-artifact warmup, timed per artifact: the memoized
-    // shingle/candidate/canonical pipelines and model fits are forced
-    // HERE, not inside whichever consumer query runs first, so
-    // per-query numbers are attributable across rounds and registry
-    // reorders. SPARK_GRAFT_WARMUP=0 skips it (cold diagnosis runs).
+    // Shared-artifact warmup, timed per artifact (see [[Artifact]]).
     //
     // codec_jit runs FIRST: each media codec's only bulk use is one
     // short 32-way burst, so without a warm pass most documents execute
@@ -147,20 +154,14 @@ object Bench {
     // driver-side iterations compile the shared kernel methods before
     // any stage runs; in local mode driver and executors are one JVM.
     // The pass is TIMED and included in the total like every warmer.
-    val warm = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    val warmers =
-      if (warm) ("codec_jit" ->
-          ((_: SparkSession, _: String) => codecJitWarm())) +:
-        (TextQueries.sharedArtifactWarmers ++ MlQueries.sharedArtifactWarmers ++
-          AudioQueries.sharedArtifactWarmers ++ ImageQueries.sharedArtifactWarmers ++
-          VideoQueries.sharedArtifactWarmers)
-      else Seq.empty
+    val warmers = ("codec_jit" -> ((_: SparkSession, _: String) => codecJitWarm())) +:
+      (TextQueries.sharedArtifactWarmers ++ MlQueries.sharedArtifactWarmers ++
+        AudioQueries.sharedArtifactWarmers ++ ImageQueries.sharedArtifactWarmers ++
+        VideoQueries.sharedArtifactWarmers)
     val warmupResults = warmers.map { case (n, f) =>
       val t0 = System.nanoTime()
       try f(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $n failed: ${e.getMessage}")
-      }
+      catch { case NonFatal(e) => reportFailure(s"warmup $n", e) }
       n -> (System.nanoTime() - t0) / 1e9
     }
     val warmupTotal = warmupResults.map(_._2).sum
@@ -203,9 +204,7 @@ object Bench {
       spark.sparkContext.setJobDescription(q.name)
       val t0 = System.nanoTime()
       try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-      }
+      catch { case NonFatal(e) => reportFailure(q.name, e) }
       q.name -> (System.nanoTime() - t0) / 1e9
     }
     // value = warmup + queries: comparable with pre-warmup rounds, where

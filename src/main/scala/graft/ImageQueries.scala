@@ -180,104 +180,58 @@ object ImageQueries {
   }
 
   /** doc_id → (b0..b3 dHash bands, mean-luma milli) via the REAL codec
-    * chain. Map-side only: encode is the fixture, decode onward is the
-    * production kernel. Memoized per (session, dir) with a
-    * localCheckpoint — the three image queries and the curation capstone
-    * share ONE decoded corpus pass (same pattern as the shingle/BFR
-    * artifacts).
+    * chain of one container. Map-side only: `encode` plants the fixture,
+    * `decode` onward (decode → luminance → area resize → dHash) is the
+    * production kernel.
     */
-  private val featCache =
-    new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
+  private def decodedDhash(s: SparkSession, dir: String, container: String,
+      encode: Long => Array[Byte],
+      decode: Array[Byte] => Option[PixelCodec.Decoded]): DataFrame = {
+    import s.implicits._
+    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id")), "doc_id").as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val d = decode(encode(id)).getOrElse(
+            throw new IllegalStateException(s"undecodable planted $container for doc $id"))
+          val luma = PixelCodec.luminance(d.pixels, d.channels)
+          val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
+          val bands = PixelCodec.dhashBands(grid)
+          val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
+          (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
+        }
+      }
+      .toDF("doc_id", "b0", "b1", "b2", "b3", "mean_luma_milli")
+  }
 
-  private def dhashFeatures(s: SparkSession, dir: String): DataFrame =
-    featCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      dhashFeaturesUncached(s, dir).localCheckpoint(true))
+  /** PNG features: the three image queries and the curation capstone
+    * share ONE decoded corpus pass.
+    */
+  private val dhashFeatures = Artifact("image_dhash") { (s, dir) =>
+    decodedDhash(s, dir, "PNG", plantedPng, PixelCodec.decodePng).localCheckpoint(true)
+  }
 
-  /** Named thunks for Bench's separately-timed warmup pass. */
+  /** GIF features through the REAL GIF stack: LZW sub-block concat →
+    * variable-width decompress (code growth + clear resets — 18k pixels
+    * overflow the 4096-entry table, so the reset path runs on every
+    * document) → grey palette map → resize → dHash.
+    */
+  private val gifFeatures = Artifact("gif_dhash") { (s, dir) =>
+    decodedDhash(s, dir, "GIF", plantedGif, GifCodec.decodeGif).localCheckpoint(true)
+  }
+
+  /** JPEG features through the REAL baseline JPEG stack: marker walk →
+    * DHT canonical Huffman reconstruction → entropy decode (DC diffs +
+    * EOB, byte unstuffing) → dequantize → exact 2D IDCT → level shift →
+    * resize → dHash.
+    */
+  private val jpegFeatures = Artifact("jpeg_dhash") { (s, dir) =>
+    decodedDhash(s, dir, "JPEG", plantedJpeg, JpegCodec.decodeJpeg).localCheckpoint(true)
+  }
+
   private[graft] def sharedArtifactWarmers
-      : Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "image_dhash" ->
-      ((s: SparkSession, d: String) => { dhashFeatures(s, d); () }),
-    "gif_dhash" ->
-      ((s: SparkSession, d: String) => { gifFeatures(s, d); () }),
-    "jpeg_dhash" ->
-      ((s: SparkSession, d: String) => { jpegFeatures(s, d); () }))
-
-  private def jpegFeatures(s: SparkSession, dir: String): DataFrame =
-    featCache.getOrElseUpdate(("jpeg:" + s.sparkContext.applicationId, dir),
-      jpegFeaturesUncached(s, dir).localCheckpoint(true))
-
-  /** doc_id → dHash bands through the REAL baseline JPEG stack: marker
-    * walk → DHT canonical Huffman reconstruction → entropy decode (DC
-    * diffs + EOB, byte unstuffing) → dequantize → exact 2D IDCT → level
-    * shift → resize → dHash. Map-side only, like its siblings.
-    */
-  private def jpegFeaturesUncached(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id")), "doc_id").as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val jpg = plantedJpeg(id)
-          val d = JpegCodec.decodeJpeg(jpg).getOrElse(
-            throw new IllegalStateException(s"undecodable planted JPEG for doc $id"))
-          val luma = PixelCodec.luminance(d.pixels, d.channels)
-          val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
-          val bands = PixelCodec.dhashBands(grid)
-          val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
-          (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
-        }
-      }
-      .toDF("doc_id", "b0", "b1", "b2", "b3", "mean_luma_milli")
-  }
-
-  private def gifFeatures(s: SparkSession, dir: String): DataFrame =
-    featCache.getOrElseUpdate(("gif:" + s.sparkContext.applicationId, dir),
-      gifFeaturesUncached(s, dir).localCheckpoint(true))
-
-  /** doc_id → dHash bands through the REAL GIF stack: LZW sub-block
-    * concat → variable-width decompress (code growth + clear resets —
-    * 18k pixels overflow the 4096-entry table, so the reset path runs on
-    * every document) → grey palette map → resize → dHash. Map-side only,
-    * like the PNG pass.
-    */
-  private def gifFeaturesUncached(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id")), "doc_id").as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val gif = plantedGif(id)
-          val d = GifCodec.decodeGif(gif).getOrElse(
-            throw new IllegalStateException(s"undecodable planted GIF for doc $id"))
-          val luma = PixelCodec.luminance(d.pixels, d.channels)
-          val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
-          val bands = PixelCodec.dhashBands(grid)
-          val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
-          (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
-        }
-      }
-      .toDF("doc_id", "b0", "b1", "b2", "b3", "mean_luma_milli")
-  }
-
-  private def dhashFeaturesUncached(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id")), "doc_id").as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val png = plantedPng(id)
-          val d = PixelCodec.decodePng(png).getOrElse(
-            throw new IllegalStateException(s"undecodable planted PNG for doc $id"))
-          val luma = PixelCodec.luminance(d.pixels, d.channels)
-          val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
-          val bands = PixelCodec.dhashBands(grid)
-          val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
-          (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
-        }
-      }
-      .toDF("doc_id", "b0", "b1", "b2", "b3", "mean_luma_milli")
-  }
+      : Seq[(String, (SparkSession, String) => Unit)] =
+    Seq(dhashFeatures, gifFeatures, jpegFeatures).map(_.warmer)
 
   /** The oracle's closed-form twin of the planted-cell luma grid: one row
     * per (doc_id, cy, cx) with the integer luminance the real pipeline
@@ -327,9 +281,10 @@ object ImageQueries {
       |  FROM (SELECT DISTINCT doc_id FROM documents) d
       |  LEFT JOIN bits USING (doc_id) GROUP BY d.doc_id)""".stripMargin
 
-  /** dHash fingerprints through the full real decode chain. */
-  val imageDhash = Q("q_image_dhash",
-    (s, dir) => dhashFeatures(s, dir),
+  /** The oracle of every dHash query, whatever the container: the planted
+    * content is identical, so the closed-form luma arithmetic is too.
+    */
+  private val dhashOracle: Option[String] =
     Some(s"""WITH $lumaCellsSql,
             |means AS (
             |  SELECT doc_id,
@@ -337,7 +292,12 @@ object ImageQueries {
             |      AS mean_luma_milli
             |  FROM cells GROUP BY doc_id)
             |SELECT doc_id, b0, b1, b2, b3, mean_luma_milli
-            |FROM bands JOIN means USING (doc_id)""".stripMargin))
+            |FROM bands JOIN means USING (doc_id)""".stripMargin)
+
+  /** dHash fingerprints through the full real decode chain. */
+  val imageDhash = Q("q_image_dhash",
+    (s, dir) => dhashFeatures(s, dir),
+    dhashOracle)
 
   /** Banded image near-dup: equal-16-bit-band candidates → exact hamming
     * ≤ 3 verify (pigeonhole-complete: 4 bands, so any pair within
@@ -368,14 +328,7 @@ object ImageQueries {
     */
   val gifDhash = Q("q_gif_dhash",
     (s, dir) => gifFeatures(s, dir),
-    Some(s"""WITH $lumaCellsSql,
-            |means AS (
-            |  SELECT doc_id,
-            |    CAST(floor(CAST(sum(lum) AS DOUBLE) * 1000.0 / 18360.0) AS BIGINT)
-            |      AS mean_luma_milli
-            |  FROM cells GROUP BY doc_id)
-            |SELECT doc_id, b0, b1, b2, b3, mean_luma_milli
-            |FROM bands JOIN means USING (doc_id)""".stripMargin))
+    dhashOracle)
 
   /** Cross-container duplicate detection: the SAME image stored as
     * truecolor PNG and indexed GIF must land in the same dedup bucket.
@@ -415,14 +368,7 @@ object ImageQueries {
     */
   val jpegDhash = Q("q_jpeg_dhash",
     (s, dir) => jpegFeatures(s, dir),
-    Some(s"""WITH $lumaCellsSql,
-            |means AS (
-            |  SELECT doc_id,
-            |    CAST(floor(CAST(sum(lum) AS DOUBLE) * 1000.0 / 18360.0) AS BIGINT)
-            |      AS mean_luma_milli
-            |  FROM cells GROUP BY doc_id)
-            |SELECT doc_id, b0, b1, b2, b3, mean_luma_milli
-            |FROM bands JOIN means USING (doc_id)""".stripMargin))
+    dhashOracle)
 
   /** Planted PROGRESSIVE fixture: the baseline planted stream with its
     * SOF0 marker rewritten to SOF2 via the segment walk (never a blind
@@ -494,33 +440,9 @@ object ImageQueries {
     * different wire format — the decoder chain is what's under test.
     */
   val jpegProgressiveDhash = Q("q_jpeg_progressive_dhash",
-    (s, dir) => {
-      import s.implicits._
-      Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id")), "doc_id").as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val jpg = plantedJpegProgressive(id)
-            val d = JpegCodec.decodeJpegProgressive(jpg).getOrElse(
-              throw new IllegalStateException(
-                s"undecodable planted progressive JPEG for doc $id"))
-            val luma = PixelCodec.luminance(d.pixels, d.channels)
-            val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
-            val bands = PixelCodec.dhashBands(grid)
-            val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
-            (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
-          }
-        }
-        .toDF("doc_id", "b0", "b1", "b2", "b3", "mean_luma_milli")
-    },
-    Some(s"""WITH $lumaCellsSql,
-            |means AS (
-            |  SELECT doc_id,
-            |    CAST(floor(CAST(sum(lum) AS DOUBLE) * 1000.0 / 18360.0) AS BIGINT)
-            |      AS mean_luma_milli
-            |  FROM cells GROUP BY doc_id)
-            |SELECT doc_id, b0, b1, b2, b3, mean_luma_milli
-            |FROM bands JOIN means USING (doc_id)""".stripMargin))
+    (s, dir) => decodedDhash(s, dir, "progressive JPEG", plantedJpegProgressive,
+      JpegCodec.decodeJpegProgressive),
+    dhashOracle)
 
   def all: Seq[Q] =
     Seq(imageDhash, imageNearDup, imageDedupGroups, gifDhash, jpegDhash,

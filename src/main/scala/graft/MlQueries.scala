@@ -499,41 +499,23 @@ object MlQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     PointSource.fromEmbeddings(s, dir)
 
-  /** Memoized heavy artifacts, keyed by (session, dir): q_bfr_assign and
-    * q_bfr_stats share one BFR run; the three k-means queries share one
-    * fit. Results are tiny driver-held state (centers) or checkpointed
-    * DataFrames.
-    */
-  private val bfrCache =
-    new scala.collection.concurrent.TrieMap[(String, String), BFR.Result]()
-  private def bfrResult(s: SparkSession, dir: String): BFR.Result =
-    bfrCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val points = emb(s, dir)
-      val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))
-      // production RS threshold: re-clustering fires on real overflow, not
-      // on every round (the tiny-job storm dominated bench time at 50)
-      BFR.run(s, chunks, BFR.Config(k = 10, rsClusterThreshold = 500))
-    })
+  /** q_bfr_assign and q_bfr_stats share one BFR run. */
+  private val bfrResult = Artifact("ml_bfr_run") { (s, dir) =>
+    val points = emb(s, dir)
+    val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))
+    // production RS threshold: re-clustering fires on real overflow, not
+    // on every round (the tiny-job storm dominated bench time at 50)
+    BFR.run(s, chunks, BFR.Config(k = 10, rsClusterThreshold = 500))
+  }
 
-  private val kmeansCache =
-    new scala.collection.concurrent.TrieMap[(String, String), KMeans.Model]()
-  private def kmeansModel(s: SparkSession, dir: String): KMeans.Model =
-    kmeansCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      KMeans.fit(emb(s, dir), k = 10, iters = 5))
+  /** The three k-means queries share one fit. */
+  private val kmeansModel = Artifact("ml_kmeans_fit") { (s, dir) =>
+    KMeans.fit(emb(s, dir), k = 10, iters = 5)
+  }
 
-  /** Named thunks forcing each memoized shared artifact (see the
-    * text-side twin in [[TextQueries.sharedArtifactWarmers]]): Bench
-    * times these separately so model fits / pipeline materializations
-    * are not charged to the first consumer query.
-    */
   private[graft] def sharedArtifactWarmers
-      : Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "ml_bfr_run" -> ((s: SparkSession, d: String) => { bfrResult(s, d); () }),
-    "ml_kmeans_fit" -> ((s: SparkSession, d: String) => { kmeansModel(s, d); () }),
-    "ml_ivf_model" -> ((s: SparkSession, d: String) => { ivfModel(s, d); () }),
-    "ml_pq_codebooks" -> ((s: SparkSession, d: String) => { pqModels(s, d); () }),
-    "ml_embedding_banded" ->
-      ((s: SparkSession, d: String) => { bandedNearDup(s, d); () }))
+      : Seq[(String, (SparkSession, String) => Unit)] =
+    Seq(bfrResult, kmeansModel, ivfModel, pqModels, bandedNearDup).map(_.warmer)
 
   /** Persisted-quantizer store path, content-keyed: a production ANN tier
     * trains codebooks once and serves many sessions from the stored
@@ -543,23 +525,21 @@ object MlQueries {
     * deterministic across parallelism levels) — and the caller appends
     * its fit hyperparameters to the artifact name, so neither
     * regenerated testdata (same layout, new values) nor a k/iters
-    * change can ever serve a stale codebook. One bounded aggregate,
-    * memoized per session.
+    * change can ever serve a stale codebook. One bounded aggregate per
+    * (session, dir).
     */
-  private val modelKeyCache =
-    new scala.collection.concurrent.TrieMap[(String, String), String]()
-  private def modelPath(s: SparkSession, dir: String, name: String): String = {
-    val key = modelKeyCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val r = emb(s, dir).agg(count(lit(1)), sum(col("id")),
-        first(size(col("features"))),
-        sum(crc32(concat_ws(",", col("id"),
-          element_at(col("features"), 1), element_at(col("features"), -1))))).head()
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|${r.getLong(0)}|${r.getLong(1)}|${r.getInt(2)}|${r.getLong(3)}"
-          .getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    })
-    s"${sys.props("java.io.tmpdir")}/graft_models/$key/$name.parquet"
+  private def modelPath(s: SparkSession, dir: String, name: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_models/${modelKey(s, dir)}/$name.parquet"
+
+  private val modelKey = Artifact("ml_model_key") { (s, dir) =>
+    val r = emb(s, dir).agg(count(lit(1)), sum(col("id")),
+      first(size(col("features"))),
+      sum(crc32(concat_ws(",", col("id"),
+        element_at(col("features"), 1), element_at(col("features"), -1))))).head()
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$dir|${r.getLong(0)}|${r.getLong(1)}|${r.getInt(2)}|${r.getLong(3)}"
+        .getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
   }
 
   private def embWithLabel(s: SparkSession, dir: String): DataFrame =
@@ -703,83 +683,78 @@ object MlQueries {
     * by design → rows-only check; correctness of the underlying math is
     * covered by q_ann_brute_force.
     */
-  /** One IVF quantizer fit per (session, dir) — shared by the search and
-    * recall queries.
-    */
-  private val ivfModelCache =
-    new scala.collection.concurrent.TrieMap[(String, String), KMeans.Model]()
-  private def ivfModel(s: SparkSession, dir: String): KMeans.Model =
-    ivfModelCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      // load-if-persisted, train-and-persist otherwise: a second cold
-      // session serves the identical quantizer without refitting. The
-      // SERVED codebook is the skew-BALANCED one: base k-means, then
-      // BalancedIvf.splitHotCells caps cell occupancy at IvfCapFactor ×
-      // average so probe-time candidate volume (and the posting-list
-      // size a 100 TB layout buckets by) is bounded — the enlarged
-      // center list changes nothing downstream (assignment stays the
-      // same map-side argmin kernel). Balancing runs on the quantizer's
-      // fit sample: the full corpus at test SFs (id-ordered, matching
-      // the unrolled oracle); at real scale the same driver-held
-      // training sample the base fit would use. The base fit is
-      // regime-switched on the corpus census (see [[IvfScaleN]]):
-      // k=8 maximin below the threshold, census-k md5-ranked seeds above.
-      val e = emb(s, dir)
-      val n = e.count()
-      val k = ivfKFor(n)
-      // "mc" = median-cut split init, "h" = md5-ranked seeding, "-sN" =
-      // truncating training sample — all part of the artifact identity
-      // so neither a split-rule, regime, nor sample-knob change can
-      // ever serve a stale persisted codebook
-      val name =
-        if (n <= IvfScaleN) s"ivf-k$IvfK-i$IvfIters-bal${IvfSplitBudget}c${IvfCapFactor}mc"
-        else s"ivf-census-k$k-i$IvfIters-bal${IvfSplitBudget}c${IvfCapFactor}mc-h" +
-          (if (n > IvfSampleN) s"-s$IvfSampleN" else "")
-      graft.kmeans.ModelStore.getOrFit(s, modelPath(s, dir, name), {
-        // bounded training sample ([[IvfSampleN]]): below the knob, the
-        // full corpus; above it, the IvfSampleN rows with the smallest
-        // (md5(id), id), selected DISTRIBUTED in two phases so no stage
-        // ever moves corpus-scale OR sample×partitions feature bytes:
-        //  1. rank on SKINNY (hash, id) rows — TakeOrdered task results
-        //     are ~56 B/row, so even 1000 partitions ship MBs;
-        //  2. fetch features for exactly the S selected ids via a
-        //     broadcast semi-join (S longs ≈ 512 KB broadcast) — the
-        //     collect is S rows, period.
-        // (A single orderBy+limit over (id, features) would carry the
-        // 530 B vector payload through every per-partition top-S task
-        // result — O(S × partitions) driver bytes, the same class of
-        // hazard this sample exists to remove.) The fit matrix is then
-        // id-ordered either way, so the fit's float accumulation order
-        // is the same one every certified SF already runs.
-        val sampled =
-          if (n <= IvfSampleN)
-            e.select(col("id").cast("long").as("__id"), col("features")).collect()
-          else {
-            val pickedIds = e
-              .select(col("id").cast("long").as("__id"))
-              .withColumn("__h", md5(col("__id").cast("string")))
-              .orderBy(col("__h"), col("__id"))
-              .limit(IvfSampleN.toInt)
-              .select(col("__id"))
-            e.select(col("id").cast("long").as("__id"), col("features"))
-              .join(broadcast(pickedIds), Seq("__id"), "left_semi")
-              .collect()
-          }
-        val pairs = sampled
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-        val rows = pairs.map(_._2)
-        val base =
-          if (n <= IvfScaleN) KMeans.fit(e, k = IvfK, iters = IvfIters)
-          else {
-            val seeds = pairs.sortBy { case (id, _) => (md5Hex(id.toString), id) }
-              .take(k).map(_._2.clone())
-            KMeans.fitLocal(rows, k, IvfIters, 0, initCenters = seeds)
-          }
-        val bal = graft.kmeans.BalancedIvf.splitHotCells(rows, base.centers,
-          capFactor = IvfCapFactor, maxCenters = k + IvfSplitBudget)
-        Array(KMeans.Model(bal.centers))
-      }).head
-    })
+  /** One IVF quantizer fit, shared by the search and recall queries. */
+  private val ivfModel = Artifact("ml_ivf_model") { (s, dir) =>
+    // load-if-persisted, train-and-persist otherwise: a second cold
+    // session serves the identical quantizer without refitting. The
+    // SERVED codebook is the skew-BALANCED one: base k-means, then
+    // BalancedIvf.splitHotCells caps cell occupancy at IvfCapFactor ×
+    // average so probe-time candidate volume (and the posting-list
+    // size a 100 TB layout buckets by) is bounded — the enlarged
+    // center list changes nothing downstream (assignment stays the
+    // same map-side argmin kernel). Balancing runs on the quantizer's
+    // fit sample: the full corpus at test SFs (id-ordered, matching
+    // the unrolled oracle); at real scale the same driver-held
+    // training sample the base fit would use. The base fit is
+    // regime-switched on the corpus census (see [[IvfScaleN]]):
+    // k=8 maximin below the threshold, census-k md5-ranked seeds above.
+    val e = emb(s, dir)
+    val n = e.count()
+    val k = ivfKFor(n)
+    // "mc" = median-cut split init, "h" = md5-ranked seeding, "-sN" =
+    // truncating training sample — all part of the artifact identity
+    // so neither a split-rule, regime, nor sample-knob change can
+    // ever serve a stale persisted codebook
+    val name =
+      if (n <= IvfScaleN) s"ivf-k$IvfK-i$IvfIters-bal${IvfSplitBudget}c${IvfCapFactor}mc"
+      else s"ivf-census-k$k-i$IvfIters-bal${IvfSplitBudget}c${IvfCapFactor}mc-h" +
+        (if (n > IvfSampleN) s"-s$IvfSampleN" else "")
+    graft.kmeans.ModelStore.getOrFit(s, modelPath(s, dir, name), {
+      // bounded training sample ([[IvfSampleN]]): below the knob, the
+      // full corpus; above it, the IvfSampleN rows with the smallest
+      // (md5(id), id), selected DISTRIBUTED in two phases so no stage
+      // ever moves corpus-scale OR sample×partitions feature bytes:
+      //  1. rank on SKINNY (hash, id) rows — TakeOrdered task results
+      //     are ~56 B/row, so even 1000 partitions ship MBs;
+      //  2. fetch features for exactly the S selected ids via a
+      //     broadcast semi-join (S longs ≈ 512 KB broadcast) — the
+      //     collect is S rows, period.
+      // (A single orderBy+limit over (id, features) would carry the
+      // 530 B vector payload through every per-partition top-S task
+      // result — O(S × partitions) driver bytes, the same class of
+      // hazard this sample exists to remove.) The fit matrix is then
+      // id-ordered either way, so the fit's float accumulation order
+      // is the same one every certified SF already runs.
+      val sampled =
+        if (n <= IvfSampleN)
+          e.select(col("id").cast("long").as("__id"), col("features")).collect()
+        else {
+          val pickedIds = e
+            .select(col("id").cast("long").as("__id"))
+            .withColumn("__h", md5(col("__id").cast("string")))
+            .orderBy(col("__h"), col("__id"))
+            .limit(IvfSampleN.toInt)
+            .select(col("__id"))
+          e.select(col("id").cast("long").as("__id"), col("features"))
+            .join(broadcast(pickedIds), Seq("__id"), "left_semi")
+            .collect()
+        }
+      val pairs = sampled
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+      val rows = pairs.map(_._2)
+      val base =
+        if (n <= IvfScaleN) KMeans.fit(e, k = IvfK, iters = IvfIters)
+        else {
+          val seeds = pairs.sortBy { case (id, _) => (md5Hex(id.toString), id) }
+            .take(k).map(_._2.clone())
+          KMeans.fitLocal(rows, k, IvfIters, 0, initCenters = seeds)
+        }
+      val bal = graft.kmeans.BalancedIvf.splitHotCells(rows, base.centers,
+        capFactor = IvfCapFactor, maxCenters = k + IvfSplitBudget)
+      Array(KMeans.Model(bal.centers))
+    }).head
+  }
 
   /** IVF top-3 per query with the running cosine: nearest-`nprobe`-cells
     * pruning, self excluded (shared by q_ann_ivf and the recall
@@ -1118,30 +1093,20 @@ object MlQueries {
   // of the object — declaration order matters: the LSH bucket CTE vals
   // read them during object initialization)
 
-  /** One corpus-count census per (session, dir) — the input to the width
-    * pick (a count-star on a parquet footer scan, not a data read).
+  /** The corpus-count census, the input to the width pick (a count-star
+    * on a parquet footer scan, not a data read).
     */
-  private val embCountCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Long]()
-  private def embCount(s: SparkSession, dir: String): Long =
-    embCountCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      emb(s, dir).count())
+  private val embCount = Artifact("ml_embedding_count") { (s, dir) => emb(s, dir).count() }
 
   private def bandedBits(b: Int, w: Int): Column = concat((b * w until (b + 1) * w).map(j =>
     when(dot(col("features"), lit(hyperplane(j))) > 0.0, lit("1")).otherwise(lit("0"))): _*)
 
   /** Banded candidates → exact-cosine verify (> 0.35): (ida, idb, cos) —
-    * shared by the pair query and the grouping query. Memoized per
-    * (session, dir) and checkpointed, same policy as the text-side
-    * shingle artifacts: stages of one pipeline are materialized once and
-    * fanned out, not recomputed per consumer.
+    * shared by the pair query and the grouping query.
     */
-  private val bandedCache =
-    new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
-  private def bandedNearDup(s: SparkSession, dir: String): DataFrame =
-    bandedCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      bandedNearDupUncached(s, dir).localCheckpoint(true))
+  private val bandedNearDup = Artifact("ml_embedding_banded") { (s, dir) =>
+    bandedNearDupUncached(s, dir).localCheckpoint(true)
+  }
 
   private def bandedNearDupUncached(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
@@ -1302,11 +1267,9 @@ object MlQueries {
   private[graft] val SimhashWidthThreshold = Census.SimhashWidthThreshold
   private[graft] def simhashBitsFor(n: Long): Int = Census.simhashBitsFor(n)
 
-  private val docCountCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Long]()
-  private[graft] def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      s.read.parquet(s"$dir/documents.parquet").count())
+  private[graft] val docCount = Artifact("ml_doc_count") { (s, dir) =>
+    s.read.parquet(s"$dir/documents.parquet").count()
+  }
 
   /** W-bit SimHash fingerprints: (doc_id, simhash). Single pass: explode
     * words, hash once (two independent md5-derived 32-bit halves), W
@@ -1439,9 +1402,6 @@ object MlQueries {
   private val PqK = 4      // codewords per subspace
   private val PqIters = 2
 
-  private val pqCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[KMeans.Model]]()
-
   /** One deterministic k-means codebook per subspace, trained on the
     * sliced sub-vectors (same seeding/Lloyd/tie-break rules as every
     * other k-means here, so the unrolled SQL oracle reproduces each
@@ -1452,27 +1412,27 @@ object MlQueries {
     * budget, per-subspace distributed fits — at real scale PQ codebooks
     * are trained on a bounded sample anyway.
     */
-  private def pqModels(s: SparkSession, dir: String): Array[KMeans.Model] =
-    pqCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      graft.kmeans.ModelStore.getOrFit(s,
-        modelPath(s, dir, s"pq-m$PqM-d$PqDsub-k$PqK-i$PqIters"), {
-      val e = emb(s, dir)
-      val probe = e.agg(count(lit(1)).as("n"),
-        first(size(col("features"))).as("d")).head()
-      val n = probe.getLong(0)
-      val d = probe.getInt(1)
-      if (n * d <= KMeans.LocalFitCells) {
-        val rows = KMeans.collectById(e).map(r => r.getSeq[Double](1).toArray)
-        (0 until PqM).toArray.map { m =>
-          KMeans.fitLocal(rows.map(_.slice(m * PqDsub, (m + 1) * PqDsub)),
-            PqK, PqIters, firstSeedRank = 0)
-        }
-      } else (0 until PqM).toArray.map { m =>
-        KMeans.fit(
-          e.select(col("id"), slice(col("features"), m * PqDsub + 1, PqDsub).as("features")),
-          k = PqK, iters = PqIters)
+  private val pqModels = Artifact("ml_pq_codebooks") { (s, dir) =>
+    graft.kmeans.ModelStore.getOrFit(s,
+      modelPath(s, dir, s"pq-m$PqM-d$PqDsub-k$PqK-i$PqIters"), {
+    val e = emb(s, dir)
+    val probe = e.agg(count(lit(1)).as("n"),
+      first(size(col("features"))).as("d")).head()
+    val n = probe.getLong(0)
+    val d = probe.getInt(1)
+    if (n * d <= KMeans.LocalFitCells) {
+      val rows = KMeans.collectById(e).map(r => r.getSeq[Double](1).toArray)
+      (0 until PqM).toArray.map { m =>
+        KMeans.fitLocal(rows.map(_.slice(m * PqDsub, (m + 1) * PqDsub)),
+          PqK, PqIters, firstSeedRank = 0)
       }
-    }))
+    } else (0 until PqM).toArray.map { m =>
+      KMeans.fit(
+        e.select(col("id"), slice(col("features"), m * PqDsub + 1, PqDsub).as("features")),
+        k = PqK, iters = PqIters)
+    }
+    })
+  }
 
   /** PQ-coded ANN with asymmetric distance computation (ADC): vectors
     * are stored as M=8 one-byte codes (nearest codeword per 8-dim

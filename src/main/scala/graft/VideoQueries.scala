@@ -190,22 +190,16 @@ object VideoQueries {
     * box walk → stss sync numbers → stsc/stco/stsz byte ranges → mdat
     * slices → byte-sum signatures → sign-of-delta 64-bit fingerprint in
     * four 16-bit bands (the video twin of the audio energy-delta
-    * chromaprint). Map-side only — no shuffle at any scale. Memoized per
-    * (session, dir) with a localCheckpoint: the three content-tier
-    * queries share ONE container-decode pass.
+    * chromaprint). Map-side only — no shuffle at any scale. The three
+    * content-tier queries share ONE container-decode pass.
     */
-  private val fpCache =
-    new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
+  private val videoFingerprints = Artifact("video_fingerprints") { (s, dir) =>
+    videoFingerprintsUncached(s, dir).localCheckpoint(true)
+  }
 
-  private def videoFingerprints(s: SparkSession, dir: String): DataFrame =
-    fpCache.getOrElseUpdate((s.sparkContext.applicationId, dir),
-      videoFingerprintsUncached(s, dir).localCheckpoint(true))
-
-  /** Named thunks for Bench's separately-timed warmup pass. */
   private[graft] def sharedArtifactWarmers
-      : Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "video_fingerprints" ->
-      ((s: SparkSession, d: String) => { videoFingerprints(s, d); () }))
+      : Seq[(String, (SparkSession, String) => Unit)] =
+    Seq(videoFingerprints).map(_.warmer)
 
   private def videoFingerprintsUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

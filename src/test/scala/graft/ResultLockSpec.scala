@@ -72,7 +72,7 @@ object ResultLockSpec {
 
   def observe(q: Queries.Q): Lock = {
     val df = q.fn(SparkTestSession.get, sf)
-    val hashes = df.select(xxhash64(df.columns.sorted.map(col): _*))
+    val hashes = df.select(xxhash64(df.columns.sorted.toSeq.map(col): _*))
       .collect().map(_.getLong(0))
     Lock(hashes.length.toLong, df.schema.simpleString, hashes.sum)
   }
