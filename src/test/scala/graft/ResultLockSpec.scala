@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Behaviour lock for query results inside Tier-1: every query of the
-  * text, ML, audio, image and video families runs at sf0.001 and must
-  * reproduce its committed row count, schema and order-free fingerprint,
-  * the wrapping sum of `xxhash64` over its columns sorted by name. The
-  * fingerprint needs no sort and does not depend on partitioning, so a
-  * refactor that changes any row fails here without the DuckDB gate.
+/** Behaviour lock for query results inside Tier-1: every registered
+  * query runs at sf0.001 and must reproduce its committed row count,
+  * schema and order-free fingerprint, the wrapping sum of `xxhash64`
+  * over its columns sorted by name. The fingerprint needs no sort and
+  * does not depend on partitioning, so a refactor that changes any row fails here without the DuckDB gate.
+  * The two relational queries that are empty at sf0.001 are also locked
+  * at sf0.1, where they have rows.
   *
   * Spark's hash expressions hash −0.0 as 0.0 and every NaN bit pattern as
   * the one canonical NaN (the first test pins this), so floating-point
@@ -55,23 +56,34 @@ class ResultLockSpec extends AnyFunSuite {
       assert(got.fingerprint == expected.fingerprint,
         s"${q.name}: fingerprint ${got.fingerprint}, locked ${expected.fingerprint}")
     }
+
+  for ((name, expected) <- lockedAtScale)
+    test(s"$name reproduces its locked sf0.1 row count and fingerprint") {
+      val got = observe(lockedQueries.find(_.name == name).get, sfScale)
+      assert(got.rows > 0, s"$name returned no rows at sf0.1")
+      assert(got == expected, s"$name at sf0.1: got $got, locked $expected")
+    }
 }
 
 object ResultLockSpec {
   final case class Lock(rows: Long, schema: String, fingerprint: Long)
 
   private val sf = "/root/testdata/sf0.001"
+  private val sfScale = "/root/testdata/sf0.1"
 
-  /** No pair of the testdata's embeddings reaches cosine 0.9, at sf0.001,
-    * sf0.01 and sf0.1 alike, so this query is locked by its schema.
+  /** Empty at sf0.001, so locked there by their schema. No pair of the
+    * testdata's embeddings reaches cosine 0.9 at sf0.001, sf0.01 and sf0.1
+    * alike. Every customer of the sf0.001 tables has an order, and none
+    * has exactly one; both hold at sf0.01 for `q_anti_join`, and sf0.1
+    * makes both relational queries non-empty, so [[lockedAtScale]] locks
+    * their rows there.
     */
-  private val knownEmpty = Set("q_embedding_near_dup")
+  private val knownEmpty = Set("q_embedding_near_dup", "q_anti_join", "q_singletons")
 
-  val lockedQueries: Seq[Queries.Q] = TextQueries.all ++ MlQueries.all ++
-    AudioQueries.all ++ ImageQueries.all ++ VideoQueries.all
+  val lockedQueries: Seq[Queries.Q] = Queries.all
 
-  def observe(q: Queries.Q): Lock = {
-    val df = q.fn(SparkTestSession.get, sf)
+  def observe(q: Queries.Q, dir: String = sf): Lock = {
+    val df = q.fn(SparkTestSession.get, dir)
     val hashes = df.select(xxhash64(df.columns.sorted.toSeq.map(col): _*))
       .collect().map(_.getLong(0))
     Lock(hashes.length.toLong, df.schema.simpleString, hashes.sum)
@@ -83,10 +95,94 @@ object ResultLockSpec {
       val l = observe(q)
       println(s"""    "${q.name}" -> Lock(${l.rows}L, "${l.schema}", ${l.fingerprint}L),""")
     }
+    for (q <- lockedQueries if lockedAtScale.contains(q.name)) {
+      val l = observe(q, sfScale)
+      println(s"""    "${q.name}" -> Lock(${l.rows}L, "${l.schema}", ${l.fingerprint}L), // sf0.1""")
+    }
     SparkTestSession.get.stop()
   }
 
+  /** The sf0.1 rows of the queries that are empty at sf0.001. */
+  val lockedAtScale: Map[String, Lock] = Map(
+    "q_singletons" -> Lock(6L, "struct<o_custkey:bigint,cnt:bigint>", 7638465682690314206L),
+    "q_anti_join" -> Lock(1L, "struct<c_custkey:bigint,c_acctbal:double>", -3028163862327293496L))
+
   val locked: Map[String, Lock] = Map(
+    "q_scan_project" -> Lock(331L, "struct<l_orderkey:bigint,l_linenumber:int,net_price:double>", -1132236337021910863L),
+    "q_prefix_limit" -> Lock(100L, "struct<o_orderkey:bigint,price:double>", -8564039923478427636L),
+    "q_agg_sum" -> Lock(6L, "struct<l_returnflag:string,l_linestatus:string,sum_qty:double,sum_price:double,avg_disc:double,cnt:bigint>", 1235842392202535302L),
+    "q_label_histogram" -> Lock(5L, "struct<event_type:string,cnt:bigint>", 4326287890270119546L),
+    "q_singletons" -> Lock(0L, "struct<o_custkey:bigint,cnt:bigint>", 0L),
+    "q_topk_by_count" -> Lock(5L, "struct<l_partkey:bigint,cnt:bigint>", -896771306872716897L),
+    "q_join_broadcast" -> Lock(25L, "struct<p_brand:string,revenue:double,cnt:bigint>", -7401578717203086018L),
+    "q_join_multi" -> Lock(5L, "struct<r_name:string,revenue:double,n_orders:bigint>", -1078563017899503670L),
+    "q_semi_join" -> Lock(150L, "struct<c_custkey:bigint,c_name:string>", -189348333272318693L),
+    "q_anti_join" -> Lock(0L, "struct<c_custkey:bigint,c_acctbal:double>", 0L),
+    "q_union" -> Lock(13L, "struct<key:bigint,bal:double>", 5098150544740915421L),
+    "q_distinct" -> Lock(6L, "struct<l_returnflag:string,l_linestatus:string>", -2489873976834198433L),
+    "q_cross_join" -> Lock(125L, "struct<n_nationkey:int,n_name:string,n_regionkey:int,r_name:string>", -1178932503398561584L),
+    "q_argmin" -> Lock(1473L, "struct<l_orderkey:bigint,l_linenumber:int,min_price:double>", -8149443586004348545L),
+    "q_window_rank" -> Lock(449L, "struct<o_custkey:bigint,o_orderkey:bigint,rn:bigint>", -5393587378380180386L),
+    "q_l2_norm" -> Lock(500L, "struct<vec_id:bigint,l2norm:double>", 184520829978924085L),
+    "q_vector_sum_by_label" -> Lock(640L, "struct<label:int,pos:bigint,s:double>", 2093639234095698221L),
+    "q_centroids" -> Lock(640L, "struct<label:int,pos:bigint,c:double>", -3292008418111612033L),
+    "q_summary_std" -> Lock(640L, "struct<label:int,n:bigint,pos:bigint,sd:double>", -9077885641457258215L),
+    "q_mahalanobis" -> Lock(500L, "struct<vec_id:bigint,label:int,mdist:double>", 5232026069627418046L),
+    "q_sse_per_label" -> Lock(10L, "struct<label:int,sse:double>", 6321425793637732265L),
+    "q_events_window" -> Lock(987L, "struct<w_start:string,event_type:string,cnt:bigint,sum_value:double>", 7574014319172332633L),
+    "q_sessionize" -> Lock(946L, "struct<user_id:bigint,session_id:bigint,n_events:bigint,start_ts:string,end_ts:string>", 394445218302398149L),
+    "q_count_distinct" -> Lock(5L, "struct<event_type:string,n_users:bigint,n_events:bigint>", -2015302857700134926L),
+    "q_events_sliding" -> Lock(1950L, "struct<w_start:string,event_type:string,cnt:bigint>", -6371616709545009994L),
+    "q_salted_join" -> Lock(10L, "struct<s_name:string,revenue:double,cnt:bigint>", 2898827496225521897L),
+    "q_quantiles" -> Lock(5L, "struct<event_type:string,p50:double,p90:double,vmin:double,vmax:double>", 2392041294315425029L),
+    "q_asof_join" -> Lock(1000L, "struct<event_id:bigint,user_id:bigint,last_order_date:string>", 2158139971755856840L),
+    "q_value_histogram" -> Lock(28L, "struct<bucket:bigint,cnt:bigint>", 8392272906960354127L),
+    "q_rollup" -> Lock(19L, "struct<o_orderstatus:string,o_orderpriority:string,gid:bigint,cnt:bigint,rev:double>", -8575788669103746321L),
+    "q_cube" -> Lock(12L, "struct<l_returnflag:string,l_linestatus:string,gid:bigint,cnt:bigint,sum_qty:double>", 5308069437079406630L),
+    "q_grouping_sets" -> Lock(8L, "struct<o_orderstatus:string,o_orderpriority:string,gid:bigint,cnt:bigint,rev:double>", 7615514350167817534L),
+    "q_lead_lag" -> Lock(1500L, "struct<o_custkey:bigint,o_orderkey:bigint,days_since_prev:bigint,next_orderkey:bigint>", 292963331368284306L),
+    "q_moving_avg" -> Lock(1500L, "struct<o_custkey:bigint,o_orderkey:bigint,ma3:double>", 2514509366490124518L),
+    "q_ntile" -> Lock(150L, "struct<c_custkey:bigint,c_nationkey:int,quartile:bigint,pr_micro:bigint,cd_micro:bigint>", -6671490186246270745L),
+    "q_pivot" -> Lock(15L, "struct<user_id:bigint,n_click:bigint,n_error:bigint,n_purchase:bigint,n_signup:bigint,n_view:bigint>", 7944499441376585701L),
+    "q_full_outer_join" -> Lock(150L, "struct<key:bigint,n_events:bigint,n_orders:bigint>", -1882149588397521823L),
+    "q_interval_join" -> Lock(69L, "struct<o_orderkey:bigint,n_fast:bigint,qty:double>", 2251669513935065405L),
+    "q_band_join" -> Lock(2L, "struct<band:bigint,cnt:bigint,sum_price:double>", -7727195430052183386L),
+    "q_intersect" -> Lock(15L, "struct<key:bigint>", -2659409549770345854L),
+    "q_except" -> Lock(135L, "struct<key:bigint>", -4006495702438104047L),
+    "q_argmax_by" -> Lock(150L, "struct<o_custkey:bigint,latest_orderkey:bigint,latest_date:string>", 8519992263127435143L),
+    "q_month_agg" -> Lock(80L, "struct<month:string,cnt:bigint,rev:double>", -2598149907645406080L),
+    "q_scalar_subquery" -> Lock(76L, "struct<c_custkey:bigint,bal:double>", -7080835711417640663L),
+    "q_conditional_agg" -> Lock(3L, "struct<l_returnflag:string,disc_rev:double,n_bulk:bigint,cnt:bigint>", -1237948155291464859L),
+    "q_hash_sample" -> Lock(45L, "struct<doc_id:bigint,lang:string,n_chars:bigint>", -4135790343966043787L),
+    "q_approx_distinct_bound" -> Lock(5L, "struct<event_type:string,within_bound:bigint>", -5182085709732064473L),
+    "q_approx_quantiles_bound" -> Lock(5L, "struct<event_type:string,p50_ok:bigint,p90_ok:bigint>", 7507924724280275543L),
+    "q_session_window" -> Lock(946L, "struct<user_id:bigint,start_ts:string,end_ts:string,n_events:bigint>", 2806258133609096022L),
+    "q_json_extract" -> Lock(500L, "struct<doc_id:bigint,payload:string,x_lang:string,x_chars:bigint>", 1919116087864650121L),
+    "q_stats_corr" -> Lock(3L, "struct<l_returnflag:string,corr_qty_price:double,covar_qty_disc:double,sd_qty:double,var_disc:double,cnt:bigint>", 3818404976741304689L),
+    "q_date_parts" -> Lock(1500L, "struct<o_orderkey:bigint,y:bigint,q:bigint,m:bigint,dom:bigint,due_date:string,month_end:string>", -1739514578325992928L),
+    "q_string_funcs" -> Lock(150L, "struct<c_custkey:bigint,uname:string,padded:string,rname:string,short_name:string,prefix8:string,tagged:string>", -446589436367606069L),
+    "q_range_frame" -> Lock(1500L, "struct<o_custkey:bigint,o_orderkey:bigint,epoch_day:bigint,rev_30d:double,n_30d:bigint>", -9108137926043267496L),
+    "q_correlated_subquery" -> Lock(75L, "struct<c_custkey:bigint,c_nationkey:int,bal:double>", 8796534068571470225L),
+    "q_first_last" -> Lock(1500L, "struct<o_custkey:bigint,o_orderkey:bigint,first_key:bigint,last_key:bigint,second_key:bigint>", 4530946645058900539L),
+    "q_string_agg" -> Lock(150L, "struct<o_custkey:bigint,n_orders:bigint,statuses:string>", 8717965156475475517L),
+    "q_median_mode" -> Lock(3L, "struct<l_returnflag:string,median_qty:double,mode_qty:double,mode_n:bigint>", 256908081237963332L),
+    "q_bool_bit_agg" -> Lock(3L, "struct<l_returnflag:string,all_pos:bigint,any_deep_discount:bigint,ln_and:bigint,ln_or:bigint,ln_xor:bigint>", -5290113013973161987L),
+    "q_star_join" -> Lock(5L, "struct<n_name:string,revenue:double,n_items:bigint>", -4307218837613835195L),
+    "q_order_by_limit" -> Lock(100L, "struct<doc_id:bigint,n_chars:bigint>", 1903890799042348217L),
+    "q_gap_fill" -> Lock(10500L, "struct<user_id:bigint,bucket:bigint,n_events:bigint,v_filled_micro:bigint>", -8842898016009734772L),
+    "q_priority_sample" -> Lock(100L, "struct<doc_id:bigint,lang:string>", -7444520887161732455L),
+    "q_weighted_sample" -> Lock(50L, "struct<doc_id:bigint,n_chars:bigint>", 2537598076281709649L),
+    "q_incremental_stats" -> Lock(150L, "struct<event_type:string,day:string,d_n:bigint,cum_n:bigint,cum_sum:double,cum_avg:double>", -375659133208295847L),
+    "q_zorder_layout" -> Lock(11L, "struct<zbucket:bigint,n:bigint,span_x:bigint,span_y:bigint>", -6937566887845745558L),
+    "q_scd2_intervals" -> Lock(802L, "struct<user_id:bigint,run_id:bigint,event_type:string,valid_from:string,valid_to:string,n_events:bigint>", 5434652699956416724L),
+    "q_winsorize" -> Lock(5L, "struct<event_type:string,p05:double,p95:double,n_clipped_low:bigint,n_clipped_high:bigint,winsorized_mean:double>", 7230031394701921189L),
+    "q_k_anonymity" -> Lock(1L, "struct<n_groups:bigint,n_violating_groups:bigint,n_records_at_risk:bigint,min_group_size:bigint>", -236809424497904867L),
+    "q_data_expectations" -> Lock(5L, "struct<check_name:string,n_violations:bigint,passed:bigint>", 744268490837171277L),
+    "q_funnel" -> Lock(1L, "struct<n_users:bigint,reached_view:bigint,reached_click:bigint,reached_purchase:bigint>", -4509287588586271961L),
+    "q_funnel_strict" -> Lock(1L, "struct<n_view:bigint,n_click_after_view:bigint,n_purchase_after_click:bigint>", 3389251890451821064L),
+    "q_cohort_retention" -> Lock(5L, "struct<cohort_week:string,week_offset:bigint,active_users:bigint,retention_micro:bigint>", -3580355019983927641L),
+    "q_mad_outliers" -> Lock(5L, "struct<event_type:string,med:double,mad:double,n_outliers:bigint,n:bigint>", 5167943838601279387L),
+    "q_rolling_median" -> Lock(1000L, "struct<user_id:bigint,event_id:bigint,value:double,rolling_median5:double>", 8990750074951734255L),
     "q_dedup_exact" -> Lock(500L, "struct<h:string,cnt:bigint,canonical:bigint>", -1943317306680473726L),
     "q_token_count" -> Lock(500L, "struct<doc_id:bigint,n_tokens:bigint,n_chars_txt:bigint>", 6102584735144764808L),
     "q_token_bpe" -> Lock(500L, "struct<doc_id:bigint,n_subtokens:bigint,n_distinct_subtokens:bigint>", -2189226137865238291L),
@@ -187,6 +283,13 @@ object ResultLockSpec {
     "q_ann_sq8" -> Lock(15L, "struct<qid:bigint,cid:bigint,cos_sim:double,rn:bigint>", -4492719712787443838L),
     "q_embedding_clusters" -> Lock(8L, "struct<cluster:bigint,n:bigint,sse_micro:bigint,exemplar:bigint,mean_dist2_micro:bigint>", 2101928113376623268L),
     "q_jl_projection" -> Lock(100L, "struct<vec_id:bigint,d_orig:double,d_proj:double,ratio_micro:bigint>", 6089634952831274823L),
+    "q_bm25_search" -> Lock(10L, "struct<doc_id:bigint,score_micro:bigint,rn:bigint>", -886318049654613213L),
+    "q_hybrid_rrf" -> Lock(15L, "struct<qid:bigint,cid:bigint,r_lex:bigint,r_vec:bigint,rrf_micro:bigint,rn:bigint>", 7537310436223643246L),
+    "q_top_ngram_fraction" -> Lock(500L, "struct<doc_id:bigint,n_tokens:bigint,top2_micro:bigint,top3_micro:bigint,top4_micro:bigint>", 4211756185894405083L),
+    "q_winnowing" -> Lock(500L, "struct<doc_id:bigint,n_hashes:bigint,n_selected:bigint,density_micro:bigint>", 2735886468019548766L),
+    "q_dsir_weights" -> Lock(500L, "struct<doc_id:bigint,n_words:bigint,dsir_micro:bigint>", 2963753850444579992L),
+    "q_corpus_diff" -> Lock(60L, "struct<source:string,status:string,n_docs:bigint>", -1432604501309691353L),
+    "q_hard_negatives" -> Lock(29L, "struct<qid:bigint,cid:bigint,r_lex:bigint,r_vec:bigint>", 7575666480851823710L),
     "q_audio_meta" -> Lock(500L, "struct<doc_id:bigint,sample_rate:bigint,channels:bigint,n_samples:bigint,duration_ms:bigint>", 7231174970994681764L),
     "q_audio_features" -> Lock(500L, "struct<doc_id:bigint,rms_milli:bigint,peak:bigint,zcr:bigint>", -6511379489385305918L),
     "q_audio_fingerprint" -> Lock(500L, "struct<doc_id:bigint,b0:bigint,b1:bigint,b2:bigint,b3:bigint>", -6930948211588301519L),
