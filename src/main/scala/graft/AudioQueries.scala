@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Queries.Q
 import graft.multimodal.WavCodec
 import graft.operators.FingerprintDups
+import graft.sources.Tables
 
 /** Audio tier over REAL sample-level WAV decode — the time-domain twin of
   * ImageQueries: every document plants a spec-valid RIFF/PCM file whose
@@ -127,7 +128,7 @@ object AudioQueries {
 
   private def audioFeaturesUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+    Queries.fanOut(Tables.read(s, dir, "documents")
       .select(col("doc_id")), "doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -246,7 +247,7 @@ object AudioQueries {
       val audDup = audioNearDup.fn(s, dir)
         .select(col("id_b").as("doc_id")).distinct()
         .withColumn("audio_dup", lit(1L))
-      s.read.parquet(s"$dir/documents.parquet")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
         .join(imgDup, Seq("doc_id"), "left")
@@ -319,7 +320,7 @@ object AudioQueries {
   val audioFormats = Q("q_audio_formats",
     (s, dir) => {
       import s.implicits._
-      Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+      Queries.fanOut(Tables.read(s, dir, "documents")
         .select(col("doc_id")), "doc_id").as[Long]
         .mapPartitions { ids =>
           ids.map { id =>

@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Tables
+
 /** Benchmark main: runs the full query inventory against
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -54,11 +56,7 @@ object Bench {
     var i = 0L
     while (i < 300) {
       val jpg = ImageQueries.plantedJpeg(i)
-      for (d <- JpegCodec.decodeJpeg(jpg)) {
-        val luma = PixelCodec.luminance(d.pixels, d.channels)
-        val grid = PixelCodec.resizeArea(luma, d.width, d.height, 9, 8)
-        PixelCodec.dhashBands(grid)
-      }
+      JpegCodec.decodeJpeg(jpg).foreach(ImageQueries.dhashOf)
       JpegCodec.jpegKind(jpg)
       JpegCodec.decodeJpegProgressive(ImageQueries.plantedJpegProgressive(i))
       PixelCodec.decodePng(ImageQueries.plantedPng(i))
@@ -140,7 +138,7 @@ object Bench {
     // on exactly this)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").write
+      Tables.read(spark, sfDir, t).write
         .format("noop").mode("overwrite").save()
     }
 

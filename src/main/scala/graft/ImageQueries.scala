@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Queries.Q
 import graft.multimodal.{GifCodec, JpegCodec, PixelCodec}
 import graft.operators.FingerprintDups
+import graft.sources.Tables
 
 /** Image near-dup tier over REAL pixel decode — closes the round-9
   * verdict's "pixel ops are the one stub left": every document plants a
@@ -179,6 +180,16 @@ object ImageQueries {
     px
   }
 
+  /** The production dHash tail of a decoded image: luminance → area
+    * resize to the 9×8 grid → four 16-bit bands, returned with the grid.
+    * Bench's JIT warm pass calls it too, so it warms this very kernel.
+    */
+  private[graft] def dhashOf(d: PixelCodec.Decoded): (Array[Double], Array[Long]) = {
+    val grid = PixelCodec.resizeArea(
+      PixelCodec.luminance(d.pixels, d.channels), d.width, d.height, GridW, GridH)
+    (grid, PixelCodec.dhashBands(grid))
+  }
+
   /** doc_id → (b0..b3 dHash bands, mean-luma milli) via the REAL codec
     * chain of one container. Map-side only: `encode` plants the fixture,
     * `decode` onward (decode → luminance → area resize → dHash) is the
@@ -188,15 +199,13 @@ object ImageQueries {
       encode: Long => Array[Byte],
       decode: Array[Byte] => Option[PixelCodec.Decoded]): DataFrame = {
     import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+    Queries.fanOut(Tables.read(s, dir, "documents")
       .select(col("doc_id")), "doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val d = decode(encode(id)).getOrElse(
             throw new IllegalStateException(s"undecodable planted $container for doc $id"))
-          val luma = PixelCodec.luminance(d.pixels, d.channels)
-          val grid = PixelCodec.resizeArea(luma, d.width, d.height, GridW, GridH)
-          val bands = PixelCodec.dhashBands(grid)
+          val (grid, bands) = dhashOf(d)
           val meanMilli = math.floor(grid.sum * 1000.0 / 18360.0).toLong
           (id, bands(0), bands(1), bands(2), bands(3), meanMilli)
         }
@@ -403,7 +412,7 @@ object ImageQueries {
   val jpegQuarantine = Q("q_jpeg_quarantine",
     (s, dir) => {
       import s.implicits._
-      Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+      Queries.fanOut(Tables.read(s, dir, "documents")
         .select(col("doc_id")), "doc_id").as[Long]
         .mapPartitions { ids =>
           ids.map { id =>

@@ -10,7 +10,7 @@ import graft.eval.Nmi
 import graft.functions.TextOps
 import graft.functions.VectorFunctions._
 import graft.kmeans.KMeans
-import graft.sources.PointSource
+import graft.sources.{PointSource, Tables}
 
 /** The ML layer (SURVEY.md §2.11) and similarity-search operators over the
   * `embeddings` table: deterministic distributed k-means (M1/M2), the full
@@ -543,7 +543,7 @@ object MlQueries {
   }
 
   private def embWithLabel(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("e"), col("label"))
 
   private val D = 64
@@ -626,7 +626,7 @@ object MlQueries {
   val nmiLangSource = Q("q_nmi_lang_source",
     (s, dir) => {
       import s.implicits._
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Tables.read(s, dir, "documents")
       val v = Nmi.score(d.select(col("doc_id"), col("lang")),
         d.select(col("doc_id"), col("source")))
       Seq(math.rint(v * 1e6) / 1e6).toDF("nmi")
@@ -1268,7 +1268,7 @@ object MlQueries {
   private[graft] def simhashBitsFor(n: Long): Int = Census.simhashBitsFor(n)
 
   private[graft] val docCount = Artifact("ml_doc_count") { (s, dir) =>
-    s.read.parquet(s"$dir/documents.parquet").count()
+    Tables.read(s, dir, "documents").count()
   }
 
   /** W-bit SimHash fingerprints: (doc_id, simhash). Single pass: explode
@@ -1283,7 +1283,7 @@ object MlQueries {
                                widthOverride: Option[Int] = None): DataFrame = {
     val w = widthOverride.getOrElse(simhashBitsFor(docCount(s, dir)))
     val words = split(trim(col("text")), "\\s+")
-    val hashed = Queries.fanOut(s.read.parquet(s"$dir/documents.parquet"),
+    val hashed = Queries.fanOut(Tables.read(s, dir, "documents"),
         "doc_id")
       .select(col("doc_id"), explode(words).as("w"))
       .select(col("doc_id"),
@@ -1615,7 +1615,7 @@ object MlQueries {
       // one codegen dot against the label-selected centroid literal, and
       // the only exchange left is the final per-label rank window over
       // n rows (not n×d).
-      val long = s.read.parquet(s"$dir/embeddings.parquet")
+      val long = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           posexplode(col("embedding")).as(Seq("i", "e")))
         .withColumn("e", col("e").cast("double"))
@@ -1633,7 +1633,7 @@ object MlQueries {
           map(pairs.flatMap { case (l, c) => Seq(lit(l), lit(c)) }: _*),
           col("label"))
       }
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.read(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           transform(col("embedding"), _.cast("double")).as("f"))
         .withColumn("cent", centOf)

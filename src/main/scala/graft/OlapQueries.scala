@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
 import graft.Queries.{Q, cents, sumMoney, sqlSumMoney, sumIntUnits, sqlSumIntUnits}
 
 /** OLAP surface beyond the reference's own operators: multi-dimensional
@@ -23,9 +24,6 @@ import graft.Queries.{Q, cents, sumMoney, sqlSumMoney, sumIntUnits, sqlSumIntUni
   */
 object OlapQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------------
   // Multi-dimensional aggregation: rollup / cube / grouping sets
   // ---------------------------------------------------------------------
@@ -35,7 +33,7 @@ object OlapQueries {
     * the leftmost-column-is-MSB convention.
     */
   val rollupAgg = Q("q_rollup",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
         sumMoney(col("o_totalprice")).as("rev"))
@@ -47,7 +45,7 @@ object OlapQueries {
            |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin))
 
   val cubeAgg = Q("q_cube",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
         sumIntUnits(col("l_quantity")).as("sum_qty"))
@@ -59,7 +57,7 @@ object OlapQueries {
            |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin))
 
   val groupingSetsAgg = Q("q_grouping_sets",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .groupingSets(
         Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
         col("o_orderstatus"), col("o_orderpriority"))
@@ -81,7 +79,7 @@ object OlapQueries {
     (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w))
             .cast("long").as("days_since_prev"),
@@ -104,7 +102,7 @@ object OlapQueries {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(-2, 0)
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           round(avg(col("o_totalprice")).over(w), 4).as("ma3"))
     },
@@ -123,7 +121,7 @@ object OlapQueries {
     (s, dir) => {
       val w = Window.partitionBy(col("c_nationkey"))
         .orderBy(col("c_acctbal"), col("c_custkey"))
-      t(s, dir, "customer")
+      Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"),
           ntile(4).over(w).cast("long").as("quartile"),
           floor(percent_rank().over(w) * 1000000).cast("long").as("pr_micro"),
@@ -164,7 +162,7 @@ object OlapQueries {
     (s, dir) => {
       val a = Queries.events(s, dir)
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      val b = t(s, dir, "orders")
+      val b = Tables.read(s, dir, "orders")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
       a.join(b, a("user_id") === b("o_custkey"), "full_outer")
         .select(coalesce(col("user_id"), col("o_custkey")).as("key"),
@@ -183,8 +181,8 @@ object OlapQueries {
     * a residual predicate — no time-bucketed crossJoin needed.
     */
   val intervalJoin = Q("q_interval_join",
-    (s, dir) => t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey")
+    (s, dir) => Tables.read(s, dir, "lineitem")
+      .join(Tables.read(s, dir, "orders"), col("l_orderkey") === col("o_orderkey")
         && col("l_shipdate") >= col("o_orderdate")
         && col("l_shipdate") < col("o_orderdate") + expr("INTERVAL 30 DAYS"))
       .groupBy(col("o_orderkey"))
@@ -205,7 +203,7 @@ object OlapQueries {
       val bands = (0 until 10)
         .map(i => (i.toLong, 900.0 + 10 * i, 910.0 + 10 * i))
         .toDF("band", "lo", "hi")
-      t(s, dir, "part")
+      Tables.read(s, dir, "part")
         .join(broadcast(bands),
           col("p_retailprice") >= col("lo") && col("p_retailprice") < col("hi"))
         .groupBy(col("band"))
@@ -222,12 +220,12 @@ object OlapQueries {
   // ---------------------------------------------------------------------
 
   val intersectKeys = Q("q_intersect",
-    (s, dir) => t(s, dir, "orders").select(col("o_custkey").as("key"))
+    (s, dir) => Tables.read(s, dir, "orders").select(col("o_custkey").as("key"))
       .intersect(Queries.events(s, dir).select(col("user_id").as("key"))),
     Some("SELECT o_custkey AS key FROM orders INTERSECT SELECT user_id FROM events"))
 
   val exceptKeys = Q("q_except",
-    (s, dir) => t(s, dir, "orders").select(col("o_custkey").as("key"))
+    (s, dir) => Tables.read(s, dir, "orders").select(col("o_custkey").as("key"))
       .except(Queries.events(s, dir).select(col("user_id").as("key"))),
     Some("SELECT o_custkey AS key FROM orders EXCEPT SELECT user_id FROM events"))
 
@@ -244,7 +242,7 @@ object OlapQueries {
     (s, dir) => {
       val ordKey = datediff(col("o_orderdate"), lit(java.sql.Date.valueOf("1970-01-01")))
         .cast("long") * lit(4294967296L) + col("o_orderkey")
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .groupBy(col("o_custkey"))
         .agg(max_by(col("o_orderkey"), ordKey).as("latest_orderkey"),
           date_format(max(col("o_orderdate")), "yyyy-MM-dd").as("latest_date"))
@@ -257,7 +255,7 @@ object OlapQueries {
            |FROM orders GROUP BY o_custkey""".stripMargin))
 
   val monthAgg = Q("q_month_agg",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd").as("month"))
       .agg(count(lit(1)).as("cnt"), sumMoney(col("o_totalprice")).as("rev")),
     Some(s"""SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS month,
@@ -269,7 +267,7 @@ object OlapQueries {
     */
   val scalarSubquery = Q("q_scalar_subquery",
     (s, dir) => {
-      val c = t(s, dir, "customer")
+      val c = Tables.read(s, dir, "customer")
       val avgBal = c.agg(avg(col("c_acctbal")).as("ab"))
       c.crossJoin(broadcast(avgBal))
         .filter(col("c_acctbal") > col("ab"))
@@ -282,7 +280,7 @@ object OlapQueries {
     * restricted to discounted rows + a bulk-line count, one scan.
     */
   val conditionalAgg = Q("q_conditional_agg",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         (sum(when(col("l_discount") > 0.05, cents(col("l_extendedprice"))))
@@ -302,7 +300,7 @@ object OlapQueries {
     * engine, every run, any partitioning.
     */
   val hashSample = Q("q_hash_sample",
-    (s, dir) => t(s, dir, "documents")
+    (s, dir) => Tables.read(s, dir, "documents")
       .filter(conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long") % 10 === 0)
       .select(col("doc_id"), col("lang"), col("n_chars")),
@@ -439,7 +437,7 @@ object OlapQueries {
       val payload = to_json(struct(
         coalesce(col("lang"), lit("")).as("lang"),
         coalesce(col("n_chars"), lit(0)).as("n_chars")))
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), payload.as("payload"))
         .select(col("doc_id"), col("payload"),
           get_json_object(col("payload"), "$.lang").as("x_lang"),
@@ -460,7 +458,7 @@ object OlapQueries {
     * co-moment magnitudes keep the rounded decimals stable).
     */
   val statsCorr = Q("q_stats_corr",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"),
@@ -485,7 +483,7 @@ object OlapQueries {
       val dayKey = datediff(col("o_orderdate"), lit(java.sql.Date.valueOf("1970-01-01")))
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("epoch_day"))
         .rangeBetween(-30, 0)
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("epoch_day", dayKey.cast("long"))
         .select(col("o_custkey"), col("o_orderkey"), col("epoch_day"),
           (sum(cents(col("o_totalprice"))).over(w).cast("double") / 100.0)
@@ -509,7 +507,7 @@ object OlapQueries {
     */
   val correlatedSubquery = Q("q_correlated_subquery",
     (s, dir) => {
-      val c = t(s, dir, "customer")
+      val c = Tables.read(s, dir, "customer")
       val natAvg = c.groupBy(col("c_nationkey").as("nk"))
         .agg(avg(col("c_acctbal")).as("nat_avg"))
       c.join(broadcast(natAvg), col("c_nationkey") === col("nk"))
@@ -527,7 +525,7 @@ object OlapQueries {
     * strings).
     */
   val dateParts = Q("q_date_parts",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .select(col("o_orderkey"),
         year(col("o_orderdate")).cast("long").as("y"),
         quarter(col("o_orderdate")).cast("long").as("q"),
@@ -546,7 +544,7 @@ object OlapQueries {
     * replacement, slicing, concatenation — one composed pass.
     */
   val stringFuncs = Q("q_string_funcs",
-    (s, dir) => t(s, dir, "customer")
+    (s, dir) => Tables.read(s, dir, "customer")
       .select(col("c_custkey"),
         upper(col("c_name")).as("uname"),
         lpad(col("c_custkey").cast("string"), 12, "0").as("padded"),
@@ -573,7 +571,7 @@ object OlapQueries {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
+      Tables.read(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"),
         first(col("o_orderkey")).over(w).as("first_key"),
         last(col("o_orderkey")).over(w).as("last_key"),
         nth_value(col("o_orderkey"), 2).over(w).as("second_key"))
@@ -592,7 +590,7 @@ object OlapQueries {
     * string_agg yields the same multiset order.
     */
   val stringAgg = Q("q_string_agg",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
         array_join(array_sort(collect_list(col("o_orderstatus"))), ",").as("statuses")),
@@ -608,7 +606,7 @@ object OlapQueries {
     */
   val medianMode = Q("q_median_mode",
     (s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables.read(s, dir, "lineitem")
       val w = Window.partitionBy(col("l_returnflag"))
         .orderBy(col("c").desc, col("l_quantity"))
       val mode = li.groupBy(col("l_returnflag"), col("l_quantity"))
@@ -641,7 +639,7 @@ object OlapQueries {
     * BIGINT so both engines agree on the aggregate type.
     */
   val boolBitAgg = Q("q_bool_bit_agg",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .withColumn("ln", col("l_linenumber").cast("long"))
       .groupBy(col("l_returnflag"))
       .agg(expr("bool_and(l_quantity > 0)").cast("long").as("all_pos"),
@@ -670,13 +668,13 @@ object OlapQueries {
     */
   val starJoin = Q("q_star_join",
     (s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables.read(s, dir, "orders")
         .filter(col("o_orderdate") >= "1996-01-01" && col("o_orderdate") < "1998-01-01")
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA")),
+        .join(Tables.read(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(broadcast(Tables.read(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(Tables.read(s, dir, "region").filter(col("r_name") === "ASIA")),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
         .agg((sum(cents(col("l_extendedprice")) * cents(lit(1) - col("l_discount")))
@@ -703,7 +701,7 @@ object OlapQueries {
     * doc_id) composite makes the top-100 set unique.
     */
   val orderByLimit = Q("q_order_by_limit",
-    (s, dir) => t(s, dir, "documents")
+    (s, dir) => Tables.read(s, dir, "documents")
       .orderBy(col("n_chars").desc, col("doc_id"))
       .limit(100)
       .select(col("doc_id"), col("n_chars")),
@@ -771,7 +769,7 @@ object OlapQueries {
     * union across 100 TB of partitions" primitive.
     */
   val prioritySample = Q("q_priority_sample",
-    (s, dir) => t(s, dir, "documents")
+    (s, dir) => Tables.read(s, dir, "documents")
       .orderBy(md5(col("doc_id").cast("string")))
       .limit(100)
       .select(col("doc_id"), col("lang")),
@@ -791,7 +789,7 @@ object OlapQueries {
     (s, dir) => {
       val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") + 1).cast("double") / 4294967297.0
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .withColumn("pri", log(u) / col("n_chars").cast("double"))
         .orderBy(col("pri").desc)
         .limit(50)
@@ -1004,7 +1002,7 @@ object OlapQueries {
   val kAnonymity = Q("q_k_anonymity",
     (s, dir) => {
       val k = 6
-      val groups = t(s, dir, "customer")
+      val groups = Tables.read(s, dir, "customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
       groups.agg(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import graft.operators.SummaryAggregator
+import graft.sources.Tables
 
 /** The engine's operator inventory (SURVEY.md §2), each entry exercising
   * one operator family on the driver's testdata and paired with an ANSI
@@ -45,9 +46,6 @@ object Queries {
       oracle: Option[String],
       scaleOracle: Option[String] = None)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Spread a narrow scan across the session's cores before a CPU-heavy
     * map kernel (opt §2.5/§2.6: stragglers and idle capacity).
     *
@@ -84,8 +82,7 @@ object Queries {
     * and oracle sees one type.
     */
   private[graft] def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.read(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
@@ -99,7 +96,7 @@ object Queries {
     * and task count, no compute win.
     */
   private def emb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("e"), col("label"))
 
   // ---------------------------------------------------------------------
@@ -144,7 +141,7 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val scanProject = Q("q_scan_project",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .filter(col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1995-06-01 00:00:00")))
       .select(col("l_orderkey"), col("l_linenumber"),
         // prices/discounts are 2-decimal: the product has exactly 4
@@ -156,7 +153,7 @@ object Queries {
            |FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-06-01 00:00:00'""".stripMargin))
 
   val prefixLimit = Q("q_prefix_limit",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .orderBy(col("o_orderkey")).limit(100)
       .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price")),
     Some("SELECT o_orderkey, round(o_totalprice, 2) AS price FROM orders ORDER BY o_orderkey LIMIT 100"))
@@ -166,7 +163,7 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val aggSum = Q("q_agg_sum",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sumIntUnits(col("l_quantity")).as("sum_qty"),
@@ -190,13 +187,13 @@ object Queries {
     Some("SELECT event_type, count(*) AS cnt FROM events GROUP BY event_type"))
 
   val singletons = Q("q_singletons",
-    (s, dir) => t(s, dir, "orders")
+    (s, dir) => Tables.read(s, dir, "orders")
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") === 1),
     Some("SELECT o_custkey, count(*) AS cnt FROM orders GROUP BY o_custkey HAVING count(*) = 1"))
 
   val topkByCount = Q("q_topk_by_count",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("l_partkey")).limit(5),
     Some("""SELECT l_partkey, count(*) AS cnt FROM lineitem
@@ -207,18 +204,18 @@ object Queries {
   // ---------------------------------------------------------------------
 
   val joinBroadcast = Q("q_join_broadcast",
-    (s, dir) => t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+    (s, dir) => Tables.read(s, dir, "lineitem")
+      .join(broadcast(Tables.read(s, dir, "part")), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(sumMoney(col("l_extendedprice")).as("revenue"), count(lit(1)).as("cnt")),
     Some(s"""SELECT p_brand, ${sqlSumMoney("l_extendedprice")} AS revenue, count(*) AS cnt
            |FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand""".stripMargin))
 
   val joinMulti = Q("q_join_multi",
-    (s, dir) => t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+    (s, dir) => Tables.read(s, dir, "orders")
+      .join(Tables.read(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.read(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.read(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"))
       .agg(sumMoney(col("o_totalprice")).as("revenue"), count(lit(1)).as("n_orders")),
     Some(s"""SELECT r_name, ${sqlSumMoney("o_totalprice")} AS revenue, count(*) AS n_orders
@@ -229,25 +226,25 @@ object Queries {
            |GROUP BY r_name""".stripMargin))
 
   val semiJoin = Q("q_semi_join",
-    (s, dir) => t(s, dir, "customer")
-      .join(t(s, dir, "orders").select(col("o_custkey")),
+    (s, dir) => Tables.read(s, dir, "customer")
+      .join(Tables.read(s, dir, "orders").select(col("o_custkey")),
         col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name")),
     Some("SELECT c_custkey, c_name FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders)"))
 
   val antiJoin = Q("q_anti_join",
-    (s, dir) => t(s, dir, "customer")
-      .join(t(s, dir, "orders").select(col("o_custkey")),
+    (s, dir) => Tables.read(s, dir, "customer")
+      .join(Tables.read(s, dir, "orders").select(col("o_custkey")),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_acctbal")),
     Some("""SELECT c_custkey, c_acctbal FROM customer
            |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin))
 
   val unionAll = Q("q_union",
-    (s, dir) => t(s, dir, "customer")
+    (s, dir) => Tables.read(s, dir, "customer")
       .filter(col("c_acctbal") > 9000)
       .select(col("c_custkey").as("key"), round(col("c_acctbal"), 2).as("bal"))
-      .union(t(s, dir, "supplier")
+      .union(Tables.read(s, dir, "supplier")
         .filter(col("s_acctbal") > 9000)
         .select(col("s_suppkey").as("key"), round(col("s_acctbal"), 2).as("bal"))),
     Some("""SELECT c_custkey AS key, round(c_acctbal, 2) AS bal FROM customer WHERE c_acctbal > 9000
@@ -255,13 +252,13 @@ object Queries {
            |SELECT s_suppkey AS key, round(s_acctbal, 2) AS bal FROM supplier WHERE s_acctbal > 9000""".stripMargin))
 
   val distinctPairs = Q("q_distinct",
-    (s, dir) => t(s, dir, "lineitem")
+    (s, dir) => Tables.read(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus")).distinct(),
     Some("SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"))
 
   val crossJoinSmall = Q("q_cross_join",
-    (s, dir) => t(s, dir, "nation")
-      .crossJoin(broadcast(t(s, dir, "region").select(col("r_name")))),
+    (s, dir) => Tables.read(s, dir, "nation")
+      .crossJoin(broadcast(Tables.read(s, dir, "region").select(col("r_name")))),
     Some("SELECT n_nationkey, n_name, n_regionkey, r_name FROM nation CROSS JOIN (SELECT r_name FROM region) r"))
 
   // ---------------------------------------------------------------------
@@ -272,7 +269,7 @@ object Queries {
     (s, dir) => {
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_extendedprice"), col("l_linenumber"))
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -289,7 +286,7 @@ object Queries {
     (s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("rn", row_number().over(w).cast("long")) // BIGINT like the oracle's row_number
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
@@ -449,9 +446,9 @@ object Queries {
   val saltedJoin = Q("q_salted_join",
     (s, dir) => {
       val salts = 8
-      val fact = t(s, dir, "lineitem")
+      val fact = Tables.read(s, dir, "lineitem")
         .withColumn("__salt", pmod(crc32(col("l_orderkey").cast("string")), lit(salts)).cast("int"))
-      val dim = t(s, dir, "supplier")
+      val dim = Tables.read(s, dir, "supplier")
         .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
       fact.join(dim, fact("l_suppkey") === dim("s_suppkey") && fact("__salt") === dim("__salt"))
         .groupBy(col("s_name"))
@@ -468,7 +465,7 @@ object Queries {
     */
   val asofJoin = Q("q_asof_join",
     (s, dir) => {
-      val orders = t(s, dir, "orders").select(
+      val orders = Tables.read(s, dir, "orders").select(
         col("o_custkey").as("key"), col("o_orderdate").as("t"),
         lit(1).as("is_order"), col("o_orderdate").as("od"),
         lit(null).cast("long").as("event_id"))

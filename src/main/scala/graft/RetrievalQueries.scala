@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.functions.{TextOps, VectorFunctions}
+import graft.sources.Tables
 
 /** Retrieval and data-curation operators over the `documents` (and
   * `embeddings`) tables: BM25 lexical search, hybrid lexical+vector rank
@@ -26,16 +27,10 @@ import graft.functions.{TextOps, VectorFunctions}
   */
 object RetrievalQueries {
 
-  // NOT fanned out ([[Queries.fanOut]]): the retrieval kernels are
-  // term-filtered probes and bounded rank windows — light enough that
+  // Tables are NOT fanned out ([[Queries.fanOut]]): the retrieval kernels
+  // are term-filtered probes and bounded rank windows — light enough that
   // the fan-out exchange measured a consistent +0.3-0.6 s per query
   // (min-of-two full benches) with no compute win
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
 
   private def wordsCol: Column = TextOps.words(col("text"))
   private val wordsSql = TextQueries.wordsSql
@@ -60,7 +55,7 @@ object RetrievalQueries {
 
   val bm25Search = Q("q_bm25_search",
     (s, dir) => {
-      val tok = docs(s, dir).select(col("doc_id"), explode(wordsCol).as("w"))
+      val tok = Tables.read(s, dir, "documents").select(col("doc_id"), explode(wordsCol).as("w"))
       val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
         .localCheckpoint(true)
       val st = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
@@ -123,7 +118,7 @@ object RetrievalQueries {
     */
   val hybridRrf = Q("q_hybrid_rrf",
     (s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.read(s, dir, "documents")
       val dw = d.select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .localCheckpoint(true)
       val qw = dw.filter(col("doc_id") < 3)
@@ -135,7 +130,7 @@ object RetrievalQueries {
       val wl = Window.partitionBy(col("qid"))
         .orderBy(col("shared").desc, col("cid"))
       val lexRank = lex.withColumn("r_lex", row_number().over(wl).cast("long"))
-      val e = emb(s, dir)
+      val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         .select(col("vec_id"), VectorFunctions.toDoubleArray(col("embedding")).as("e"))
       val qe = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("e").as("qe"))
@@ -200,7 +195,7 @@ object RetrievalQueries {
     */
   val topNgramFraction = Q("q_top_ngram_fraction",
     (s, dir) => {
-      val base = docs(s, dir)
+      val base = Tables.read(s, dir, "documents")
         .select(col("doc_id"), wordsCol.as("__ws"))
         .select(col("doc_id"), col("__ws"), size(col("__ws")).cast("long").as("nt"))
         .localCheckpoint(true)
@@ -301,7 +296,7 @@ object RetrievalQueries {
   }
 
   val winnowing = Q("q_winnowing",
-    (s, dir) => winnowingSelected(docs(s, dir))
+    (s, dir) => winnowingSelected(Tables.read(s, dir, "documents"))
       .groupBy(col("doc_id"))
       .agg((max(col("nw")) - lit(winK - 1)).as("n_hashes"),
         countDistinct(col("wmin")).as("n_selected"))
@@ -345,7 +340,7 @@ object RetrievalQueries {
   val dsirWeights = Q("q_dsir_weights",
     (s, dir) => {
       val B = 64
-      val tok = docs(s, dir)
+      val tok = Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("lang"), explode(wordsCol).as("w"))
         .withColumn("b",
           (conv(substring(md5(col("w")), 1, 4), 16, 10).cast("long") % B).cast("int"))
@@ -405,7 +400,7 @@ object RetrievalQueries {
     */
   val corpusDiff = Q("q_corpus_diff",
     (s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.read(s, dir, "documents")
       val now = d.select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       val prev = d.filter(col("doc_id") % 7 =!= 3)
         .select(col("doc_id"), col("source"),
@@ -463,7 +458,7 @@ object RetrievalQueries {
     */
   val hardNegatives = Q("q_hard_negatives",
     (s, dir) => {
-      val dw = docs(s, dir)
+      val dw = Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .localCheckpoint(true)
       val qw = dw.filter(col("doc_id") < 3)
@@ -476,7 +471,7 @@ object RetrievalQueries {
         .orderBy(col("shared").desc, col("cid"))
       val lexTop = lex.withColumn("r_lex", row_number().over(wl).cast("long"))
         .filter(col("r_lex") <= 10)
-      val e = emb(s, dir)
+      val e = Tables.read(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         .select(col("vec_id"), VectorFunctions.toDoubleArray(col("embedding")).as("e"))
       val qe = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("e").as("qe"))

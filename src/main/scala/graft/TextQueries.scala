@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.functions.{NativeTextFunctions, TextOps}
+import graft.sources.Tables
 
 /** Training-data-pipeline text operators over the `documents` table:
   * deduplication (exact / MinHash-LSH / n-gram fingerprints), language
@@ -21,26 +22,21 @@ import graft.functions.{NativeTextFunctions, TextOps}
   */
 object TextQueries {
 
-  /** documents, plain scan. Round 14 fanned this out for EVERY text
-    * consumer; measured per-query, the extra exchange + 32-task stage
-    * costs light-kernel queries +0.3-0.8 s each (q_tfidf, q_pmi_*,
-    * q_ngram_jaccard, q_bigram_*, q_bpe_merge_*) while only the
-    * CPU-heavy per-doc kernels earn it back — so the fan-out now lives
-    * in [[docsFanned]] and is applied per consumer, exactly like the
-    * round-14 retrieval revert.
-    */
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** documents fanned out across cores — ONLY ahead of proven CPU-heavy
     * per-doc kernels (shingle/MinHash builders, per-gram md5 explodes,
     * the staged 7-language filter cascade): the single-row-group
     * testdata scan otherwise serializes the kernel on one task — see
     * [[Queries.fanOut]]. Row set identical; no consumer depends on scan
     * order (every consumer groups, joins, or sorts explicitly).
+    *
+    * Every other consumer reads the plain scan. Round 14 fanned out
+    * EVERY text consumer; measured per-query, the extra exchange +
+    * 32-task stage costs light-kernel queries +0.3-0.8 s each (q_tfidf,
+    * q_pmi_*, q_ngram_jaccard, q_bigram_*, q_bpe_merge_*) while only the
+    * CPU-heavy per-doc kernels earn it back.
     */
   private def docsFanned(s: SparkSession, dir: String): DataFrame =
-    Queries.fanOut(docs(s, dir), "doc_id")
+    Queries.fanOut(Tables.read(s, dir, "documents"), "doc_id")
 
   /** Materialized stages of the shingle pipeline: exploded distinct
     * shingles → MinHash signature → LSH candidate pairs. Five queries
@@ -85,7 +81,7 @@ object TextQueries {
   // ---------------------------------------------------------------------
 
   val dedupExact = Q("q_dedup_exact",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .groupBy(md5(col("text")).as("h"))
       .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("canonical")),
     Some("SELECT md5(text) AS h, count(*) AS cnt, min(doc_id) AS canonical FROM documents GROUP BY md5(text)"))
@@ -95,7 +91,7 @@ object TextQueries {
   // ---------------------------------------------------------------------
 
   val tokenCount = Q("q_token_count",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("doc_id"), size(wordsCol).cast("long").as("n_tokens"),
         length(col("text")).cast("long").as("n_chars_txt")),
     Some(s"""SELECT doc_id, len($wordsSql) AS n_tokens,
@@ -116,7 +112,7 @@ object TextQueries {
   val textNormalize = Q("q_text_normalize",
     (s, dir) => {
       val norm = TextOps.normalize(col("text"))
-      docs(s, dir).select(col("doc_id"),
+      Tables.read(s, dir, "documents").select(col("doc_id"),
         md5(norm).as("norm_hash"), length(norm).cast("long").as("norm_len"))
     },
     Some(s"""SELECT doc_id,
@@ -139,7 +135,7 @@ object TextQueries {
   private val bpePattern = """\p{Ll}+|\p{Lu}\p{Ll}*|\p{N}+|\p{L}+|[^\p{L}\p{N}\s]"""
 
   val tokenBpe = Q("q_token_bpe",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         regexp_count(col("text"), lit(bpePattern)).cast("long").as("n_subtokens"),
         size(array_distinct(regexp_extract_all(col("text"), lit(bpePattern), lit(0))))
@@ -158,7 +154,7 @@ object TextQueries {
     * derived from the BIGINT sums identically on both engines.
     */
   val tokenizerFertility = Q("q_tokenizer_fertility",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("lang"), col("n_chars"),
         regexp_count(col("text"), lit(bpePattern)).cast("long").as("nt"),
         size(wordsCol).cast("long").as("nw"))
@@ -265,7 +261,7 @@ object TextQueries {
     * BpeRounds rows of driver state).
     */
   private val bpeTrain = Artifact("text_bpe_train") { (s, dir) =>
-    var vocab = docs(s, dir).select(explode(wordsCol).as("w"))
+    var vocab = Tables.read(s, dir, "documents").select(explode(wordsCol).as("w"))
       .filter(length(col("w")) >= 2 && !col("w").contains("|"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("freq"),
@@ -481,7 +477,7 @@ object TextQueries {
     })
 
   private val bpeBatchTrain = Artifact("text_bpe_batch") { (s, dir) =>
-    bpeTrainBatched(docs(s, dir), BatchRounds, BatchW)._1
+    bpeTrainBatched(Tables.read(s, dir, "documents"), BatchRounds, BatchW)._1
   }
 
   /** The batched training loop, parameterized so the oracle-gated query
@@ -608,7 +604,7 @@ object TextQueries {
       val stopArr = array(stopLits.map(lit): _*)
       val nWords = size(words)
       val nStop = size(filter(words, w => array_contains(stopArr, w)))
-      docs(s, dir).select(
+      Tables.read(s, dir, "documents").select(
         col("doc_id"),
         nWords.cast("long").as("n_words"),
         nStop.cast("long").as("n_stop"),
@@ -643,7 +639,7 @@ object TextQueries {
       // w0 + w_stop·stop_ratio + w_len·avg_token_len + w_n·ln(n_words)
       val z = lit(-2.0) + lit(6.0) * stopRatio + lit(-0.2) * avgLen +
         lit(0.35) * log(nWords)
-      docs(s, dir).select(
+      Tables.read(s, dir, "documents").select(
         col("doc_id"),
         floor(lit(1e6) / (lit(1.0) + exp(-z))).cast("long").as("score_micro"),
         (z >= 0).cast("long").as("keep"))
@@ -659,7 +655,7 @@ object TextQueries {
     })
 
   val langHistogram = Q("q_lang_histogram",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("cnt"), round(avg(col("n_chars")), 4).as("avg_chars")),
     Some("""SELECT lang, source, count(*) AS cnt, round(avg(n_chars), 4) AS avg_chars
@@ -763,16 +759,16 @@ object TextQueries {
     */
   val vocabGrowth = Q("q_vocab_growth",
     (s, dir) => {
-      val m = docs(s, dir).agg((max(col("doc_id")) + 1).as("m"))
+      val m = Tables.read(s, dir, "documents").agg((max(col("doc_id")) + 1).as("m"))
       val w = Window.orderBy(col("bucket"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val firstOcc = docs(s, dir)
+      val firstOcc = Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .groupBy(col("w")).agg(min(col("doc_id")).as("first_doc"))
         .crossJoin(broadcast(m))
         .select(expr("(first_doc * 256) div m").as("bucket"))
         .groupBy(col("bucket")).agg(count(lit(1)).as("new_words"))
-      val tok = docs(s, dir)
+      val tok = Tables.read(s, dir, "documents")
         .crossJoin(broadcast(m))
         .select(expr("(doc_id * 256) div m").as("bucket"),
           size(wordsCol).cast("long").as("nt"))
@@ -1064,7 +1060,7 @@ object TextQueries {
     * and partition shape are real).
     */
   val multimodalMeta = Q("q_multimodal_meta",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),
         (conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long") % 1920).as("fake_width"),
@@ -1086,7 +1082,7 @@ object TextQueries {
       val canon = canonical(s, dir)
       val w = Window.partitionBy(col("grp"))
         .orderBy(col("source"), col("doc_id"))
-      docs(s, dir).select(col("doc_id"), col("source"))
+      Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
         .join(canon.hint("shuffle_merge"), Seq("doc_id"), "left")
         .withColumn("grp", coalesce(col("canonical_id"), col("doc_id")))
         .withColumn("rk", row_number().over(w))
@@ -1118,7 +1114,7 @@ object TextQueries {
         size(words)).cast("long")
       val w = Window.partitionBy(col("lang"))
         .orderBy(col("q").desc, col("doc_id"))
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), col("lang"), ratioMicro.as("q"))
         .withColumn("b", ntile(3).over(w))
         .select(col("doc_id"), col("lang"), col("q").as("stop_ratio_micro"),
@@ -1157,7 +1153,7 @@ object TextQueries {
       val ws = wordsCol
       val extra = greatest(ceil((size(ws) - chunkW).cast("double") / chunkS), lit(0.0))
         .cast("long")
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), ws.as("__ws"),
           explode(sequence(lit(0L), extra)).as("chunk_idx"))
         .select(col("doc_id"), col("chunk_idx"),
@@ -1226,7 +1222,7 @@ object TextQueries {
     (s, dir) => {
       val planted = piiPlanted
       val redacted = piiRedacted(planted)
-      docs(s, dir).select(col("doc_id"),
+      Tables.read(s, dir, "documents").select(col("doc_id"),
         regexp_count(planted, lit(emailPat)).cast("long").as("n_email"),
         regexp_count(planted, lit(phonePat)).cast("long").as("n_phone"),
         regexp_count(planted, lit(ipPat)).cast("long").as("n_ip"),
@@ -1258,7 +1254,7 @@ object TextQueries {
   val trainingExamples = Q("q_training_examples",
     (s, dir) => {
       val canon = canonical(s, dir)
-      val kept = docs(s, dir)
+      val kept = Tables.read(s, dir, "documents")
         .join(canon.hint("shuffle_merge"), Seq("doc_id"), "left")
         .filter(coalesce(col("canonical_id"), col("doc_id")) === col("doc_id"))
       val stopArr = array(stopLits.map(lit): _*)
@@ -1424,7 +1420,7 @@ object TextQueries {
   val vocabDf = Q("q_vocab_df",
     // distinct words per doc come off the native word-counts kernel
     // (map-side); only vocabulary-sized (word, df) pairs shuffle
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         explode(TextOps.wordCounts(col("text"))).as("wc"))
       .groupBy(col("wc.w").as("w")).agg(count(lit(1)).as("df"))
@@ -1442,7 +1438,7 @@ object TextQueries {
     */
   val tfidf = Q("q_tfidf",
     (s, dir) => {
-      val tfc = docs(s, dir)
+      val tfc = Tables.read(s, dir, "documents")
         .withColumn("__wc", TextOps.wordCounts(col("text")))
         .select(col("doc_id"),
           aggregate(col("__wc"), lit(0), (acc, x) => acc + x.getField("c")).as("nw"),
@@ -1451,7 +1447,7 @@ object TextQueries {
         .localCheckpoint(true)
       val dfTop = tfc.groupBy(col("w")).agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("w")).limit(10)
-      val n = docs(s, dir).agg(count(lit(1)).as("n_docs"))
+      val n = Tables.read(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       tfc.join(broadcast(dfTop), Seq("w"))
         .crossJoin(broadcast(n))
         .select(col("doc_id"), col("w"),
@@ -1477,7 +1473,7 @@ object TextQueries {
       val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long") % 100
       val rate = when(col("lang") === "en", lit(30)).otherwise(lit(10))
-      docs(s, dir).filter(bucket < rate)
+      Tables.read(s, dir, "documents").filter(bucket < rate)
         .select(col("doc_id"), col("lang"))
     },
     Some("""SELECT doc_id, lang FROM documents
@@ -1503,7 +1499,7 @@ object TextQueries {
     (s, dir) =>
       // single-pass native kernel (≡ the HOF cascade, unit-tested); staged
       // so the struct materializes once and the ratio reads attribute refs
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .withColumn("__bs", NativeTextFunctions.bigramStatsNative(col("text"), stopLits))
         .select(col("doc_id"),
           col("__bs.n_bigrams").cast("long").as("n_bigrams"),
@@ -1526,7 +1522,7 @@ object TextQueries {
     (s, dir) => {
       // single-pass native kernel (≡ the HOF cascade, unit-tested); the
       // rule cascade then runs on cheap attribute references
-      val counted = docs(s, dir)
+      val counted = Tables.read(s, dir, "documents")
         .withColumn("__bs", NativeTextFunctions.bigramStatsNative(col("text"), stopLits))
         .select(col("doc_id"),
           col("__bs.n_words").as("__nw"),
@@ -1560,7 +1556,7 @@ object TextQueries {
   val bowFingerprint = Q("q_bow_fingerprint",
     (s, dir) => {
       val ws = wordsCol
-      docs(s, dir).select(col("doc_id"),
+      Tables.read(s, dir, "documents").select(col("doc_id"),
         size(array_distinct(ws)).cast("long").as("n_distinct_words"),
         md5(concat_ws(" ", array_sort(array_distinct(ws)))).as("bow_hash"))
     },
@@ -1574,7 +1570,7 @@ object TextQueries {
     */
   val zipfRank = Q("q_zipf_rank",
     (s, dir) => {
-      val counts = docs(s, dir)
+      val counts = Tables.read(s, dir, "documents")
         .select(explode(wordsCol).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       // distributed top-50 first (per-partition top-N + driver merge —
@@ -1842,7 +1838,7 @@ object TextQueries {
   }
 
   val lineDedup = Q("q_line_dedup",
-    (s, dir) => lineDedupOver(docs(s, dir)),
+    (s, dir) => lineDedupOver(Tables.read(s, dir, "documents")),
     Some(s"""WITH ws AS (SELECT doc_id, $wordsSql AS ws FROM documents),
             |segs AS (
             |  SELECT doc_id, g,
@@ -1984,7 +1980,7 @@ object TextQueries {
     */
   val bigramPredictability = Q("q_bigram_predictability",
     (s, dir) => {
-      val occ = docs(s, dir)
+      val occ = Tables.read(s, dir, "documents")
         .withColumn("__ws", wordsCol)
         .select(col("doc_id"), explode(
           transform(sequence(lit(1), greatest(size(col("__ws")) - 1, lit(1))),
@@ -2040,7 +2036,7 @@ object TextQueries {
     */
   val docPerplexity = Q("q_doc_perplexity",
     (s, dir) => {
-      val occ = docs(s, dir)
+      val occ = Tables.read(s, dir, "documents")
         .withColumn("__ws", wordsCol)
         .select(col("doc_id"), explode(
           transform(sequence(lit(1), greatest(size(col("__ws")) - 1, lit(1))),
@@ -2102,7 +2098,7 @@ object TextQueries {
       val n = size(wordsCol)
       val bucket = when(n <= 16, 16L).when(n <= 32, 32L)
         .when(n <= 64, 64L).otherwise(128L)
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(bucket.as("bucket_len"), n.cast("long").as("n_tokens"))
         .groupBy(col("bucket_len"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("real_tokens"))
@@ -2138,7 +2134,7 @@ object TextQueries {
         .cast("long") % 10
       val sName = when(split < 8, "train").when(split === 8, "val").otherwise("test")
       val bin = least(floor(col("n_chars") / 100), lit(5)).cast("long")
-      val grid = docs(s, dir)
+      val grid = Tables.read(s, dir, "documents")
         .select(sName.as("split"), bin.as("bin"))
         .groupBy(col("split"), col("bin")).agg(count(lit(1)).as("c"))
       // densify: every (split, bin) cell so zero bins still contribute
@@ -2195,7 +2191,7 @@ object TextQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .withColumn("__nt", size(wordsCol).cast("long"))
         .select(col("doc_id"), col("lang"), col("__nt").as("n_tokens"),
           sum(col("__nt")).over(w).as("cum_tokens"))
@@ -2223,7 +2219,7 @@ object TextQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang"))
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 50)
         .select(col("doc_id"), col("lang"), col("rk"))
@@ -2243,7 +2239,7 @@ object TextQueries {
     (s, dir) => {
       val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long") % 100
-      docs(s, dir).select(col("doc_id"),
+      Tables.read(s, dir, "documents").select(col("doc_id"),
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
           .as("split"))
     },
@@ -2272,7 +2268,7 @@ object TextQueries {
     * plan-pinned.
     */
   val epochShuffle = Q("q_epoch_shuffle",
-    (s, dir) => docs(s, dir)
+    (s, dir) => Tables.read(s, dir, "documents")
       .select(col("doc_id"), explode(sequence(lit(0), lit(1))).as("epoch"))
       .withColumn("__h", md5(concat(col("epoch").cast("string"), lit("|"),
         col("doc_id").cast("string"))))
@@ -2305,7 +2301,7 @@ object TextQueries {
     (s, dir) => {
       val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("long") % 100
-      val splits = docs(s, dir).select(col("doc_id"),
+      val splits = Tables.read(s, dir, "documents").select(col("doc_id"),
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
           .as("split"))
       val leaked = lshCandidates(s, dir)
@@ -2358,7 +2354,7 @@ object TextQueries {
   val nearDedupKeep = Q("q_near_dedup_keep",
     (s, dir) => {
       val canon = canonical(s, dir)
-      docs(s, dir).select(col("doc_id"))
+      Tables.read(s, dir, "documents").select(col("doc_id"))
         .join(canon.hint("shuffle_merge"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("canonical_id"), col("doc_id")).as("canonical_id"),
@@ -2384,7 +2380,7 @@ object TextQueries {
   val sourceOverlap = Q("q_source_overlap",
     (s, dir) => {
       val srcSh = artifacts(s, dir).shingles
-        .join(docs(s, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
+        .join(Tables.read(s, dir, "documents").select(col("doc_id"), col("source")), Seq("doc_id"))
         .select(col("source"), col("sh")).distinct()
       val counts = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       // srcSh derives from the localCheckpointed shingle artifact whose
@@ -2434,7 +2430,7 @@ object TextQueries {
     */
   val sourceJsDiv = Q("q_source_js_div",
     (s, dir) => {
-      val cb = docs(s, dir)
+      val cb = Tables.read(s, dir, "documents")
         .select(col("source"), explode(wordsCol).as("word"))
         .groupBy(col("source"),
           (conv(substring(md5(col("word")), 1, 8), 16, 10).cast("long") % 64).as("b"))
@@ -2494,7 +2490,7 @@ object TextQueries {
   val crossSourceDups = Q("q_cross_source_dups",
     (s, dir) => {
       val a = artifacts(s, dir)
-      val src = docs(s, dir).select(col("doc_id"), col("source"))
+      val src = Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
       val ver = TextOps.jaccardOverPairs(a.shingles, "doc_id", a.candidates)
         .filter(col("jaccard") >= 0.8)
       ver
@@ -2548,7 +2544,7 @@ object TextQueries {
     (s, dir) => {
       val Scale = 1e12
       val iters = 3
-      val nodes = docs(s, dir).select(col("doc_id"))
+      val nodes = Tables.read(s, dir, "documents").select(col("doc_id"))
       val nRow = nodes.agg(count(lit(1)).as("n"))
       val cand = artifacts(s, dir).candidates
       val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -2606,7 +2602,7 @@ object TextQueries {
     (s, dir) => {
       val w = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("source"), size(wordsCol).cast("long").as("n_tok"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
@@ -2657,7 +2653,7 @@ object TextQueries {
     */
   private[graft] def ppjoinPairsUncached(s: SparkSession, dir: String): DataFrame =
     graft.operators.SetSimJoin.selfJoin(
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .localCheckpoint(true),
       "doc_id", "w", t = 0.8)
@@ -2767,7 +2763,7 @@ object TextQueries {
     */
   val ppjoinPairsSample = Q("q_ppjoin_pairs",
     (s, dir) => graft.operators.SetSimJoin.selfJoin(
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .localCheckpoint(true),
       "doc_id", "w", t = 0.8, aBound = Some(PpjoinSampleBound)),
@@ -2790,7 +2786,7 @@ object TextQueries {
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().localCheckpoint(true)
-      var dist = docs(s, dir).filter(col("doc_id") < 5)
+      var dist = Tables.read(s, dir, "documents").filter(col("doc_id") < 5)
         .select(col("doc_id").as("node"), lit(0L).as("dist"))
         .localCheckpoint(true)
       for (_ <- 1 to 3) {
@@ -2829,7 +2825,7 @@ object TextQueries {
     (s, dir) => {
       val w = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(col("source"), size(wordsCol).cast("long").as("n_tok"))
         .groupBy(col("source"))
         .agg(sum(col("n_tok")).as("n_tokens"))
@@ -2877,13 +2873,13 @@ object TextQueries {
     */
   val pmiCooccurrence = Q("q_pmi_cooccurrence",
     (s, dir) => {
-      val dw = docs(s, dir)
+      val dw = Tables.read(s, dir, "documents")
         .select(col("doc_id"), explode(array_distinct(wordsCol)).as("w"))
         .localCheckpoint(true)
       val top = dw.groupBy(col("w")).agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("w")).limit(16)
       val f = dw.join(broadcast(top.select(col("w"))), Seq("w"))
-      val n = docs(s, dir).agg(count(lit(1)).as("n_docs"))
+      val n = Tables.read(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       f.select(col("doc_id"), col("w").as("w_a"))
         .join(f.select(col("doc_id"), col("w").as("w_b")), Seq("doc_id"))
         .filter(col("w_a") < col("w_b"))
@@ -2980,7 +2976,7 @@ object TextQueries {
     (s, dir) => {
       val w = Window.partitionBy()
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val weights = docs(s, dir)
+      val weights = Tables.read(s, dir, "documents")
         .select(col("source"), size(wordsCol).cast("long").as("n_tok"))
         .groupBy(col("source"))
         .agg(sum(col("n_tok")).as("n_tokens"))
@@ -2992,7 +2988,7 @@ object TextQueries {
               .cast("long")).as("weight_micro"))
       val coin = conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
         .cast("long") % 1000000L
-      docs(s, dir).select(col("doc_id"), col("source"))
+      Tables.read(s, dir, "documents").select(col("doc_id"), col("source"))
         .join(broadcast(weights), Seq("source"))
         .select(col("doc_id"), col("source"), col("weight_micro"),
           (coin < col("weight_micro")).cast("long").as("kept"))
@@ -3018,7 +3014,7 @@ object TextQueries {
     (s, dir) => {
       val stopArr = array(stopLits.map(lit): _*)
       val distinctWords = array_distinct(wordsCol)
-      docs(s, dir).select(col("doc_id"),
+      Tables.read(s, dir, "documents").select(col("doc_id"),
         size(distinctWords).cast("long").as("n_distinct"),
         array_join(array_sort(array_intersect(distinctWords, stopArr)), ",")
           .as("stops_present"),
@@ -3050,7 +3046,7 @@ object TextQueries {
     */
   val tokenBudget = Q("q_token_budget",
     (s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("n_chars"),
+      val d = Tables.read(s, dir, "documents").select(col("doc_id"), col("n_chars"),
         size(wordsCol).cast("long").as("n_tok"))
       val wCum = Window.orderBy(col("n_chars").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3091,7 +3087,7 @@ object TextQueries {
       val canon = canonical(s, dir)
       // same SHUFFLE_MERGE pin as q_near_dedup_keep: the component table
       // can be corpus-scale and its LogicalRDD size is a guess
-      val kept = docs(s, dir)
+      val kept = Tables.read(s, dir, "documents")
         .join(canon.hint("shuffle_merge"), Seq("doc_id"), "left")
         .filter(coalesce(col("canonical_id"), col("doc_id")) === col("doc_id"))
       val w = Window.partitionBy(col("lang"))
@@ -3162,7 +3158,7 @@ object TextQueries {
     */
   val dedupReport = Q("q_dedup_report",
     (s, dir) => {
-      val d = docs(s, dir)
+      val d = Tables.read(s, dir, "documents")
       val totals = d.agg(count(lit(1)).as("n_docs"))
       val exact = d.groupBy(md5(col("text")).as("h")).agg(count(lit(1)).as("c"))
         .agg(count(lit(1)).as("n_exact_distinct"),
@@ -3215,7 +3211,7 @@ object TextQueries {
     */
   val fuzzyJoin = Q("q_fuzzy_join",
     (s, dir) => graft.operators.FuzzyJoin.selfJoin(
-      docs(s, dir)
+      Tables.read(s, dir, "documents")
         .select(explode(TextOps.words(col("text"))).as("w"))
         .filter(length(col("w")) >= 3).distinct(), "w"),
     Some(s"""WITH vocab AS (
@@ -3240,7 +3236,7 @@ object TextQueries {
   val heavyHittersBound = Q("q_heavy_hitters_bound",
     (s, dir) => {
       val cap = 16
-      val ws = docs(s, dir).select(explode(TextOps.words(col("text"))).as("w"))
+      val ws = Tables.read(s, dir, "documents").select(explode(TextOps.words(col("text"))).as("w"))
       val est = ws.agg(graft.operators.HeavyHitters.sketch(col("w"), cap).as("mg"))
         .select(col("mg.n").as("n_total"), explode(col("mg.items")).as(Seq("w", "est")))
       val top = ws.groupBy(col("w")).agg(count(lit(1)).as("cnt"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Queries.Q
 import graft.multimodal.Mp4Codec
 import graft.operators.FingerprintDups
+import graft.sources.Tables
 
 /** Video tier over REAL ISO-BMFF box parsing — third leg of the
   * multimodal triad (image pixels / audio samples / video containers):
@@ -52,7 +53,7 @@ object VideoQueries {
     */
   private def videoMeta(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+    Queries.fanOut(Tables.read(s, dir, "documents")
       .select(col("doc_id")), "doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -91,7 +92,7 @@ object VideoQueries {
   val videoKeyframes = Q("q_video_keyframes",
     (s, dir) => {
       import s.implicits._
-      Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+      Queries.fanOut(Tables.read(s, dir, "documents")
         .select(col("doc_id")), "doc_id").as[Long]
         .mapPartitions { ids =>
           ids.flatMap { id =>
@@ -203,7 +204,7 @@ object VideoQueries {
 
   private def videoFingerprintsUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+    Queries.fanOut(Tables.read(s, dir, "documents")
       .select(col("doc_id")), "doc_id").as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
@@ -342,7 +343,7 @@ object VideoQueries {
     */
   private def keyframeDhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+    Queries.fanOut(Tables.read(s, dir, "documents")
       .select(col("doc_id")), "doc_id").as[Long]
       .mapPartitions { ids =>
         ids.flatMap { id =>
@@ -420,7 +421,7 @@ object VideoQueries {
   val videoSceneCuts = Q("q_video_scene_cuts",
     (s, dir) => {
       import s.implicits._
-      Queries.fanOut(s.read.parquet(s"$dir/documents.parquet")
+      Queries.fanOut(Tables.read(s, dir, "documents")
         .select(col("doc_id")), "doc_id").as[Long]
         .mapPartitions { ids =>
           ids.flatMap { id =>

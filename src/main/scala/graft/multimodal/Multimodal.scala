@@ -6,6 +6,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Multimodal columns for a training-data pipeline: image/audio/video
   * travel as opaque `binary` columns with typed metadata; decode /
   * feature-extract / resize / frame-sample run as per-partition batch
@@ -158,7 +160,7 @@ object Multimodal {
     */
   def mediaFromDocuments(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.read(spark, sfDir, "documents")
       .select(
         col("doc_id").as("id"),
         lit("image").as("modality"),
@@ -226,7 +228,7 @@ object Multimodal {
     */
   def mediaWithPlantedHeaders(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.read(spark, sfDir, "documents")
       .select(col("doc_id"), col("n_chars"), col("text"),
         map(lit("source"), col("source"), lit("lang"), col("lang")).as("meta"))
       .as[(Long, Long, String, Map[String, String])]

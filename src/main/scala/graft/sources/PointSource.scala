@@ -1,5 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
@@ -68,10 +72,27 @@ object PointSource {
     * (reference semantics: d comes from the first row, code/bfr.py:145);
     * ragged lines are dropped rather than fed to fixed-d math.
     */
-  def readChunkStrict(spark: SparkSession, file: String): DataFrame = {
-    val df = readChunk(spark, file)
-    val d = df.select(size(col("features"))).head().getInt(0)
-    df.filter(size(col("features")) === d)
+  def readChunkStrict(spark: SparkSession, file: String): DataFrame =
+    readChunk(spark, file).filter(size(col("features")) === firstPoint(spark, file)._2.length)
+
+  /** The first line of `file` that [[parseLine]] keeps, read on the
+    * driver with no Spark job. `textFile`'s first split starts at byte 0,
+    * and this reads the same lines: Hadoop's `LineReader` over the file
+    * system's stream, through the file's compression codec if any.
+    */
+  private def firstPoint(spark: SparkSession, file: String): (Long, Array[Double]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(file)
+    val raw = path.getFileSystem(conf).open(path)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(path))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val lines = new LineReader(in, conf)
+    try {
+      val text = new Text()
+      Iterator.continually(lines.readLine(text)).takeWhile(_ > 0)
+        .flatMap(_ => parseLine(text.toString)).nextOption()
+        .getOrElse(throw new NoSuchElementException(s"no point line in chunk $file"))
+    } finally lines.close()
   }
 
   /** All chunks of a dataset, in round order (S1 + S2). */
@@ -83,7 +104,7 @@ object PointSource {
     * parquet input.
     */
   def fromEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Tables.read(spark, sfDir, "embeddings")
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("features"))
 }

@@ -165,6 +165,20 @@ class AppAndIoSpec extends AnyFunSuite {
     assert(strict.size < want.size)
   }
 
+  test("readChunkStrict takes d from a gzip chunk's first kept line and names an empty chunk") {
+    // the first line is dropped, so d comes from the second: 2, not 3
+    val text = "x,1.0,2.0,3.0\n0,1.0,2.0\n1,3.0,4.0,5.0\n2,6.0,7.0\n"
+    val gz = Files.createTempFile("points", ".txt.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val rows = PointSource.readChunkStrict(spark, gz.toString).orderBy("id").collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(0L, 2L), s"kept ${rows.map(_.getLong(0)).toSeq}")
+    val empty = Files.createTempFile("points_empty", ".txt")
+    Files.write(empty, "\n  \nid,1.0\n".getBytes)
+    val e = intercept[NoSuchElementException](PointSource.readChunkStrict(spark, empty.toString))
+    assert(e.getMessage.contains(empty.toString), e.getMessage)
+  }
+
   test("the chunk parse, batch and streaming, plans no higher-order function") {
     def hofs(p: LogicalPlan) = p.flatMap(_.expressions.flatMap(_.collect {
       case e: ArrayTransform => e
