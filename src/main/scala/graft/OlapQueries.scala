@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
 import graft.Queries.{Q, cents, sumMoney, sqlSumMoney, sumIntUnits, sqlSumIntUnits}
+import graft.sources.Tables
 
 /** OLAP surface beyond the reference's own operators: multi-dimensional
   * aggregation (rollup / cube / grouping sets), analytic windows

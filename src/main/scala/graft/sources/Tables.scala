@@ -53,7 +53,8 @@ object Tables {
     if (!status.isDirectory) Key(app, path, 1, status.getLen, status.getModificationTime)
     else {
       // data files as Spark's file index sees them: not `_SUCCESS`, `.crc`
-      val files = Iterator.unfold(fs.listFiles(p, true))(it => Option.when(it.hasNext)((it.next(), it)))
+      val it = fs.listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
         .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
         .toSeq
       Key(app, path, files.size, files.map(_.getLen).sum,
