@@ -1,5 +1,8 @@
 package graft.app
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -56,6 +59,16 @@ object TextScaleBench {
       ()
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** The longest task (ms) and the number of tasks that ended since it
+    * was added. */
+  private final class MaxTask extends SparkListener {
+    val maxMs, tasks = new AtomicLong(0)
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      maxMs.accumulateAndGet(t.taskInfo.duration, (a, b) => math.max(a, b))
+    }
+  }
+
   final case class Result(
       docs: Long, base: Long, copies: Int, shingles: Long,
       candidates: Long, dupPairs: Long, groupedDocs: Long,
@@ -68,17 +81,7 @@ object TextScaleBench {
     // straggler bound for the WHOLE pipeline: the longest single task is
     // the number that predicts 1000-executor behavior (a stage is as
     // slow as its slowest task, however many cores wait behind it)
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        nTasks.incrementAndGet()
-        val d = t.taskInfo.duration
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-      }
-    }
+    val listener = new MaxTask
     spark.sparkContext.addSparkListener(listener)
     // per-stage straggler attribution: snapshot-and-reset between stages.
     // onTaskEnd is delivered on the async listener bus, so drain it first
@@ -86,7 +89,7 @@ object TextScaleBench {
     val stageMax = scala.collection.mutable.LinkedHashMap[String, Double]()
     def snapMax(stage: String): Unit = {
       drainListenerBus(spark)
-      stageMax(stage) = math.rint(maxTaskMs.getAndSet(0) / 100.0) / 10
+      stageMax(stage) = math.rint(listener.maxMs.getAndSet(0) / 100.0) / 10
     }
     val raw = spark.read.parquet(docsPath)
     val base = raw.count()
@@ -153,6 +156,9 @@ object TextScaleBench {
     // same straggler inside CC (measured: 70-83 s max task with
     // coalescing on vs 8-16 s off). Moderate fixed partitioning,
     // coalescing parked, skew backstop on — same contract as verify.
+    // This sizing reaches only a graph over CC's driver budget
+    // (2 · pairs > KMeans.LocalFitCells); a smaller one is labelled on
+    // the driver after one collect.
     val nGrouped = withStageSizing(spark, math.max(partitions, copies * 5)) {
       ConnectedComponents.canonicalize(dupPairs).count()
     }
@@ -165,7 +171,7 @@ object TextScaleBench {
       "shingle_s" -> sec(t0, t1), "signature_s" -> sec(t1, t2),
       "lsh_s" -> sec(t2, t3), "verify_s" -> sec(t3, t4),
       "components_s" -> sec(t4, t5), "total_s" -> sec(t0, t5)),
-      stageMax.values.max, nTasks.get(),
+      stageMax.values.max, listener.tasks.get(),
       stageMaxTaskS = stageMax.toMap)
   }
 
@@ -223,17 +229,7 @@ object TextScaleBench {
     // verify WITHOUT an eager checkpoint first: the executed adaptive
     // plan (inspectable only after an action) reveals whether AQE split
     // the hot doc_a key, and the task listener bounds the stall
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        nTasks.incrementAndGet()
-        val d = t.taskInfo.duration
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-      }
-    }
+    val listener = new MaxTask
     spark.sparkContext.addSparkListener(listener)
     val verified = TextOps.jaccardOverPairs(sh, "doc_id", cand)
       .filter(col("jaccard") >= 0.8)
@@ -258,7 +254,7 @@ object TextScaleBench {
       "signature_s" -> sec(t0, t1), "lsh_s" -> sec(t1, t2),
       "verify_s" -> sec(t2, t3), "components_s" -> sec(t3, t4),
       "total_s" -> sec(t0, t4)),
-      skewSplits, math.rint(maxTaskMs.get() / 100.0) / 10, nTasks.get())
+      skewSplits, math.rint(listener.maxMs.get() / 100.0) / 10, listener.tasks.get())
   }
 
   /** Boilerplate-hot-key probe for the q_line_dedup census path: plant
@@ -290,17 +286,7 @@ object TextScaleBench {
       .localCheckpoint(true)
     val n = corpus.count()
 
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        nTasks.incrementAndGet()
-        val d = t.taskInfo.duration
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-      }
-    }
+    val listener = new MaxTask
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
     val out = graft.TextQueries.lineDedupOver(corpus).localCheckpoint(true)
@@ -312,7 +298,7 @@ object TextScaleBench {
     spark.sparkContext.removeSparkListener(listener)
     BoilerResult(n, base, planted, plantedClean,
       math.rint((t1 - t0) / 1e8) / 10,
-      math.rint(maxTaskMs.get() / 100.0) / 10, nTasks.get())
+      math.rint(listener.maxMs.get() / 100.0) / 10, listener.tasks.get())
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,7 @@
 package graft.kmeans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Parquet persistence for k-means codebooks/centroids — the production
   * ANN flow: quantizers (IVF cells, PQ subspace codebooks) are trained
@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object ModelStore {
 
-  /** One row per centroid: (model_idx, center_idx, center). */
+  /** The stored layout, one row per centroid: (model_idx, center_idx, center). */
+  private val Schema = StructType(Seq(StructField("model_idx", IntegerType),
+    StructField("center_idx", IntegerType), StructField("center", ArrayType(DoubleType))))
+
   def save(spark: SparkSession, path: String, models: Seq[KMeans.Model]): Unit = {
     import spark.implicits._
     models.zipWithIndex.flatMap { case (m, mi) =>
@@ -23,15 +26,13 @@ object ModelStore {
   }
 
   /** Load models in persisted order; None if absent/unreadable (treat a
-    * torn artifact as a cache miss, never an error — refit wins).
+    * torn artifact as a cache miss, never an error — refit wins). The
+    * read is given [[save]]'s schema, so it runs no inference job.
     */
   def load(spark: SparkSession, path: String): Option[Array[KMeans.Model]] = {
     if (!new java.io.File(path).exists()) return None
     try {
-      val rows = spark.read.parquet(path)
-        .select(col("model_idx").cast("int"), col("center_idx").cast("int"),
-          col("center"))
-        .collect()
+      val rows = spark.read.schema(Schema).parquet(path).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       if (rows.isEmpty) return None
       Some(rows.groupBy(_._1).toArray.sortBy(_._1).map { case (_, cs) =>

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.kmeans.KMeans
 
 /** Connected components — the dedup clustering stage: near-dup candidate
   * PAIRS (from MinHash-LSH / SimHash / embedding buckets) become dedup
@@ -25,77 +28,78 @@ import org.apache.spark.sql.functions._
   * IS its component minimum (the min node labels itself, and the label is
   * constant on the component).
   *
+  * Bounded graphs skip the loop: when the edge list fits the driver
+  * budget the engine uses for local k-means (`KMeans.LocalFitCells`
+  * cells, two per edge), a union-find over one collect of the edges
+  * gives the same labels without the loop's per-round jobs. Every graph
+  * the registry builds is of this kind; a corpus-scale graph runs the
+  * loop.
+  *
   * Partition-sizing contract for dense-graph callers (same as
   * `TextOps.jaccardOverPairs`): the per-round join fans out
   * deg(v)·|cluster(v)| rows per vertex, so on clique-heavy graphs AQE's
   * input-byte coalescing re-merges partitions whose joined OUTPUT is a
   * multi-minute straggler task (measured 70-83 s at the 100× probe with
-  * coalescing on vs 8-16 s off). Size partitions moderately on expected
-  * output rows and park `spark.sql.adaptive.coalescePartitions.enabled`
-  * around the call — `app.TextScaleBench.run` carries the measured
-  * sweep.
+  * coalescing on vs 8-16 s off). The loop runs under the caller's conf:
+  * size partitions moderately on expected output rows and park
+  * `spark.sql.adaptive.coalescePartitions.enabled` around the call —
+  * `app.TextScaleBench.run` carries the measured sweep.
   */
 object ConnectedComponents {
 
-  /** @param edges (src, dst) undirected pairs
+  /** @param edges (src, dst) undirected pairs of non-null ids
     * @return (id, component) — component = min id reachable
     */
-  /** Edge count below which the loop certifies EVERY round instead of
-    * waiting for the label-sum quiescence heuristic. On bounded graphs
-    * the round cost is pure job latency, and the heuristic needs two
-    * extra rounds (one to repeat the sum, one certify) after convergence
-    * — certify-per-round exits the planted bench graphs after round 1.
-    * On corpus-scale graphs the certify join (2 × edges⋈labels) per
-    * round would dominate, so past this bound the cheap sum heuristic
-    * keeps gating it. Either mode exits ONLY through certify(), so the
-    * result is identical — this is a latency/throughput switch, not a
-    * semantics switch.
-    */
-  private val EagerCertifyEdges = 4L << 20
+  def run(edges: DataFrame, maxIter: Int = 100): DataFrame =
+    label(edges, maxIter, forceLoop = false)
 
-  /** Target rows per shuffle partition inside the CC loop (guide §2.2:
-    * fewer, larger reduce partitions). Every round runs 3-4 shuffles
-    * over O(Σ|component| + edges) rows; sizing the loop's shuffle width
-    * from the EDGE count instead of the session default turns the
-    * dozens of 32-partition micro-stages a bounded bench graph produces
-    * (measured: the fixed per-stage cost made q_audio/video_dedup_groups
-    * SLOWER at 32 cores than at 8 in round 14) into single-task stages,
-    * while a corpus-scale graph still gets full cluster width.
+  /** [[run]] with a seam for tests: `forceLoop` runs the HASH-to-MIN loop
+    * even where the edge list fits the driver budget.
     */
-  private val RowsPerPartition = 64L << 10
-
-  def run(edges: DataFrame, maxIter: Int = 100): DataFrame = {
-    // materialize the (possibly expensive) pair pipeline ONCE before
-    // symmetrizing — union's two branches would otherwise each re-run it
+  private[graft] def label(edges: DataFrame, maxIter: Int, forceLoop: Boolean): DataFrame = {
+    // materialize the (possibly expensive) pair pipeline ONCE: both the
+    // driver path and the loop's symmetrized union read it more than once.
+    // The checkpoint is LAZY: the count's job materializes it, and as an
+    // RDD count it is one job, where a Dataset count plans an exchange.
     val e = edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
+    val nEdges = e.rdd.count()
+    // a clean corpus produces zero candidate pairs, which the driver path
+    // labels as an empty frame (the loop's global sum() is NULL on it)
+    if (nEdges == 0 || (!forceLoop && 2 * nEdges <= KMeans.LocalFitCells)) labelLocal(e)
+    else hashToMin(e, maxIter)
+  }
+
+  /** Union-find over one collect of the edges. Ids are sorted, so an
+    * index is smaller exactly when its id is, and linking every root to
+    * the smaller index makes each root its component's minimum id.
+    */
+  private def labelLocal(e: DataFrame): DataFrame = {
+    val edges = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val ids = edges.flatMap(p => Array(p._1, p._2)).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def root(id: Long): Int = find(java.util.Arrays.binarySearch(ids, id))
+    for ((a, b) <- edges) {
+      val (ra, rb) = (root(a), root(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    val labels = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(labels: _*),
+      StructType(Seq(StructField("id", LongType), StructField("component", LongType))))
+  }
+
+  private def hashToMin(e: DataFrame, maxIter: Int): DataFrame = {
     // symmetrize map-side from the checkpointed edge list; self-loops are
     // harmless. No second checkpoint: re-deriving the union per consumer
     // is two scans of a checkpointed RDD (no shuffle), cheaper than the
     // extra eager-checkpoint job it replaced.
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-
-    // a clean corpus produces zero candidate pairs — short-circuit before
-    // the loop (labelSum's global sum() is NULL on an empty label table);
-    // the count doubles as the eager-certify census and the loop's
-    // shuffle-width census
-    val nEdges = e.count()
-    if (nEdges == 0)
-      return sym.select(col("src").as("id"), col("dst").as("component"))
-    val eagerCertify = nEdges <= EagerCertifyEdges
-
-    val spark = e.sparkSession
-    val defaultPar = spark.sparkContext.defaultParallelism.toLong
-    val loopPartitions =
-      math.max(1L, math.min(defaultPar, nEdges / RowsPerPartition + 1)).toInt
-    val prevShufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    // On a bounded graph, AQE's per-shuffle re-planning splits every
-    // round's action into several driver-latency-priced jobs for zero
-    // benefit (single-digit-task stages, no size-misestimated join).
-    // Data-adaptive like the width: corpus-scale graphs keep session AQE.
-    val pauseAqe = nEdges <= (1L << 20)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
 
     def labelsOf(state: DataFrame): DataFrame =
       state.groupBy(col("v")).agg(min(col("u")).as("component"))
@@ -119,49 +123,35 @@ object ConnectedComponents {
       .filter(col("la") =!= col("lb"))
       .isEmpty
 
-    // the width bound and the loop run under one try/finally so the
-    // session conf is restored on every exit path; plans built inside
-    // capture the bounded width at their own execution
-    spark.conf.set("spark.sql.shuffle.partitions", loopPartitions)
-    if (pauseAqe) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // cluster membership (v, u): u ∈ C(v); init C(v) = {v} ∪ N(v).
-      // Loop checkpoints are LAZY: the round's certify / labelSum action
-      // materializes the round's state and cuts lineage in the same job —
-      // the eager form paid one extra job per round just to checkpoint.
-      var c = sym.select(col("src").as("v"), col("dst").as("u"))
-        .union(sym.select(col("src").as("v"), col("src").as("u")))
+    // cluster membership (v, u): u ∈ C(v); init C(v) = {v} ∪ N(v).
+    // Loop checkpoints are LAZY: the round's certify / labelSum action
+    // materializes the round's state and cuts lineage in the same job —
+    // the eager form paid one extra job per round just to checkpoint.
+    var c = sym.select(col("src").as("v"), col("dst").as("u"))
+      .union(sym.select(col("src").as("v"), col("src").as("u")))
+      .distinct()
+      .localCheckpoint(false)
+
+    var prevSum = Option.empty[Long]
+    var iter = 0
+    var certified = false
+    while (!certified && iter < maxIter) {
+      val withMin = c.join(labelsOf(c).withColumnRenamed("component", "m"), Seq("v"))
+      c = withMin.select(col("u").as("v"), col("m").as("u"))
+        .union(withMin.select(col("m").as("v"), col("u")))
         .distinct()
         .localCheckpoint(false)
-
-      var prevSum = Option.empty[Long]
-      var iter = 0
-      var certified = false
-      while (!certified && iter < maxIter) {
-        val withMin = c.join(labelsOf(c).withColumnRenamed("component", "m"), Seq("v"))
-        c = withMin.select(col("u").as("v"), col("m").as("u"))
-          .union(withMin.select(col("m").as("v"), col("u")))
-          .distinct()
-          .localCheckpoint(false)
-        if (eagerCertify) certified = certify(labelsOf(c))
-        else {
-          val s = labelSum(c)
-          if (prevSum.contains(s)) certified = certify(labelsOf(c))
-          prevSum = Some(s)
-        }
-        iter += 1
-      }
-      require(certified,
-        s"connected components did not converge in $maxIter iterations")
-      // materialize the certified labels BEFORE the width is restored, so
-      // the consumer reads a checkpointed single-shuffle result instead of
-      // re-running the final aggregation at session width
-      labelsOf(c).select(col("v").as("id"), col("component"))
-        .localCheckpoint(true)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
-      if (pauseAqe) spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      val s = labelSum(c)
+      if (prevSum.contains(s)) certified = certify(labelsOf(c))
+      prevSum = Some(s)
+      iter += 1
     }
+    require(certified,
+      s"connected components did not converge in $maxIter iterations")
+    // materialize the certified labels, so the consumer reads a
+    // checkpointed result instead of re-running the final aggregation
+    labelsOf(c).select(col("v").as("id"), col("component"))
+      .localCheckpoint(true)
   }
 
   /** Dedup grouping: pairs → (id, canonical_id); singletons (docs in no

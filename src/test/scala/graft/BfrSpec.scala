@@ -1,8 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,7 +79,7 @@ class BfrSpec extends AnyFunSuite {
     val chunks = (0 until 4).map(i => points.filter(pmod(col("id"), lit(4)) === i))
     val cfg = BFR.Config(k = 5, rsClusterThreshold = 1000)
     assert(BFR.run(spark, chunks, cfg).stats.dropRight(1).exists(_.nof_point_retained > 60))
-    val (res, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(60))))
+    val (res, SparkJobs(jobs, _, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(60))))
     assert(jobs.keys.exists(_.endsWith(" rs-cap")), s"the cap never fired: $jobs")
     assert(res.assignments.count() == 500)
     assert(res.assignments.select("id").distinct().count() == 500)
@@ -128,53 +125,13 @@ class BfrSpec extends AnyFunSuite {
     (chunks, BFR.Config(k = 5, rsClusterThreshold = 5))
   }
 
-  /** Runs `body` in its own job group and returns its result with the
-    * number of jobs per description the group started. */
-  private def jobsByDescription[T](body: => T): (T, Map[String, Int]) = {
-    val (out, jobs, _) = jobsAndStagesByDescription(body)
-    (out, jobs)
-  }
-
-  /** [[jobsByDescription]] plus the number of stages per description the
-    * group ran (skipped stages are not submitted, so not counted). The
-    * listener bus is drained before the counts are read (`listenerBus` is
-    * private[spark], hence reflection).
-    */
-  private def jobsAndStagesByDescription[T](body: => T)
-      : (T, Map[String, Int], Map[String, Int]) = {
-    val sc = spark.sparkContext
-    val group = s"bfr-job-pin-${java.util.UUID.randomUUID()}"
-    val jobs, stages = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    def count(into: java.util.concurrent.ConcurrentHashMap[String, Integer],
-              props: java.util.Properties): Unit =
-      if (props != null && props.getProperty("spark.jobGroup.id") == group)
-        into.merge(String.valueOf(props.getProperty("spark.job.description")),
-          1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = count(jobs, e.properties)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        count(stages, e.properties)
-    }
-    def asMap(m: java.util.concurrent.ConcurrentHashMap[String, Integer]) =
-      m.asScala.map { case (k, v) => k -> v.intValue }.toMap
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      (out, asMap(jobs), asMap(stages))
-    } finally sc.removeSparkListener(listener)
-  }
-
   private val RsRecluster = """bfr r(\d+) rs-recluster""".r
 
   test("driver-local and distributed RS re-clustering agree (stats and assignments)") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (local, localJobs) = jobsByDescription(
+    val (local, SparkJobs(localJobs, _, _)) = SparkJobs.of(
       BFR.runRounds(spark, chunks, cfg, _ => (), None, forceDistributedRs = false))
-    val (dist, distJobs) = jobsByDescription(
+    val (dist, SparkJobs(distJobs, _, _)) = SparkJobs.of(
       BFR.runRounds(spark, chunks, cfg, _ => (), None, forceDistributedRs = true))
     // the fixture re-clusters RS in at least two rounds on both paths
     for (jobs <- Seq(localJobs, distJobs))
@@ -243,7 +200,7 @@ class BfrSpec extends AnyFunSuite {
 
   test("BFR behaviour lock: a halo spills into DS at α=4, every round") {
     val (chunks, cfg) = haloFixture()
-    val (res, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
+    val (res, SparkJobs(jobs, stages, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg))
     def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
     // the fixture reaches the α=4 spill before the last round and an α=4
     // pass over RS in the last round
@@ -261,8 +218,8 @@ class BfrSpec extends AnyFunSuite {
 
   test("BFR behaviour lock: a halo over the RS hard cap") {
     val (chunks, cfg) = haloFixture()
-    val (res, jobs, stages) =
-      jobsAndStagesByDescription(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(4))))
+    val (res, SparkJobs(jobs, stages, _)) =
+      SparkJobs.of(BFR.run(spark, chunks, cfg.copy(rsHardCap = Some(4))))
     // the cap's selection passes and its fold have no exchange
     assert(jobs.keys.exists(_.endsWith(" rs-cap")), jobs)
     for ((desc, js) <- jobs if desc.endsWith(" rs-cap"))
@@ -296,7 +253,7 @@ class BfrSpec extends AnyFunSuite {
 
   test("driver-local RS re-clustering runs at most one job per round") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    val (_, SparkJobs(jobs, _, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg))
     val perRound = jobs.collect { case (RsRecluster(r), n) => r.toInt -> n }
     assert(perRound.size >= 2, s"RS re-clustered in < 2 rounds: $jobs")
     perRound.foreach { case (r, n) =>
@@ -306,7 +263,7 @@ class BfrSpec extends AnyFunSuite {
 
   test("a steady round runs one absorb job, one RS job and at most two checkpoint jobs") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (_, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
+    val (_, SparkJobs(jobs, stages, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg))
     def n(round: Int, step: String) = jobs.getOrElse(s"bfr r$round $step", 0)
     for (r <- 2 to chunks.size) {
       assert(n(r, "absorb") == 1, s"round $r: $jobs")
@@ -346,13 +303,13 @@ class BfrSpec extends AnyFunSuite {
 
   test("round 1's init runs in at most four jobs: the k-th id and one collect") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (_, jobs) = jobsByDescription(BFR.run(spark, chunks, cfg))
+    val (_, SparkJobs(jobs, _, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg))
     assert(jobs.getOrElse("bfr r1 init", 0) <= 4, jobs)
   }
 
   test("round 1's shape pass is one job of one stage") {
     val (chunks, cfg) = rsReclusterFixture()
-    val (_, jobs, stages) = jobsAndStagesByDescription(BFR.run(spark, chunks, cfg))
+    val (_, SparkJobs(jobs, stages, _)) = SparkJobs.of(BFR.run(spark, chunks, cfg))
     assert(jobs.getOrElse("bfr r1 chunk", 0) == 1, jobs)
     assert(stages.getOrElse("bfr r1 chunk", 0) == 1, stages)
   }
@@ -396,7 +353,7 @@ class BfrSpec extends AnyFunSuite {
     val chunk = spark.range(1200)
       .select(when(col("id") < 1100, 7L).otherwise(col("id")).as("id"),
         when(col("id") === 1199, array_repeat(lit(1.0), 4000)).as("features"))
-    val (e, jobs) = jobsByDescription(intercept[IllegalArgumentException](
+    val (e, SparkJobs(jobs, _, _)) = SparkJobs.of(intercept[IllegalArgumentException](
       BFR.run(spark, Seq(chunk), BFR.Config(k = 5))))
     assert(e.getMessage.contains("id 7 repeats") && e.getMessage.contains("1100 rows"),
       e.getMessage)

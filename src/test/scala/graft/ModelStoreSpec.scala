@@ -16,7 +16,8 @@ class ModelStoreSpec extends AnyFunSuite {
   test("save/load round-trips model order, center order, and exact values") {
     val path = Files.createTempDirectory("ms").toString + "/cb.parquet"
     ModelStore.save(spark, path, models.toSeq)
-    val loaded = ModelStore.load(spark, path).get
+    val (loaded, jobs) = SparkJobs.of(ModelStore.load(spark, path).get)
+    assert(jobs.parquetInference == 0, s"load ran a schema inference: $jobs")
     assert(loaded.length == 2)
     assert(loaded(0).centers.map(_.toSeq).toSeq == models(0).centers.map(_.toSeq).toSeq)
     assert(loaded(1).centers.map(_.toSeq).toSeq == models(1).centers.map(_.toSeq).toSeq)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,22 +132,34 @@ class OperatorsSpec extends AnyFunSuite {
     assert(truth.size >= 40, s"fixture too weak: ${truth.size} qualifying pairs")
   }
 
+  /** Labels `edges` on the driver path, then with the HASH-to-MIN loop
+    * forced, and checks that neither run changed the session conf. */
+  private def bothPaths(edges: DataFrame, maxIter: Int = 100): Seq[DataFrame] =
+    Seq(false, true).map { forceLoop =>
+      val conf = spark.conf.getAll
+      val out = ConnectedComponents.label(edges, maxIter, forceLoop)
+      assert(spark.conf.getAll == conf, s"forceLoop=$forceLoop changed the session conf")
+      out
+    }
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connected components: chains, triangles, and isolated pairs") {
     import spark.implicits._
     // components: {1,2,3,4} (chain), {10,11,12} (triangle), {20,21}
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    for (got <- bothPaths(edges))
+      assert(labels(got) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
   test("connected components converge on a long path (worst-case diameter)") {
     import spark.implicits._
     val edges = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges, maxIter = 50).collect()
-    assert(got.length == 31 && got.forall(_.getLong(1) == 0L))
+    for (got <- bothPaths(edges, maxIter = 50).map(_.collect()))
+      assert(got.length == 31 && got.forall(_.getLong(1) == 0L))
   }
 
   test("connected components on a sparse random graph ≡ driver union-find") {
@@ -171,17 +184,17 @@ class OperatorsSpec extends AnyFunSuite {
     val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
       .map(v => v -> find(v)).toMap
     // maxIter 25 also pins the log-round convergence HASH-to-MIN promises
-    val got = ConnectedComponents.run(edges.toDF("src", "dst"), maxIter = 25)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
+    for (got <- bothPaths(edges.toDF("src", "dst"), maxIter = 25))
+      assert(labels(got) == want)
   }
 
   test("connected components on an empty edge set returns empty (clean corpus)") {
     import spark.implicits._
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val got = ConnectedComponents.run(edges)
-    assert(got.columns.toSeq == Seq("id", "component"))
-    assert(got.isEmpty)
+    for (got <- bothPaths(edges)) {
+      assert(got.columns.toSeq == Seq("id", "component"))
+      assert(got.isEmpty)
+    }
     assert(ConnectedComponents.canonicalize(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).isEmpty)
   }
@@ -189,9 +202,18 @@ class OperatorsSpec extends AnyFunSuite {
   test("dedup canonicalize groups LSH pairs by min doc id") {
     import spark.implicits._
     val pairs = Seq((5L, 9L), (9L, 7L), (100L, 101L)).toDF("doc_a", "doc_b")
-    val got = ConnectedComponents.canonicalize(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 100L -> 100L, 101L -> 100L))
+    val want = Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 100L -> 100L, 101L -> 100L)
+    assert(labels(ConnectedComponents.canonicalize(pairs)) == want)
+    assert(labels(ConnectedComponents.label(pairs, 100, forceLoop = true)) == want)
+  }
+
+  test("connected components label a bounded graph in at most two jobs") {
+    import spark.implicits._
+    val edges = (0L until 500L).map(i => (i / 10 * 10, i)).toDF("src", "dst")
+    // the count that materializes the edge checkpoint, and the collect
+    val (got, jobs) = SparkJobs.of(ConnectedComponents.run(edges))
+    assert(jobs.total <= 2, jobs)
+    assert(labels(got) == (0L until 500L).map(i => i -> i / 10 * 10).toMap)
   }
 
   test("incremental dedup merge ≡ full recompute on a random bucket layout") {

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,34 +17,6 @@ class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
   private val sf = "/root/testdata/sf0.001"
 
-  /** Runs `body` in its own job group and returns its result with the
-    * number of jobs the group started: all of them, and those whose stage
-    * is a parquet schema inference (`parquet at <file>:<line>`). The
-    * listener bus is drained before the counts are read (`listenerBus` is
-    * private[spark], hence reflection).
-    */
-  private def jobs[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-${java.util.UUID.randomUUID()}"
-    val all, parquet = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          all.incrementAndGet()
-          if (e.stageInfos.exists(_.name.startsWith("parquet at "))) parquet.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      (out, all.get, parquet.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Writes `df` as one part file and returns it. */
   private def partFile(df: DataFrame): java.nio.file.Path = {
     val out = Files.createTempDirectory("tables-part").resolve("t")
@@ -59,10 +29,10 @@ class TablesSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("tables-read").toString
     Files.copy(partFile(Seq((1L, "a"), (2L, "b")).toDF("id", "s")),
       java.nio.file.Paths.get(s"$dir/t.parquet"))
-    val (first, firstJobs, firstParquet) = jobs(Tables.read(spark, dir, "t"))
-    assert(firstJobs >= 1 && firstParquet >= 1, s"first read ran $firstJobs jobs, $firstParquet parquet")
-    val (second, secondJobs, _) = jobs(Tables.read(spark, dir, "t"))
-    assert(secondJobs == 0, s"second read ran $secondJobs jobs")
+    val (first, firstJobs) = SparkJobs.of(Tables.read(spark, dir, "t"))
+    assert(firstJobs.total >= 1 && firstJobs.parquetInference >= 1, s"first read ran $firstJobs")
+    val (second, secondJobs) = SparkJobs.of(Tables.read(spark, dir, "t"))
+    assert(secondJobs.total == 0, s"second read ran $secondJobs")
     assert(second.schema == first.schema)
     assert(second.orderBy("id").collect().toSeq == first.orderBy("id").collect().toSeq)
   }
@@ -105,10 +75,10 @@ class TablesSpec extends AnyFunSuite {
       "q_jpeg_quarantine", "q_audio_formats", "q_video_keyframes") // media
     val byName = Queries.all.map(q => q.name -> q).toMap
     for (name <- picks) {
-      val (_, _, parquet) = jobs(byName(name).fn(spark, sf))
+      val (_, SparkJobs(_, _, parquet)) = SparkJobs.of(byName(name).fn(spark, sf))
       assert(parquet == 0, s"$name ran $parquet parquet schema jobs")
     }
-    val (_, _, parquet) = jobs {
+    val (_, SparkJobs(_, _, parquet)) = SparkJobs.of {
       PointSource.fromEmbeddings(spark, sf)
       Multimodal.mediaFromDocuments(spark, sf)
       Multimodal.mediaWithPlantedHeaders(spark, sf)
